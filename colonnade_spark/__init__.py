@@ -10,3 +10,13 @@ codec kernels as vectorized numpy inside mapInArrow/applyInPandas.
 """
 
 __version__ = "0.1.0"
+
+import os as _os
+
+# Spark sets this secret in the environment of every Python worker it
+# starts (daemon-forked or not, RDD and Arrow alike) and never in the
+# driver; program UDFs import this package when they are unpickled
+if "PYTHON_WORKER_FACTORY_SECRET" in _os.environ:
+    from .shipping import cache_zip_directories as _cache_zip_directories
+
+    _cache_zip_directories()

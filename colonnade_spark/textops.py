@@ -490,7 +490,14 @@ def simhash_near_dup_pairs(spark, df, id_col: str, text_col: str,
       per doc + id, so the block footprint is negligible next to the
       corpus at any scale, and unlike a driver-local temp dir this form is
       also correct on a real cluster.
-    - ``sig_df`` — precomputed table, used as-is."""
+    - ``sig_df`` — precomputed table, used as-is.
+
+    Not fully lazy: building the returned DataFrame runs one eager Spark
+    job, an ``isEmpty()`` probe over the level-0 kernel output that
+    decides whether the Manku refinement subtree is needed (see
+    :func:`simhash_pairs_from_sigs`).  That job computes the signatures
+    and the level-0 pairs, so this call costs about one pass of the
+    pipeline before any action on the result."""
     if sig_df is None:
         sigged = (with_simhash(df.select(id_col, text_col), text_col,
                                shingle=shingle).select(id_col, "simhash"))
@@ -674,6 +681,7 @@ def dedup_near_keep_first(spark, df, id_col: str, text_col: str,
     'one survivor per near-duplicate cluster')."""
     from pyspark.sql import functions as F
 
+    dedup = minhash_kw.setdefault("dedup", True)
     pairs = minhash_near_dup_pairs(spark, df, id_col, text_col,
                                    threshold=threshold, **minhash_kw)
     # when pairs are unique (the default path ends in dropDuplicates) both
@@ -683,7 +691,7 @@ def dedup_near_keep_first(spark, df, id_col: str, text_col: str,
     # dedup back (band-duplicated pairs would otherwise inflate every CC
     # round's join volume).
     comp = connected_components(df.select(id_col), pairs, id_col=id_col,
-                                dedup_edges=not minhash_kw.get("dedup", True))
+                                dedup_edges=not dedup)
     keep = (comp.groupBy("comp").agg(F.min(id_col).alias(id_col))
             .select(id_col))
     return df.join(keep, id_col, "left_semi")
@@ -1025,10 +1033,12 @@ def simhash_bucket_pair_kernel(key_cols: list, max_hamming: int,
     caller can route those buckets into the Manku refinement WITHOUT a
     separate bucket-size aggregation over the full exploded table (the
     sizes groupBy was a second full explode+shuffle+agg pass at any scale).
-    Requires exactly two key columns with key1 in [0, 65536) — true for the
-    (band, 16-bit-chunk) level-0 keys.  Sentinels are distinguishable from
-    real pairs by hamming < 0 (a real pair's hamming is always >= 0,
-    whatever the id values)."""
+    Requires exactly two key columns with key1 in [0, 65536) and key0 in
+    [-2**47, 2**47), so ``key0 << 16`` fits int64 — true for the (band,
+    16-bit-chunk) level-0 keys; an oversized bucket with a key outside
+    raises ``ValueError``.  Sentinels are distinguishable from real pairs
+    by hamming < 0 (a real pair's hamming is always >= 0, whatever the id
+    values)."""
     if emit_over_keys and len(key_cols) != 2:
         raise ValueError("emit_over_keys requires exactly two key columns")
 
@@ -1048,6 +1058,14 @@ def simhash_bucket_pair_kernel(key_cols: list, max_hamming: int,
                     s = starts[:-1][over]
                     k0 = payload[key_cols[0]][s].astype(np.int64)
                     k1 = payload[key_cols[1]][s].astype(np.int64)
+                    # the caller unpacks id_b >> 16 and id_b & 0xFFFF: a
+                    # key outside the packable range would alias another
+                    # bucket silently, so refuse it
+                    if ((k1 < 0) | (k1 >= 1 << 16)).any() or (
+                            (k0 < -(1 << 47)) | (k0 >= 1 << 47)).any():
+                        raise ValueError(
+                            "simhash sentinel keys out of range: key1 must "
+                            "be in [0, 65536) and key0 << 16 fit int64")
                     yield pa.RecordBatch.from_arrays(
                         [pa.array(np.full(over.size, -1, dtype=np.int64)),
                          pa.array((k0 << 16) | k1),

@@ -28,6 +28,8 @@ def test_stream_encode_ingests_and_resumes_incrementally(spark, tmp_path):
     assert len(batches) == 2
     m = streaming.stream_manifest(wh)
     assert m["rows"] == 200 and m["batches"] == 2
+    # micro-batches run on the fused (in-shuffle) encode path
+    assert all(engine.read_manifest(b).get("fused") is True for b in batches)
 
     decoded = streaming.stream_decode(spark, wh)
     assert decoded.count() == 200
@@ -50,6 +52,7 @@ def test_stream_encode_ingests_and_resumes_incrementally(spark, tmp_path):
     streaming.stream_encode(spark, src, wh, plan, n_buckets=2)
     batches2 = streaming.batch_warehouses(wh)
     assert len(batches2) == 3
+    assert engine.read_manifest(batches2[-1]).get("fused") is True
     for b, t in before.items():  # old batches untouched
         assert os.path.getmtime(os.path.join(b, "manifest.json")) == t
     assert streaming.stream_manifest(wh)["rows"] == 250

@@ -752,6 +752,31 @@ def test_simhash_kernel_emits_oversized_bucket_sentinels():
         simhash_bucket_pair_kernel(["a"], 3, 8, emit_over_keys=True)
 
 
+@pytest.mark.parametrize("band,bh", [(1, 1 << 16), (1, -1), (1 << 47, 5)])
+def test_simhash_sentinel_keys_out_of_range_raise(band, bh):
+    """A sentinel id packs (key0 << 16) | key1; an oversized bucket whose
+    key1 is outside [0, 65536), or whose key0 << 16 overflows int64, would
+    alias another bucket, so the kernel raises instead of emitting it."""
+    import pyarrow as pa
+
+    from colonnade_spark.textops import simhash_bucket_pair_kernel
+
+    n = 12  # > max_bucket: the bucket is oversized and emits a sentinel
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([band] * n, type=pa.int64()),
+         pa.array([bh] * n, type=pa.int64()),
+         pa.array(range(n), type=pa.int64()),
+         pa.array(range(n), type=pa.int64())],
+        names=["band", "bh", "id", "sig"])
+    kernel = simhash_bucket_pair_kernel(["band", "bh"], 3, 8,
+                                        emit_over_keys=True)
+    with pytest.raises(ValueError, match="out of range"):
+        list(kernel(iter([batch])))
+    # the same keys in a bucket that is not oversized emit no sentinel
+    # and pass
+    list(kernel(iter([batch.slice(0, 4)])))
+
+
 def test_simhash_pairs_output_free_of_sentinels_when_capped(spark):
     """End-to-end: a capped corpus (Manku level-1 fires) must produce the
     same pair set as before the sentinel router, with no sentinel rows in
