@@ -20,8 +20,10 @@ encode:  plan.project(df)  → salt/bucket assignment (skew pre-pass)
            Spark's job-atomic committer cannot express — north_rule
            "resumable from checkpoint"]
 
-decode:  read blocks parquet → groupBy(bucket, stripe).applyInPandas
-         → reassembled rows with the planned schema
+decode:  list blocks/ on the driver → one mapInArrow over file indices;
+         each task reads its bucket files with pyarrow, prunes stripes by
+         zone map, and reassembles the wanted stripes into rows with the
+         planned schema (no parquet scan in the JVM, no shuffle)
 
 verify:  decoded ⋈ source on key_cols (sort-merge; both sides large),
          sha256 equality per content column (input_hint invariant)
@@ -939,77 +941,36 @@ def read_manifest(warehouse: str) -> dict:
         return json.load(f)
 
 
-def decode_table(spark, warehouse: str, *, shuffle: bool = False,
-                 columns: list | None = None,
-                 zone_filter: tuple | list | None = None):
-    """Blocks → rows (the ``uncheckedRun`` analog,
-    /root/reference/siphon/src/Siphon.hs:718-749, per-block not per-row).
+def _bucket_files(warehouse: str, manifest: dict) -> list:
+    """Every bucket's blocks file, from ONE driver listing of ``blocks/``.
 
-    Default path is SHUFFLE-FREE: the encoder writes each bucket's block
-    rows stripe-contiguously (all of a stripe's column blocks adjacent), so
-    a stateful ``mapInArrow`` reassembles stripes as they stream past —
-    partial stripes at arrow-batch boundaries are buffered inside the
-    iterator (the engine-level analog of the reference's cross-chunk parser
-    continuations, Siphon.hs:612-616), and decode parallelism is the scan's
-    (one task per bucket file; stripes never span files).  ``shuffle=True``
-    keeps the groupBy(bucket, stripe) + applyInArrow fallback, which makes
-    no layout assumption.
+    The encoder publishes one ``bucket=N`` directory per non-empty bucket
+    (empty buckets write nothing), so the listing must count exactly the
+    manifest's encoded + resumed buckets: a vanished directory raises here,
+    at call time, instead of decoding fewer rows."""
+    bdir = os.path.join(warehouse, "blocks")
+    want = manifest["buckets_encoded_this_run"] + manifest["buckets_resumed"]
+    try:
+        names = [n for n in os.listdir(bdir) if n.startswith("bucket=")]
+    except FileNotFoundError:
+        names = []
+    if len(names) != want:
+        raise B.BlockError(f"{bdir}: {len(names)} bucket directories, the "
+                           f"manifest records {want}")
+    names.sort(key=lambda n: int(n[len("bucket="):]))
+    return [os.path.join(bdir, n, "part-0.parquet") for n in names]
 
-    ``columns`` decodes a SUBSET of the planned columns — the columnar-store
-    payoff: non-requested columns' blocks are filtered out by the Catalyst
-    scan and never decompressed or shipped.
 
-    ``zone_filter=(col, lo, hi)`` prunes at stripe granularity using the
-    per-block zone maps (vmin/vmax written for integer columns at encode):
-    only stripes whose [vmin, vmax] for ``col`` overlaps [lo, hi] are
-    decoded.  A LIST of such tuples is a conjunction: a stripe survives
-    only if every range overlaps (each predicate prunes independently, so
-    the kept set only shrinks — the multi-predicate form every real scan
-    pushdown has).  Like any zone map this returns a SUPERSET of matching
-    rows (the stripes are pre-filtered, not the rows) — apply the exact
-    residual predicate on the result.
-
-    Arrow end-to-end: the earlier applyInPandas path corrupted nullable
-    int64 via the pandas float64 conversion (values above 2^53); arrow
-    arrays pass through losslessly."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import _parse_datatype_string
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    manifest = read_manifest(warehouse)
-    plan = EncodePlan.from_json(json.dumps(manifest["plan"]))
-    all_cols = plan.column_names
-    cols = list(columns) if columns is not None else all_cols
-    unknown = [c for c in cols if c not in all_cols]
-    if unknown:
-        raise KeyError(f"columns not in plan: {unknown}")
-    # pass the struct<...> form straight through: string-munging it corrupts
-    # any schema whose LAST field is a nested type — replace() also strips
-    # nested 'struct<' and rstrip('>') eats array<...>'s closing brackets
-    # (the submit_job ADVICE bug, present here too)
-    full_schema = _parse_datatype_string(manifest["schema_ddl"])
-    # keep_fields MUST follow the REQUESTED column order, not the plan's:
-    # assemble_one builds the arrow table in `cols` order and the arrow →
-    # Spark boundary binds by POSITION, so a plan-ordered schema against a
-    # request-ordered table silently swaps same-typed columns (review
-    # finding, reproduced: columns=["lang","text"] returned lang values
-    # under the "text" name)
-    by_name = {f.name: f for f in full_schema.fields}
-    keep_fields = [by_name[c] for c in cols]
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                           for f in keep_fields)
-    arrow_schema = to_arrow_schema(_parse_datatype_string(out_schema))
-
-    blocks_df = spark.read.parquet(os.path.join(warehouse, "blocks"))
-    if "frag" not in blocks_df.columns:
-        # warehouses written before multi-block cells existed: every block
-        # is a whole-column block (back-compat, same stance as
-        # errors.validate_blocks)
-        blocks_df = blocks_df.withColumn("frag", F.lit(-1))
+def _zone_specs(zone_filter, full_schema, all_cols) -> list:
+    """Validate ``zone_filter`` on the driver.  Returns one
+    ``(column, stat, lo, hi)`` per range, where ``stat`` names the zone-map
+    columns: ``"v"`` (vmin/vmax, integers) or ``"s"`` (smin/smax, byte
+    strings)."""
     zone_filters = ([] if zone_filter is None
                     else [zone_filter] if isinstance(zone_filter, tuple)
                     else list(zone_filter))
-    for zcol, lo, hi in zone_filters:  # conjunction: each range prunes
+    specs = []
+    for zcol, lo, hi in zone_filters:
         if zcol not in all_cols:
             raise KeyError(f"zone_filter column {zcol!r} not in plan "
                            f"columns {all_cols}")
@@ -1018,9 +979,7 @@ def decode_table(spark, warehouse: str, *, shuffle: bool = False,
         # typed dispatch — a column without zone maps must fail LOUDLY, not
         # silently prune every stripe (the round-2 advice item)
         if ztype in ("tinyint", "smallint", "int", "bigint"):
-            overlap = (F.col("vmin").isNotNull()
-                       & (F.col("vmax") >= F.lit(int(lo)))
-                       & (F.col("vmin") <= F.lit(int(hi))))
+            specs.append((zcol, "v", int(lo), int(hi)))
         elif ztype in ("string", "binary"):
             for bound in (lo, hi):
                 if not isinstance(bound, (str, bytes, bytearray)):
@@ -1029,96 +988,277 @@ def decode_table(spark, warehouse: str, *, shuffle: bool = False,
                     raise TypeError(
                         f"zone_filter on string column {zcol!r}: bounds must "
                         f"be str/bytes, got {type(bound).__name__}")
-            lob = lo.encode("utf-8") if isinstance(lo, str) else bytes(lo)
-            hib = hi.encode("utf-8") if isinstance(hi, str) else bytes(hi)
-            # truncated bounds only WIDEN the kept set (smin <= true min;
-            # smax >= true max, null smax = unbounded above)
-            overlap = (F.col("smin").isNotNull()
-                       & (F.col("smax").isNull()
-                          | (F.col("smax") >= F.lit(lob)))
-                       & (F.col("smin") <= F.lit(hib)))
+            specs.append((zcol, "s",
+                          *(b.encode("utf-8") if isinstance(b, str)
+                            else bytes(b) for b in (lo, hi))))
         else:
             raise TypeError(
                 f"zone_filter on {zcol!r}: no zone maps for type {ztype} "
                 f"(integer and string/binary columns carry block statistics)")
-        live = (blocks_df.filter((F.col("column") == zcol) & overlap)
+    return specs
+
+
+def _overlaps(mn, mx, lo, hi, open_max: bool) -> bool:
+    """The zone-map overlap rule: a block's ``[mn, mx]`` meets ``[lo, hi]``.
+    A null min means no statistics (never overlaps); a null max overlaps
+    only for string bounds, where it means "unbounded above" (truncation
+    found no finite upper bound).  Byte strings compare unsigned
+    lexicographically, like Spark's binary ordering."""
+    if mn is None or mn > hi:
+        return False
+    return open_max if mx is None else mx >= lo
+
+
+def _assemble_stripe(cols, arrow_schema, names, blobs, n_rows,
+                     frags) -> pa.Table:
+    """One stripe's blocks → a table of ``cols`` (in that order, typed by
+    ``arrow_schema``), with every integrity check: block crc (in
+    decode_block), recorded row count, duplicate, missing, and whole-
+    versus-fragment blocks of one column."""
+    arrays = {}
+    frag_groups: dict[str, list] = {}
+    for j, (name, blob) in enumerate(zip(names, blobs)):
+        if frags[j] is not None and frags[j] >= 0:
+            # multi-block cell: collect the fragment set, reassemble below
+            frag_groups.setdefault(name, []).append(blob)
+            continue
+        if name in arrays:
+            raise B.BlockError(f"duplicate column blocks in stripe: {name!r}")
+        arr = B.decode_block(blob)
+        # integrity: decoded length must match the block's recorded row
+        # count — a torn/garbled blocks file fails LOUDLY, never as silent
+        # column misalignment (the RowErrorSize analog,
+        # siphon/src/Siphon.hs:671-676)
+        if len(arr) != n_rows[j]:
+            raise B.BlockError(
+                f"block row-count mismatch for {name!r}: decoded "
+                f"{len(arr)}, recorded {n_rows[j]}")
+        arrays[name] = arr
+    for name, frames in frag_groups.items():
+        if name in arrays:
+            raise B.BlockError(
+                f"column {name!r} has both whole and fragment blocks")
+        arrays[name] = B.decode_cell_fragments(frames)
+    missing = [c for c in cols if c not in arrays]
+    if missing:
+        raise B.BlockError(f"stripe missing column blocks: {missing}")
+    return pa.table(
+        {c: arrays[c].cast(arrow_schema.field(c).type) for c in cols})
+
+
+def _wanted_rows(path: str, meta: dict, cols, zones) -> tuple:
+    """From one blocks file's metadata columns: the live stripes (every
+    zone range ANDed) and the row indices to decode (requested columns of
+    live stripes).  Stripe ids that are not ``0..n-1`` raise."""
+    stripe, column = meta["stripe"], meta["column"]
+    n = max(stripe, default=-1) + 1
+    if set(stripe) != set(range(n)):
+        raise B.BlockError(f"{path}: stripe ids are not 0..{n - 1}")
+    live = set(range(n))
+    for zcol, stat, lo, hi in zones:
+        bounds = zip(stripe, column, meta[stat + "min"], meta[stat + "max"])
+        live &= {s for s, c, mn, mx in bounds
+                 if c == zcol and _overlaps(mn, mx, lo, hi, stat == "s")}
+    want = set(cols)
+    rows = [i for i, (s, c) in enumerate(zip(stripe, column))
+            if s in live and c in want]
+    return live, rows
+
+
+def _read_stripes(path: str, cols, zones, batch_rows: int):
+    """Yield ``(names, blobs, n_rows, frags)`` for each wanted stripe of one
+    bucket's blocks file, in file order.
+
+    The small metadata columns are read first and pick the wanted rows
+    (:func:`_wanted_rows`).  Only then does the block column stream past,
+    ``batch_rows`` rows at a time through a buffered reader, so a task
+    holds about one stripe of blocks; no block bytes are read for a file
+    without wanted rows, nor past the last wanted row.  A file pyarrow
+    cannot read (truncated, garbled page), a stripe split into two runs,
+    and a live stripe with no wanted block all raise ``BlockError``."""
+    stats = [f"{stat}{end}" for _, stat, _, _ in zones for end in ("min", "max")]
+    done, pend, group = set(), None, None
+    try:
+        with pq.ParquetFile(path, buffer_size=1 << 20) as pf:
+            have = set(pf.schema_arrow.names)
+            wanted = dict.fromkeys(["stripe", "column", "n_rows", "frag", *stats])
+            meta = pf.read(columns=[c for c in wanted if c in have]).to_pydict()
+            live, rows = _wanted_rows(path, meta, cols, zones)
+            stripe, column, n_rows = meta["stripe"], meta["column"], meta["n_rows"]
+            # warehouses written before multi-block cells have no 'frag'
+            # column: every block is a whole-column block
+            frag = meta.get("frag", [-1] * len(stripe))
+            batches = (pf.iter_batches(batch_size=batch_rows, columns=["block"])
+                       if rows else ())
+            row = k = 0
+            for batch in batches:
+                blobs = batch.column(0)
+                while k < len(rows) and rows[k] < row + batch.num_rows:
+                    i = rows[k]
+                    k += 1
+                    if stripe[i] != pend:
+                        if group is not None:
+                            yield group
+                        pend, group = stripe[i], ([], [], [], [])
+                        if pend in done:
+                            raise B.BlockError(f"{path}: stripe {pend} is not "
+                                               f"one contiguous run of blocks")
+                        done.add(pend)
+                    group[0].append(column[i])
+                    group[1].append(blobs[i - row].as_py())
+                    group[2].append(n_rows[i])
+                    group[3].append(frag[i])
+                row += batch.num_rows
+                if k == len(rows):
+                    break
+    except (OSError, pa.ArrowException) as e:
+        raise B.BlockError(f"unreadable blocks file {path}: {e}") from e
+    if group is not None:
+        yield group
+    if live - done:
+        raise B.BlockError(f"{path}: stripes {sorted(live - done)} have no "
+                           f"blocks for columns {sorted(cols)}")
+
+
+def _decode_plan(manifest: dict, columns, zone_filter):
+    """Driver-side argument checks shared by both decoders: returns
+    (requested columns, Spark DDL, arrow schema, zone specs)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    all_cols = EncodePlan.from_json(json.dumps(manifest["plan"])).column_names
+    cols = list(columns) if columns is not None else list(all_cols)
+    unknown = [c for c in cols if c not in all_cols]
+    if unknown:
+        raise KeyError(f"columns not in plan: {unknown}")
+    # pass the struct<...> form straight through: string-munging it corrupts
+    # any schema whose LAST field is a nested type — replace() also strips
+    # nested 'struct<' and rstrip('>') eats array<...>'s closing brackets
+    # (the submit_job ADVICE bug, present here too)
+    full_schema = _parse_datatype_string(manifest["schema_ddl"])
+    # the output schema MUST follow the REQUESTED column order, not the
+    # plan's: _assemble_stripe builds the arrow table in `cols` order and
+    # the arrow → Spark boundary binds by POSITION, so a plan-ordered schema
+    # against a request-ordered table silently swaps same-typed columns
+    # (review finding, reproduced: columns=["lang","text"] returned lang
+    # values under the "text" name)
+    by_name = {f.name: f for f in full_schema.fields}
+    out_schema = ", ".join(f"{c} {by_name[c].dataType.simpleString()}"
+                           for c in cols)
+    arrow_schema = to_arrow_schema(_parse_datatype_string(out_schema))
+    zones = _zone_specs(zone_filter, full_schema, all_cols)
+    return cols, out_schema, arrow_schema, zones
+
+
+def decode_warehouses(spark, warehouses: list, *,
+                      columns: list | None = None,
+                      zone_filter: tuple | list | None = None):
+    """Decode several warehouses written under ONE plan (e.g. a stream's
+    batch warehouses) as one DataFrame: one read over all their bucket
+    files, planned as a single ``mapInArrow`` (see :func:`decode_table`).
+    Raises ``ValueError`` when the manifests disagree on ``plan_hash`` or
+    ``schema_ddl``."""
+    manifests = [read_manifest(w) for w in warehouses]
+    for w, m in zip(warehouses[1:], manifests[1:]):
+        for key in ("plan_hash", "schema_ddl"):
+            if m[key] != manifests[0][key]:
+                raise ValueError(f"{w}: {key} {m[key]!r} differs from "
+                                 f"{warehouses[0]}'s {manifests[0][key]!r}")
+    cols, out_schema, arrow_schema, zones = _decode_plan(
+        manifests[0], columns, zone_filter)
+    files = [f for w, m in zip(warehouses, manifests)
+             for f in _bucket_files(w, m)]
+    # about one stripe's whole-column blocks per read batch
+    batch_rows = len(manifests[0]["plan"]["specs"])
+
+    def decode_files(batches):
+        _pin_arrow_threads()
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                for group in _read_stripes(files[i], cols, zones, batch_rows):
+                    yield from _assemble_stripe(cols, arrow_schema,
+                                                *group).to_batches()
+
+    # partition rule of _scan_markers: one task per file up to 4 waves
+    n_part = max(1, min(len(files), 4 * int(spark.sparkContext.defaultParallelism)))
+    return spark.range(len(files), numPartitions=n_part) \
+        .mapInArrow(decode_files, out_schema)
+
+
+def decode_table(spark, warehouse: str, *, shuffle: bool = False,
+                 columns: list | None = None,
+                 zone_filter: tuple | list | None = None):
+    """Blocks → rows (the ``uncheckedRun`` analog,
+    siphon/src/Siphon.hs:718-749, per-block not per-row).
+
+    What runs where:
+
+    * on the driver, at call time: the manifest is read, every argument
+      is checked (unknown column, zone column not in the plan, bad bound
+      types, types without zone maps), and ``blocks/`` is listed once.  The
+      number of ``bucket=N`` directories must equal the manifest's bucket
+      count, or ``BlockError`` is raised.  No Spark job runs.
+    * in one ``mapInArrow`` over a small range of file indices
+      (``min(n_files, 4 × defaultParallelism)`` tasks, no scan, no
+      shuffle): each task opens its bucket files with pyarrow, reads the
+      metadata columns, picks the live stripes, streams only their
+      requested blocks and decodes them stripe by stripe (stripes never
+      span files).  Block bytes cross the JVM/Python boundary zero times;
+      only decoded rows go back.  So, as for encode, the Python workers
+      must see the warehouse path.
+
+    ``columns`` decodes a SUBSET of the planned columns — the columnar-store
+    payoff: other columns' blocks are never decompressed or shipped.
+
+    ``zone_filter=(col, lo, hi)`` prunes at stripe granularity using the
+    per-block zone maps (vmin/vmax for integer columns, truncated byte
+    bounds smin/smax for string/binary ones): only stripes whose [min, max]
+    for ``col`` overlaps [lo, hi] are decoded.  A LIST of such tuples is a
+    conjunction: a stripe survives only if every range overlaps.  Like any
+    zone map this returns a SUPERSET of matching rows (the stripes are
+    pre-filtered, not the rows) — apply the exact residual predicate on
+    the result.
+
+    ``shuffle=True`` is the independent reference decoder: a Spark parquet
+    scan (zone pruning by semi-join) and ``groupBy(bucket, stripe)
+    .applyInArrow``, which makes no layout assumption.  Tests compare the
+    two.
+
+    Arrow end-to-end: the earlier applyInPandas path corrupted nullable
+    int64 via the pandas float64 conversion (values above 2^53); arrow
+    arrays pass through losslessly."""
+    if not shuffle:
+        return decode_warehouses(spark, [warehouse], columns=columns,
+                                 zone_filter=zone_filter)
+    from pyspark.sql import functions as F
+
+    cols, out_schema, arrow_schema, zones = _decode_plan(
+        read_manifest(warehouse), columns, zone_filter)
+    blocks_df = spark.read.parquet(os.path.join(warehouse, "blocks"))
+    if "frag" not in blocks_df.columns:
+        blocks_df = blocks_df.withColumn("frag", F.lit(-1))
+    for zcol, stat, lo, hi in zones:
+        mn, mx = F.col(stat + "min"), F.col(stat + "max")
+        upper = mx >= F.lit(lo)
+        if stat == "s":  # null smax = unbounded above
+            upper = mx.isNull() | upper
+        live = (blocks_df.filter((F.col("column") == zcol) & mn.isNotNull()
+                                 & upper & (mn <= F.lit(hi)))
                 .select("bucket", "stripe"))
         blocks_df = blocks_df.join(F.broadcast(live.distinct()),
                                    ["bucket", "stripe"], "left_semi")
     if columns is not None:
         blocks_df = blocks_df.filter(F.col("column").isin(cols))
 
-    def assemble_one(names, blobs, n_rows=None, frags=None):
-        arrays = {}
-        frag_groups: dict[str, list] = {}
-        for j, (name, blob) in enumerate(zip(names, blobs)):
-            if frags is not None and frags[j] is not None and frags[j] >= 0:
-                # multi-block cell: collect the fragment set, reassemble below
-                frag_groups.setdefault(name, []).append(blob)
-                continue
-            if name in arrays:
-                raise B.BlockError(f"duplicate column blocks in stripe: {name!r}")
-            arr = B.decode_block(blob)
-            # integrity: decoded length must match the block's recorded row
-            # count — a torn/garbled blocks file fails LOUDLY, never as
-            # silent column misalignment (the RowErrorSize analog,
-            # siphon/src/Siphon.hs:671-676)
-            if n_rows is not None and len(arr) != n_rows[j]:
-                raise B.BlockError(
-                    f"block row-count mismatch for {name!r}: decoded "
-                    f"{len(arr)}, recorded {n_rows[j]}")
-            arrays[name] = arr
-        for name, frames in frag_groups.items():
-            if name in arrays:
-                raise B.BlockError(
-                    f"column {name!r} has both whole and fragment blocks")
-            arrays[name] = B.decode_cell_fragments(frames)
-        missing = [c for c in cols if c not in arrays]
-        if missing:
-            raise B.BlockError(f"stripe missing column blocks: {missing}")
-        return pa.table(
-            {c: arrays[c].cast(arrow_schema.field(c).type) for c in cols})
-
-    if shuffle:
-        def reassemble(table: pa.Table) -> pa.Table:
-            return assemble_one(table.column("column").to_pylist(),
+    def reassemble(table: pa.Table) -> pa.Table:
+        return _assemble_stripe(cols, arrow_schema,
+                                table.column("column").to_pylist(),
                                 [b.as_py() for b in table.column("block")],
-                                frags=table.column("frag").to_pylist())
+                                table.column("n_rows").to_pylist(),
+                                table.column("frag").to_pylist())
 
-        return (blocks_df.groupBy("bucket", "stripe")
-                .applyInArrow(reassemble, schema=out_schema))
-
-    def stream_stripes(batches):
-        pend_key = None
-        pend_names, pend_blobs, pend_nrows, pend_frags = [], [], [], []
-        for batch in batches:
-            buckets = batch.column("bucket").to_pylist()
-            stripes = batch.column("stripe").to_pylist()
-            names = batch.column("column").to_pylist()
-            nrows = batch.column("n_rows").to_pylist()
-            fr = batch.column("frag").to_pylist()
-            blobs = batch.column("block")
-            for i in range(batch.num_rows):
-                key = (buckets[i], stripes[i])
-                if key != pend_key:
-                    if pend_names:
-                        yield from assemble_one(pend_names, pend_blobs,
-                                                pend_nrows,
-                                                pend_frags).to_batches()
-                    pend_key = key
-                    pend_names, pend_blobs = [], []
-                    pend_nrows, pend_frags = [], []
-                pend_names.append(names[i])
-                pend_blobs.append(blobs[i].as_py())
-                pend_nrows.append(nrows[i])
-                pend_frags.append(fr[i])
-        if pend_names:
-            yield from assemble_one(pend_names, pend_blobs, pend_nrows,
-                                    pend_frags).to_batches()
-
-    return blocks_df.select("bucket", "stripe", "column", "n_rows", "frag",
-                            "block") \
-        .mapInArrow(stream_stripes, out_schema)
+    return (blocks_df.groupBy("bucket", "stripe")
+            .applyInArrow(reassemble, schema=out_schema))
 
 
 def decode_giant_cells(spark, warehouse: str, column: str, *,

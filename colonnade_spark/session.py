@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import re
 
 # glibc malloc tuning: without this, every >128 KB numpy temporary is an
 # mmap/munmap pair → page-fault storm (93% sys time observed) and the mm lock
@@ -20,13 +21,44 @@ def _apply_malloc_env() -> None:
         os.environ.setdefault(k, v)
 
 
+# Spark's byte-size suffixes (JavaUtils.byteStringAsBytes); no suffix = bytes
+_BYTE_SUFFIXES = {"", "b", "k", "kb", "m", "mb", "g", "gb", "t", "tb", "p", "pb"}
+
+
+def env_int(name: str, default: int, minimum: int = 1) -> int:
+    """An integer env knob.  A non-integer, or a value below ``minimum``,
+    raises ``ValueError`` instead of being clamped silently."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        val = int(raw)
+    except ValueError:
+        raise ValueError(f"{name}={raw!r} is not an integer") from None
+    if val < minimum:
+        raise ValueError(f"{name}={raw!r} is below {minimum}")
+    return val
+
+
+def env_byte_size(name: str, default: str) -> str:
+    """A byte-size env knob, returned as given once it parses the way Spark
+    parses byte sizes (``32m``, ``1g``, ``1048576``; whole numbers only).
+    Anything else raises ``ValueError`` here, not at the first scan."""
+    raw = os.environ.get(name, default)
+    m = re.fullmatch(r"([0-9]+)([a-z]*)", raw.strip().lower())
+    if not m or m.group(2) not in _BYTE_SUFFIXES or int(m.group(1)) < 1:
+        raise ValueError(f"{name}={raw!r} is not a positive Spark byte size "
+                         f"(e.g. 32m, 1g)")
+    return raw
+
+
 def get_spark(app: str = "colonnade_spark", cores: int | None = None,
               shuffle_partitions: int | None = None, driver_mem: str = "48g",
               ui: bool = False, io_codec: str = "lz4"):
     _apply_malloc_env()
     from pyspark.sql import SparkSession
 
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+    cores = cores or env_int("SPARK_GRAFT_CPUS", 0, minimum=0) or os.cpu_count() or 4
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = SparkSession.builder
     for k, v in _MALLOC_ENV.items():
@@ -57,7 +89,7 @@ def get_spark(app: str = "colonnade_spark", cores: int | None = None,
         # real cluster with fast sequential storage RAISE this (512 MB-1 GB,
         # guide §6) via SPARK_GRAFT_MAX_PARTITION_BYTES.
         .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "32m"))
+                env_byte_size("SPARK_GRAFT_MAX_PARTITION_BYTES", "32m"))
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

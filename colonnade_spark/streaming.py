@@ -236,15 +236,13 @@ def batch_warehouses(warehouse: str) -> list:
 
 
 def stream_decode(spark, warehouse: str):
-    """Union-decode every ingested batch's blocks (schemas identical: one
-    plan governs the stream)."""
-    out = None
-    for sub in batch_warehouses(warehouse):
-        d = engine.decode_table(spark, sub)
-        out = d if out is None else out.unionByName(d)
-    if out is None:
+    """Decode every ingested batch's blocks in ONE read over all (batch
+    warehouse, bucket) files; the batches must share one plan and schema
+    (one plan governs the stream; checked by engine.decode_warehouses)."""
+    subs = batch_warehouses(warehouse)
+    if not subs:
         raise FileNotFoundError(f"no ingested batches under {warehouse}")
-    return out
+    return engine.decode_warehouses(spark, subs)
 
 
 def stream_manifest(warehouse: str) -> dict:

@@ -224,11 +224,12 @@ def _kernel_partitions(spark) -> int:
     where per-bucket pair volume is heavily skewed (task runtimes of
     seconds+, stragglers visible), set SPARK_GRAFT_KERNEL_PART_MULT=2..4:
     finer tasks let the scheduler balance the tail, and the per-task fixed
-    cost is amortized by then.  Scale-adaptive either way — the count is
+    cost is amortized by then (a non-integer or a value below 1 raises
+    ``ValueError``).  Scale-adaptive either way — the count is
     derived from the cluster's parallelism, never a tuned constant."""
-    import os
+    from .session import env_int
 
-    mult = max(int(os.environ.get("SPARK_GRAFT_KERNEL_PART_MULT", "1")), 1)
+    mult = env_int("SPARK_GRAFT_KERNEL_PART_MULT", 1)
     return spark.sparkContext.defaultParallelism * mult
 
 

@@ -683,3 +683,162 @@ def test_marker_shards_are_per_task_and_torn_tail_is_skipped(
     assert m2["buckets_encoded_this_run"] == 1
     assert m2["buckets_resumed"] == n_buckets_done - 1
     assert m2["rows"] == m["rows"]
+
+
+@pytest.fixture(scope="module")
+def corpus_wh(spark, corpus_df, tmp_path_factory):
+    wh = str(tmp_path_factory.mktemp("decode") / "wh")
+    engine.encode_table(spark, corpus_df, corpus_plan(), wh, n_buckets=4,
+                        stripe_bytes=64 << 10, input_token="dec-io",
+                        fused=True)
+    return wh
+
+
+def test_decode_builds_without_spark_jobs(spark, corpus_wh):
+    """Building a decode runs no Spark job at call time — no eager parquet
+    schema inference, no zone-map pre-scan — with or without zone_filter."""
+    sc = spark.sparkContext
+    group = "decode-build-no-jobs"
+    sc.setJobGroup(group, "decode_table build only")
+    try:
+        engine.decode_table(spark, corpus_wh)
+        engine.decode_table(spark, corpus_wh, columns=["path", "lang"])
+        engine.decode_table(spark, corpus_wh,
+                            zone_filter=[("lang", "go", "py"),
+                                         ("repo", "a", "z")])
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+
+
+def test_decode_plan_has_no_file_scan_or_exchange(spark, corpus_wh):
+    for kw in ({}, {"zone_filter": ("lang", "go", "py"),
+                    "columns": ["path"]}):
+        df = engine.decode_table(spark, corpus_wh, **kw)
+        plan_str = df._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan" not in plan_str, plan_str
+        assert "Exchange" not in plan_str, plan_str
+
+
+def test_decode_warehouse_with_empty_buckets(spark, tmp_path):
+    """More buckets than distinct repos: empty buckets publish no directory,
+    and the decode still returns every row."""
+    rows = [(f"org/r{i % 3}", f"p{i}.py", f"c{i}", "py", f"body {i} " * 20)
+            for i in range(90)]
+    df = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string")
+    wh = str(tmp_path / "wh")
+    m = engine.encode_table(spark, df, corpus_plan(), wh, n_buckets=8,
+                            input_token="empty-buckets", fused=True)
+    dirs = glob.glob(os.path.join(wh, "blocks", "bucket=*"))
+    assert len(dirs) == m["buckets_encoded_this_run"] < 8
+    assert engine.decode_table(spark, wh).count() == 90
+    assert engine.verify_roundtrip(spark, df, corpus_plan(), wh)["ok"]
+
+
+def _copy_wh(src, tmp_path):
+    import shutil
+
+    dst = str(tmp_path / "wh")
+    shutil.copytree(src, dst)
+    return dst
+
+
+def test_decode_missing_bucket_dir_raises_at_call(spark, corpus_wh, tmp_path):
+    import shutil
+
+    from colonnade_spark.blocks import BlockError
+
+    wh = _copy_wh(corpus_wh, tmp_path)
+    shutil.rmtree(sorted(glob.glob(os.path.join(wh, "blocks", "bucket=*")))[0])
+    with pytest.raises(BlockError, match="bucket directories"):
+        engine.decode_table(spark, wh)
+    shutil.rmtree(os.path.join(wh, "blocks"))
+    with pytest.raises(BlockError, match="bucket directories"):
+        engine.decode_table(spark, wh, columns=["path"])
+
+
+def test_decode_flipped_payload_byte_raises_crc(spark, corpus_wh, tmp_path):
+    """One flipped byte inside a block's payload, in place in the blocks
+    file: the decode fails on the block crc, it never returns wrong rows."""
+    import pyarrow.parquet as pq
+
+    wh = _copy_wh(corpus_wh, tmp_path)
+    fp = sorted(glob.glob(os.path.join(wh, "blocks", "bucket=*",
+                                       "part-0.parquet")))[0]
+    t = pq.read_table(fp)
+    blob = max((b.as_py() for b, c in zip(t.column("block"), t.column("column"))
+                if c.as_py() == "content"), key=len)
+    with open(fp, "rb") as f:
+        raw = bytearray(f.read())
+    at = raw.find(blob)
+    assert at >= 0 and raw.find(blob, at + 1) < 0
+    raw[at + len(blob) - 7] ^= 0x5A           # inside the payload, not the header
+    with open(fp, "wb") as f:
+        f.write(raw)
+    with pytest.raises(Exception, match="BlockError: crc mismatch"):
+        engine.decode_table(spark, wh).collect()
+
+
+def test_decode_truncated_blocks_file_raises(spark, corpus_wh, tmp_path):
+    """A truncated blocks file raises on collect; it never decodes to fewer
+    rows."""
+    wh = _copy_wh(corpus_wh, tmp_path)
+    fp = sorted(glob.glob(os.path.join(wh, "blocks", "bucket=*",
+                                       "part-0.parquet")))[-1]
+    size = os.path.getsize(fp)
+    os.truncate(fp, size // 2)
+    for kw in ({}, {"columns": ["path"]}):
+        with pytest.raises(Exception, match="BlockError: unreadable blocks file"):
+            engine.decode_table(spark, wh, **kw).collect()
+
+
+def test_decode_zone_conjunction_subset_fragmented_matches_reference(
+        spark, tmp_path):
+    """Two zone ranges ANDed plus a column subset, on a warehouse whose
+    cells are all fragmented: the in-task read returns exactly the rows of
+    the Spark-scan reference decoder (shuffle=True)."""
+    rows = [(f"r{i % 4}", f"p{i:02d}", f"c{i}", "txt",
+             (f"doc {i} – füñky ünïcode 日本語 " * 200)[: 2500 + 31 * i])
+            for i in range(24)]
+    df = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string")
+    wh = str(tmp_path / "wh")
+    engine.encode_table(spark, df, corpus_plan(), wh, n_buckets=2,
+                        stripe_bytes=1 << 10, input_token="zone-frag",
+                        fused=True)
+    zones = [("repo", "r1", "r2"), ("content", "doc 1", "doc 2")]
+    cols = ["content", "path"]
+    fast = engine.decode_table(spark, wh, columns=cols, zone_filter=zones)
+    ref = engine.decode_table(spark, wh, columns=cols, zone_filter=zones,
+                              shuffle=True)
+    assert fast.columns == ref.columns == cols
+    a, b = sorted(map(tuple, fast.collect())), sorted(map(tuple, ref.collect()))
+    assert a == b
+    want = {r[1] for r in rows
+            if "r1" <= r[0] <= "r2" and "doc 1" <= r[4] <= "doc 2"}
+    assert want <= {p for _, p in a} and len(a) < len(rows)
+
+
+def test_decode_warehouses_one_read_and_plan_check(spark, tmp_path):
+    """Several warehouses of one plan decode as one read; manifests that
+    disagree on plan_hash or schema_ddl raise."""
+    plan = corpus_plan()
+    whs = []
+    for i, n in enumerate((30, 20)):
+        wh = str(tmp_path / f"batch={i}")
+        engine.encode_table(spark, generate_corpus(spark, n, seed=i), plan,
+                            wh, n_buckets=2, input_token=f"multi{i}",
+                            fused=True)
+        whs.append(wh)
+    both = engine.decode_warehouses(spark, whs)
+    assert both.count() == 50
+    assert "Union" not in both._jdf.queryExecution().executedPlan().toString()
+    mpath = os.path.join(whs[1], "manifest.json")
+    m = engine.read_manifest(whs[1])
+    for key in ("plan_hash", "schema_ddl"):
+        with open(mpath, "w") as f:
+            json.dump(dict(m, **{key: m[key] + "x"}), f)
+        with pytest.raises(ValueError, match=key):
+            engine.decode_warehouses(spark, whs)
