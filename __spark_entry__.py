@@ -49,7 +49,7 @@ def entry(spark: SparkSession) -> DataFrame:
     wh = tempfile.mkdtemp(prefix="colonnade_entry_")
     engine.encode_table(spark, corpus, p, wh, n_buckets=4,
                         stripe_bytes=1 << 20, mode="overwrite",
-                        input_token="entry_sf0.001", fused=True)
+                        input_token="entry_sf0.001")
     ver = engine.verify_roundtrip(spark, corpus, p, wh)
     lin = engine.lineage_table(spark, wh)
     summary = (lin.groupBy("column")

@@ -45,7 +45,9 @@ import pandas as pd  # module-level: pandas_udf type-hint resolution needs it
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-N_FILES = int(os.environ.get("BENCH_CORPUS_FILES", "1000000"))
+from colonnade_spark.session import env_int  # noqa: E402  (needs REPO on sys.path)
+
+N_FILES = env_int("BENCH_CORPUS_FILES", 1000000)
 SEED = 42
 
 
@@ -112,21 +114,11 @@ def encode_worker(cores: int, corpus_dir: str, out_json: str,
         shutil.rmtree(wh, ignore_errors=True)
         probes.append(_throttle_probe_ms())
         t0 = time.time()
-        # fused single-pass path by default (round 5): encode runs INSIDE
-        # the shuffle task, no staged parquet round-trip.  It was ~25%
-        # slower in round 4, but the lz4 shuffle codec + probe gating +
-        # C table build flipped it: local[8] 8.2 s fused vs 12.0 s staged,
-        # [2->8] 0.92 vs 0.73 (the staged write's single-disk floor was
-        # the non-scaling term).  Also the 100-TB-correct shape — staged
-        # would round-trip the corpus through shared storage.
-        # BENCH_STAGED=1 measures the two-phase staged path (byte-identical
-        # blocks; kept for durable-shuffle resume workloads).
         # salt sizing from a seeded 5% sample: skew stats don't need a full
         # corpus scan (engine.assign_buckets docstring)
         manifest = engine.encode_table(
             spark, df, corpus_plan(), wh, n_buckets=n_buckets,
             stripe_bytes=4 << 20, mode="overwrite", input_token=f"bench{N_FILES}",
-            fused=os.environ.get("BENCH_STAGED") != "1",
             salt_sample_fraction=0.05)
         attempt_wall = time.time() - t0
         walls.append(round(attempt_wall, 3))
@@ -234,13 +226,13 @@ def _run_level(cores: int, corpus_dir: str, attempts: int, verify: bool) -> dict
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = env_int("SPARK_GRAFT_CPUS", 32)
     # headline N vs 4N pair: default 1 vs 4 — the contention-free range of
     # this host (CPU overcommitted above ~8 vCPUs, ±4x steal variance at
     # 32-way, one shared disk; BASELINE.md "Measured").  The full ladder
     # including the [2,8] and [8,32] pairs is measured and reported too.
-    low = int(os.environ.get("BENCH_SCALE_LOW", "1"))
-    high = min(int(os.environ.get("BENCH_SCALE_HIGH", "4")), cpus)
+    low = env_int("BENCH_SCALE_LOW", 1)
+    high = min(env_int("BENCH_SCALE_HIGH", 4), cpus)
     ladder_env = os.environ.get("BENCH_SCALE_LADDER", "1,2,4,8,32")
     ladder = sorted({int(x) for x in ladder_env.split(",") if x} | {low, high})
     ladder = [c for c in ladder if c <= cpus]

@@ -36,8 +36,10 @@ def main() -> None:
         suffix = args[i + 1]
         del args[i:i + 2]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    passes = int(os.environ.get("BENCH_EXTRA_PASSES", "2"))
+    from colonnade_spark.session import env_int
+
+    cpus = env_int("SPARK_GRAFT_CPUS", 32)
+    passes = env_int("BENCH_EXTRA_PASSES", 2)
     plans_dir = os.environ.get("BENCH_EXTRA_PLANS")
 
     from colonnade_spark.queries import registry

@@ -3,19 +3,14 @@
 Pipeline (SURVEY.md §3.2-3.3 generalized to Spark):
 
 encode:  plan.project(df)  → salt/bucket assignment (skew pre-pass)
-         → two interchangeable execution paths (byte-identical blocks):
-           FUSED (encode_table(fused=True)): one pass —
-             repartition(n_buckets, bucket) + sortWithinPartitions(bucket,
-             keys) + mapInArrow per-bucket encode inside the shuffle task;
-             the corpus is materialized once (shuffle files), not twice.
-           STAGED: repartition + sort written parquet-partitioned by bucket
-             [Catalyst-planned], then per-bucket encode tasks re-read it —
-             the shuffle itself becomes durable, so resume skips even the
-             re-shuffle (at the cost of a full extra round-trip through
-             shared storage — at 100 TB that is the dominant difference).
-         → per-bucket encode (both paths): stream record batches, cut
-           size-capped row-aligned stripes, encode each column to a framed
-           block, write blocks+lineage, drop a checkpoint marker
+         → one pass: repartition(n_buckets, bucket) +
+           sortWithinPartitions(bucket, keys) + mapInArrow, so each bucket
+           is encoded inside the shuffle task and the corpus is
+           materialized once (shuffle files)
+         → per-bucket encode: stream record batches, cut size-capped
+           row-aligned stripes, encode each column to a framed block, write
+           blocks+lineage, append a checkpoint marker line to the task's
+           marker shard
            [imperative by design: per-partition checkpoint/resume semantics
            Spark's job-atomic committer cannot express — north_rule
            "resumable from checkpoint"]
@@ -23,19 +18,23 @@ encode:  plan.project(df)  → salt/bucket assignment (skew pre-pass)
 decode:  list blocks/ on the driver → one mapInArrow over file indices;
          each task reads its bucket files with pyarrow, prunes stripes by
          zone map, and reassembles the wanted stripes into rows with the
-         planned schema (no parquet scan in the JVM, no shuffle)
+         planned schema (no parquet scan in the JVM, no shuffle).  The
+         giant-cell decode and errors.validate_blocks read blocks/ the
+         same way.
 
 verify:  decoded ⋈ source on key_cols (sort-merge; both sides large),
          sha256 equality per content column (input_hint invariant)
 
-Determinism: staging order is total (unique keys), codecs are deterministic,
-so re-running a bucket yields byte-identical blocks — markers are safe.
+Determinism: the in-bucket sort order is total (unique keys), codecs are
+deterministic, so re-running a bucket yields byte-identical blocks —
+markers are safe.
 Local filesystem warehouse here; on a cluster, point ``warehouse`` at shared
 storage (pyarrow reads s3:///hdfs:// via fsspec) — layout is unchanged.
 """
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
@@ -148,7 +147,7 @@ def assign_buckets(df, plan: EncodePlan, n_buckets: int,
     # function of the input partitioning (split layout varies with file
     # sizes, maxPartitionBytes, and defaultParallelism), so the same data
     # on a different cluster size would yield a different salt map — and
-    # with it a different bucket layout, which a fused-path resume must
+    # with it a different bucket layout, which a resume must
     # never see (completed buckets are anti-joined out by id; a layout
     # shift would silently lose/duplicate rows).  A hash filter over the
     # row key is a pure function of row CONTENT: same input → same sample
@@ -205,18 +204,6 @@ def _row_sizes(batch: pa.RecordBatch) -> np.ndarray:
     return sizes
 
 
-def _stripe_iter(pf_paths, columns, stripe_bytes):
-    """Parquet wrapper over :func:`_stripe_iter_batches` (the staged path:
-    one bucket = one staged parquet dir)."""
-
-    def batches():
-        for path in pf_paths:
-            pf = pq.ParquetFile(path)
-            yield from pf.iter_batches(batch_size=8192, columns=columns)
-
-    yield from _stripe_iter_batches(batches(), stripe_bytes)
-
-
 def _stripe_iter_batches(batch_iter, stripe_bytes):
     """Yield row-aligned arrow Tables, each <= stripe_bytes unless a SINGLE
     row alone exceeds the cap (that row is then isolated into its own
@@ -228,9 +215,8 @@ def _stripe_iter_batches(batch_iter, stripe_bytes):
     fresh stripe, where an oversized row never drags a neighbor with it.
 
     Cut positions depend ONLY on the row sequence and per-row byte sizes —
-    never on how the input is batched — so the staged (parquet, 8192-row
-    read batches) and fused (shuffle, arrow stream batches) paths produce
-    byte-identical stripes for the same bucket content."""
+    never on how the input is batched — so any batching of the same bucket
+    content produces byte-identical stripes."""
     buf, buf_bytes = [], 0
     for batch in batch_iter:
         if batch.num_rows == 0:
@@ -277,9 +263,7 @@ def _iter_bucket_runs(batches, cols):
     """Split a stream of arrow batches sorted by ``__bucket`` into
     ``(bucket_id, sub_batch)`` pairs at bucket transitions.  A bucket never
     splits across shuffle partitions, so grouping the pairs with
-    ``itertools.groupby`` reassembles each bucket's full row sequence.
-    Shared by the fused (shuffle arrow stream) and staged-v2 (per-partition
-    parquet file) readers so their run semantics cannot drift apart."""
+    ``itertools.groupby`` reassembles each bucket's full row sequence."""
     for b in batches:
         if b.num_rows == 0:
             continue
@@ -301,11 +285,11 @@ class _MarkerShard:
     O(n_partitions), not O(n_buckets) — at the ~4M-bucket scale SURVEY §8
     cites, 4M files in one directory is an object-store/filesystem hazard
     independent of the driver (round-5 verdict item 4).  Crash semantics
-    match the old per-bucket atomic rename under the engine's process-kill
-    model: a line is written only AFTER its bucket's blocks+lineage
-    replace, a torn tail line fails to parse and is skipped by the scan
-    (that bucket simply redoes), and duplicate-attempt shards are benign
-    (byte-identical blocks; the scan dedups by bucket id)."""
+    under the engine's process-kill model: a line is written only AFTER
+    its bucket's blocks+lineage replace, a torn tail line fails to parse
+    and is skipped by the scan (that bucket simply redoes), and
+    duplicate-attempt shards are benign (byte-identical blocks; the scan
+    dedups by bucket id)."""
 
     def __init__(self, warehouse: str):
         self._dir = os.path.join(warehouse, "markers")
@@ -320,104 +304,58 @@ class _MarkerShard:
         self._f.flush()
 
 
-def list_markers(warehouse: str) -> list:
-    """Every marker currently published (shard lines + legacy per-bucket
-    files), torn lines skipped, one dict per bucket (ops/test hook — the
-    engine paths use the distributed :func:`_scan_markers` instead)."""
-    mdir = os.path.join(warehouse, "markers")
-    out: dict = {}
-    for p in sorted(glob.glob(os.path.join(mdir, "shard_*.jsonl"))):
-        for line in open(p):
+def _shard_markers(path: str):
+    """Yield ``(line, marker)`` for each line of one marker shard; a torn
+    tail line (task killed mid-append) fails to parse and is skipped —
+    that bucket simply redoes."""
+    with open(path) as f:
+        for line in f:
             try:
-                m = json.loads(line)
+                yield line, json.loads(line)
             except ValueError:
                 continue
+
+
+def list_markers(warehouse: str) -> list:
+    """Every marker currently published in the shard files, torn lines
+    skipped, one dict per bucket (ops/test hook — the engine uses the
+    distributed :func:`_scan_markers` instead)."""
+    out: dict = {}
+    for p in sorted(glob.glob(os.path.join(warehouse, "markers", "shard_*.jsonl"))):
+        for _, m in _shard_markers(p):
             out.setdefault(int(m["bucket"]), m)
-    for p in sorted(glob.glob(os.path.join(mdir, "bucket_*.json"))):
-        m = json.load(open(p))
-        out.setdefault(int(m["bucket"]), m)
     return [out[b] for b in sorted(out)]
 
 
 def invalidate_markers(warehouse: str, buckets) -> None:
     """Drop specific buckets' markers (ops/test hook — e.g. simulate lost
-    output, or force selected buckets to re-encode on the next resume):
-    legacy per-bucket files are unlinked; shard files are compacted in
-    place without those lines (atomic tmp+replace per shard)."""
+    output, or force selected buckets to re-encode on the next resume)."""
     drop = set(int(b) for b in buckets)
-    mdir = os.path.join(warehouse, "markers")
-    for p in glob.glob(os.path.join(mdir, "bucket_*.json")):
-        if int(os.path.basename(p)[len("bucket_"):-len(".json")]) in drop:
-            os.remove(p)
-    for p in glob.glob(os.path.join(mdir, "shard_*.jsonl")):
-        keep = []
-        for line in open(p):
-            try:
-                m = json.loads(line)
-            except ValueError:
-                continue
-            if int(m.get("bucket", -1)) not in drop:
-                keep.append(line if line.endswith("\n") else line + "\n")
-        if keep:
+    _compact_shards(warehouse, lambda m: int(m.get("bucket", -1)) not in drop)
+
+
+def _compact_shards(warehouse: str, keep) -> None:
+    """Rewrite every marker shard with only its parseable lines whose
+    marker satisfies ``keep`` (atomic tmp+replace per shard; a shard left
+    with no line is removed)."""
+    for p in glob.glob(os.path.join(warehouse, "markers", "shard_*.jsonl")):
+        lines = [line if line.endswith("\n") else line + "\n"
+                 for line, m in _shard_markers(p) if keep(m)]
+        if lines:
             tmp = f"{p}.{os.getpid()}.tmp"
             with open(tmp, "w") as f:
-                f.writelines(keep)
+                f.writelines(lines)
             os.replace(tmp, p)
         else:
             os.remove(p)
 
 
-def _encode_staged_file(path: str, warehouse: str, plan_json: str,
-                        stripe_bytes: int, fingerprint: str = "",
-                        skip: frozenset = frozenset()) -> tuple:
-    """One task of the staged-v2 path: encode every bucket run inside ONE
-    staged shuffle-partition parquet file (rows sorted by ``__bucket``
-    first, so each bucket is one contiguous run; several bucket ids can
-    share a file — pmod(hash(id), n) is not the identity — but an id never
-    splits across files).  ``skip`` holds already-checkpointed bucket ids
-    (resume): their row groups are pruned via parquet ``__bucket`` min/max
-    stats before any data bytes are read.  Returns the folded stats tuple
-    for the buckets encoded here."""
-    import itertools
-
-    _pin_arrow_threads()
-    plan = EncodePlan.from_json(plan_json)
-    cols = list(plan.column_names)
-    pf = pq.ParquetFile(path)
-    col_idx = {c.name: i for i, c in enumerate(pf.schema_arrow)}["__bucket"]
-    keep_rgs = []
-    for rg in range(pf.metadata.num_row_groups):
-        st = pf.metadata.row_group(rg).column(col_idx).statistics
-        if st is None or st.min is None or st.max is None \
-                or (st.max - st.min) > 100_000:
-            keep_rgs.append(rg)  # no/implausible stats → cannot prune
-        elif any(b not in skip for b in range(int(st.min), int(st.max) + 1)):
-            keep_rgs.append(rg)
-    stats = _STATS_ZERO
-    if not keep_rgs:
-        return stats
-    batches = pf.iter_batches(batch_size=8192, columns=["__bucket"] + cols,
-                              row_groups=keep_rgs)
-    sink = _MarkerShard(warehouse)
-    for bucket, grp in itertools.groupby(_iter_bucket_runs(batches, cols),
-                                         key=lambda t: t[0]):
-        if bucket in skip:
-            continue
-        stripes = _stripe_iter_batches((s for _, s in grp), stripe_bytes)
-        m = _encode_bucket_core(bucket, stripes, warehouse, plan,
-                                stripe_bytes, fingerprint, marker_sink=sink)
-        stats = _stats_add(stats, _marker_stats(m))
-    return stats
-
-
 def _encode_bucket_core(bucket: int, stripes, warehouse: str,
                         plan: EncodePlan, stripe_bytes: int,
-                        fingerprint: str = "", marker_sink=None) -> dict:
+                        fingerprint: str, marker_sink: _MarkerShard) -> dict:
     """Encode an iterator of row-aligned stripe Tables for one bucket and
-    atomically publish blocks + lineage + checkpoint marker.  Shared by the
-    staged (parquet re-read) and fused (in-shuffle mapInArrow) paths —
-    stripe cutting is batching-independent, so both paths emit byte-
-    identical blocks for the same bucket content."""
+    atomically publish blocks + lineage, then hand the checkpoint marker to
+    ``marker_sink`` (the task's shard file)."""
     wall0 = time.perf_counter()
     cols = plan.column_names
     bdir = os.path.join(warehouse, "blocks", f"bucket={bucket}")
@@ -538,26 +476,16 @@ def _encode_bucket_core(bucket: int, stripes, warehouse: str,
     pq.write_table(lineage_tbl, ltmp)
     os.replace(ltmp, os.path.join(ldir, f"bucket_{bucket}.parquet"))
     # the marker carries the FULL staging fingerprint (plan + input token +
-    # bucket count), not just the plan hash: a resume against re-staged input
+    # bucket count), not just the plan hash: a resume against changed input
     # or a different bucketing must not trust stale markers
     marker = {"bucket": bucket, "plan_hash": plan.plan_hash(),
               "fingerprint": fingerprint, "stripes": stripe,
               "rows": n_rows_total, "bytes_in": total_in, "bytes_out": total_out,
               "wall_s": round(time.perf_counter() - wall0, 3)}
-    if marker_sink is not None:
-        # shard sink (the engine paths): one marker LINE appended to the
-        # task's shard file — O(n_partitions) marker objects (round-5
-        # verdict item 4); see _MarkerShard for the durability argument
-        marker_sink(marker)
-    else:
-        # legacy one-file-per-bucket publish for direct callers
-        mtmp = os.path.join(warehouse, "markers",
-                            f"_tmp_{bucket}_{suffix}.json")
-        os.makedirs(os.path.dirname(mtmp), exist_ok=True)
-        with open(mtmp, "w") as f:
-            json.dump(marker, f)
-        os.replace(mtmp, os.path.join(warehouse, "markers",
-                                      f"bucket_{bucket}.json"))
+    # one marker LINE appended to the task's shard file — O(n_partitions)
+    # marker objects (round-5 verdict item 4); see _MarkerShard for the
+    # durability argument
+    marker_sink(marker)
     return marker
 
 
@@ -581,33 +509,14 @@ def _scan_markers(sc, warehouse: str, fingerprint: str) -> tuple:
     buckets), keep only full-fingerprint matches (plan AND input AND bucket
     count AND salt params — stale markers must never validate against a
     re-derived layout), and fold their stats.  Returns (done bucket-id set,
-    folded stats tuple).  Shared by the staged and fused paths so the
-    resume-validation rules cannot drift apart."""
-
-    def _read_markers(pth):
-        # shard files hold one marker per line; a torn tail line (task
-        # killed mid-append) fails to parse and is skipped — that bucket
-        # simply redoes.  Legacy per-bucket files hold one whole marker.
-        out = []
-        with open(pth) as f:
-            if pth.endswith(".jsonl"):
-                for line in f:
-                    try:
-                        out.append(json.loads(line))
-                    except ValueError:
-                        continue
-            else:
-                out.append(json.load(f))
-        return out
-
-    mpaths = (glob.glob(os.path.join(warehouse, "markers", "shard_*.jsonl"))
-              + glob.glob(os.path.join(warehouse, "markers", "bucket_*.json")))
+    folded stats tuple)."""
+    mpaths = glob.glob(os.path.join(warehouse, "markers", "shard_*.jsonl"))
     done, stats = set(), _STATS_ZERO
     if not mpaths:
         return done, stats
     rdd = sc.parallelize(mpaths, max(1, min(len(mpaths),
                                             4 * int(sc.defaultParallelism))))
-    rows = (rdd.flatMap(_read_markers)
+    rows = (rdd.flatMap(lambda p: [m for _, m in _shard_markers(p)])
             .filter(lambda m: m.get("fingerprint") == fingerprint)
             .map(lambda m: (m["bucket"], _marker_stats(m)))
             .collect())
@@ -624,35 +533,40 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
                  n_buckets: int = 32, stripe_bytes: int = 4 << 20,
                  target_salt_bytes: int = 64 << 20,
                  mode: str = "error", input_token: str = "",
-                 fused: bool = False,
+                 fused: bool = True,
                  salt_sample_fraction: float = 1.0) -> dict:
     """Run the encode job; returns the manifest dict.
 
+    One pass: ``repartition(__bucket)`` → ``sortWithinPartitions`` →
+    ``mapInArrow``, so each bucket is encoded INSIDE the shuffle task and
+    the corpus is materialized once (shuffle files).  One hash partition
+    can hold SEVERAL bucket ids (pmod(hash(b), n) is not the identity), but
+    a bucket id never splits across partitions — the task iterator groups
+    contiguous ``__bucket`` runs (the partition is sorted by ``__bucket``
+    first) and feeds each run's batches straight into the per-bucket
+    stripe encoder.  Driver state stays O(n_buckets ints); per-bucket stats
+    come back as the mapInArrow output rows and are folded by a Spark
+    aggregation, not a collect.
+
     mode: "error" (refuse existing warehouse), "overwrite", or "resume"
-    (skip staged input and completed buckets — the checkpoint path).
+    (the checkpoint path: buckets with a valid marker are anti-joined out
+    BEFORE the shuffle and their files are never rewritten; every other
+    bucket re-encodes).  The resume trade: the shuffle is not durable, so
+    a resume re-derives the bucket assignment and re-shuffles the rows of
+    every incomplete bucket.  A staged layout that persisted the shuffle
+    could skip that, at the cost of writing the whole corpus through
+    shared storage a second time on every run.
 
-    fused=True runs the single-pass path: the per-bucket encode happens
-    INSIDE the shuffle task (``repartition(__bucket)`` →
-    ``sortWithinPartitions`` → ``mapInArrow``), so the corpus is
-    materialized once (shuffle files) instead of twice (shuffle + staged
-    parquet) — at 100 TB the staged write is a full extra round-trip
-    through shared storage.  Checkpoint granularity is unchanged (per-
-    bucket markers, byte-identical blocks); a resumed fused run re-shuffles
-    only the rows of buckets without a valid marker (completed buckets are
-    anti-joined out BEFORE the shuffle).  The staged path remains for
-    workloads that want the shuffle itself durable (resume skips even the
-    re-shuffle at the cost of the extra materialization).
-
-    Fused is the recommended default at any scale (and the bench default
-    since round 5): after the lz4 shuffle codec + selection-probe gating +
-    C table build, it wins locally too (local[8] 8.2 s vs 12.0 s staged,
-    [2→8] scaling 0.92 vs 0.73 — the staged write's single-disk floor was
-    the non-scaling term; BASELINE.md round-5).
+    ``fused`` only accepts True (the single-pass path is the only one);
+    ``fused=False`` raises ``ValueError``.
     """
     import shutil
 
     from pyspark.sql import functions as F
 
+    if not fused:
+        raise ValueError("encode_table(fused=False): the staged encode path "
+                         "was removed; the single-pass encode is the only one")
     manifest_path = os.path.join(warehouse, "manifest.json")
     if os.path.exists(warehouse) and os.listdir(warehouse):
         if mode == "error":
@@ -662,164 +576,20 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
     os.makedirs(warehouse, exist_ok=True)
 
     # the fingerprint must pin EVERYTHING the bucket layout depends on:
-    # salt parameters changed between runs would re-derive a different
-    # layout at resume, and the fused path (which recomputes assignment
-    # instead of reading it back from staged parquet) would then trust
-    # markers from the old layout — silent row loss/duplication
+    # a resume recomputes the assignment, so salt parameters changed
+    # between runs would re-derive a different layout and trust markers
+    # from the old one — silent row loss/duplication
     fingerprint = json.dumps(
         {"plan": plan.plan_hash(), "n_buckets": n_buckets,
          "input": input_token,
          "salt": [int(target_salt_bytes), round(float(salt_sample_fraction), 6)]},
         sort_keys=True)
-    staged_dir = os.path.join(warehouse, "staged")
-    staged_marker = os.path.join(warehouse, "_STAGED.json")
 
     projected = plan.project(df)
     schema_ddl = projected.select(*plan.column_names).schema.simpleString()
 
-    if fused:
-        return _encode_fused(spark, projected, plan, warehouse,
-                             n_buckets=n_buckets, stripe_bytes=stripe_bytes,
-                             target_salt_bytes=target_salt_bytes, mode=mode,
-                             fingerprint=fingerprint, schema_ddl=schema_ddl,
-                             manifest_path=manifest_path,
-                             salt_sample_fraction=salt_sample_fraction)
-
-    t_stage0 = time.time()
-    need_stage = True
-    if mode == "resume" and os.path.exists(staged_marker):
-        with open(staged_marker) as f:
-            sm = json.load(f)
-        # layout 2 = flat per-shuffle-partition files; an older dynamic-
-        # partitionBy staging (no layout tag) must be rebuilt, not reused
-        need_stage = (sm.get("fingerprint") != fingerprint
-                      or sm.get("layout") != 2)
-    if need_stage:
-        # staging (re)built → any existing markers/blocks describe OLD
-        # staged data; invalidate them so resume cannot trust stale state
-        for sub in ("markers", "blocks", "lineage"):
-            shutil.rmtree(os.path.join(warehouse, sub), ignore_errors=True)
-        bucketed = assign_buckets(projected, plan, n_buckets, target_salt_bytes,
-                                  salt_sample_fraction)
-        order = plan.stage_order or plan.column_names
-        # zstd staged files: ~45% smaller than snappy on text and ~1.5x
-        # faster wall for the staging write on this disk; decompression in
-        # the per-bucket readers is cheap (~1 GB/s/core).  Level stays the
-        # parquet default (3): zstd-1 measured 23% faster on CPU-bound
-        # small inputs but a wash-to-loss at bench scale, where staging is
-        # bound by the single shared disk and +12% scratch bytes cost more
-        # than the cheaper compressor saves.
-        # staged-v2 layout: a PLAIN parquet write — one file per shuffle
-        # partition with __bucket kept as a leading sort column — instead
-        # of dynamic partitionBy.  The dynamic writer costs a per-row
-        # partition dispatch, one directory + file handle per bucket
-        # (O(n_buckets) filesystem metadata, ~4M dirs at scale), and a
-        # hidden sort(partition_col) whenever the input order doesn't lead
-        # with it.  Here each task streams straight into a single file;
-        # the sort still leads with __bucket so each bucket is one
-        # contiguous run that the per-file encode task re-splits (same
-        # run-grouping as the fused path), and the within-bucket row order
-        # — hence every stripe cut and block byte — is unchanged.
-        # maxRecordsPerFile pinned to 0 (unlimited): the staged-v2 resume
-        # contract assumes exactly ONE file per shuffle partition so a
-        # bucket never splits across staged files; a user-level
-        # spark.sql.files.maxRecordsPerFile > 0 would split a task's
-        # output and two _encode_staged_file tasks would each encode a
-        # partial bucket and race on its marker (ADVICE round 5)
-        (bucketed.repartition(n_buckets, F.col("__bucket"))
-                 .sortWithinPartitions("__bucket", *order)
-                 .write.mode("overwrite")
-                 .option("compression", "zstd")
-                 .option("maxRecordsPerFile", 0)
-                 .parquet(staged_dir))
-        with open(staged_marker, "w") as f:
-            json.dump({"fingerprint": fingerprint, "layout": 2}, f)
-
-    sc = spark.sparkContext
-
-    def _par(items):
-        return sc.parallelize(items, max(1, min(len(items), 4 * int(
-            sc.defaultParallelism))))
-
-    # the encode unit is one staged shuffle-partition FILE (staged-v2):
-    # the driver does ONE flat directory listing (n_partitions names, not
-    # n_buckets dynamic-partition dirs); per-file sizes for LPT scheduling
-    # come back from a distributed stat, only (name, size) pairs cross.
-    done: set = set()
-    resumed_stats = _STATS_ZERO
-    if mode == "resume":
-        done, resumed_stats = _scan_markers(sc, warehouse, fingerprint)
-    part_files = sorted(f for f in os.listdir(staged_dir)
-                        if f.startswith("part-") and f.endswith(".parquet"))
-    if part_files:
-        def _fsize(name, _d=staged_dir):
-            return (name, os.path.getsize(os.path.join(_d, name)))
-
-        size_of = dict(_par(part_files).map(_fsize).collect())
-        # longest-first scheduling: Spark runs partitions in order, so the
-        # biggest files go first to remove end-of-job stragglers (LPT)
-        part_files.sort(key=lambda f: (-size_of[f], f))
-
-    t_stage = time.time() - t_stage0
-    t_enc0 = time.time()
-    plan_json = plan.to_json()
-    encoded_stats = _STATS_ZERO
-    if part_files:
-        skip = frozenset(done)
-        sdir = staged_dir
-        rdd = sc.parallelize(part_files, len(part_files))
-        # markers are durably written per bucket by the task itself; each
-        # task folds its buckets' stats and the driver folds ONE tuple
-        encoded_stats = (rdd.map(lambda f: _encode_staged_file(
-            os.path.join(sdir, f), warehouse, plan_json, stripe_bytes,
-            fingerprint, skip)).reduce(_stats_add))
-
-    # corpus totals fold in resumed buckets' marker stats, so a post-resume
-    # manifest reports the WHOLE warehouse, not just this run's increment
-    totals = _stats_add(encoded_stats, resumed_stats)
-    manifest = {
-        "plan": json.loads(plan.to_json()),
-        "plan_hash": plan.plan_hash(),
-        "schema_ddl": schema_ddl,
-        "n_buckets": n_buckets,
-        "stripe_bytes": stripe_bytes,
-        "buckets_encoded_this_run": encoded_stats[0],
-        "buckets_resumed": len(done),
-        "rows": totals[1],
-        "bytes_in": totals[2],
-        "bytes_out": totals[3],
-        "stage_sec": round(t_stage, 3),
-        "encode_sec": round(time.time() - t_enc0, 3),
-        "task_wall_sec": round(encoded_stats[4], 3),
-        "fingerprint": fingerprint,
-    }
-    with open(manifest_path, "w") as f:
-        json.dump(manifest, f, indent=1)
-    return manifest
-
-
-def _encode_fused(spark, projected, plan: EncodePlan, warehouse: str, *,
-                  n_buckets: int, stripe_bytes: int, target_salt_bytes: int,
-                  mode: str, fingerprint: str, schema_ddl: str,
-                  manifest_path: str,
-                  salt_sample_fraction: float = 1.0) -> dict:
-    """Single-pass encode: shuffle by bucket and encode inside the shuffle
-    task via ``mapInArrow`` (see :func:`encode_table` ``fused=True``).
-
-    One hash partition can hold SEVERAL bucket ids (pmod(hash(b), n) is not
-    the identity), but a bucket id never splits across partitions — the
-    task iterator groups contiguous ``__bucket`` runs (the partition is
-    sorted by ``__bucket`` first) and feeds each run's batches straight
-    into the shared per-bucket stripe encoder.  Driver state stays
-    O(n_buckets ints); per-bucket stats come back as the mapInArrow output
-    rows and are folded by a Spark aggregation, not a collect."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
     t0 = time.time()
     sc = spark.sparkContext
-    mdir = os.path.join(warehouse, "markers")
     done: set = set()
     resumed_stats = _STATS_ZERO
     if mode == "resume":
@@ -830,28 +600,8 @@ def _encode_fused(spark, projected, plan: EncodePlan, warehouse: str, *,
         # Shard files are compacted to their valid lines (one pass per
         # shard, executed where the file is — the marker object count
         # stays O(n_partitions), so this loop does too).
-        for p in glob.glob(os.path.join(mdir, "bucket_*.json")):
-            if int(os.path.basename(p)[len("bucket_"):-len(".json")]) not in done:
-                os.remove(p)
-        for p in glob.glob(os.path.join(mdir, "shard_*.jsonl")):
-            keep = []
-            with open(p) as f:
-                for line in f:
-                    try:
-                        m = json.loads(line)
-                    except ValueError:
-                        continue
-                    if m.get("fingerprint") == fingerprint \
-                            and int(m.get("bucket", -1)) in done:
-                        keep.append(line if line.endswith("\n")
-                                    else line + "\n")
-            if keep:
-                ctmp = f"{p}.{os.getpid()}.tmp"
-                with open(ctmp, "w") as f:
-                    f.writelines(keep)
-                os.replace(ctmp, p)
-            else:
-                os.remove(p)
+        _compact_shards(warehouse, lambda m: m.get("fingerprint") == fingerprint
+                        and int(m.get("bucket", -1)) in done)
         for p in glob.glob(os.path.join(warehouse, "blocks", "bucket=*")):
             if int(p.split("bucket=")[-1]) not in done:
                 shutil.rmtree(p, ignore_errors=True)
@@ -863,7 +613,7 @@ def _encode_fused(spark, projected, plan: EncodePlan, warehouse: str, *,
                               salt_sample_fraction)
     if done:
         # completed buckets never enter the shuffle: anti-join against the
-        # (tiny, broadcast) done set — the fused-path resume skip
+        # (tiny, broadcast) done set — the resume skip
         done_df = spark.createDataFrame([(int(b),) for b in sorted(done)],
                                         "__bucket int")
         bucketed = bucketed.join(F.broadcast(done_df), "__bucket", "left_anti")
@@ -1065,63 +815,82 @@ def _wanted_rows(path: str, meta: dict, cols, zones) -> tuple:
     return live, rows
 
 
-def _read_stripes(path: str, cols, zones, batch_rows: int):
-    """Yield ``(names, blobs, n_rows, frags)`` for each wanted stripe of one
-    bucket's blocks file, in file order.
-
-    The small metadata columns are read first and pick the wanted rows
-    (:func:`_wanted_rows`).  Only then does the block column stream past,
-    ``batch_rows`` rows at a time through a buffered reader, so a task
-    holds about one stripe of blocks; no block bytes are read for a file
-    without wanted rows, nor past the last wanted row.  A file pyarrow
-    cannot read (truncated, garbled page), a stripe split into two runs,
-    and a live stripe with no wanted block all raise ``BlockError``."""
-    stats = [f"{stat}{end}" for _, stat, _, _ in zones for end in ("min", "max")]
-    done, pend, group = set(), None, None
+@contextlib.contextmanager
+def _blocks_file(path: str):
+    """Open one bucket's blocks file for streaming reads.  Anything pyarrow
+    cannot read inside the ``with`` (truncated file, garbled page) raises
+    ``BlockError``."""
     try:
         with pq.ParquetFile(path, buffer_size=1 << 20) as pf:
-            have = set(pf.schema_arrow.names)
-            wanted = dict.fromkeys(["stripe", "column", "n_rows", "frag", *stats])
-            meta = pf.read(columns=[c for c in wanted if c in have]).to_pydict()
-            live, rows = _wanted_rows(path, meta, cols, zones)
-            stripe, column, n_rows = meta["stripe"], meta["column"], meta["n_rows"]
-            # warehouses written before multi-block cells have no 'frag'
-            # column: every block is a whole-column block
-            frag = meta.get("frag", [-1] * len(stripe))
-            batches = (pf.iter_batches(batch_size=batch_rows, columns=["block"])
-                       if rows else ())
-            row = k = 0
-            for batch in batches:
-                blobs = batch.column(0)
-                while k < len(rows) and rows[k] < row + batch.num_rows:
-                    i = rows[k]
-                    k += 1
-                    if stripe[i] != pend:
-                        if group is not None:
-                            yield group
-                        pend, group = stripe[i], ([], [], [], [])
-                        if pend in done:
-                            raise B.BlockError(f"{path}: stripe {pend} is not "
-                                               f"one contiguous run of blocks")
-                        done.add(pend)
-                    group[0].append(column[i])
-                    group[1].append(blobs[i - row].as_py())
-                    group[2].append(n_rows[i])
-                    group[3].append(frag[i])
-                row += batch.num_rows
-                if k == len(rows):
-                    break
+            yield pf
     except (OSError, pa.ArrowException) as e:
         raise B.BlockError(f"unreadable blocks file {path}: {e}") from e
-    if group is not None:
-        yield group
-    if live - done:
-        raise B.BlockError(f"{path}: stripes {sorted(live - done)} have no "
-                           f"blocks for columns {sorted(cols)}")
+
+
+def _read_meta(pf, path: str, stats=()) -> dict:
+    """The small metadata columns of one open blocks file, plus the zone-map
+    ``stats`` columns asked for.  A file without one of them, or without
+    ``block``, raises ``BlockError``."""
+    need = list(dict.fromkeys(["stripe", "column", "n_rows", "frag", *stats]))
+    missing = [c for c in need + ["block"] if c not in pf.schema_arrow.names]
+    if missing:
+        raise B.BlockError(f"{path}: blocks file has no {missing} columns")
+    return pf.read(columns=need).to_pydict()
+
+
+def _iter_blocks(pf, rows, batch_rows: int):
+    """Yield ``(i, block bytes)`` for each ascending row index in ``rows``
+    of one open blocks file.  The block column streams past ``batch_rows``
+    rows at a time through the buffered reader, so only about one batch of
+    blocks is in memory; nothing is read past the last wanted row, and
+    nothing at all when ``rows`` is empty."""
+    if not rows:
+        return
+    row = k = 0
+    for batch in pf.iter_batches(batch_size=batch_rows, columns=["block"]):
+        blobs = batch.column(0)
+        while k < len(rows) and rows[k] < row + batch.num_rows:
+            yield rows[k], blobs[rows[k] - row].as_py()
+            k += 1
+        row += batch.num_rows
+        if k == len(rows):
+            return
+
+
+def _read_stripes(path: str, cols, zones, batch_rows: int):
+    """Yield ``(stripe, names, blobs, n_rows, frags)`` for each wanted
+    stripe of one bucket's blocks file, in file order.
+
+    The metadata columns are read first and pick the wanted rows
+    (:func:`_wanted_rows`); then :func:`_iter_blocks` streams just those
+    blocks, and each stripe is yielded as soon as its last wanted block
+    has passed.  The encoder writes a stripe's blocks as one contiguous
+    run, so a task holds about one stripe; a malformed file whose stripe
+    is split in two runs is held until the second run ends.  A file
+    pyarrow cannot read, a file without the metadata columns and a live
+    stripe with no wanted block raise ``BlockError``."""
+    stats = [f"{stat}{end}" for _, stat, _, _ in zones for end in ("min", "max")]
+    with _blocks_file(path) as pf:
+        meta = _read_meta(pf, path, stats)
+        live, rows = _wanted_rows(path, meta, cols, zones)
+        last = {meta["stripe"][i]: i for i in rows}   # stripe → last wanted row
+        if live - set(last):
+            raise B.BlockError(f"{path}: stripes {sorted(live - set(last))} "
+                               f"have no blocks for columns {sorted(cols)}")
+        groups: dict = {}
+        for i, blob in _iter_blocks(pf, rows, batch_rows):
+            s = meta["stripe"][i]
+            names, blobs, n_rows, frags = groups.setdefault(s, ([], [], [], []))
+            names.append(meta["column"][i])
+            blobs.append(blob)
+            n_rows.append(meta["n_rows"][i])
+            frags.append(meta["frag"][i])
+            if i == last[s]:
+                yield (s, *groups.pop(s))
 
 
 def _decode_plan(manifest: dict, columns, zone_filter):
-    """Driver-side argument checks shared by both decoders: returns
+    """Driver-side argument checks of every decode: returns
     (requested columns, Spark DDL, arrow schema, zone specs)."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
@@ -1150,6 +919,22 @@ def _decode_plan(manifest: dict, columns, zone_filter):
     return cols, out_schema, arrow_schema, zones
 
 
+def _map_files(spark, files: list, per_file, ddl: str):
+    """One ``mapInArrow`` over the indices of ``files``: each task calls
+    ``per_file(path)`` for each of its files and streams out the record
+    batches it yields.  Partition rule of :func:`_scan_markers`: one task
+    per file, up to 4 waves.  Building the DataFrame runs no Spark job."""
+
+    def run(batches):
+        _pin_arrow_threads()
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                yield from per_file(files[i])
+
+    n_part = max(1, min(len(files), 4 * int(spark.sparkContext.defaultParallelism)))
+    return spark.range(len(files), numPartitions=n_part).mapInArrow(run, ddl)
+
+
 def decode_warehouses(spark, warehouses: list, *,
                       columns: list | None = None,
                       zone_filter: tuple | list | None = None):
@@ -1171,21 +956,14 @@ def decode_warehouses(spark, warehouses: list, *,
     # about one stripe's whole-column blocks per read batch
     batch_rows = len(manifests[0]["plan"]["specs"])
 
-    def decode_files(batches):
-        _pin_arrow_threads()
-        for batch in batches:
-            for i in batch.column(0).to_pylist():
-                for group in _read_stripes(files[i], cols, zones, batch_rows):
-                    yield from _assemble_stripe(cols, arrow_schema,
-                                                *group).to_batches()
+    def decode_file(path):
+        for _, *group in _read_stripes(path, cols, zones, batch_rows):
+            yield from _assemble_stripe(cols, arrow_schema, *group).to_batches()
 
-    # partition rule of _scan_markers: one task per file up to 4 waves
-    n_part = max(1, min(len(files), 4 * int(spark.sparkContext.defaultParallelism)))
-    return spark.range(len(files), numPartitions=n_part) \
-        .mapInArrow(decode_files, out_schema)
+    return _map_files(spark, files, decode_file, out_schema)
 
 
-def decode_table(spark, warehouse: str, *, shuffle: bool = False,
+def decode_table(spark, warehouse: str, *,
                  columns: list | None = None,
                  zone_filter: tuple | list | None = None):
     """Blocks → rows (the ``uncheckedRun`` analog,
@@ -1219,50 +997,14 @@ def decode_table(spark, warehouse: str, *, shuffle: bool = False,
     pre-filtered, not the rows) — apply the exact residual predicate on
     the result.
 
-    ``shuffle=True`` is the independent reference decoder: a Spark parquet
-    scan (zone pruning by semi-join) and ``groupBy(bucket, stripe)
-    .applyInArrow``, which makes no layout assumption.  Tests compare the
-    two.
-
     Arrow end-to-end: the earlier applyInPandas path corrupted nullable
     int64 via the pandas float64 conversion (values above 2^53); arrow
     arrays pass through losslessly."""
-    if not shuffle:
-        return decode_warehouses(spark, [warehouse], columns=columns,
-                                 zone_filter=zone_filter)
-    from pyspark.sql import functions as F
-
-    cols, out_schema, arrow_schema, zones = _decode_plan(
-        read_manifest(warehouse), columns, zone_filter)
-    blocks_df = spark.read.parquet(os.path.join(warehouse, "blocks"))
-    if "frag" not in blocks_df.columns:
-        blocks_df = blocks_df.withColumn("frag", F.lit(-1))
-    for zcol, stat, lo, hi in zones:
-        mn, mx = F.col(stat + "min"), F.col(stat + "max")
-        upper = mx >= F.lit(lo)
-        if stat == "s":  # null smax = unbounded above
-            upper = mx.isNull() | upper
-        live = (blocks_df.filter((F.col("column") == zcol) & mn.isNotNull()
-                                 & upper & (mn <= F.lit(hi)))
-                .select("bucket", "stripe"))
-        blocks_df = blocks_df.join(F.broadcast(live.distinct()),
-                                   ["bucket", "stripe"], "left_semi")
-    if columns is not None:
-        blocks_df = blocks_df.filter(F.col("column").isin(cols))
-
-    def reassemble(table: pa.Table) -> pa.Table:
-        return _assemble_stripe(cols, arrow_schema,
-                                table.column("column").to_pylist(),
-                                [b.as_py() for b in table.column("block")],
-                                table.column("n_rows").to_pylist(),
-                                table.column("frag").to_pylist())
-
-    return (blocks_df.groupBy("bucket", "stripe")
-            .applyInArrow(reassemble, schema=out_schema))
+    return decode_warehouses(spark, [warehouse], columns=columns,
+                             zone_filter=zone_filter)
 
 
-def decode_giant_cells(spark, warehouse: str, column: str, *,
-                       validate: bool = True):
+def decode_giant_cells(spark, warehouse: str, column: str):
     """Chunked decode of fragmented (multi-block) cells: one output row PER
     FRAGMENT — ``(bucket, stripe, frag_idx, n_frags, kind, chunk)`` — so no
     single row ever exceeds the fragment cap.  This is the >2 GiB-cell
@@ -1273,34 +1015,17 @@ def decode_giant_cells(spark, warehouse: str, column: str, *,
     Chunks are the cell's raw bytes in ``frag_idx`` order after sorting by
     ``(bucket, stripe, frag_idx)``; ``str`` cells are UTF-8 and a chunk
     boundary may split a codepoint — consumers stitch with
-    ``codecs.getincrementaldecoder("utf-8")``.  Per-fragment crc is
-    validated during the map; ``n_frags`` rides every row so consumers can
-    verify set completeness stream-side.  ``validate=True`` additionally
-    runs an eager bounded check (fragment METADATA only — one row per
-    fragmented stripe) that catches duplicate and gap fragments up front;
-    missing tail fragments are left to the per-row ``n_frags`` contract.
+    ``codecs.getincrementaldecoder("utf-8")``.
+
+    Reads like :func:`decode_table`: one driver listing of ``blocks/`` and
+    one ``mapInArrow`` over file indices, no Spark job at call time.  Each
+    task streams the column's fragment blocks ONE at a time (one fragment
+    in memory), checks each fragment's crc, and checks each stripe's
+    fragment set against ``n_frags`` from the fragment header: a missing
+    (tail included), duplicate or out-of-range fragment raises
+    ``BlockError``.
     """
-    from pyspark.sql import functions as F
-
-    bdf = spark.read.parquet(os.path.join(warehouse, "blocks"))
-    if "frag" not in bdf.columns:  # pre-fragment warehouse: nothing to do
-        bdf = bdf.withColumn("frag", F.lit(-1))
-    bdf = bdf.filter((F.col("column") == column) & (F.col("frag") >= 0))
-    if validate:
-        bad = (bdf.groupBy("bucket", "stripe")
-               .agg(F.count("*").alias("cnt"),
-                    F.countDistinct("frag").alias("got"),
-                    F.max("frag").alias("mx"))
-               .filter((F.col("cnt") != F.col("got"))
-                       | (F.col("got") != F.col("mx") + 1))
-               .limit(20).collect())
-        if bad:
-            raise B.BlockError(
-                f"fragment sets with duplicates/gaps for column {column!r}: "
-                + ", ".join(f"bucket={r['bucket']} stripe={r['stripe']} "
-                            f"(n={r['cnt']}, distinct={r['got']}, "
-                            f"max={r['mx']})" for r in bad))
-
+    files = _bucket_files(warehouse, read_manifest(warehouse))
     out_schema = pa.schema([
         ("bucket", pa.int64()), ("stripe", pa.int64()),
         ("frag_idx", pa.int64()), ("n_frags", pa.int64()),
@@ -1309,28 +1034,39 @@ def decode_giant_cells(spark, warehouse: str, column: str, *,
     out_ddl = ("bucket bigint, stripe bigint, frag_idx bigint, "
                "n_frags bigint, kind string, chunk binary")
 
-    def to_chunks(batches):
-        # ONE output batch per fragment: a stripe's fragments are adjacent
-        # rows in the scan, so batching them together would rebuild the
-        # whole multi-GiB cell in a single arrow batch and overflow 32-bit
-        # binary offsets — exactly the ceiling this surface removes.  (The
-        # input side is bounded by spark.sql.execution.arrow.maxBytesPerBatch,
-        # set in session.get_spark.)
-        for batch in batches:
-            buckets = batch.column("bucket").to_pylist()
-            stripes = batch.column("stripe").to_pylist()
-            blobs = batch.column("block")
-            for j in range(batch.num_rows):
-                i, n, payload, kind, _typ = B.fragment_chunk(blobs[j].as_py())
-                vals = {"bucket": buckets[j], "stripe": stripes[j],
-                        "frag_idx": i, "n_frags": n, "kind": kind,
-                        "chunk": payload}
+    def check(path, stripe, frags):
+        idx, ns = sorted(i for i, _ in frags), {n for _, n in frags}
+        if len(ns) != 1 or idx != list(range(max(ns))):
+            raise B.BlockError(
+                f"{path}: stripe {stripe} column {column!r} has fragments "
+                f"{idx}, n_frags {sorted(ns)}: missing, duplicate or "
+                f"out-of-range fragments")
+
+    def to_chunks(path):
+        # ONE output batch per fragment: batching a stripe's fragments
+        # together would rebuild the whole multi-GiB cell in one arrow
+        # batch and overflow 32-bit binary offsets — the ceiling this
+        # surface removes
+        bucket = int(os.path.basename(os.path.dirname(path))[len("bucket="):])
+        with _blocks_file(path) as pf:
+            meta = _read_meta(pf, path)
+            rows = [i for i, (c, f) in enumerate(zip(meta["column"], meta["frag"]))
+                    if c == column and f >= 0]
+            last = {meta["stripe"][i]: i for i in rows}  # stripe → last fragment row
+            seen: dict = {}
+            for i, blob in _iter_blocks(pf, rows, 1):
+                s = meta["stripe"][i]
+                idx, n, payload, kind, _typ = B.fragment_chunk(blob)
+                seen.setdefault(s, []).append((idx, n))
+                vals = {"bucket": bucket, "stripe": s, "frag_idx": idx,
+                        "n_frags": n, "kind": kind, "chunk": payload}
                 yield pa.record_batch(
                     [pa.array([vals[f.name]], type=f.type)
                      for f in out_schema], schema=out_schema)
+                if i == last[s]:
+                    check(path, s, seen.pop(s))
 
-    return (bdf.select("bucket", "stripe", "block")
-            .mapInArrow(to_chunks, out_ddl))
+    return _map_files(spark, files, to_chunks, out_ddl)
 
 
 # --------------------------------------------------------------------------

@@ -15,10 +15,9 @@ and decode failures — as a DataFrame, never an exception.
 
 from __future__ import annotations
 
-import json
 import os
 
-import pandas as pd
+import pyarrow as pa
 
 from . import blocks as B
 
@@ -50,70 +49,94 @@ def resolve_stripe(present: list, expected: list) -> list:
     return errs
 
 
+def _failure(e: Exception) -> tuple:
+    """(kind, detail) of a block that failed to decode."""
+    if not isinstance(e, B.BlockError):        # decode bug
+        return KIND_DECODE, repr(e)
+    msg = str(e)
+    return (KIND_CRC if "crc" in msg
+            else KIND_CODEC if "codec id" in msg else KIND_DECODE), msg
+
+
+def _check_stripe(names, blobs, n_rows, frags, expected_cols) -> list:
+    """Every error of one stripe's blocks, as ``(column, kind, detail)``;
+    a decode failure is reported with its position, never thrown."""
+    errs = []
+    # fragment rows (frag >= 0) are one LOGICAL block per column: a
+    # multi-block cell (blocks.encode_cell_fragments) is not a duplicate
+    fragged: dict = {}
+    for name, blob, f in zip(names, blobs, frags):
+        if f >= 0:
+            fragged.setdefault(name, []).append(blob)
+    present = [c for c, f in zip(names, frags) if f < 0] + sorted(fragged)
+    for kind, col, detail in resolve_stripe(present, expected_cols):
+        errs.append((col, kind, detail))
+    n_by_col = {}
+    for name, blob, n, f in zip(names, blobs, n_rows, frags):
+        if f >= 0:
+            continue
+        try:
+            arr = B.decode_block(blob)
+            n_by_col[name] = len(arr)
+            if len(arr) != n:
+                errs.append((name, KIND_SIZE, f"block decodes to {len(arr)} "
+                                              f"rows, catalog says {n}"))
+        except Exception as e:
+            errs.append((name, *_failure(e)))
+    for col, frames in fragged.items():
+        try:
+            # STREAMING drain, not decode_cell_fragments: validation needs
+            # per-fragment crc + completeness, not the value — materializing
+            # would cost ~4x the cell size on the very multi-GiB cells the
+            # fragment path exists for
+            for _chunk in B.iter_cell_fragments(frames):
+                pass
+            n_by_col[col] = 1          # a fragmented cell is one row
+        except Exception as e:
+            errs.append((col, *_failure(e)))
+    if len(set(n_by_col.values())) > 1:
+        errs.append(("*", KIND_SIZE, f"sibling blocks disagree on rows: {n_by_col}"))
+    return errs
+
+
 def validate_blocks(spark, warehouse: str, expected_cols: list | None = None):
-    """Full-warehouse validation job → DataFrame(bucket, stripe, column,
-    kind, detail); empty result = sound warehouse."""
-    from .engine import read_manifest
-    from .shipping import ensure_shipped
+    """Full-warehouse validation → DataFrame(bucket, stripe, column, kind,
+    detail); empty result = sound warehouse.
 
-    ensure_shipped(spark)
+    Reads ``blocks/`` like ``engine.decode_table``: one driver listing (a
+    missing manifest or bucket directory raises at call time, no Spark job
+    runs) and one ``mapInArrow`` over file indices.  Everything found
+    inside a file is a row, never an exception: :func:`_check_stripe` for
+    each stripe the reader yields, and a file the reader cannot get
+    through (unreadable, no ``frag`` column, a stripe split in two) as one
+    ``decode_failure`` row at stripe -1."""
+    from .engine import _bucket_files, _map_files, _read_stripes, read_manifest
+
+    manifest = read_manifest(warehouse)
     if expected_cols is None:
-        manifest = read_manifest(warehouse)
         expected_cols = [s["name"] for s in manifest["plan"]["specs"]]
-    blocks_df = spark.read.parquet(os.path.join(warehouse, "blocks"))
+    files = _bucket_files(warehouse, manifest)
+    out_schema = pa.schema([("bucket", pa.int32()), ("stripe", pa.int64()),
+                            ("column", pa.string()), ("kind", pa.string()),
+                            ("detail", pa.string())])
 
-    def check(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        bucket, stripe = int(key[0]), int(key[1])
+    def check_file(path):
+        bucket = int(os.path.basename(os.path.dirname(path))[len("bucket="):])
         rows = []
+        try:
+            for stripe, *group in _read_stripes(path, expected_cols, [],
+                                                len(expected_cols)):
+                rows += [(bucket, stripe, col, kind, str(detail)[:200])
+                         for col, kind, detail
+                         in _check_stripe(*group, expected_cols)]
+        except B.BlockError as e:
+            rows.append((bucket, -1, None, KIND_DECODE, str(e)[:200]))
+        if rows:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(zip(*rows), out_schema)],
+                schema=out_schema)
 
-        def emit(kind, column, detail):
-            rows.append((bucket, stripe, column, kind, str(detail)[:200]))
-
-        # fragment rows (frag >= 0) are one LOGICAL block per column: a
-        # multi-block cell (blocks.encode_cell_fragments) is not a duplicate
-        frag_mask = pdf["frag"] >= 0 if "frag" in pdf.columns \
-            else pd.Series(False, index=pdf.index)
-        whole = pdf[~frag_mask]
-        fragged = pdf[frag_mask]
-        present = list(whole["column"]) + sorted(set(fragged["column"]))
-        for kind, col, detail in resolve_stripe(present, expected_cols):
-            emit(kind, col, detail)
-        n_by_col = {}
-        for _, r in whole.iterrows():
-            try:
-                arr = B.decode_block(r["block"])
-                n_by_col[r["column"]] = len(arr)
-                if len(arr) != r["n_rows"]:
-                    emit(KIND_SIZE, r["column"],
-                         f"block decodes to {len(arr)} rows, catalog says {r['n_rows']}")
-            except B.BlockError as e:
-                msg = str(e)
-                kind = (KIND_CRC if "crc" in msg
-                        else KIND_CODEC if "codec id" in msg else KIND_DECODE)
-                emit(kind, r["column"], msg)
-            except Exception as e:  # decode bug → positioned, not thrown
-                emit(KIND_DECODE, r["column"], repr(e))
-        for col, grp in fragged.groupby("column"):
-            try:
-                # STREAMING drain, not decode_cell_fragments: validation
-                # needs per-fragment crc + completeness, not the value —
-                # materializing would cost ~4x the cell size on the very
-                # multi-GiB cells the fragment path exists for
-                for _chunk in B.iter_cell_fragments(list(grp["block"])):
-                    pass
-                n_by_col[col] = 1          # a fragmented cell is one row
-            except B.BlockError as e:
-                msg = str(e)
-                emit(KIND_CRC if "crc" in msg else KIND_DECODE, col, msg)
-            except Exception as e:
-                emit(KIND_DECODE, col, repr(e))
-        if len(set(n_by_col.values())) > 1:
-            emit(KIND_SIZE, "*", f"sibling blocks disagree on rows: {n_by_col}")
-        return pd.DataFrame(rows, columns=["bucket", "stripe", "column",
-                                           "kind", "detail"])
-
-    return (blocks_df.groupBy("bucket", "stripe")
-            .applyInPandas(check, schema=ERROR_SCHEMA))
+    return _map_files(spark, files, check_file, ERROR_SCHEMA)
 
 
 def humanize_errors(err_df, limit: int = 50) -> str:

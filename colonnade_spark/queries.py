@@ -493,12 +493,9 @@ def q_zone_decode_strings(spark, sf_dir):
     # invocation leaked the full encoded warehouse on every harness run
     wh = os.path.join(tempfile.gettempdir(),
                       f"colonnade_zone_query_{os.getuid()}")
-    # fused: one shuffle-side pass instead of the staged parquet
-    # round-trip (byte-identical blocks — test-asserted), ~3 fewer jobs
-    # on this latency-bound query
     engine.encode_table(spark, docs, p, wh, n_buckets=2,
                         stripe_bytes=64 << 10, mode="overwrite",
-                        input_token="zone_query", fused=True)
+                        input_token="zone_query")
     dec = engine.decode_table(spark, wh, zone_filter=("lang", "en", "es"))
     return (dec.filter("lang between 'en' and 'es'")
             .select(F.col("doc_id").cast("bigint").alias("doc_id"), "lang"))

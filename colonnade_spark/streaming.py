@@ -8,9 +8,9 @@ Siphon.hs:612-616).  The Spark-native generalization is file-source
 micro-batch*:
 
 * each micro-batch encodes into its own sub-warehouse
-  (``<warehouse>/batch=<id>``) through the fused engine path (salted
-  buckets encoded inside the shuffle, per-bucket checkpoint markers,
-  lineage) — no staged parquet write and re-read per batch;
+  (``<warehouse>/batch=<id>``) through the engine's single-pass encode
+  (salted buckets encoded inside the shuffle, per-bucket checkpoint
+  markers, lineage);
 * Structured Streaming's checkpoint gives exactly-once batch ids — a
   crashed run replays only unfinished batches, and byte-determinism makes
   the replay idempotent (the engine-level analog of the reference's parser
@@ -56,8 +56,7 @@ def stream_encode(spark, input_path: str, warehouse: str, plan: EncodePlan,
         sub = os.path.join(warehouse, f"batch={batch_id}")
         engine.encode_table(spark, df, plan, sub, n_buckets=n_buckets,
                             stripe_bytes=stripe_bytes, mode="resume",
-                            input_token=f"stream_batch_{batch_id}",
-                            fused=True)
+                            input_token=f"stream_batch_{batch_id}")
 
     q = (spark.readStream.schema(schema)
          .option("maxFilesPerTrigger", str(max_files_per_trigger))

@@ -51,11 +51,6 @@ def main() -> int:
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--stripe-bytes", type=int, default=4 << 20)
     ap.add_argument("--mode", default="error", choices=["error", "overwrite", "resume"])
-    ap.add_argument("--fused", action="store_true",
-                    help="encode: single-pass path (encode inside the "
-                         "shuffle task; no staged-parquet materialization). "
-                         "Same per-bucket checkpoints, byte-identical "
-                         "blocks; resume re-shuffles only pending buckets.")
     ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--generate", type=int, default=0,
                     help="generate a synthetic corpus of N files at --input first")
@@ -89,7 +84,7 @@ def main() -> int:
         manifest = engine.encode_table(
             spark, df, plan, args.warehouse, n_buckets=args.n_buckets,
             stripe_bytes=args.stripe_bytes, mode=args.mode,
-            input_token=args.input, fused=args.fused)
+            input_token=args.input)
         print(json.dumps(manifest))
     elif args.action == "decode":
         out = os.path.join(args.warehouse, "decoded_parquet")

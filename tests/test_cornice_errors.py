@@ -128,6 +128,24 @@ def test_validate_reports_all_errors(spark, small_wh, tmp_path):
     assert "crc_mismatch" in text and "bucket" in text
 
 
+def test_validate_truncated_file_is_one_row(spark, small_wh, tmp_path):
+    """A truncated blocks file is reported, not thrown: one decode_failure
+    row at stripe -1 for that bucket; the other bucket stays clean."""
+    import shutil
+
+    from colonnade_spark.errors import validate_blocks
+
+    wh = str(tmp_path / "wh")
+    shutil.copytree(small_wh, wh)
+    f = sorted(glob.glob(os.path.join(wh, "blocks", "bucket=*", "*.parquet")))[-1]
+    os.truncate(f, os.path.getsize(f) // 2)
+    bucket = int(f.split("bucket=")[1].split(os.sep)[0])
+    rows = validate_blocks(spark, wh).collect()
+    assert [(r["bucket"], r["stripe"], r["kind"]) for r in rows] == [
+        (bucket, -1, "decode_failure")]
+    assert "unreadable blocks file" in rows[0]["detail"]
+
+
 def test_resolve_stripe_permuted_extra():
     """Order-insensitive, extra ignored (headedToIndexed, Siphon.hs:252-278;
     permuted-header test shape from siphon/test/Test.hs:123-138)."""

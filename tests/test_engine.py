@@ -2,10 +2,12 @@
 skew salting, checkpoint/resume (SURVEY.md §5.2 items 4-6)."""
 
 import glob
+import hashlib
 import json
 import os
 
 import pytest
+from reference_decoder import reference_rows
 
 from colonnade_spark import engine
 from colonnade_spark.corpus import generate_corpus
@@ -167,9 +169,9 @@ def test_decode_preserves_large_int64_with_nulls(spark, tmp_path):
 
 
 def test_decode_shuffle_free_plan_and_equivalence(spark, corpus_df, tmp_path):
-    """The default decode path must plan WITHOUT a shuffle (stripe rows are
+    """The decode must plan WITHOUT a shuffle (stripe rows are
     file-contiguous by construction), and must produce exactly the rows of
-    the groupBy fallback path."""
+    the independent reference decoder."""
     wh = str(tmp_path / "wh")
     plan = corpus_plan()
     engine.encode_table(spark, corpus_df, plan, wh, n_buckets=4,
@@ -177,9 +179,8 @@ def test_decode_shuffle_free_plan_and_equivalence(spark, corpus_df, tmp_path):
     fast = engine.decode_table(spark, wh)
     plan_str = fast._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan_str, plan_str
-    slow = engine.decode_table(spark, wh, shuffle=True)
     a = {tuple(r) for r in fast.collect()}
-    b = {tuple(r) for r in slow.collect()}
+    b = set(reference_rows(wh))
     assert a == b and len(a) == N_FILES
 
 
@@ -289,9 +290,10 @@ def test_skew_salting_spreads_giant_repo(spark, tmp_path):
     engine.encode_table(spark, df, plan, wh, n_buckets=8,
                         stripe_bytes=256 << 10, target_salt_bytes=256 << 10,
                         input_token="skew")
-    staged = spark.read.parquet(os.path.join(wh, "staged"))
+    bucketed = engine.assign_buckets(plan.project(df), plan, 8,
+                                     target_salt_bytes=256 << 10)
     per_bucket = {r["__bucket"] for r in
-                  staged.filter("repo = 'megacorp/monorepo'")
+                  bucketed.filter("repo = 'megacorp/monorepo'")
                   .select("__bucket").distinct().collect()}
     assert len(per_bucket) >= 3, per_bucket   # giant repo spread by salt
     summary = engine.verify_roundtrip(spark, df, plan, wh)
@@ -304,23 +306,20 @@ def test_stripe_iter_honors_cap_exactly(tmp_path):
     stripe is isolated instead of dragging its neighbor past the cap."""
     import numpy as np
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from colonnade_spark.engine import _row_sizes, _stripe_iter
+    from colonnade_spark.engine import _row_sizes, _stripe_iter_batches
 
     # fresh-stripe giant: [1MB, 5MB] rows with a 4MB cap → two stripes
     t = pa.table({"s": ["a" * (1 << 20), "b" * (5 << 20)]})
-    p = str(tmp_path / "t.parquet")
-    pq.write_table(t, p)
-    assert [s.num_rows for s in _stripe_iter([p], ["s"], 4 << 20)] == [1, 1]
+    assert [s.num_rows for s in _stripe_iter_batches(t.to_batches(),
+                                                     4 << 20)] == [1, 1]
 
     rng = np.random.default_rng(7)
     vals = ["x" * int(n) for n in rng.integers(10, 3000, size=500)]
-    p2 = str(tmp_path / "t2.parquet")
-    pq.write_table(pa.table({"s": vals}), p2)
+    batches = pa.table({"s": vals}).to_batches(max_chunksize=97)
     cap = 8 << 10
     total = 0
-    for st in _stripe_iter([p2], ["s"], cap):
+    for st in _stripe_iter_batches(batches, cap):
         nbytes = sum(int(_row_sizes(b).sum()) for b in st.to_batches())
         assert st.num_rows == 1 or nbytes <= cap, (st.num_rows, nbytes)
         total += st.num_rows
@@ -348,11 +347,12 @@ def test_giant_cell_multiblock_roundtrip(spark, tmp_path):
     frag_rows = blocks_df.filter("column = 'content' AND frag >= 0").collect()
     assert len(frag_rows) >= 11, len(frag_rows)
     assert all(r["bytes_out"] <= (1 << 20) + 4096 for r in frag_rows)
-    # both decode paths agree on the giant cell
+    # the decode and the reference decoder agree on the giant cell
     fast = engine.decode_table(spark, wh).filter("path = 'giant.txt'")
-    slow = engine.decode_table(spark, wh, shuffle=True).filter("path = 'giant.txt'")
+    slow = [c for p, c in reference_rows(wh, columns=["path", "content"])
+            if p == "giant.txt"]
     assert fast.collect()[0]["content"] == big
-    assert slow.collect()[0]["content"] == big
+    assert slow == [big]
 
 
 def test_cell_fragments_property_tiny_cap(spark, tmp_path):
@@ -374,15 +374,35 @@ def test_cell_fragments_property_tiny_cap(spark, tmp_path):
     assert blocks_df.filter("frag >= 0").count() >= 12 * 3  # all fragmented
 
 
+def _drop_content_fragments(wh, drop) -> int:
+    """Rewrite every blocks file without the content fragment rows whose
+    ``(frag, n_frags)`` satisfies ``drop``; returns how many files
+    changed."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from colonnade_spark.blocks import fragment_chunk
+
+    changed = 0
+    for fp in glob.glob(os.path.join(wh, "blocks", "bucket=*", "*.parquet")):
+        t = pq.read_table(fp)
+        mask = [not (c == "content" and fr >= 0
+                     and drop(fr, fragment_chunk(b.as_py())[1]))
+                for c, fr, b in zip(t.column("column").to_pylist(),
+                                    t.column("frag").to_pylist(),
+                                    t.column("block"))]
+        if not all(mask):
+            changed += 1
+        pq.write_table(t.filter(pa.array(mask)), fp)
+    return changed
+
+
 def test_decode_giant_cells_chunked(spark, tmp_path):
     """The chunked giant-cell scale path: decode_giant_cells emits one row
     per fragment (bounded row size, no 2 GiB arrow-scalar ceiling); sorted
-    chunks reassemble to the exact cell, and the eager metadata validation
-    catches gap/duplicate fragment sets loudly."""
+    chunks reassemble to the exact cell, and a gap in a fragment set
+    raises in the task."""
     import codecs as pycodecs
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     big = "".join(f"zeile {i}: füñky ünïcode 日本語🎉\n" for i in range(120_000))
     rows = [("r", "giant.txt", "g1", "txt", big)] + \
@@ -394,6 +414,7 @@ def test_decode_giant_cells_chunked(spark, tmp_path):
                         stripe_bytes=1 << 20, input_token="giantchunks")
 
     out = engine.decode_giant_cells(spark, wh, "content")
+    assert "FileScan" not in out._jdf.queryExecution().executedPlan().toString()
     got = out.orderBy("bucket", "stripe", "frag_idx").collect()
     assert len(got) >= 4
     n = got[0]["n_frags"]
@@ -409,21 +430,26 @@ def test_decode_giant_cells_chunked(spark, tmp_path):
     assert any(bytes(r["chunk"])[-1] >= 0x80 for r in got[:-1])
 
     # inject a GAP: drop one middle fragment row from the blocks files
-    # (hive layout: blocks/bucket=N/*.parquet)
-    import glob as _glob
+    assert _drop_content_fragments(wh, lambda fr, n: fr == 1) == 1
+    with pytest.raises(Exception, match="BlockError: .*missing, duplicate"):
+        engine.decode_giant_cells(spark, wh, "content").collect()
 
-    frag_files = 0
-    for fp in _glob.glob(os.path.join(wh, "blocks", "bucket=*", "*.parquet")):
-        t = pq.read_table(fp)
-        mask = [not (c == "content" and fr == 1)
-                for c, fr in zip(t.column("column").to_pylist(),
-                                 t.column("frag").to_pylist())]
-        if not all(mask):
-            frag_files += 1
-        pq.write_table(t.filter(pa.array(mask)), fp)
-    assert frag_files == 1
-    with pytest.raises(Exception, match="gaps|duplicate"):
-        engine.decode_giant_cells(spark, wh, "content")
+
+def test_decode_giant_cells_missing_tail_fragment_raises(spark, tmp_path):
+    """A fragment set without its LAST fragment has no gap below the max
+    index, so only the n_frags check in the task can see it: collect()
+    raises instead of handing the consumer n-1 chunks."""
+    big = "".join(f"tail {i}: ünïcode\n" for i in range(200_000))
+    rows = [("r", "giant.txt", "g1", "txt", big)] + \
+           [("r", f"s{i}.txt", f"c{i}", "txt", f"small {i}") for i in range(5)]
+    df = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string")
+    wh = str(tmp_path / "wh")
+    engine.encode_table(spark, df, corpus_plan(), wh, n_buckets=1,
+                        stripe_bytes=1 << 20, input_token="giant-tail")
+    assert _drop_content_fragments(wh, lambda fr, n: fr == n - 1) == 1
+    with pytest.raises(Exception, match="BlockError: .*missing, duplicate"):
+        engine.decode_giant_cells(spark, wh, "content").collect()
 
 
 def test_multi_zone_filter_conjunction(spark, tmp_path):
@@ -458,11 +484,14 @@ def test_multi_zone_filter_conjunction(spark, tmp_path):
                             zone_filter=[("lang", "en", "en"), ("nope", 0, 1)])
 
 
-def test_decode_pre_fragment_warehouse_backcompat(spark, tmp_path):
-    """Review regression: warehouses written before the multi-block-cell
-    change have no 'frag' column — both decode paths must still read them
-    (every block is a whole-column block)."""
+def test_decode_fragless_blocks_file_raises(spark, tmp_path):
+    """A blocks file without the 'frag' column (the layout before
+    multi-block cells) is not read as whole-column blocks: decode raises
+    BlockError, and validate_blocks reports the file as one
+    decode_failure row at stripe -1."""
     import pyarrow.parquet as pq
+
+    from colonnade_spark.errors import validate_blocks
 
     rows = [("r", f"p{i}", f"c{i}", "py", f"small body {i} " * 10)
             for i in range(300)]
@@ -475,8 +504,13 @@ def test_decode_pre_fragment_warehouse_backcompat(spark, tmp_path):
         t = pq.read_table(fp)
         assert max(t.column("frag").to_pylist()) == -1   # truly frag-free
         pq.write_table(t.drop_columns(["frag"]), fp, compression="NONE")
-    assert engine.decode_table(spark, wh).count() == 300
-    assert engine.decode_table(spark, wh, shuffle=True).count() == 300
+    with pytest.raises(Exception, match=r"BlockError: .*no \['frag'\] columns"):
+        engine.decode_table(spark, wh).collect()
+    errs = validate_blocks(spark, wh).collect()
+    assert errs and {(r["stripe"], r["kind"]) for r in errs} == {
+        (-1, "decode_failure")}
+    assert all("no ['frag'] columns" in r["detail"] for r in errs)
+
 
 def test_engine_end_to_end_array_column(spark, tmp_path):
     """FULL engine path for an array<float> column (not just the blocks
@@ -502,30 +536,44 @@ def test_engine_end_to_end_array_column(spark, tmp_path):
         assert got[k][0] == want[k][0]          # float32 bit-exact
 
 
-def test_fused_matches_staged_byte_identical(spark, corpus_df, tmp_path):
-    """The fused (in-shuffle mapInArrow) and staged (parquet re-read) paths
-    must publish byte-identical bucket files: stripe cuts are batching-
-    independent and both sort by (__bucket, stage_order).  This is the
-    equivalence that lets a mixed fleet (or a staged→fused migration)
-    resume against either's markers."""
+# sha256 over (relative path, bytes) of every blocks/bucket=N/part-0.parquet
+# in bucket order, for the N_FILES seed-42 corpus at n_buckets=5.  The
+# parquet footer names the pyarrow version that wrote the file, so a
+# pyarrow upgrade can move this hash without a block byte changing: then
+# compare the block columns before re-pinning.
+PINNED_BLOCKS_SHA256 = (
+    "775bd799a08eb4af08a0214bdcd193b392172bf7f1e6f1514e07bc83aa1a6aca")
+
+
+def test_encode_blocks_bytes_pinned(spark, corpus_df, tmp_path):
+    """Encode is byte-deterministic and its bytes are pinned: stripe cuts,
+    codec choices, zone maps and the blocks-file layout all feed the hash,
+    so any change to them fails here until the hash is re-pinned on
+    purpose (a format change)."""
     plan = corpus_plan()
-    w1, w2 = str(tmp_path / "staged"), str(tmp_path / "fused")
-    m1 = engine.encode_table(spark, corpus_df, plan, w1, n_buckets=5,
-                             input_token="tf")
-    m2 = engine.encode_table(spark, corpus_df, plan, w2, n_buckets=5,
-                             input_token="tf", fused=True)
-    assert m2["rows"] == m1["rows"] == N_FILES
-    assert m2["bytes_in"] == m1["bytes_in"]
-    assert m2["bytes_out"] == m1["bytes_out"]
-    files1 = sorted(glob.glob(os.path.join(w1, "blocks", "bucket=*",
-                                           "part-0.parquet")))
-    assert files1
-    for p1 in files1:
-        p2 = p1.replace(w1, w2)
-        with open(p1, "rb") as f1, open(p2, "rb") as f2:
-            assert f1.read() == f2.read(), f"bucket differs: {p1}"
-    summary = engine.verify_roundtrip(spark, corpus_df, plan, w2)
+    wh = str(tmp_path / "wh")
+    m = engine.encode_table(spark, corpus_df, plan, wh, n_buckets=5,
+                            input_token="tf")
+    assert (m["rows"], m["bytes_in"], m["bytes_out"]) == (N_FILES, 5397693,
+                                                          4777098)
+    files = sorted(glob.glob(os.path.join(wh, "blocks", "bucket=*",
+                                          "part-0.parquet")),
+                   key=lambda p: int(p.split("bucket=")[1].split(os.sep)[0]))
+    assert files
+    h = hashlib.sha256()
+    for p in files:
+        h.update(os.path.relpath(p, wh).encode())
+        with open(p, "rb") as f:
+            h.update(f.read())
+    assert h.hexdigest() == PINNED_BLOCKS_SHA256
+    summary = engine.verify_roundtrip(spark, corpus_df, plan, wh)
     assert summary["ok"] and summary["rows_decoded"] == N_FILES
+
+
+def test_encode_fused_false_raises(spark, corpus_df, tmp_path):
+    with pytest.raises(ValueError, match="fused=False"):
+        engine.encode_table(spark, corpus_df, corpus_plan(),
+                            str(tmp_path / "wh"), fused=False)
 
 
 def test_fused_resume_skips_completed(spark, corpus_df, tmp_path):
@@ -537,7 +585,7 @@ def test_fused_resume_skips_completed(spark, corpus_df, tmp_path):
     plan = corpus_plan()
     wh = str(tmp_path / "wh")
     engine.encode_table(spark, corpus_df, plan, wh, n_buckets=5,
-                        input_token="tfr", fused=True)
+                        input_token="tfr")
     before = {p: os.path.getmtime(p) for p in
               glob.glob(os.path.join(wh, "blocks", "bucket=*",
                                      "part-0.parquet"))}
@@ -548,7 +596,7 @@ def test_fused_resume_skips_completed(spark, corpus_df, tmp_path):
         shutil.rmtree(os.path.join(wh, "blocks", f"bucket={b}"),
                       ignore_errors=True)
     m = engine.encode_table(spark, corpus_df, plan, wh, n_buckets=5,
-                            mode="resume", input_token="tfr", fused=True)
+                            mode="resume", input_token="tfr")
     assert m["buckets_resumed"] == len(markers) - 2
     assert m["buckets_encoded_this_run"] == 2
     assert m["rows"] == N_FILES
@@ -568,10 +616,10 @@ def test_fused_resume_invalidates_stale_fingerprint(spark, corpus_df,
     plan = corpus_plan()
     wh = str(tmp_path / "wh")
     engine.encode_table(spark, corpus_df, plan, wh, n_buckets=7,
-                        input_token="tsf", fused=True)
+                        input_token="tsf")
     os.remove(os.path.join(wh, "manifest.json"))
     m = engine.encode_table(spark, corpus_df, plan, wh, n_buckets=3,
-                            mode="resume", input_token="tsf", fused=True)
+                            mode="resume", input_token="tsf")
     assert m["buckets_resumed"] == 0
     assert m["rows"] == N_FILES
     stale = [p for p in glob.glob(os.path.join(wh, "blocks", "bucket=*"))
@@ -593,8 +641,7 @@ def test_decode_schema_nested_type_last(spark, tmp_path):
          .with_keys("vec_id"))
     wh = str(tmp_path / "wh")
     engine.encode_table(spark, src, p, wh, n_buckets=2,
-                        stripe_bytes=1 << 20, input_token="emb-last",
-                        fused=True)
+                        stripe_bytes=1 << 20, input_token="emb-last")
     got = {r["vec_id"]: r["embedding"]
            for r in engine.decode_table(spark, wh).collect()}
     want = {r["vec_id"]: r["embedding"] for r in src.collect()}
@@ -662,7 +709,7 @@ def test_marker_shards_are_per_task_and_torn_tail_is_skipped(
     wh = str(tmp_path / "wh")
     plan = corpus_plan()
     m = engine.encode_table(spark, corpus_df, plan, wh, n_buckets=8,
-                            input_token="shards", fused=True)
+                            input_token="shards")
     shards = glob.glob(os.path.join(wh, "markers", "shard_*.jsonl"))
     legacy = glob.glob(os.path.join(wh, "markers", "bucket_*.json"))
     assert shards and not legacy
@@ -679,7 +726,7 @@ def test_marker_shards_are_per_task_and_torn_tail_is_skipped(
     engine.invalidate_markers(wh, [b0])
     assert len(engine.list_markers(wh)) == n_buckets_done - 1
     m2 = engine.encode_table(spark, corpus_df, plan, wh, n_buckets=8,
-                             mode="resume", input_token="shards", fused=True)
+                             mode="resume", input_token="shards")
     assert m2["buckets_encoded_this_run"] == 1
     assert m2["buckets_resumed"] == n_buckets_done - 1
     assert m2["rows"] == m["rows"]
@@ -689,8 +736,7 @@ def test_marker_shards_are_per_task_and_torn_tail_is_skipped(
 def corpus_wh(spark, corpus_df, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("decode") / "wh")
     engine.encode_table(spark, corpus_df, corpus_plan(), wh, n_buckets=4,
-                        stripe_bytes=64 << 10, input_token="dec-io",
-                        fused=True)
+                        stripe_bytes=64 << 10, input_token="dec-io")
     return wh
 
 
@@ -706,6 +752,23 @@ def test_decode_builds_without_spark_jobs(spark, corpus_wh):
         engine.decode_table(spark, corpus_wh,
                             zone_filter=[("lang", "go", "py"),
                                          ("repo", "a", "z")])
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+
+
+def test_giant_cells_and_validate_build_without_spark_jobs(spark, corpus_wh):
+    """The giant-cell decode and the warehouse validation read blocks/ like
+    decode_table: building either DataFrame runs no Spark job."""
+    from colonnade_spark.errors import validate_blocks
+
+    sc = spark.sparkContext
+    group = "blocks-readers-build-no-jobs"
+    sc.setJobGroup(group, "decode_giant_cells / validate_blocks build only")
+    try:
+        engine.decode_giant_cells(spark, corpus_wh, "content")
+        validate_blocks(spark, corpus_wh)
         jobs = list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -730,7 +793,7 @@ def test_decode_warehouse_with_empty_buckets(spark, tmp_path):
         rows, "repo string, path string, commit string, lang string, content string")
     wh = str(tmp_path / "wh")
     m = engine.encode_table(spark, df, corpus_plan(), wh, n_buckets=8,
-                            input_token="empty-buckets", fused=True)
+                            input_token="empty-buckets")
     dirs = glob.glob(os.path.join(wh, "blocks", "bucket=*"))
     assert len(dirs) == m["buckets_encoded_this_run"] < 8
     assert engine.decode_table(spark, wh).count() == 90
@@ -798,7 +861,7 @@ def test_decode_zone_conjunction_subset_fragmented_matches_reference(
         spark, tmp_path):
     """Two zone ranges ANDed plus a column subset, on a warehouse whose
     cells are all fragmented: the in-task read returns exactly the rows of
-    the Spark-scan reference decoder (shuffle=True)."""
+    the independent reference decoder."""
     rows = [(f"r{i % 4}", f"p{i:02d}", f"c{i}", "txt",
              (f"doc {i} – füñky ünïcode 日本語 " * 200)[: 2500 + 31 * i])
             for i in range(24)]
@@ -806,16 +869,13 @@ def test_decode_zone_conjunction_subset_fragmented_matches_reference(
         rows, "repo string, path string, commit string, lang string, content string")
     wh = str(tmp_path / "wh")
     engine.encode_table(spark, df, corpus_plan(), wh, n_buckets=2,
-                        stripe_bytes=1 << 10, input_token="zone-frag",
-                        fused=True)
+                        stripe_bytes=1 << 10, input_token="zone-frag")
     zones = [("repo", "r1", "r2"), ("content", "doc 1", "doc 2")]
     cols = ["content", "path"]
     fast = engine.decode_table(spark, wh, columns=cols, zone_filter=zones)
-    ref = engine.decode_table(spark, wh, columns=cols, zone_filter=zones,
-                              shuffle=True)
-    assert fast.columns == ref.columns == cols
-    a, b = sorted(map(tuple, fast.collect())), sorted(map(tuple, ref.collect()))
-    assert a == b
+    assert fast.columns == cols
+    a = sorted(map(tuple, fast.collect()))
+    assert a == sorted(reference_rows(wh, columns=cols, zone_filter=zones))
     want = {r[1] for r in rows
             if "r1" <= r[0] <= "r2" and "doc 1" <= r[4] <= "doc 2"}
     assert want <= {p for _, p in a} and len(a) < len(rows)
@@ -829,8 +889,7 @@ def test_decode_warehouses_one_read_and_plan_check(spark, tmp_path):
     for i, n in enumerate((30, 20)):
         wh = str(tmp_path / f"batch={i}")
         engine.encode_table(spark, generate_corpus(spark, n, seed=i), plan,
-                            wh, n_buckets=2, input_token=f"multi{i}",
-                            fused=True)
+                            wh, n_buckets=2, input_token=f"multi{i}")
         whs.append(wh)
     both = engine.decode_warehouses(spark, whs)
     assert both.count() == 50
