@@ -300,46 +300,25 @@ def ivf_topk(spark, queries_df, corpus_df, vec_col: str, id_col: str,
             .select("qid", "nid", "rank", "sim"))
 
 
-def cosine_bucket_pair_kernel(threshold: float):
-    """mapInArrow kernel over (band, bh, id, e, n2) sorted by (band, bh,
-    id): per bucket, every pair's cosine is computed vectorized and only
-    pairs >= threshold are emitted (round 6 — the same in-bucket shape as
-    the minhash/simhash kernels, so the candidate volume never shuffles).
+def cosine_metric(threshold: float):
+    """:func:`textops.bucket_pair_kernel` metric over vectors ``e`` (n, dim)
+    and their squared norms ``n2``: the cosine, kept when >= threshold
+    (round 6 — the in-bucket shape, so the candidate volume never
+    shuffles).
 
     BIT-EXACT with the JVM expression it replaces: the elementwise
     products are the same IEEE doubles, and ``np.cumsum`` accumulates
     strictly sequentially — the same left fold as Spark's
     ``aggregate(zip_with(a, b, *), 0.0, +)`` — so dot, sqrt, division and
     the threshold comparison reproduce the exact same float64s."""
-    from .textops import _intra_bucket_pair_chunks, _ranges, _run_groups
 
-    def kernel(batches):
-        import pyarrow as pa
+    def metric(p, I, J):
+        e, n2 = p["e"], p["n2"]
+        dot = np.cumsum(e[I] * e[J], axis=1)[:, -1]
+        sim = dot / np.sqrt(n2[I] * n2[J])
+        return sim, sim >= threshold
 
-        out_schema = pa.schema([("id_a", pa.int64()), ("id_b", pa.int64()),
-                                ("cos_sim", pa.float64())])
-        for counts, payload in _run_groups(batches, ["band", "bh"],
-                                           ["id", "e", "n2"]):
-            keep = counts >= 2
-            if not keep.any():
-                continue
-            starts = np.zeros(len(counts) + 1, dtype=np.int64)
-            np.cumsum(counts, out=starts[1:])
-            rows = _ranges(starts[:-1][keep], counts[keep])
-            ids = payload["id"][rows]
-            e = payload["e"][rows]
-            n2 = payload["n2"][rows]
-            for I, J in _intra_bucket_pair_chunks(counts[keep],
-                                                  max_pairs=1 << 16):
-                dot = np.cumsum(e[I] * e[J], axis=1)[:, -1]
-                sim = dot / np.sqrt(n2[I] * n2[J])
-                ok = sim >= threshold
-                if ok.any():
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(ids[I[ok]]), pa.array(ids[J[ok]]),
-                         pa.array(sim[ok])], schema=out_schema)
-
-    return kernel
+    return metric
 
 
 def cosine_near_dup_pairs(spark, df, vec_col: str, id_col: str,
@@ -363,7 +342,7 @@ def cosine_near_dup_pairs(spark, df, vec_col: str, id_col: str,
     pair instead of three; same float values, 3x less work."""
     from pyspark.sql import functions as F
 
-    from .textops import _spread
+    from .textops import _spread, bucket_pairs
 
     # _spread: a one-split scan otherwise serializes the signature UDF
     # AND the per-pair cosine HOF folds on a single task (round-6
@@ -390,21 +369,15 @@ def cosine_near_dup_pairs(spark, df, vec_col: str, id_col: str,
         bandcols = F.array(*[
             F.shiftright(F.col("lsh_sig"), i * rb).bitwiseAND(F.lit(mask))
             for i in range(bands)])
-        # round 6: bands carry the member VECTORS into their bucket and
-        # one mapInArrow kernel generates + cosine-filters every in-bucket
-        # pair (bit-exact with the JVM fold — see cosine_bucket_pair_
-        # kernel), replacing the ids-only self-join → dropDuplicates over
-        # ALL candidates → two vector re-joins; dedup touches survivors
-        # only.  Same shape as the minhash/simhash kernels.
+        # bands carry the member VECTORS into their bucket; the in-bucket
+        # pair kernel cosine-filters every pair (bit-exact with the JVM
+        # fold — see cosine_metric).  No bucket cap (a cap would change
+        # the pair set); wide vector rows, so 64k pairs per metric call.
         ex = sig.select(F.col("id").cast("bigint").alias("id"), "e", "n2",
                         F.posexplode(bandcols).alias("band", "bh"))
-        from .textops import _kernel_partitions
-        n_part = _kernel_partitions(spark)
-        shuffled = (ex.repartition(n_part, "band", "bh")
-                    .sortWithinPartitions("band", "bh", "id"))
-        pairs = shuffled.mapInArrow(
-            cosine_bucket_pair_kernel(threshold),
-            "id_a bigint, id_b bigint, cos_sim double")
+        pairs = bucket_pairs(ex, ["band", "bh"], ["e", "n2"],
+                             cosine_metric(threshold), "cos_sim double",
+                             max_pairs=1 << 16)
         return pairs.dropDuplicates(["id_a", "id_b"])
     dot = _DOT.format(a="ea", b="eb")
     sim = F.expr(f"({dot}) / sqrt(na * nb)")

@@ -1,8 +1,8 @@
 """Text-analysis / dedup operators for training-data pipelines.
 
 MinHash+LSH near-duplicate detection: shingle → minhash signature (vectorized
-numpy inside a pandas UDF — the only Python step) → banding → bucket
-self-join → signature-estimated Jaccard filter (all JVM-side array ops).
+numpy inside a pandas UDF) → banding → in-bucket pair kernel (pairs and the
+signature-estimated Jaccard filter in one mapInArrow pass, see bucket_pairs).
 
 Kernel design (no per-row Python): each batch's strings are concatenated
 into ONE byte buffer; rolling shingle keys are computed for the whole buffer
@@ -186,27 +186,6 @@ def minhash_signature_batch(texts, n_hashes: int = 64, shingle: int = 5) -> list
     return [row.tolist() for row in out]
 
 
-def _materialize(df, path: str | None = None):
-    """Write a derived table to parquet ONCE and read it back — the
-    100-TB-correct form of ``.cache()`` for signature tables: every
-    downstream consumer scans the materialized table instead of re-running
-    the Python signature kernel per consumer or holding executor memory
-    hostage.  ``path`` points into a warehouse on a real deployment; the
-    default is a process temp dir, removed at interpreter exit (the files
-    must outlive the returned lazy DataFrame, so eager cleanup is wrong —
-    callers that need tighter lifetimes pass ``path`` and own it)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    spark = df.sparkSession
-    if path is None:
-        path = tempfile.mkdtemp(prefix="colonnade_sigs_")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
 def _kernel_partitions(spark) -> int:
     """Explicit partition count for keyed exchanges that feed python
     kernels (mapInArrow pair kernels, the ngram block kernel).  The count
@@ -259,19 +238,14 @@ def with_minhash(df, text_col: str, sig_col: str = "sig",
 def minhash_near_dup_pairs(spark, df, id_col: str, text_col: str,
                            threshold: float = 0.8, n_hashes: int = 64,
                            bands: int = 16, shingle: int = 5,
-                           max_bucket: int = 200, sig_df=None,
-                           sig_path: str | None = None, dedup: bool = True):
+                           max_bucket: int = 200, dedup: bool = True):
     """Candidate pairs sharing >=1 LSH band, kept when the signature-estimated
     Jaccard >= threshold.  Returns (id_a, id_b, est_jaccard).
 
     Since the round-6 in-bucket pair kernel the signature table has exactly
     ONE consumer in this pipeline (the band explode — bucket sizes and the
-    two estimate re-joins are gone), so by default signatures stream
-    straight into the explode with no parquet round-trip.  Pass ``sig_path``
-    to materialize them to a warehouse table anyway (callers that want the
-    signature table as a reusable artifact, or that scan the returned pairs
-    more than once), or ``sig_df`` (columns: id_col, sig) to skip the
-    kernel entirely.
+    two estimate re-joins are gone), so signatures stream straight into the
+    explode with no parquet round-trip.
 
     ``dedup=False`` skips the final ``dropDuplicates``: a pair surviving in
     k shared bands is then emitted k times (same est_jaccard — it is a pure
@@ -289,37 +263,20 @@ def minhash_near_dup_pairs(spark, df, id_col: str, text_col: str,
             f"bands must divide n_hashes: got n_hashes={n_hashes}, "
             f"bands={bands}")
     rows = n_hashes // bands
-    if sig_df is not None:
-        sigged = sig_df.select(id_col, "sig")
-    else:
-        sigged = (with_minhash(df.select(id_col, text_col), text_col,
-                               n_hashes=n_hashes, shingle=shingle)
-                  .select(id_col, "sig"))
-        if sig_path is not None:
-            sigged = _materialize(sigged, sig_path)
+    sigged = with_minhash(df.select(id_col, text_col), text_col,
+                          n_hashes=n_hashes, shingle=shingle)
     band_arr = F.array(*[
         F.hash(F.slice("sig", i * rows + 1, rows)).cast("long").alias(f"b{i}")
         for i in range(bands)])
-    # round 6: bands carry the member SIGNATURES into their bucket and one
-    # mapInArrow kernel generates + estimate-filters every in-bucket pair
-    # (minhash_bucket_pair_kernel) — the former ids-only explode → bucket
-    # self-join → dropDuplicates over ALL candidates → two signature
-    # re-joins shuffled the full candidate volume (12.6M pairs at sf1.0,
-    # bn<=200 buckets) three times; now one member shuffle + a survivors-
-    # only dedup.  The in-bucket id sort gives id_a < id_b; est is the
-    # same matches/n_hashes double, so the surviving pair set is identical.
+    # bands carry the member SIGNATURES into their bucket; the in-bucket
+    # pair kernel (see bucket_pairs) estimate-filters every pair, so only
+    # survivors reach the dedup.  est is the same matches/n_hashes double
+    # as the former self-join's, so the surviving pair set is identical.
     exploded = sigged.select(F.col(id_col).cast("bigint").alias("id"), "sig",
                              F.posexplode(band_arr).alias("band", "bh"))
-    # explicit partition count: AQE would coalesce this exchange by BYTES
-    # and serialize the python pair kernel on a handful of tasks (it
-    # cannot see python-side CPU, guide §4); count policy + skew knob in
-    # _kernel_partitions
-    n_part = _kernel_partitions(sigged.sparkSession)
-    shuffled = (exploded.repartition(n_part, "band", "bh")
-                .sortWithinPartitions("band", "bh", "id"))
-    pairs = shuffled.mapInArrow(
-        minhash_bucket_pair_kernel(n_hashes, threshold, max_bucket),
-        "id_a bigint, id_b bigint, est_jaccard double")
+    pairs = bucket_pairs(exploded, ["band", "bh"], ["sig"],
+                         minhash_metric(n_hashes, threshold),
+                         "est_jaccard double", max_bucket=max_bucket)
     return pairs.dropDuplicates(["id_a", "id_b"]) if dedup else pairs
 
 
@@ -394,40 +351,30 @@ def simhash_pairs_from_sigs(df_sigged, id_col: str, sig_col: str = "simhash",
     # subtrees stop being identical, exchange reuse never fires, and the
     # signature UDF executes once PER CONSUMER (measured at sf0.1:
     # 2.41 -> 3.14 s, 3x ArrowEvalPython in the executed plan).  Callers
-    # therefore materialize df_sigged (parquet warehouse table or
-    # localCheckpoint — see simhash_near_dup_pairs), which both consumers
+    # therefore materialize df_sigged (localCheckpoint — see
+    # simhash_near_dup_pairs — or a parquet table), which both consumers
     # scan cheaply.
     exploded = df_sigged.select(
         F.col(id_col).cast("bigint").alias("id"),
         F.col(sig_col).alias("sig"),
         F.posexplode(chunks).alias("band", "bh"))
-    # round 6: in-bucket pairs + hamming filter run inside one mapInArrow
-    # kernel (simhash_bucket_pair_kernel: xor + SWAR popcount) over the
-    # bucket-sorted member stream — the former bucket self-join +
-    # dropDuplicates shuffled the full candidate volume (65M pairs at
-    # sf1.0) before the hamming filter dropped nearly all of it.  The
+    # in-bucket pairs + hamming filter run inside the in-bucket pair
+    # kernel (bucket_pairs + hamming_metric: xor + SWAR popcount).  The
     # level-0 kernel sees EVERY bucket and applies the same 2..max_bucket
     # cap in-stream; since it already detects oversized runs, it emits
     # their (band, bh) keys as sentinel rows (hamming = -1), which replaces
     # the former bucket-size groupBy — a SECOND full explode+shuffle+agg
     # pass over the signature table at any scale — as the Manku router.
-    # explicit partition count — same AQE-coalescing hazard as the minhash
-    # kernel (a ~13 MB exploded signature table would collapse to ONE
-    # post-shuffle partition and serialize the 65M-pair popcount); count
-    # policy + skew knob in _kernel_partitions
-    n_part = _kernel_partitions(df_sigged.sparkSession)
-    shuffled = (exploded.repartition(n_part, "band", "bh")
-                .sortWithinPartitions("band", "bh", "id"))
+    metric = hamming_metric(max_hamming)
     # localCheckpoint: level0 feeds BOTH the result union and the Manku
     # routing broadcast; without a materialization barrier the broadcast
     # subquery would re-execute the whole sig-scan -> shuffle -> kernel
     # pipeline (the multi-consumer trap, CLAUDE.md round-6).  eager=False:
     # the isEmpty() probe below materializes the blocks in one job.
-    level0_out = (shuffled.mapInArrow(
-        simhash_bucket_pair_kernel(["band", "bh"], max_hamming, max_bucket,
-                                   emit_over_keys=True),
-        "id_a bigint, id_b bigint, hamming int")
-        .localCheckpoint(eager=False))
+    level0_out = bucket_pairs(
+        exploded, ["band", "bh"], ["sig"], metric, "hamming int",
+        max_bucket=max_bucket, emit_over_keys=True).localCheckpoint(
+            eager=False)
     level0 = level0_out.filter(F.col("hamming") >= 0)
     over = (level0_out.filter(F.col("hamming") < 0)
             .select(F.shiftright("id_b", 16).cast("int").alias("band"),
@@ -460,12 +407,8 @@ def simhash_pairs_from_sigs(df_sigged, id_col: str, sig_col: str = "simhash",
                .select("id", "sig", "band", "bh",
                        F.posexplode(chunks2).alias("band2", "bh2"))
                .filter(F.col("band2") != F.col("band")))
-    level1 = (refined.repartition(n_part, "band", "bh", "band2", "bh2")
-              .sortWithinPartitions("band", "bh", "band2", "bh2", "id")
-              .mapInArrow(
-                  simhash_bucket_pair_kernel(["band", "bh", "band2", "bh2"],
-                                             max_hamming, max_bucket),
-                  "id_a bigint, id_b bigint, hamming int"))
+    level1 = bucket_pairs(refined, ["band", "bh", "band2", "bh2"], ["sig"],
+                          metric, "hamming int", max_bucket=max_bucket)
 
     return (level0.unionByName(level1)
             .dropDuplicates(["id_a", "id_b"])
@@ -474,24 +417,18 @@ def simhash_pairs_from_sigs(df_sigged, id_col: str, sig_col: str = "simhash",
 
 def simhash_near_dup_pairs(spark, df, id_col: str, text_col: str,
                            max_hamming: int = 6, shingle: int = 4,
-                           max_bucket: int = 10_000, sig_df=None,
-                           sig_path: str | None = None):
+                           max_bucket: int = 10_000):
     """Near-dup pairs by SimHash over text: signature UDF + recursive-split
-    bucket join (see :func:`simhash_pairs_from_sigs`).  Signatures are
-    materialized ONCE so the UDF never re-executes per consumer (Catalyst's
-    per-branch specialization defeats exchange reuse for unmaterialized
-    signatures — measured rejection, see :func:`simhash_pairs_from_sigs`):
-
-    - ``sig_path`` — parquet warehouse table: the durable/reusable-artifact
-      form (pass this at scale when the signature table should outlive the
-      query or feed other jobs).
-    - default — ``localCheckpoint`` (lazy): same compute-once semantics,
-      materialized as executor-local blocks inside the first action instead
-      of a parquet write+read round-trip.  The signature table is 16 bytes
-      per doc + id, so the block footprint is negligible next to the
-      corpus at any scale, and unlike a driver-local temp dir this form is
-      also correct on a real cluster.
-    - ``sig_df`` — precomputed table, used as-is.
+    bucket join (see :func:`simhash_pairs_from_sigs`, also the entry point
+    for precomputed signatures).  Signatures are materialized ONCE so the
+    UDF never re-executes per consumer (Catalyst's per-branch
+    specialization defeats exchange reuse for unmaterialized signatures —
+    measured rejection, see :func:`simhash_pairs_from_sigs`), by a lazy
+    ``localCheckpoint``: materialized as executor-local blocks inside the
+    first action instead of a parquet write+read round-trip.  The signature
+    table is 16 bytes per doc + id, so the block footprint is negligible
+    next to the corpus at any scale, and unlike a driver-local temp dir
+    this form is also correct on a real cluster.
 
     Not fully lazy: building the returned DataFrame runs one eager Spark
     job, an ``isEmpty()`` probe over the level-0 kernel output that
@@ -499,12 +436,10 @@ def simhash_near_dup_pairs(spark, df, id_col: str, text_col: str,
     :func:`simhash_pairs_from_sigs`).  That job computes the signatures
     and the level-0 pairs, so this call costs about one pass of the
     pipeline before any action on the result."""
-    if sig_df is None:
-        sigged = (with_simhash(df.select(id_col, text_col), text_col,
-                               shingle=shingle).select(id_col, "simhash"))
-        sig_df = (_materialize(sigged, sig_path) if sig_path is not None
-                  else sigged.localCheckpoint(eager=False))
-    return simhash_pairs_from_sigs(sig_df, id_col, "simhash",
+    sigged = (with_simhash(df.select(id_col, text_col), text_col,
+                           shingle=shingle).select(id_col, "simhash"))
+    return simhash_pairs_from_sigs(sigged.localCheckpoint(eager=False),
+                                   id_col, "simhash",
                                    max_hamming=max_hamming,
                                    max_bucket=max_bucket)
 
@@ -801,14 +736,156 @@ def with_winnow_fingerprints(df, text_col: str, fp_col: str = "fps",
 
 
 # --------------------------------------------------------------------------
-# in-bucket pair kernels (round 6): LSH candidate pairs are generated AND
+# in-bucket pair kernel (round 6): LSH candidate pairs are generated AND
 # metric-filtered inside one mapInArrow pass over the bucket-sorted stream,
 # so only metric-passing pairs ever reach a shuffle.  The former shape —
 # bucket self-join → dropDuplicates over EVERY candidate → signature
 # re-join → metric filter — shuffled the full candidate volume (12.6M rows
 # minhash / 65M simhash at sf1.0) three times; the kernel shuffles the
-# exploded members once and survivors (~1e4-1e5 rows) once.
+# exploded members once and survivors (~1e4-1e5 rows) once.  One kernel
+# serves every family (minhash, simhash at both Manku levels, cosine): a
+# family supplies only its vectorized pair metric,
+# ``metric(payload, I, J) -> (score, keep)``.
 # --------------------------------------------------------------------------
+
+_SCORE_DTYPE = {"int": np.int32, "double": np.float64}
+
+
+def bucket_pairs(members, key_cols: list, payload_cols: list, metric,
+                 out_col: str, **kw):
+    """Every in-bucket pair of ``members`` (columns ``id``, *key_cols,
+    *payload_cols) that passes ``metric``, as ``(id_a, id_b, <out_col>)``
+    with id_a < id_b: one hash exchange on the bucket key, an in-partition
+    sort by (key, id), and :func:`bucket_pair_kernel` (``kw`` passes
+    through).  ``out_col`` is the score column's DDL (``"hamming int"``)."""
+    # explicit partition count: AQE would coalesce this exchange by BYTES
+    # and serialize the python pair kernel on a handful of tasks (it cannot
+    # see python-side CPU, guide §4 — a ~13 MB exploded simhash table
+    # collapses to ONE post-shuffle partition); count policy + skew knob in
+    # _kernel_partitions
+    n_part = _kernel_partitions(members.sparkSession)
+    return (members.repartition(n_part, *key_cols)
+            .sortWithinPartitions(*key_cols, "id")
+            .mapInArrow(bucket_pair_kernel(key_cols, payload_cols, metric,
+                                           out_col, **kw),
+                        f"id_a bigint, id_b bigint, {out_col}"))
+
+
+def bucket_pair_kernel(key_cols: list, payload_cols: list, metric,
+                       out_col: str, max_bucket: int | None = None,
+                       max_pairs: int = 1 << 21,
+                       emit_over_keys: bool = False):
+    """mapInArrow kernel over (*key_cols, id, *payload_cols) sorted by
+    (*key_cols, id): per bucket (run of equal keys) of 2..max_bucket
+    members, ``metric(payload, I, J) -> (score, keep)`` scores chunks of
+    row-index pairs vectorized (``payload``: col -> numpy array over the
+    kept buckets' rows, ``id`` included, list columns as (n, width)), and
+    only the kept pairs are emitted as ``(id_a, id_b, score)`` — id_a <
+    id_b via the in-bucket id sort.  ``out_col`` is the score column's DDL
+    (``int`` or ``double``).
+
+    ``max_bucket``: buckets above it emit no pairs, and a run spanning
+    arrow batches carries at most max_bucket + 1 rows, so a degenerate
+    bucket cannot accumulate a partition's worth of rows; ``None`` keeps
+    every bucket whole.  ``max_pairs``: pairs per metric call (lower it
+    for wide payload rows).
+
+    ``emit_over_keys`` (simhash level 0): oversized runs (> max_bucket
+    members — the kernel already detects them to drop them) additionally
+    emit ONE sentinel row ``(id_a=-1, id_b=(key0<<16)|key1, score=-1)`` so
+    the caller can route those buckets into the Manku refinement WITHOUT a
+    separate bucket-size aggregation over the full exploded table (the
+    sizes groupBy was a second full explode+shuffle+agg pass at any scale).
+    Requires exactly two key columns with key1 in [0, 65536) and key0 in
+    [-2**47, 2**47), so ``key0 << 16`` fits int64 — true for the (band,
+    16-bit-chunk) level-0 keys; an oversized bucket with a key outside
+    raises ``ValueError``.  Sentinels are distinguishable from real pairs
+    by score < 0 (a real pair's hamming is always >= 0, whatever the id
+    values)."""
+    if emit_over_keys and (len(key_cols) != 2 or max_bucket is None):
+        raise ValueError("emit_over_keys requires exactly two key columns "
+                         "and a max_bucket")
+    name, ddl_type = out_col.split()
+    dtype = _SCORE_DTYPE[ddl_type]
+    cols = ["id"] + list(payload_cols)
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        out_schema = pa.schema([("id_a", pa.int64()), ("id_b", pa.int64()),
+                                (name, pa.from_numpy_dtype(dtype))])
+
+        def out(id_a, id_b, score):
+            return pa.RecordBatch.from_arrays(
+                [pa.array(id_a), pa.array(id_b),
+                 pa.array(score.astype(dtype, copy=False))],
+                schema=out_schema)
+
+        for counts, payload in _run_groups(
+                batches, key_cols,
+                (list(key_cols) if emit_over_keys else []) + cols,
+                drop_over=max_bucket):
+            starts = np.zeros(len(counts) + 1, dtype=np.int64)
+            np.cumsum(counts, out=starts[1:])
+            if emit_over_keys:
+                over = np.flatnonzero(counts > max_bucket)
+                if over.size:
+                    s = starts[:-1][over]
+                    k0 = payload[key_cols[0]][s].astype(np.int64)
+                    k1 = payload[key_cols[1]][s].astype(np.int64)
+                    # the caller unpacks id_b >> 16 and id_b & 0xFFFF: a
+                    # key outside the packable range would alias another
+                    # bucket silently, so refuse it
+                    if ((k1 < 0) | (k1 >= 1 << 16)).any() or (
+                            (k0 < -(1 << 47)) | (k0 >= 1 << 47)).any():
+                        raise ValueError(
+                            "simhash sentinel keys out of range: key1 must "
+                            "be in [0, 65536) and key0 << 16 fit int64")
+                    minus1 = np.full(over.size, -1, dtype=np.int64)
+                    yield out(minus1, (k0 << 16) | k1, minus1)
+            keep = counts >= 2
+            if max_bucket is not None:
+                keep &= counts <= max_bucket
+            if not keep.any():
+                continue
+            rows = _ranges(starts[:-1][keep], counts[keep])
+            p = {c: payload[c][rows] for c in cols}
+            for I, J in _intra_bucket_pair_chunks(counts[keep], max_pairs):
+                score, ok = metric(p, I, J)
+                if ok.any():
+                    yield out(p["id"][I[ok]], p["id"][J[ok]], score[ok])
+
+    return kernel
+
+
+def minhash_metric(n_hashes: int, threshold: float):
+    """:func:`bucket_pair_kernel` metric over ``sig`` (n, n_hashes): the
+    signature-agreement Jaccard estimate ``matches / n_hashes``, kept when
+    >= threshold."""
+
+    def metric(p, I, J):
+        sig = p["sig"]
+        m = np.zeros(I.size, dtype=np.int64)
+        for k in range(sig.shape[1]):
+            m += sig[I, k] == sig[J, k]
+        est = m / float(n_hashes)
+        return est, est >= threshold
+
+    return metric
+
+
+def hamming_metric(max_hamming: int):
+    """:func:`bucket_pair_kernel` metric over 64-bit ``sig``: hamming
+    distance (xor + SWAR popcount), kept when <= max_hamming."""
+
+    def metric(p, I, J):
+        sig = p["sig"]
+        ham = _popcount64((sig[I] ^ sig[J]).astype(np.int64, copy=False)
+                          .view(np.uint64))
+        return ham, ham <= max_hamming
+
+    return metric
+
 
 def _popcount64(x: np.ndarray) -> np.ndarray:
     """Vectorized 64-bit popcount (SWAR; numpy < 2.0 has no bitwise_count).
@@ -836,60 +913,42 @@ def _intra_bucket_pair_chunks(counts: np.ndarray, max_pairs: int = 1 << 21):
     materialized at once)."""
     starts = np.zeros(len(counts) + 1, dtype=np.int64)
     np.cumsum(counts, out=starts[1:])
-    buf: list = []          # (start, count) of buffered small buckets
+
+    def pairs_of(ks):                       # all pairs of small buckets ks
+        s, c = starts[ks], counts[ks]
+        return _pairs_after(_ranges(s, c), np.repeat(s + c, c))
+
+    buf: list = []                          # buffered small buckets
     buf_pairs = 0
-
-    def flush():
-        nonlocal buf, buf_pairs
-        if not buf:
-            return None
-        s = np.array([b[0] for b in buf], dtype=np.int64)
-        c = np.array([b[1] for b in buf], dtype=np.int64)
-        ends_of_row = np.repeat(s + c, c)
-        rows = np.concatenate(
-            [np.arange(si, si + ci, dtype=np.int64) for si, ci in buf]) \
-            if len(buf) < 1024 else _ranges(s, c)
-        a = ends_of_row - rows - 1                    # partners after row
-        P = int(a.sum())
-        I = np.repeat(rows, a)
-        astart = np.zeros(a.size, dtype=np.int64)
-        np.cumsum(a[:-1], out=astart[1:])
-        t = np.arange(P, dtype=np.int64) - np.repeat(astart, a)
-        J = I + 1 + t
-        buf, buf_pairs = [], 0
-        return I, J
-
     for k, c in enumerate(counts):
         c = int(c)
         if c < 2:
             continue
         p = c * (c - 1) // 2
-        if p > max_pairs:
-            out = flush()
-            if out is not None:
-                yield out
-            s0 = int(starts[k])
-            strip = max(1, max_pairs // max(c - 1, 1))
-            for a0 in range(0, c - 1, strip):
-                a1 = min(a0 + strip, c - 1)
-                rows = np.arange(s0 + a0, s0 + a1, dtype=np.int64)
-                cnt = (s0 + c) - rows - 1
-                P = int(cnt.sum())
-                I = np.repeat(rows, cnt)
-                astart = np.zeros(cnt.size, dtype=np.int64)
-                np.cumsum(cnt[:-1], out=astart[1:])
-                t = np.arange(P, dtype=np.int64) - np.repeat(astart, cnt)
-                yield I, I + 1 + t
+        if p <= max_pairs:
+            buf.append(k)
+            buf_pairs += p
+            if buf_pairs >= max_pairs:
+                yield pairs_of(buf)
+                buf, buf_pairs = [], 0
             continue
-        buf.append((int(starts[k]), c))
-        buf_pairs += p
-        if buf_pairs >= max_pairs:
-            out = flush()
-            if out is not None:
-                yield out
-    out = flush()
-    if out is not None:
-        yield out
+        if buf:
+            yield pairs_of(buf)
+            buf, buf_pairs = [], 0
+        s0 = int(starts[k])
+        strip = max(1, max_pairs // (c - 1))
+        for a0 in range(0, c - 1, strip):
+            yield _pairs_after(np.arange(s0 + a0, s0 + min(a0 + strip, c - 1),
+                                         dtype=np.int64), s0 + c)
+    if buf:
+        yield pairs_of(buf)
+
+
+def _pairs_after(rows: np.ndarray, ends) -> tuple:
+    """``(I, J)``: each of ``rows`` paired with every later row of its
+    bucket (``ends``: the bucket's exclusive end row, per row or scalar)."""
+    after = ends - rows - 1
+    return np.repeat(rows, after), _ranges(rows + 1, after)
 
 
 def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
@@ -933,11 +992,14 @@ def _run_groups(batches, key_cols: list, payload_cols: list,
             col = batch.column(c)
             if pa_types_is_list(col):
                 flat = col.flatten().to_numpy(zero_copy_only=False)
-                n_rows = len(col)
-                if n_rows and flat.size % n_rows:
+                width = flat.size // len(col)
+                # every row must be a non-null list of that width: the flat
+                # size alone passes [[1, 2, 3], [4]] (and a null row, which
+                # flatten drops) and reshapes it into the wrong rows
+                if col.null_count or (
+                        col.value_lengths().to_numpy() != width).any():
                     raise ValueError(f"ragged list column {c!r}")
-                width = flat.size // n_rows if n_rows else 0
-                payload[c] = flat.reshape(n_rows, width)
+                payload[c] = flat.reshape(len(col), width)
             else:
                 payload[c] = col.to_numpy(zero_copy_only=False)
         # run boundaries within this batch
@@ -981,113 +1043,6 @@ def pa_types_is_list(col) -> bool:
 
     return (patypes.types.is_list(col.type)
             or patypes.types.is_large_list(col.type))
-
-
-def minhash_bucket_pair_kernel(n_hashes: int, threshold: float,
-                               max_bucket: int):
-    """mapInArrow kernel over (band, bh, id, sig) sorted by (band, bh, id):
-    per bucket of 2..max_bucket members, every pair's signature-agreement
-    estimate ``matches / n_hashes`` is computed vectorized and only pairs
-    with est >= threshold are emitted (id_a < id_b via the in-bucket id
-    sort).  Buckets outside [2, max_bucket] emit nothing — the same
-    degenerate-bucket cap the bucket_sizes semi-join used to apply."""
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        out_schema = pa.schema([("id_a", pa.int64()), ("id_b", pa.int64()),
-                                ("est_jaccard", pa.float64())])
-        for counts, payload in _run_groups(batches, ["band", "bh"],
-                                           ["id", "sig"],
-                                           drop_over=max_bucket):
-            keep = (counts >= 2) & (counts <= max_bucket)
-            if not keep.any():
-                continue
-            starts = np.zeros(len(counts) + 1, dtype=np.int64)
-            np.cumsum(counts, out=starts[1:])
-            rows = _ranges(starts[:-1][keep], counts[keep])
-            ids = payload["id"][rows]
-            sig = payload["sig"][rows]
-            for I, J in _intra_bucket_pair_chunks(counts[keep]):
-                m = np.zeros(I.size, dtype=np.int64)
-                for k in range(sig.shape[1]):
-                    m += sig[I, k] == sig[J, k]
-                est = m / float(n_hashes)
-                ok = est >= threshold
-                if ok.any():
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(ids[I[ok]]), pa.array(ids[J[ok]]),
-                         pa.array(est[ok])], schema=out_schema)
-
-    return kernel
-
-
-def simhash_bucket_pair_kernel(key_cols: list, max_hamming: int,
-                               max_bucket: int, emit_over_keys: bool = False):
-    """mapInArrow kernel over (*key_cols, id, sig) sorted by (*key_cols,
-    id): per bucket of 2..max_bucket members, pairwise hamming distance
-    (xor + SWAR popcount) with only pairs <= max_hamming emitted.
-
-    ``emit_over_keys`` (level-0 only): oversized runs (> max_bucket members
-    — the kernel already detects them to drop them) additionally emit ONE
-    sentinel row ``(id_a=-1, id_b=(key0<<16)|key1, hamming=-1)`` so the
-    caller can route those buckets into the Manku refinement WITHOUT a
-    separate bucket-size aggregation over the full exploded table (the
-    sizes groupBy was a second full explode+shuffle+agg pass at any scale).
-    Requires exactly two key columns with key1 in [0, 65536) and key0 in
-    [-2**47, 2**47), so ``key0 << 16`` fits int64 — true for the (band,
-    16-bit-chunk) level-0 keys; an oversized bucket with a key outside
-    raises ``ValueError``.  Sentinels are distinguishable from real pairs
-    by hamming < 0 (a real pair's hamming is always >= 0, whatever the id
-    values)."""
-    if emit_over_keys and len(key_cols) != 2:
-        raise ValueError("emit_over_keys requires exactly two key columns")
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        out_schema = pa.schema([("id_a", pa.int64()), ("id_b", pa.int64()),
-                                ("hamming", pa.int32())])
-        payload_cols = (list(key_cols) if emit_over_keys else []) + ["id", "sig"]
-        for counts, payload in _run_groups(batches, key_cols, payload_cols,
-                                           drop_over=max_bucket):
-            starts = np.zeros(len(counts) + 1, dtype=np.int64)
-            np.cumsum(counts, out=starts[1:])
-            if emit_over_keys:
-                over = np.flatnonzero(counts > max_bucket)
-                if over.size:
-                    s = starts[:-1][over]
-                    k0 = payload[key_cols[0]][s].astype(np.int64)
-                    k1 = payload[key_cols[1]][s].astype(np.int64)
-                    # the caller unpacks id_b >> 16 and id_b & 0xFFFF: a
-                    # key outside the packable range would alias another
-                    # bucket silently, so refuse it
-                    if ((k1 < 0) | (k1 >= 1 << 16)).any() or (
-                            (k0 < -(1 << 47)) | (k0 >= 1 << 47)).any():
-                        raise ValueError(
-                            "simhash sentinel keys out of range: key1 must "
-                            "be in [0, 65536) and key0 << 16 fit int64")
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(np.full(over.size, -1, dtype=np.int64)),
-                         pa.array((k0 << 16) | k1),
-                         pa.array(np.full(over.size, -1, dtype=np.int32))],
-                        schema=out_schema)
-            keep = (counts >= 2) & (counts <= max_bucket)
-            if not keep.any():
-                continue
-            rows = _ranges(starts[:-1][keep], counts[keep])
-            ids = payload["id"][rows]
-            sig = payload["sig"][rows].astype(np.int64).view(np.uint64)
-            for I, J in _intra_bucket_pair_chunks(counts[keep]):
-                ham = _popcount64(sig[I] ^ sig[J])
-                ok = ham <= max_hamming
-                if ok.any():
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(ids[I[ok]]), pa.array(ids[J[ok]]),
-                         pa.array(ham[ok].astype(np.int32))],
-                        schema=out_schema)
-
-    return kernel
 
 
 # --------------------------------------------------------------------------

@@ -36,31 +36,6 @@ def test_minhash_finds_perturbed_pairs(spark, docs):
     assert all(0.5 <= e <= 1.0 for _, _, e in pairs)
 
 
-def test_minhash_sig_path_materializes_and_matches_inline(spark, docs, tmp_path):
-    """The default path streams signatures straight into the band explode
-    (single consumer since the round-6 in-bucket kernel); ``sig_path`` must
-    still write a reusable parquet signature table, and both paths must
-    produce the identical pair set (signatures are a pure function of the
-    text, so WHERE the kernel runs cannot change them)."""
-    import os
-
-    from colonnade_spark.textops import minhash_near_dup_pairs
-
-    both = _with_perturbed(docs)
-    sig_dir = str(tmp_path / "sigs")
-    inline = sorted(map(tuple, minhash_near_dup_pairs(
-        spark, both, "doc_id", "text", threshold=0.5).collect()))
-    via_path = sorted(map(tuple, minhash_near_dup_pairs(
-        spark, both, "doc_id", "text", threshold=0.5,
-        sig_path=sig_dir).collect()))
-    assert inline == via_path
-    # the warehouse signature table actually exists and is complete
-    sig = spark.read.parquet(sig_dir)
-    assert sig.columns == ["doc_id", "sig"]
-    assert sig.count() == both.count()
-    assert any(f.endswith(".parquet") for f in os.listdir(sig_dir))
-
-
 def test_minhash_dedup_false_is_multiset_of_same_pairs(spark, docs):
     """``dedup=False`` must emit exactly the deduped pair set with
     multiplicity >= 1 and a single est value per pair (est is a pure
@@ -639,76 +614,144 @@ def test_run_groups_truncates_oversized_carry():
     assert over[0] > 8 and len(over[1]) <= 9 + 5
 
 
-def test_bucket_pair_kernels_match_bruteforce():
-    """minhash/simhash pair kernels vs brute force over synthetic buckets,
-    including a bucket big enough to hit the strip path."""
+@pytest.mark.parametrize("rows", [[[1, 2, 3], [4]],
+                                  [[1, 2, 3], None, [4, 5, 6]]])
+def test_run_groups_rejects_ragged_list_rows(rows):
+    """A list payload whose rows differ in length, or hold a null, must
+    raise: the total size alone divides evenly here, and a reshape would
+    turn [[1, 2, 3], [4]] into [[1, 2], [3, 4]] (a null row is dropped by
+    flatten) and pair the wrong signatures."""
     import pyarrow as pa
-    from colonnade_spark.textops import (minhash_bucket_pair_kernel,
-                                         simhash_bucket_pair_kernel,
-                                         _popcount64)
+    from colonnade_spark.textops import _run_groups
+
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([0] * len(rows), type=pa.int32()),
+         pa.array(range(len(rows)), type=pa.int64()),
+         pa.array(rows, type=pa.list_(pa.int64()))],
+        names=["bh", "id", "sig"])
+    with pytest.raises(ValueError, match="ragged list column 'sig'"):
+        list(_run_groups(iter([batch]), ["bh"], ["id", "sig"]))
+
+
+def _kernel_rows(kernel, batches):
+    return [row for b in kernel(iter(batches))
+            for row in zip(*(c.to_pylist() for c in b.columns))]
+
+
+def test_pair_chunks_cover_every_pair_once():
+    """Buffered small buckets and row strips of big ones (small max_pairs
+    forces both, and flushes between them) yield each in-bucket pair
+    exactly once, in bucket order."""
+    from itertools import combinations
+
+    from colonnade_spark.textops import _intra_bucket_pair_chunks
+
+    counts = np.array([3, 1, 0, 2, 9, 4, 2, 12, 5], dtype=np.int64)
+    got = [(int(i), int(j)) for I, J in
+           _intra_bucket_pair_chunks(counts, max_pairs=7)
+           for i, j in zip(I, J)]
+    at, expect = 0, []
+    for c in counts:
+        expect += combinations(range(at, at + int(c)), 2)
+        at += int(c)
+    assert got == expect
+
+
+def test_bucket_pair_kernels_match_bruteforce():
+    """The in-bucket pair kernel with each family's metric (minhash,
+    simhash, cosine) vs brute force over synthetic buckets, fed as two
+    arrow batches that split a bucket.  The 120- and 400-member buckets
+    are above the minhash/simhash cap (100), so those families drop them;
+    cosine has no cap (max_bucket=None) and keeps every pair of both, and
+    the 400-member bucket (79,800 pairs) runs cosine's row-strip path at
+    its 1 << 16 chunk size.  Cosine is compared bit-exact against a
+    plain-python left fold."""
+    import math
+    from itertools import combinations
+
+    import pyarrow as pa
+    from colonnade_spark.simsearch import cosine_metric
+    from colonnade_spark.textops import (_popcount64, bucket_pair_kernel,
+                                         hamming_metric, minhash_metric)
 
     rng = np.random.default_rng(7)
-    sizes = [2, 5, 1, 3, 120, 4]              # 1-member bucket emits nothing
-    band, bh, ids, sigs = [], [], [], []
-    i0 = 0
+    sizes = [2, 5, 1, 3, 120, 4, 400]         # 1-member bucket emits nothing
+    band, bh, buckets = [], [], []
     for b, s in enumerate(sizes):
         band += [b % 3] * s
         bh += [b] * s
-        ids += list(range(i0, i0 + s))
-        i0 += s
-        sigs += [rng.integers(0, 4, 64).tolist() for _ in range(s)]
-    batch = pa.RecordBatch.from_arrays(
-        [pa.array(band, type=pa.int32()), pa.array(bh, type=pa.int32()),
-         pa.array(ids, type=pa.int64()),
-         pa.array(sigs, type=pa.list_(pa.int64()))],
-        names=["band", "bh", "id", "sig"])
-    out = list(minhash_bucket_pair_kernel(64, 0.3, 100)(iter([batch])))
-    got = set()
-    for b in out:
-        for r in range(b.num_rows):
-            got.add((b.column(0)[r].as_py(), b.column(1)[r].as_py(),
-                     b.column(2)[r].as_py()))
+        buckets.append(range(len(bh) - s, len(bh)))
+    ids = list(range(len(bh)))                # id == row position
+
+    def pairs(cap):
+        for rows in buckets:
+            if cap is None or len(rows) <= cap:
+                yield from combinations(rows, 2)
+
+    def run(kernel, cols, names):
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(band, type=pa.int32()), pa.array(bh, type=pa.int32()),
+             pa.array(ids, type=pa.int64())] + cols,
+            names=["band", "bh", "id"] + names)
+        return set(_kernel_rows(kernel, [batch.slice(0, 300),
+                                         batch.slice(300)]))
+
+    sigs = rng.integers(0, 4, (len(ids), 64)).tolist()
+    got = run(bucket_pair_kernel(["band", "bh"], ["sig"],
+                                 minhash_metric(64, 0.3), "est_jaccard double",
+                                 max_bucket=100),
+              [pa.array(sigs, type=pa.list_(pa.int64()))], ["sig"])
     expect = set()
-    at = 0
-    for s in sizes:
-        if 2 <= s <= 100:
-            for i in range(at, at + s):
-                for j in range(i + 1, at + s):
-                    m = sum(1 for k in range(64) if sigs[i][k] == sigs[j][k])
-                    if m / 64.0 >= 0.3:
-                        expect.add((ids[i], ids[j], m / 64.0))
-        at += s
+    for i, j in pairs(100):
+        m = sum(1 for k in range(64) if sigs[i][k] == sigs[j][k])
+        if m / 64.0 >= 0.3:
+            expect.add((i, j, m / 64.0))
     assert got == expect and len(expect) > 0
 
     ssig = rng.integers(-2**62, 2**62, len(ids)).tolist()
-    sbatch = pa.RecordBatch.from_arrays(
-        [pa.array(band, type=pa.int32()), pa.array(bh, type=pa.int32()),
-         pa.array(ids, type=pa.int64()), pa.array(ssig, type=pa.int64())],
-        names=["band", "bh", "id", "sig"])
-    sout = list(simhash_bucket_pair_kernel(["band", "bh"], 34, 100)(
-        iter([sbatch])))
-    sgot = set()
-    for b in sout:
-        for r in range(b.num_rows):
-            sgot.add((b.column(0)[r].as_py(), b.column(1)[r].as_py(),
-                      b.column(2)[r].as_py()))
+    sgot = run(bucket_pair_kernel(["band", "bh"], ["sig"], hamming_metric(34),
+                                  "hamming int", max_bucket=100),
+               [pa.array(ssig, type=pa.int64())], ["sig"])
     sexpect = set()
-    at = 0
-    for s in sizes:
-        if 2 <= s <= 100:
-            for i in range(at, at + s):
-                for j in range(i + 1, at + s):
-                    h = bin(ssig[i] ^ ssig[j] & (2**64 - 1)
-                            if False else (ssig[i] ^ ssig[j]) & (2**64 - 1)
-                            ).count("1")
-                    if h <= 34:
-                        sexpect.add((ids[i], ids[j], h))
-        at += s
+    for i, j in pairs(100):
+        h = bin((ssig[i] ^ ssig[j]) & (2**64 - 1)).count("1")
+        if h <= 34:
+            sexpect.add((i, j, h))
     assert sgot == sexpect and len(sexpect) > 0
+
+    def fold(a, b):                           # sequential left fold
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    e = rng.standard_normal((len(ids), 8)).tolist()
+    n2 = [fold(v, v) for v in e]
+    cgot = run(bucket_pair_kernel(["band", "bh"], ["e", "n2"],
+                                  cosine_metric(0.5), "cos_sim double",
+                                  max_pairs=1 << 16),
+               [pa.array(e, type=pa.list_(pa.float64())),
+                pa.array(n2, type=pa.float64())], ["e", "n2"])
+    cexpect = set()
+    for i, j in pairs(None):
+        sim = fold(e[i], e[j]) / math.sqrt(n2[i] * n2[j])
+        if sim >= 0.5:
+            cexpect.add((i, j, sim))
+    assert cgot == cexpect                    # float == : bit-exact
+    assert {i for i, _, _ in cexpect} & set(buckets[4])
+    assert {i for i, _, _ in cexpect} & set(buckets[6])
     # SWAR popcount sanity
     xs = rng.integers(0, 2**63, 1000).astype(np.uint64)
     assert all(int(p) == bin(int(x)).count("1")
                for p, x in zip(_popcount64(xs.copy()), xs))
+
+
+def _sentinel_kernel(key_cols, max_hamming):
+    from colonnade_spark.textops import bucket_pair_kernel, hamming_metric
+
+    return bucket_pair_kernel(key_cols, ["sig"], hamming_metric(max_hamming),
+                              "hamming int", max_bucket=8,
+                              emit_over_keys=True)
 
 
 def test_simhash_kernel_emits_oversized_bucket_sentinels():
@@ -719,7 +762,7 @@ def test_simhash_kernel_emits_oversized_bucket_sentinels():
     sentinel-free kernel's output."""
     import pyarrow as pa
 
-    from colonnade_spark.textops import simhash_bucket_pair_kernel
+    from colonnade_spark.textops import bucket_pair_kernel, hamming_metric
 
     rng = np.random.default_rng(11)
     # bucket (0,7): 3 rows | (1,9): 30 rows (oversized, cap 8, spans
@@ -735,21 +778,19 @@ def test_simhash_kernel_emits_oversized_bucket_sentinels():
          pa.array(sigs[i: i + 5], type=pa.int64())],
         names=["band", "bh", "id", "sig"]) for i in range(0, len(band), 5)]
 
-    out = list(simhash_bucket_pair_kernel(["band", "bh"], 64, 8,
-                                          emit_over_keys=True)(iter(batches)))
-    rows = [(b.column(0)[r].as_py(), b.column(1)[r].as_py(),
-             b.column(2)[r].as_py()) for b in out for r in range(b.num_rows)]
+    rows = _kernel_rows(_sentinel_kernel(["band", "bh"], 64), batches)
     sentinels = [r for r in rows if r[2] < 0]
     assert sentinels == [(-1, (1 << 16) | 9, -1)]       # exactly once
-    plain = list(simhash_bucket_pair_kernel(["band", "bh"], 64, 8)(
-        iter(batches)))
-    plain_rows = [(b.column(0)[r].as_py(), b.column(1)[r].as_py(),
-                   b.column(2)[r].as_py())
-                  for b in plain for r in range(b.num_rows)]
+    plain_rows = _kernel_rows(
+        bucket_pair_kernel(["band", "bh"], ["sig"], hamming_metric(64),
+                           "hamming int", max_bucket=8), batches)
     assert [r for r in rows if r[2] >= 0] == plain_rows and plain_rows
 
     with pytest.raises(ValueError):
-        simhash_bucket_pair_kernel(["a"], 3, 8, emit_over_keys=True)
+        _sentinel_kernel(["a"], 3)
+    with pytest.raises(ValueError):                     # no cap, no sentinel
+        bucket_pair_kernel(["band", "bh"], ["sig"], hamming_metric(3),
+                           "hamming int", emit_over_keys=True)
 
 
 @pytest.mark.parametrize("band,bh", [(1, 1 << 16), (1, -1), (1 << 47, 5)])
@@ -759,8 +800,6 @@ def test_simhash_sentinel_keys_out_of_range_raise(band, bh):
     alias another bucket, so the kernel raises instead of emitting it."""
     import pyarrow as pa
 
-    from colonnade_spark.textops import simhash_bucket_pair_kernel
-
     n = 12  # > max_bucket: the bucket is oversized and emits a sentinel
     batch = pa.RecordBatch.from_arrays(
         [pa.array([band] * n, type=pa.int64()),
@@ -768,13 +807,36 @@ def test_simhash_sentinel_keys_out_of_range_raise(band, bh):
          pa.array(range(n), type=pa.int64()),
          pa.array(range(n), type=pa.int64())],
         names=["band", "bh", "id", "sig"])
-    kernel = simhash_bucket_pair_kernel(["band", "bh"], 3, 8,
-                                        emit_over_keys=True)
+    kernel = _sentinel_kernel(["band", "bh"], 3)
     with pytest.raises(ValueError, match="out of range"):
         list(kernel(iter([batch])))
     # the same keys in a bucket that is not oversized emit no sentinel
     # and pass
     list(kernel(iter([batch.slice(0, 4)])))
+
+
+def test_pair_kernel_exchange_is_explicit_and_single(spark, docs, emb):
+    """AQE coalesces a hash exchange by shuffle bytes and cannot see the
+    python pair kernel's CPU, so the kernel's exchange must stay an
+    explicit ``hashpartitioning(band, bh, N)`` with N from
+    ``_kernel_partitions`` and REPARTITION_BY_NUM (which AQE leaves
+    alone), and each pipeline runs exactly one MapInArrow."""
+    import re
+
+    from colonnade_spark.simsearch import cosine_near_dup_pairs
+    from colonnade_spark.textops import (_kernel_partitions,
+                                         minhash_near_dup_pairs)
+
+    n = _kernel_partitions(spark)
+    for df in (minhash_near_dup_pairs(spark, docs, "doc_id", "text"),
+               cosine_near_dup_pairs(spark, emb, "embedding", "vec_id",
+                                     dim=64)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        kernel_exchanges = re.findall(
+            r"Exchange hashpartitioning\(band#\d+L?, bh#\d+L?, (\d+)\), (\w+)",
+            plan)
+        assert kernel_exchanges == [(str(n), "REPARTITION_BY_NUM")], plan
+        assert plan.count("MapInArrow") == 1, plan
 
 
 def test_simhash_pairs_output_free_of_sentinels_when_capped(spark):
