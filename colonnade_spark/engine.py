@@ -2,7 +2,9 @@
 
 Pipeline (SURVEY.md §3.2-3.3 generalized to Spark):
 
-encode:  plan.project(df)  → salt/bucket assignment (skew pre-pass)
+encode:  plan.project(df)  → salt/bucket assignment (skew pre-pass: one
+           shuffle-free job of per-task partial weight sums, merged on the
+           driver into a literal salt map)
          → one pass: repartition(n_buckets, bucket) +
            sortWithinPartitions(bucket, keys) + mapInArrow, so each bucket
            is encoded inside the shuffle task and the corpus is
@@ -14,6 +16,8 @@ encode:  plan.project(df)  → salt/bucket assignment (skew pre-pass)
            [imperative by design: per-partition checkpoint/resume semantics
            Spark's job-atomic committer cannot express — north_rule
            "resumable from checkpoint"]
+         → each task folds its buckets' stats into one row; the driver
+           collects and adds them for the manifest (no aggregate job)
 
 decode:  list blocks/ on the driver → one mapInArrow over file indices;
          each task reads its bucket files with pyarrow, prunes stripes by
@@ -37,6 +41,7 @@ from __future__ import annotations
 import contextlib
 import glob
 import json
+import math
 import os
 import time
 import uuid
@@ -112,11 +117,20 @@ def assign_buckets(df, plan: EncodePlan, n_buckets: int,
                    salt_sample_fraction: float = 1.0):
     """Add a ``__bucket`` column.
 
-    With a partition column (e.g. ``repo``): a cheap aggregation measures
-    bytes per value; values bigger than ``target_salt_bytes`` get a salt
-    fan-out proportional to their size, so one giant repo spreads over many
-    buckets while small repos stay co-located (dictionary/FSST tables like
-    locality).  The salt map is tiny → broadcast join.
+    With a partition column (e.g. ``repo``): one pass measures the weight
+    (characters of the string columns) per value; values bigger than
+    ``target_salt_bytes`` get a salt fan-out proportional to their size,
+    so one giant repo spreads over many buckets while small repos stay
+    co-located (dictionary/FSST tables like locality).
+
+    With a partition column this is EAGER: it runs one Spark job at call
+    time, a ``mapInArrow`` with no shuffle in which each task sums the
+    weight per value; the driver ``collect()``s those partial sums and
+    merges them as exact ints.  The merge handles O(distinct sampled
+    values × input partitions) rows.  Only values with a fan-out above 1
+    enter the returned plan, as a literal map: at most ``sampled weight ×
+    scale / target_salt_bytes`` entries.  Without a partition column no
+    job runs.
 
     ``salt_sample_fraction < 1`` sizes repos from a SEEDED row sample
     (estimated bytes = sample bytes / fraction): the sizing pass otherwise
@@ -160,19 +174,47 @@ def assign_buckets(df, plan: EncodePlan, n_buckets: int,
             F.pmod(F.xxhash64(key_hash, F.lit("saltsample")),
                    F.lit(10000)) < thresh)
     scale = 1.0 / min(max(salt_sample_fraction, 1e-9), 1.0)
-    sizes = (src.groupBy(pcol).agg((F.sum(weight) * F.lit(scale)).alias("__bytes"))
-             .withColumn("__salt_k",
-                         F.greatest(F.lit(1),
-                                    F.ceil(F.col("__bytes") / target_salt_bytes))
-                         .cast("int"))
-             .select(pcol, "__salt_k"))
-    out = (df.join(F.broadcast(sizes), on=pcol, how="left")
-             .withColumn("__salt", F.pmod(key_hash, F.coalesce("__salt_k", F.lit(1))))
-             .withColumn("__bucket",
-                         F.pmod(F.xxhash64(F.col(pcol), F.col("__salt")),
+    sums = _weight_sums(src.select(pcol, weight.cast("bigint").alias("__w")))
+    # fan-out ceil(sum * scale / target) in Spark's double arithmetic;
+    # values at fan-out 1 stay out of the map
+    fanout = {v: k for v, s in sums.items()
+              if (k := math.ceil(float(s) * scale / target_salt_bytes)) > 1}
+    if fanout:
+        # a null value never matches the map and falls back to fan-out 1
+        ptype = df.schema[pcol].dataType
+        salt_k = F.create_map(*[e for v, k in fanout.items()
+                                for e in (F.lit(v).cast(ptype), F.lit(k))])
+        salt = F.pmod(key_hash, F.coalesce(salt_k[F.col(pcol)], F.lit(1)))
+    else:
+        salt = F.lit(0).cast("bigint")          # = pmod(key_hash, 1)
+    return df.withColumn("__bucket",
+                         F.pmod(F.xxhash64(F.col(pcol), salt),
                                 F.lit(n_buckets)).cast("int"))
-             .drop("__salt_k", "__salt"))
-    return out
+
+
+def _weight_sums(df) -> dict:
+    """``{value: sum of __w}`` over ``df(value, __w)``, in one job with no
+    shuffle: each task sums its rows per value with pyarrow and the driver
+    merges the partial sums as exact ints.  Null values are dropped."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    pcol = df.columns[0]
+
+    def partial_sums(batches):
+        _pin_arrow_threads()
+        parts = [pa.Table.from_batches([b]).group_by(pcol).aggregate([("__w", "sum")])
+                 for b in batches if b.num_rows]
+        if parts:
+            t = pa.concat_tables(parts).group_by(pcol).aggregate([("__w_sum", "sum")])
+            yield from t.select([pcol, "__w_sum_sum"]).rename_columns(
+                [pcol, "__w"]).to_batches()
+
+    out_schema = StructType([df.schema[pcol], StructField("__w", LongType())])
+    sums: dict = {}
+    for v, w in df.mapInArrow(partial_sums, out_schema).collect():
+        if v is not None:
+            sums[v] = sums.get(v, 0) + int(w)
+    return sums
 
 
 # --------------------------------------------------------------------------
@@ -544,9 +586,12 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
     a bucket id never splits across partitions — the task iterator groups
     contiguous ``__bucket`` runs (the partition is sorted by ``__bucket``
     first) and feeds each run's batches straight into the per-bucket
-    stripe encoder.  Driver state stays O(n_buckets ints); per-bucket stats
-    come back as the mapInArrow output rows and are folded by a Spark
-    aggregation, not a collect.
+    stripe encoder.  Each task folds its buckets' stats into ONE output
+    row (a zero row when it encoded no bucket); the driver ``collect()``s
+    those ≤ n_partitions rows and adds them, so no aggregate shuffle runs.
+    A fresh encode with a partition column runs 3 Spark jobs: the salt
+    sizing pass of :func:`assign_buckets`, then the shuffle map stage and
+    the encode stage.
 
     mode: "error" (refuse existing warehouse), "overwrite", or "resume"
     (the checkpoint path: buckets with a valid marker are anti-joined out
@@ -628,36 +673,26 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
 
         _pin_arrow_threads()
         p = EncodePlan.from_json(plan_json)
-        out_schema = pa.schema([("bucket", pa.int64()), ("rows", pa.int64()),
-                                ("bytes_in", pa.int64()),
-                                ("bytes_out", pa.int64()),
-                                ("wall_s", pa.float64())])
-
         sink = _MarkerShard(wh)
+        stats = _STATS_ZERO
         for bucket, grp in itertools.groupby(
                 _iter_bucket_runs(batches, cols), key=lambda t: t[0]):
             stripes = _stripe_iter_batches((s for _, s in grp), sb)
             m = _encode_bucket_core(bucket, stripes, wh, p, sb, fp,
                                     marker_sink=sink)
-            yield pa.RecordBatch.from_pydict(
-                {"bucket": [bucket], "rows": [m["rows"]],
-                 "bytes_in": [m["bytes_in"]], "bytes_out": [m["bytes_out"]],
-                 "wall_s": [m["wall_s"]]}, schema=out_schema)
+            stats = _stats_add(stats, _marker_stats(m))
+        # one row per task, a task with no bucket included
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([v]) for v in stats],
+            names=["buckets", "rows", "bytes_in", "bytes_out", "wall_s"])
 
     shuffled = (bucketed.repartition(n_buckets, F.col("__bucket"))
                 .sortWithinPartitions("__bucket", *order))
-    stats_df = shuffled.mapInArrow(
-        encode_parts,
-        "bucket bigint, rows bigint, bytes_in bigint, bytes_out bigint, "
-        "wall_s double")
-    agg = stats_df.agg(F.count("bucket").alias("n"),
-                       F.sum("rows").alias("rows"),
-                       F.sum("bytes_in").alias("bi"),
-                       F.sum("bytes_out").alias("bo"),
-                       F.sum("wall_s").alias("w")).collect()[0]
-    encoded_stats = (int(agg["n"] or 0), int(agg["rows"] or 0),
-                     int(agg["bi"] or 0), int(agg["bo"] or 0),
-                     float(agg["w"] or 0.0))
+    encoded_stats = _STATS_ZERO
+    for row in shuffled.mapInArrow(
+            encode_parts, "buckets bigint, rows bigint, bytes_in bigint, "
+            "bytes_out bigint, wall_s double").collect():
+        encoded_stats = _stats_add(encoded_stats, tuple(row))
     totals = _stats_add(encoded_stats, resumed_stats)
     manifest = {
         "plan": json.loads(plan_json),

@@ -36,6 +36,38 @@ from . import engine
 from .plan import EncodePlan
 
 
+def footer_schema(input_path: str):
+    """The Spark schema of a parquet input directory (or file), read from
+    the footer of its first visible file with pyarrow, so no Spark job
+    runs.  Files whose names start with ``_`` or ``.`` are skipped, as
+    Spark skips them.  Fields come back nullable, as Spark infers them.
+
+    Raises ``FileNotFoundError`` when there is no visible file, and
+    ``ValueError`` on a ``key=value/`` partitioned layout, whose partition
+    columns no footer holds."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructField, StructType
+
+    first = input_path
+    if os.path.isdir(input_path):
+        names = sorted(n for n in os.listdir(input_path)
+                       if not n.startswith(("_", ".")))
+        parted = [n for n in names if "=" in n
+                  and os.path.isdir(os.path.join(input_path, n))]
+        if parted:
+            raise ValueError(f"{input_path}: partitioned layout ({parted[0]}/);"
+                             f" a parquet footer holds no partition columns")
+        files = [n for n in names if os.path.isfile(os.path.join(input_path, n))]
+        if not files:
+            raise FileNotFoundError(f"no parquet file under {input_path}")
+        first = os.path.join(input_path, files[0])
+    elif not os.path.isfile(input_path):
+        raise FileNotFoundError(f"no parquet file at {input_path}")
+    schema = from_arrow_schema(pq.read_schema(first))
+    return StructType([StructField(f.name, f.dataType, True) for f in schema])
+
+
 def stream_encode(spark, input_path: str, warehouse: str, plan: EncodePlan,
                   *, checkpoint_dir: str | None = None, n_buckets: int = 4,
                   stripe_bytes: int = 4 << 20, max_files_per_trigger: int = 1,
@@ -50,7 +82,7 @@ def stream_encode(spark, input_path: str, warehouse: str, plan: EncodePlan,
     """
     checkpoint_dir = checkpoint_dir or os.path.join(warehouse, "_stream_ckpt")
     os.makedirs(warehouse, exist_ok=True)
-    schema = spark.read.parquet(input_path).schema
+    schema = footer_schema(input_path)
 
     def handle_batch(df, batch_id: int) -> None:
         sub = os.path.join(warehouse, f"batch={batch_id}")
@@ -86,7 +118,7 @@ def stream_windowed_counts(spark, input_path: str, out_dir: str, *,
     input (``availableNow``)."""
     from pyspark.sql import functions as F
 
-    schema = spark.read.parquet(input_path).schema
+    schema = footer_schema(input_path)
     agg = (spark.readStream.schema(schema)
            .option("maxFilesPerTrigger", str(max_files_per_trigger))
            .parquet(input_path)
@@ -119,7 +151,7 @@ def stream_dedup_exact(spark, input_path: str, *, checkpoint_dir: str,
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    schema = spark.read.parquet(input_path).schema
+    schema = footer_schema(input_path)
     src = (spark.readStream.schema(schema)
            .option("maxFilesPerTrigger", str(max_files_per_trigger))
            .parquet(input_path)
@@ -178,7 +210,7 @@ def stream_dedup_near(spark, input_path: str, *, checkpoint_dir: str,
 
     from .textops import minhash_signature_batch, simhash_batch
 
-    schema = spark.read.parquet(input_path).schema
+    schema = footer_schema(input_path)
 
     @F.pandas_udf(LongType())
     def sim_udf(s: pd.Series) -> pd.Series:
@@ -272,7 +304,7 @@ def stream_sessionize(spark, input_path: str, *, checkpoint_dir: str,
     Append-mode parquet sink; returns after draining available input."""
     from pyspark.sql import functions as F
 
-    schema = spark.read.parquet(input_path).schema
+    schema = footer_schema(input_path)
     agg = (spark.readStream.schema(schema)
            .option("maxFilesPerTrigger", str(max_files_per_trigger))
            .parquet(input_path)

@@ -758,6 +758,23 @@ def test_decode_builds_without_spark_jobs(spark, corpus_wh):
     assert jobs == []
 
 
+def test_fresh_encode_runs_three_jobs(spark, corpus_df, tmp_path):
+    """A fresh encode is 3 Spark jobs: the shuffle-free salt sizing, the
+    shuffle map stage and the encode stage.  The stats fold inside the
+    tasks, so no aggregate job follows."""
+    sc = spark.sparkContext
+    group = "encode-three-jobs"
+    sc.setJobGroup(group, "fresh encode_table")
+    try:
+        engine.encode_table(spark, corpus_df, corpus_plan(),
+                            str(tmp_path / "wh"), n_buckets=4,
+                            input_token="jobs", salt_sample_fraction=0.05)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 3, jobs
+
+
 def test_giant_cells_and_validate_build_without_spark_jobs(spark, corpus_wh):
     """The giant-cell decode and the warehouse validation read blocks/ like
     decode_table: building either DataFrame runs no Spark job."""

@@ -65,8 +65,9 @@ def test_no_cartesian_anywhere_in_query_surface(spark):
 
 
 def test_encode_staging_plan_shape(spark):
-    """The staging plan: salt-map join is broadcast (tiny per-repo sizes
-    table), the repartition is a single hash exchange on __bucket."""
+    """The staging plan: the salt map is a literal in the projection (sized
+    eagerly by assign_buckets), so the plan has no join and no broadcast;
+    its only exchange is the hash repartition on __bucket."""
     from colonnade_spark import engine
     from colonnade_spark.plan import corpus_plan
     from pyspark.sql import functions as F
@@ -81,8 +82,11 @@ def test_encode_staging_plan_shape(spark):
     staged = (bucketed.repartition(8, F.col("__bucket"))
               .sortWithinPartitions(*plan_obj.stage_order))
     plan = _plan(staged)
-    assert "BroadcastHashJoin" in plan, plan          # salt map broadcast
-    assert plan.count("Exchange") <= 3, plan           # agg + repartition
+    assert "Join" not in plan, plan
+    assert "BroadcastExchange" not in plan, plan
+    assert plan.count("Exchange") == 1, plan
+    assert "Exchange hashpartitioning(__bucket#" in plan, plan
+    assert ", 8), REPARTITION_BY_NUM" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
 

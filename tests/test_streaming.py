@@ -64,6 +64,74 @@ def test_stream_decode_empty_warehouse_raises(spark, tmp_path):
         streaming.stream_decode(spark, str(tmp_path / "nope"))
 
 
+def test_stream_encode_two_files_runs_at_most_six_jobs(spark, tmp_path):
+    """Two one-file micro-batches cost at most 3 jobs each (salt sizing,
+    shuffle map, encode); reading the input schema runs none."""
+    src = str(tmp_path / "incoming")
+    for seed in (1, 2):
+        generate_corpus(spark, 60, seed=seed).coalesce(1).write.mode(
+            "append").parquet(src)
+    sc = spark.sparkContext
+    group = "stream-encode-jobs"
+    sc.setJobGroup(group, "stream_encode over two files")
+    try:
+        q = streaming.stream_encode(spark, src, str(tmp_path / "wh"),
+                                    corpus_plan(), n_buckets=2)
+        caller = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # micro-batch jobs run under the query's own job group, its run id
+    batches = list(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert streaming.stream_manifest(str(tmp_path / "wh"))["batches"] == 2
+    assert caller == []
+    assert len(batches) <= 6, batches
+
+
+def test_footer_schema_matches_spark_inference(spark, tmp_path):
+    """The footer schema equals Spark's own inference on Spark-written and
+    pyarrow-written corpus files and on an events file of timestamp,
+    string, long and double columns; ``_``/``.`` files are skipped."""
+    from datetime import datetime
+
+    import pyarrow.parquet as pq
+
+    from colonnade_spark.corpus import generate_corpus_arrow
+
+    corpus_spark = str(tmp_path / "corpus_spark")
+    generate_corpus(spark, 40, seed=5).write.parquet(corpus_spark)
+    corpus_arrow = str(tmp_path / "corpus_arrow")
+    os.makedirs(corpus_arrow)
+    pq.write_table(generate_corpus_arrow(40, seed=5),
+                   os.path.join(corpus_arrow, "part-00000.parquet"))
+    with open(os.path.join(corpus_arrow, "_started"), "w") as f:
+        f.write("not parquet")
+    with open(os.path.join(corpus_arrow, ".part-00000.parquet.crc"), "w") as f:
+        f.write("not parquet")
+    events = str(tmp_path / "events")
+    spark.createDataFrame(
+        [(datetime(2026, 1, 1, 10, 5), "click", 7, 0.5),
+         (datetime(2026, 1, 1, 11, 0), None, None, None)],
+        "ts timestamp, event_type string, user_id long, value double",
+    ).coalesce(1).write.parquet(events)
+    for path in (corpus_spark, corpus_arrow, events):
+        assert streaming.footer_schema(path) == spark.read.parquet(path).schema
+
+
+def test_footer_schema_rejects_empty_and_partitioned_inputs(spark, tmp_path):
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_text("")
+    with pytest.raises(FileNotFoundError):
+        streaming.footer_schema(str(empty))
+    with pytest.raises(FileNotFoundError):
+        streaming.footer_schema(str(tmp_path / "missing"))
+    parted = str(tmp_path / "parted")
+    spark.createDataFrame([(1, "a"), (2, "b")], "k long, part string") \
+        .write.partitionBy("part").parquet(parted)
+    with pytest.raises(ValueError, match="partitioned"):
+        streaming.footer_schema(parted)
+
+
 def test_stream_windowed_counts_watermark_drops_late(spark, tmp_path):
     """Watermarked windowed agg: windows finalize when the watermark passes
     their end; an event arriving (in a later restart) far behind the
