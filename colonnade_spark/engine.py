@@ -3,8 +3,9 @@
 Pipeline (SURVEY.md §3.2-3.3 generalized to Spark):
 
 encode:  plan.project(df)  → salt/bucket assignment (skew pre-pass: one
-           shuffle-free job of per-task partial weight sums, merged on the
-           driver into a literal salt map)
+           job of per-task partial weight sums merged on the driver, or
+           a groupBy for a large input; only the fanned-out values are
+           joined back, by broadcast)
          → one pass: repartition(n_buckets, bucket) +
            sortWithinPartitions(bucket, keys) + mapInArrow, so each bucket
            is encoded inside the shuffle task and the corpus is
@@ -123,14 +124,29 @@ def assign_buckets(df, plan: EncodePlan, n_buckets: int,
     so one giant repo spreads over many buckets while small repos stay
     co-located (dictionary/FSST tables like locality).
 
-    With a partition column this is EAGER: it runs one Spark job at call
-    time, a ``mapInArrow`` with no shuffle in which each task sums the
-    weight per value; the driver ``collect()``s those partial sums and
-    merges them as exact ints.  The merge handles O(distinct sampled
-    values × input partitions) rows.  Only values with a fan-out above 1
-    enter the returned plan, as a literal map: at most ``sampled weight ×
-    scale / target_salt_bytes`` entries.  Without a partition column no
+    With a partition column this is EAGER: the sizing runs at call time
+    and the returned plan carries the salts.  Up to ``_DRIVER_MERGE_BYTES``
+    of input by Spark's size estimate (a micro-batch, a test corpus) it is
+    one job with no shuffle: each task sums the weight per value with
+    pyarrow and the driver merges the partial sums.  An input estimated
+    larger, or of unknown size, is summed by a ``groupBy`` on the
+    executors (two jobs under AQE), and the driver collects only the
+    fanned-out values.  These are looked up by hash through a broadcast
+    left join, one more job at the action; with none, the salt is a
+    constant and the plan has no join.  Without a partition column no
     job runs.
+
+    Bounds, evaluated at 100 TB of ~8 KB rows in 128 MiB splits (~7.5e5
+    splits) sampled at 0.05 (~6e8 sampled rows):
+
+    * a driver merge takes one row per (split, distinct sampled value):
+      ~1e7 when the input is clustered by value, up to ~6e8 when it is
+      not, far more than a driver holds.  So only inputs estimated at
+      ≤ 256 MiB merge on the driver, at most their sampled row count
+      (the synthetic corpus estimates at ~160 B per row: ≤ ~1.7e6 rows);
+    * the salt table holds only values above the target, at most
+      ``sampled weight × scale / target_salt_bytes`` of them (100 TB /
+      16 MiB ≈ 6e6); it is what the driver collects and broadcasts.
 
     ``salt_sample_fraction < 1`` sizes repos from a SEEDED row sample
     (estimated bytes = sample bytes / fraction): the sizing pass otherwise
@@ -145,6 +161,7 @@ def assign_buckets(df, plan: EncodePlan, n_buckets: int,
     scheduling and the stripe cap absorb.
     """
     from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, StructField, StructType
 
     str_cols = [f.name for f in df.schema.fields
                 if f.dataType.typeName() in ("string", "binary")
@@ -174,31 +191,52 @@ def assign_buckets(df, plan: EncodePlan, n_buckets: int,
             F.pmod(F.xxhash64(key_hash, F.lit("saltsample")),
                    F.lit(10000)) < thresh)
     scale = 1.0 / min(max(salt_sample_fraction, 1e-9), 1.0)
-    sums = _weight_sums(src.select(pcol, weight.cast("bigint").alias("__w")))
-    # fan-out ceil(sum * scale / target) in Spark's double arithmetic;
-    # values at fan-out 1 stay out of the map
-    fanout = {v: k for v, s in sums.items()
-              if (k := math.ceil(float(s) * scale / target_salt_bytes)) > 1}
-    if fanout:
-        # a null value never matches the map and falls back to fan-out 1
-        ptype = df.schema[pcol].dataType
-        salt_k = F.create_map(*[e for v, k in fanout.items()
-                                for e in (F.lit(v).cast(ptype), F.lit(k))])
-        salt = F.pmod(key_hash, F.coalesce(salt_k[F.col(pcol)], F.lit(1)))
-    else:
-        salt = F.lit(0).cast("bigint")          # = pmod(key_hash, 1)
-    return df.withColumn("__bucket",
-                         F.pmod(F.xxhash64(F.col(pcol), salt),
-                                F.lit(n_buckets)).cast("int"))
+    fanouts = _salt_fanouts(src.select(pcol, weight.cast("bigint").alias("__w")),
+                            scale, target_salt_bytes)
+    if not fanouts:
+        return df.withColumn("__bucket",      # salt = pmod(key_hash, 1) = 0
+                             F.pmod(F.xxhash64(F.col(pcol), F.lit(0).cast("bigint")),
+                                    F.lit(n_buckets)).cast("int"))
+    # looked up by hash: a broadcast left join on a driver-built table of
+    # the fanned-out values; a null value never matches and keeps fan-out 1.
+    # Built from Arrow it is a local relation: a Python list would be a
+    # Python RDD, and broadcasting it would fork a Python worker pool.
+    values, ks = zip(*fanouts)
+    sizes = df.sparkSession.createDataFrame(
+        pa.table({pcol: list(values), "__salt_k": pa.array(ks, pa.int64())}),
+        StructType([StructField(pcol, df.schema[pcol].dataType),
+                    StructField("__salt_k", LongType())]))
+    salt = F.pmod(key_hash, F.coalesce(F.col("__salt_k"), F.lit(1)))
+    return (df.join(F.broadcast(sizes), on=pcol, how="left")
+            .select(*df.columns,
+                    F.pmod(F.xxhash64(F.col(pcol), salt),
+                           F.lit(n_buckets)).cast("int").alias("__bucket")))
 
 
-def _weight_sums(df) -> dict:
-    """``{value: sum of __w}`` over ``df(value, __w)``, in one job with no
-    shuffle: each task sums its rows per value with pyarrow and the driver
-    merges the partial sums as exact ints.  Null values are dropped."""
+# Spark's size estimate of the sizing input up to which the per-task
+# partial sums are merged on the driver (see assign_buckets)
+_DRIVER_MERGE_BYTES = 256 << 20
+
+
+def _salt_fanouts(df, scale: float, target_salt_bytes: int) -> list:
+    """``[(value, fan-out)]`` over ``df(value, __w)`` for the non-null values
+    whose fan-out ``ceil(sum(__w) * scale / target_salt_bytes)`` is above 1.
+
+    Up to ``_DRIVER_MERGE_BYTES`` of estimated input this is one job with
+    no shuffle: each task sums its rows per value with pyarrow and the
+    driver merges the partial sums as exact ints, in the same double
+    arithmetic as Spark's ``ceil``.  A larger input is summed by a
+    ``groupBy`` on the executors (two jobs under AQE) and only the
+    fanned-out values are collected."""
+    from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, StructField, StructType
 
     pcol = df.columns[0]
+    estimate = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if int(str(estimate)) > _DRIVER_MERGE_BYTES:      # a BigInt, unbounded
+        k = F.ceil(F.sum("__w") * F.lit(scale) / target_salt_bytes)
+        return [tuple(r) for r in df.groupBy(pcol).agg(k.alias("k"))
+                .filter(F.col(pcol).isNotNull() & (F.col("k") > 1)).collect()]
 
     def partial_sums(batches):
         _pin_arrow_threads()
@@ -214,7 +252,8 @@ def _weight_sums(df) -> dict:
     for v, w in df.mapInArrow(partial_sums, out_schema).collect():
         if v is not None:
             sums[v] = sums.get(v, 0) + int(w)
-    return sums
+    return [(v, k) for v, s in sums.items()
+            if (k := math.ceil(float(s) * scale / target_salt_bytes)) > 1]
 
 
 # --------------------------------------------------------------------------
@@ -590,8 +629,9 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
     row (a zero row when it encoded no bucket); the driver ``collect()``s
     those ≤ n_partitions rows and adds them, so no aggregate shuffle runs.
     A fresh encode with a partition column runs 3 Spark jobs: the salt
-    sizing pass of :func:`assign_buckets`, then the shuffle map stage and
-    the encode stage.
+    sizing pass of :func:`assign_buckets` (2 jobs for an input sized by a
+    ``groupBy``), then the shuffle map stage and the encode stage; one
+    more broadcasts the salt table when some value is fanned out.
 
     mode: "error" (refuse existing warehouse), "overwrite", or "resume"
     (the checkpoint path: buckets with a valid marker are anti-joined out

@@ -28,6 +28,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import urllib.parse
 
 import numpy as np
 import pandas as pd  # module-level: pandas_udf type-hint resolution needs it
@@ -36,36 +37,101 @@ from . import engine
 from .plan import EncodePlan
 
 
-def footer_schema(input_path: str):
-    """The Spark schema of a parquet input directory (or file), read from
-    the footer of its first visible file with pyarrow, so no Spark job
-    runs.  Files whose names start with ``_`` or ``.`` are skipped, as
-    Spark skips them.  Fields come back nullable, as Spark infers them.
+def footer_schema(spark, input_path: str):
+    """The Spark schema of a parquet input directory (or file), as
+    ``spark.read.parquet(input_path).schema`` infers it, read from the
+    footer of its first visible file with pyarrow, so no Spark job runs.
+    Files whose names start with ``_`` or ``.`` are skipped, as Spark skips
+    them.  Fields come back nullable, as Spark infers them.
+
+    Local paths and ``file:`` URIs are read this way.  Other URIs (cluster
+    storage, read through Spark's Hadoop configuration), glob patterns and
+    footers with a column :func:`_spark_field_type` does not map (nested,
+    nanosecond, interval, ...) are inferred by Spark itself, one job.
 
     Raises ``FileNotFoundError`` when there is no visible file, and
     ``ValueError`` on a ``key=value/`` partitioned layout, whose partition
     columns no footer holds."""
+    import pyarrow.fs as pafs
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
     from pyspark.sql.types import StructField, StructType
 
-    first = input_path
-    if os.path.isdir(input_path):
-        names = sorted(n for n in os.listdir(input_path)
-                       if not n.startswith(("_", ".")))
-        parted = [n for n in names if "=" in n
-                  and os.path.isdir(os.path.join(input_path, n))]
+    scheme = urllib.parse.urlsplit(input_path).scheme
+    if scheme not in ("", "file") or any(c in input_path for c in "*?[{"):
+        return spark.read.parquet(input_path).schema
+    fs, root = pafs.FileSystem.from_uri(input_path) if scheme else \
+        (pafs.LocalFileSystem(), os.path.abspath(input_path))
+    first = root
+    info = fs.get_file_info(root)
+    if info.type == pafs.FileType.Directory:
+        entries = sorted((e for e in fs.get_file_info(pafs.FileSelector(root))
+                          if not e.base_name.startswith(("_", "."))),
+                         key=lambda e: e.base_name)
+        parted = [e.base_name for e in entries
+                  if e.type == pafs.FileType.Directory and "=" in e.base_name]
         if parted:
             raise ValueError(f"{input_path}: partitioned layout ({parted[0]}/);"
                              f" a parquet footer holds no partition columns")
-        files = [n for n in names if os.path.isfile(os.path.join(input_path, n))]
+        files = [e.path for e in entries if e.type == pafs.FileType.File]
         if not files:
             raise FileNotFoundError(f"no parquet file under {input_path}")
-        first = os.path.join(input_path, files[0])
-    elif not os.path.isfile(input_path):
+        first = files[0]
+    elif info.type != pafs.FileType.File:
         raise FileNotFoundError(f"no parquet file at {input_path}")
-    schema = from_arrow_schema(pq.read_schema(first))
-    return StructType([StructField(f.name, f.dataType, True) for f in schema])
+    meta = pq.read_metadata(first, filesystem=fs)
+    spark_json = (meta.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if spark_json is not None:      # written by Spark: Spark reads its own schema
+        fields = [StructField(f.name, f.dataType, True, f.metadata)
+                  for f in StructType.fromJson(json.loads(spark_json)).fields]
+        known = all(f.dataType.typeName() not in ("struct", "array", "map")
+                    for f in fields)
+    else:                           # a nested leaf's path is not its name
+        cols = [meta.schema.column(i) for i in range(meta.num_columns)]
+        fields = [StructField(c.name, t, True) for c in cols if c.path == c.name
+                  and (t := _spark_field_type(spark, c)) is not None]
+        known = len(fields) == len(cols)
+    if known and fields:
+        return StructType(fields)
+    return spark.read.parquet(input_path).schema
+
+
+def _spark_field_type(spark, col):
+    """The Spark type Spark's parquet reader infers for a flat parquet
+    column, under the session's parquet settings; None where this mapping
+    does not follow Spark."""
+    from pyspark.sql import types as T
+
+    conf = spark.conf.get
+    logical = json.loads(col.logical_type.to_json())
+    kind, phys = logical["Type"], col.physical_type
+    if kind == "None":
+        return {"BOOLEAN": T.BooleanType(), "INT32": T.IntegerType(),
+                "INT64": T.LongType(), "FLOAT": T.FloatType(),
+                "DOUBLE": T.DoubleType(), "FIXED_LEN_BYTE_ARRAY": T.BinaryType(),
+                "BYTE_ARRAY": (T.StringType()
+                               if conf("spark.sql.parquet.binaryAsString") == "true"
+                               else T.BinaryType()),
+                "INT96": (T.TimestampType()
+                          if conf("spark.sql.parquet.int96AsTimestamp") == "true"
+                          else None)}.get(phys)
+    if kind == "String" and phys == "BYTE_ARRAY":
+        return T.StringType()
+    if kind == "Date":
+        return T.DateType()
+    if kind == "Decimal" and logical["precision"] <= 38:
+        return T.DecimalType(logical["precision"], logical["scale"])
+    if kind == "Int":       # unsigned widens: uint64 to decimal(20, 0)
+        width, signed = logical["bitWidth"], logical["isSigned"]
+        if not signed and width == 64:
+            return T.DecimalType(20, 0)
+        width = width if signed else 2 * width
+        return {8: T.ByteType(), 16: T.ShortType(), 32: T.IntegerType(),
+                64: T.LongType()}[width]
+    if kind == "Timestamp" and logical["timeUnit"] in ("milliseconds", "microseconds"):
+        ntz = (not logical["isAdjustedToUTC"]
+               and conf("spark.sql.parquet.inferTimestampNTZ.enabled") == "true")
+        return T.TimestampNTZType() if ntz else T.TimestampType()
+    return None
 
 
 def stream_encode(spark, input_path: str, warehouse: str, plan: EncodePlan,
@@ -82,7 +148,7 @@ def stream_encode(spark, input_path: str, warehouse: str, plan: EncodePlan,
     """
     checkpoint_dir = checkpoint_dir or os.path.join(warehouse, "_stream_ckpt")
     os.makedirs(warehouse, exist_ok=True)
-    schema = footer_schema(input_path)
+    schema = footer_schema(spark, input_path)
 
     def handle_batch(df, batch_id: int) -> None:
         sub = os.path.join(warehouse, f"batch={batch_id}")
@@ -118,7 +184,7 @@ def stream_windowed_counts(spark, input_path: str, out_dir: str, *,
     input (``availableNow``)."""
     from pyspark.sql import functions as F
 
-    schema = footer_schema(input_path)
+    schema = footer_schema(spark, input_path)
     agg = (spark.readStream.schema(schema)
            .option("maxFilesPerTrigger", str(max_files_per_trigger))
            .parquet(input_path)
@@ -151,7 +217,7 @@ def stream_dedup_exact(spark, input_path: str, *, checkpoint_dir: str,
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    schema = footer_schema(input_path)
+    schema = footer_schema(spark, input_path)
     src = (spark.readStream.schema(schema)
            .option("maxFilesPerTrigger", str(max_files_per_trigger))
            .parquet(input_path)
@@ -210,7 +276,7 @@ def stream_dedup_near(spark, input_path: str, *, checkpoint_dir: str,
 
     from .textops import minhash_signature_batch, simhash_batch
 
-    schema = footer_schema(input_path)
+    schema = footer_schema(spark, input_path)
 
     @F.pandas_udf(LongType())
     def sim_udf(s: pd.Series) -> pd.Series:
@@ -304,7 +370,7 @@ def stream_sessionize(spark, input_path: str, *, checkpoint_dir: str,
     Append-mode parquet sink; returns after draining available input."""
     from pyspark.sql import functions as F
 
-    schema = footer_schema(input_path)
+    schema = footer_schema(spark, input_path)
     agg = (spark.readStream.schema(schema)
            .option("maxFilesPerTrigger", str(max_files_per_trigger))
            .parquet(input_path)

@@ -4,8 +4,9 @@ the original all-Spark formulation of ``engine.assign_buckets``.
 It sizes each partition value with a ``groupBy`` aggregate over the same
 content-pure sample, turns the size into a fan-out with Spark's
 ``ceil(sum * scale / target)``, and joins the small sizes table back with
-a broadcast left join.  The engine replaced this with partial sums merged
-on the driver; both must put every row in the same bucket."""
+a broadcast left join.  The engine sums per task, adds the partial sums
+by key and broadcasts only the fanned-out values; both must put every row
+in the same bucket."""
 
 from pyspark.sql import functions as F
 

@@ -758,21 +758,24 @@ def test_decode_builds_without_spark_jobs(spark, corpus_wh):
     assert jobs == []
 
 
-def test_fresh_encode_runs_three_jobs(spark, corpus_df, tmp_path):
-    """A fresh encode is 3 Spark jobs: the shuffle-free salt sizing, the
-    shuffle map stage and the encode stage.  The stats fold inside the
-    tasks, so no aggregate job follows."""
+@pytest.mark.parametrize("target_salt_bytes, n_jobs", [(16 << 20, 3), (16 << 10, 4)])
+def test_fresh_encode_job_count(spark, corpus_df, tmp_path, target_salt_bytes, n_jobs):
+    """A fresh encode is 3 Spark jobs: the salt sizing, the shuffle map
+    stage and the encode stage; the stats fold inside the tasks, so no
+    aggregate job follows.  When some repo is fanned out (a 16 KiB
+    target), a 4th job broadcasts the salt table."""
     sc = spark.sparkContext
-    group = "encode-three-jobs"
+    group = f"encode-jobs-{target_salt_bytes}"
     sc.setJobGroup(group, "fresh encode_table")
     try:
         engine.encode_table(spark, corpus_df, corpus_plan(),
                             str(tmp_path / "wh"), n_buckets=4,
-                            input_token="jobs", salt_sample_fraction=0.05)
+                            input_token="jobs", salt_sample_fraction=0.05,
+                            target_salt_bytes=target_salt_bytes)
         jobs = list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(jobs) == 3, jobs
+    assert len(jobs) == n_jobs, jobs
 
 
 def test_giant_cells_and_validate_build_without_spark_jobs(spark, corpus_wh):

@@ -64,10 +64,7 @@ def test_no_cartesian_anywhere_in_query_surface(spark):
         assert "CartesianProduct" not in plan, f"{name}: {plan[:2000]}"
 
 
-def test_encode_staging_plan_shape(spark):
-    """The staging plan: the salt map is a literal in the projection (sized
-    eagerly by assign_buckets), so the plan has no join and no broadcast;
-    its only exchange is the hash repartition on __bucket."""
+def _staging_plan(spark, **kw) -> str:
     from colonnade_spark import engine
     from colonnade_spark.plan import corpus_plan
     from pyspark.sql import functions as F
@@ -78,16 +75,34 @@ def test_encode_staging_plan_shape(spark):
                              "md5(text) as commit", "lang",
                              "text as content")
     plan_obj = corpus_plan()
-    bucketed = engine.assign_buckets(plan_obj.project(corpus), plan_obj, 8)
+    bucketed = engine.assign_buckets(plan_obj.project(corpus), plan_obj, 8, **kw)
     staged = (bucketed.repartition(8, F.col("__bucket"))
               .sortWithinPartitions(*plan_obj.stage_order))
     plan = _plan(staged)
-    assert "Join" not in plan, plan
-    assert "BroadcastExchange" not in plan, plan
-    assert plan.count("Exchange") == 1, plan
+    assert plan.count("Exchange") - plan.count("BroadcastExchange") == 1, plan
     assert "Exchange hashpartitioning(__bucket#" in plan, plan
     assert ", 8), REPARTITION_BY_NUM" in plan, plan
     assert "CartesianProduct" not in plan, plan
+    return plan
+
+
+def test_encode_staging_plan_shape(spark):
+    """The staging plan: salts are sized eagerly by assign_buckets, so its
+    only exchange is the hash repartition on __bucket; with no value
+    above the target the salt is a constant: no join, no broadcast."""
+    plan = _staging_plan(spark)
+    assert "Join" not in plan, plan
+    assert "BroadcastExchange" not in plan, plan
+
+
+def test_encode_staging_plan_shape_with_fanned_out_values(spark):
+    """With values above the target (4 KiB) the fan-outs are looked up by
+    hash: one broadcast left join and no other join, and still one
+    hash exchange on __bucket."""
+    plan = _staging_plan(spark, target_salt_bytes=4 << 10)
+    assert plan.count("Join") == 1, plan
+    assert "BroadcastHashJoin" in plan and "LeftOuter, BuildRight" in plan, plan
+    assert plan.count("BroadcastExchange") == 1, plan
 
 
 def test_chunking_and_mix_sample_are_shuffle_free(spark):

@@ -87,10 +87,40 @@ def test_stream_encode_two_files_runs_at_most_six_jobs(spark, tmp_path):
     assert len(batches) <= 6, batches
 
 
+def _pyarrow_typed_table():
+    """One column per parquet type the footer mapping covers, written by
+    pyarrow: naive and zoned timestamps, signed and unsigned ints, dates,
+    decimals, binary, large and dictionary strings."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    t0 = dt.datetime(2026, 1, 1, 10, 5)
+    cols = {
+        "ts_naive_us": pa.array([t0], pa.timestamp("us")),
+        "ts_naive_ms": pa.array([t0], pa.timestamp("ms")),
+        "ts_utc": pa.array([t0], pa.timestamp("us", tz="UTC")),
+        "ts_zoned": pa.array([t0], pa.timestamp("ms", tz="Europe/Paris")),
+        "u8": pa.array([1], pa.uint8()), "u16": pa.array([1], pa.uint16()),
+        "u32": pa.array([1], pa.uint32()), "u64": pa.array([1], pa.uint64()),
+        "i8": pa.array([1], pa.int8()), "i16": pa.array([1], pa.int16()),
+        "i32": pa.array([1], pa.int32()), "i64": pa.array([1], pa.int64()),
+        "day": pa.array([t0.date()]), "dec": pa.array([1], pa.decimal128(10, 2)),
+        "dec_long": pa.array([1], pa.decimal128(30, 4)),
+        "raw": pa.array([b"x"]), "big": pa.array(["x"], pa.large_string()),
+        "cat": pa.array(["x"]).dictionary_encode(),
+        "f32": pa.array([1.5], pa.float32()), "f64": pa.array([1.5]),
+        "flag": pa.array([True]),
+    }
+    return pa.table(cols)
+
+
 def test_footer_schema_matches_spark_inference(spark, tmp_path):
-    """The footer schema equals Spark's own inference on Spark-written and
-    pyarrow-written corpus files and on an events file of timestamp,
-    string, long and double columns; ``_``/``.`` files are skipped."""
+    """The footer schema equals Spark's own inference, with no Spark job,
+    on Spark-written and pyarrow-written corpus files, on a Spark-written
+    events file, on a pyarrow file of every mapped type (naive timestamps
+    infer as timestamp_ntz, unsigned ints widen) and through ``file:``
+    URIs; ``_``/``.`` files are skipped."""
     from datetime import datetime
 
     import pyarrow.parquet as pq
@@ -109,12 +139,41 @@ def test_footer_schema_matches_spark_inference(spark, tmp_path):
         f.write("not parquet")
     events = str(tmp_path / "events")
     spark.createDataFrame(
-        [(datetime(2026, 1, 1, 10, 5), "click", 7, 0.5),
-         (datetime(2026, 1, 1, 11, 0), None, None, None)],
-        "ts timestamp, event_type string, user_id long, value double",
+        [(datetime(2026, 1, 1, 10, 5), datetime(2026, 1, 1, 10, 5), "click", 7, 0.5),
+         (datetime(2026, 1, 1, 11, 0), None, None, None, None)],
+        "ts timestamp, local_ts timestamp_ntz, event_type string, user_id long,"
+        " value double",
     ).coalesce(1).write.parquet(events)
-    for path in (corpus_spark, corpus_arrow, events):
-        assert streaming.footer_schema(path) == spark.read.parquet(path).schema
+    typed = str(tmp_path / "typed")
+    os.makedirs(typed)
+    pq.write_table(_pyarrow_typed_table(), os.path.join(typed, "part-0.parquet"))
+    paths = [corpus_spark, corpus_arrow, events, typed,
+             "file://" + typed, "file:" + events,
+             os.path.join(typed, "part-0.parquet")]
+    sc = spark.sparkContext
+    group = "footer-schema-no-jobs"
+    sc.setJobGroup(group, "footer_schema")
+    try:
+        got = [streaming.footer_schema(spark, p) for p in paths]
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    for path, schema in zip(paths, got):
+        assert schema == spark.read.parquet(path).schema, path
+    assert dict((f.name, f.dataType.simpleString()) for f in got[3])["ts_naive_us"] \
+        == "timestamp_ntz"
+
+
+def test_footer_schema_defers_to_spark_where_no_footer_mapping(spark, tmp_path):
+    """A glob pattern and a nested column are inferred by Spark itself, so
+    the schema still equals Spark's."""
+    nested = str(tmp_path / "nested")
+    spark.createDataFrame([(1, [1, 2], (3, "a"))],
+                          "k long, xs array<int>, s struct<n:int, t:string>") \
+        .write.parquet(nested)
+    for path in (nested, str(tmp_path / "nest*")):
+        assert streaming.footer_schema(spark, path) == spark.read.parquet(path).schema
 
 
 def test_footer_schema_rejects_empty_and_partitioned_inputs(spark, tmp_path):
@@ -122,14 +181,14 @@ def test_footer_schema_rejects_empty_and_partitioned_inputs(spark, tmp_path):
     empty.mkdir()
     (empty / "_SUCCESS").write_text("")
     with pytest.raises(FileNotFoundError):
-        streaming.footer_schema(str(empty))
+        streaming.footer_schema(spark, str(empty))
     with pytest.raises(FileNotFoundError):
-        streaming.footer_schema(str(tmp_path / "missing"))
+        streaming.footer_schema(spark, str(tmp_path / "missing"))
     parted = str(tmp_path / "parted")
     spark.createDataFrame([(1, "a"), (2, "b")], "k long, part string") \
         .write.partitionBy("part").parquet(parted)
     with pytest.raises(ValueError, match="partitioned"):
-        streaming.footer_schema(parted)
+        streaming.footer_schema(spark, parted)
 
 
 def test_stream_windowed_counts_watermark_drops_late(spark, tmp_path):
