@@ -87,8 +87,7 @@ def encode_worker(cores: int, corpus_dir: str, out_json: str,
     from colonnade_spark.session import get_spark
     from colonnade_spark.shipping import ensure_shipped
 
-    spark = get_spark(f"encode_bench_{cores}", cores=cores,
-                      shuffle_partitions=max(cores, 8))
+    spark = get_spark(f"encode_bench_{cores}", cores=cores)
     spark.sparkContext.setLogLevel("ERROR")
     ensure_shipped(spark)
     df = spark.read.parquet(corpus_dir)
@@ -165,7 +164,9 @@ def _warm_workers(spark) -> None:
     in BASELINE.md."""
     from pyspark.sql import functions as F
 
-    n = spark.sparkContext.defaultParallelism
+    from colonnade_spark.session import kernel_partitions
+
+    n = kernel_partitions(spark)
 
     @F.pandas_udf("double")
     def touch(s: pd.Series) -> pd.Series:

@@ -22,6 +22,8 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
+from .session import kernel_partitions
+
 SCHEMA = pa.schema([
     ("repo", pa.string()),
     ("path", pa.string()),
@@ -153,12 +155,11 @@ def generate_corpus_arrow(n_files: int, seed: int = 42) -> pa.Table:
          for lo in range(0, n_files, 8192)], schema=SCHEMA)
 
 
-def generate_corpus(spark, n_files: int, seed: int = 42, partitions: int | None = None):
+def generate_corpus(spark, n_files: int, seed: int = 42):
     """Distributed generation: spark.range → mapInArrow (no driver bottleneck)."""
     from pyspark.sql.types import StringType, StructField, StructType
 
     out_schema = StructType([StructField(f.name, StringType(), True) for f in SCHEMA])
-    parts = partitions or spark.sparkContext.defaultParallelism
 
     def gen(batches):
         for batch in batches:
@@ -166,7 +167,8 @@ def generate_corpus(spark, n_files: int, seed: int = 42, partitions: int | None 
             if ids.size:
                 yield generate_batch(ids, seed)
 
-    return spark.range(0, n_files, numPartitions=parts).mapInArrow(gen, out_schema)
+    return spark.range(0, n_files, numPartitions=kernel_partitions(spark)).mapInArrow(
+        gen, out_schema)
 
 
 # --------------------------------------------------------------------------

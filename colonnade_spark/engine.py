@@ -54,6 +54,7 @@ import pyarrow.parquet as pq
 
 from . import blocks as B
 from .plan import EncodePlan
+from .session import kernel_partitions
 
 BLOCKS_SCHEMA = pa.schema([
     ("stripe", pa.int64()),
@@ -431,6 +432,20 @@ def _compact_shards(warehouse: str, keep) -> None:
             os.remove(p)
 
 
+def _bytes_like(t) -> bool:
+    """String or binary, large offsets or not: the types with byte zone
+    bounds and multi-block cells."""
+    return (pa.types.is_string(t) or pa.types.is_binary(t)
+            or pa.types.is_large_string(t) or pa.types.is_large_binary(t))
+
+
+def _as_binary(arr):
+    """A string/binary array as binary of the same offset width, so min/max
+    and slices compare and cut raw bytes."""
+    large = pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
+    return arr.cast(pa.large_binary() if large else pa.binary())
+
+
 def _encode_bucket_core(bucket: int, stripes, warehouse: str,
                         plan: EncodePlan, stripe_bytes: int,
                         fingerprint: str, marker_sink: _MarkerShard) -> dict:
@@ -449,17 +464,14 @@ def _encode_bucket_core(bucket: int, stripes, warehouse: str,
     # per-column encode context: FSST symbol table built on the first stripe
     # is reused across the bucket (plan-reuse, Encode.hs:560-566)
     ctxs = {name: B.EncodeContext() for name in cols}
+    specs = {s.name: s for s in plan.specs}
     for table in stripes:
         for name in cols:
-            spec = next(s for s in plan.specs if s.name == name)
+            spec = specs[name]
             arr = table.column(name).combine_chunks()
             t0 = time.perf_counter()
             if (len(arr) == 1 and arr.null_count == 0
-                    and (pa.types.is_string(arr.type)
-                         or pa.types.is_binary(arr.type)
-                         or pa.types.is_large_string(arr.type)
-                         or pa.types.is_large_binary(arr.type))
-                    and arr.nbytes > stripe_bytes):
+                    and _bytes_like(arr.type) and arr.nbytes > stripe_bytes):
                 # multi-block cell: a single cell above the stripe cap is
                 # split across fragment blocks (the reference's cell-spans-
                 # chunks continuation, Siphon.hs:612-616, at the cell level)
@@ -473,12 +485,8 @@ def _encode_bucket_core(bucket: int, stripes, warehouse: str,
                 # so SLICE them from the arrow buffer — as_py() here would
                 # materialize the whole multi-GiB cell as a python object a
                 # second time (encode_cell_fragments already paid that once)
-                cast_to = (pa.large_binary()
-                           if (pa.types.is_large_string(arr.type)
-                               or pa.types.is_large_binary(arr.type))
-                           else pa.binary())
                 head = pc.binary_slice(
-                    arr.cast(cast_to), 0, _ZONE_PREFIX + 1)[0].as_py()
+                    _as_binary(arr), 0, _ZONE_PREFIX + 1)[0].as_py()
                 total_len = arr.nbytes  # single cell: data bytes = cell len
                 # emulate full-string semantics: if the cell is longer than
                 # the prefix we sliced, pad logically by passing a >16-byte
@@ -509,19 +517,13 @@ def _encode_bucket_core(bucket: int, stripes, warehouse: str,
                 if pa.types.is_integer(arr.type):
                     mm = pc.min_max(arr)
                     vmin, vmax = mm["min"].as_py(), mm["max"].as_py()
-                elif (pa.types.is_string(arr.type) or pa.types.is_binary(arr.type)
-                      or pa.types.is_large_string(arr.type)
-                      or pa.types.is_large_binary(arr.type)):
+                elif _bytes_like(arr.type):
                     # byte-order min/max (matches Spark's UTF8String/binary
                     # comparison), then parquet-style truncation.  large_*
                     # types included to match the fragment branch's accepted
                     # set — a large-typed whole block without smin would be
                     # silently pruned by string zone filters (row loss).
-                    cast_to = (pa.large_binary()
-                               if (pa.types.is_large_string(arr.type)
-                                   or pa.types.is_large_binary(arr.type))
-                               else pa.binary())
-                    mm = pc.min_max(arr.cast(cast_to))
+                    mm = pc.min_max(_as_binary(arr))
                     smin, smax = _zone_str_bounds(mm["min"].as_py(),
                                                   mm["max"].as_py())
             rows_out.append((stripe, name, info["codec"], -1, len(arr),
@@ -573,6 +575,8 @@ def _encode_bucket_core(bucket: int, stripes, warehouse: str,
 # one stats tuple shape everywhere: (buckets, rows, bytes_in, bytes_out,
 # task_wall_s); driver-side state stays O(n_buckets ints)
 _STATS_ZERO = (0, 0, 0, 0, 0.0)
+_STATS_NAMES = ["buckets", "rows", "bytes_in", "bytes_out", "wall_s"]
+_STATS_DDL = "buckets bigint, rows bigint, bytes_in bigint, bytes_out bigint, wall_s double"
 
 
 def _marker_stats(m: dict) -> tuple:
@@ -584,24 +588,27 @@ def _stats_add(a: tuple, b: tuple) -> tuple:
     return tuple(x + y for x, y in zip(a, b))
 
 
-def _scan_markers(sc, warehouse: str, fingerprint: str) -> tuple:
-    """Distributed resume scan: read every bucket marker in EXECUTORS (one
+def _scan_markers(spark, warehouse: str, fingerprint: str) -> tuple:
+    """Distributed resume scan: read every marker shard in EXECUTORS (one
     serial driver open per bucket was the round-3 bottleneck at ~4M
-    buckets), keep only full-fingerprint matches (plan AND input AND bucket
-    count AND salt params — stale markers must never validate against a
-    re-derived layout), and fold their stats.  Returns (done bucket-id set,
-    folded stats tuple)."""
+    buckets) through one :func:`_map_files` job, keep only full-fingerprint
+    matches (plan AND input AND bucket count AND salt params — stale
+    markers must never validate against a re-derived layout), and fold
+    their stats.  Returns (done bucket-id set, folded stats tuple)."""
     mpaths = glob.glob(os.path.join(warehouse, "markers", "shard_*.jsonl"))
     done, stats = set(), _STATS_ZERO
     if not mpaths:
         return done, stats
-    rdd = sc.parallelize(mpaths, max(1, min(len(mpaths),
-                                            4 * int(sc.defaultParallelism))))
-    rows = (rdd.flatMap(lambda p: [m for _, m in _shard_markers(p)])
-            .filter(lambda m: m.get("fingerprint") == fingerprint)
-            .map(lambda m: (m["bucket"], _marker_stats(m)))
-            .collect())
-    for b, st in rows:
+
+    def scan(path):
+        rows = [(m["bucket"], *_marker_stats(m)) for _, m in _shard_markers(path)
+                if m.get("fingerprint") == fingerprint]
+        if rows:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c) for c in zip(*rows)], names=["bucket", *_STATS_NAMES])
+
+    for b, *st in _map_files(spark, mpaths, scan,
+                             f"bucket bigint, {_STATS_DDL}").collect():
         # duplicate attempts / overlapping shards: count each bucket once
         # (byte-identical blocks make any copy equally valid)
         if b not in done:
@@ -674,11 +681,10 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
     schema_ddl = projected.select(*plan.column_names).schema.simpleString()
 
     t0 = time.time()
-    sc = spark.sparkContext
     done: set = set()
     resumed_stats = _STATS_ZERO
     if mode == "resume":
-        done, resumed_stats = _scan_markers(sc, warehouse, fingerprint)
+        done, resumed_stats = _scan_markers(spark, warehouse, fingerprint)
         # stale state from a different fingerprint (plan / input / bucket
         # count changed) must not leak into the final warehouse: drop any
         # marker, block dir, or lineage file without a valid marker.
@@ -722,16 +728,13 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
                                     marker_sink=sink)
             stats = _stats_add(stats, _marker_stats(m))
         # one row per task, a task with no bucket included
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([v]) for v in stats],
-            names=["buckets", "rows", "bytes_in", "bytes_out", "wall_s"])
+        yield pa.RecordBatch.from_arrays([pa.array([v]) for v in stats],
+                                         names=_STATS_NAMES)
 
     shuffled = (bucketed.repartition(n_buckets, F.col("__bucket"))
                 .sortWithinPartitions("__bucket", *order))
     encoded_stats = _STATS_ZERO
-    for row in shuffled.mapInArrow(
-            encode_parts, "buckets bigint, rows bigint, bytes_in bigint, "
-            "bytes_out bigint, wall_s double").collect():
+    for row in shuffled.mapInArrow(encode_parts, _STATS_DDL).collect():
         encoded_stats = _stats_add(encoded_stats, tuple(row))
     totals = _stats_add(encoded_stats, resumed_stats)
     manifest = {
@@ -997,8 +1000,9 @@ def _decode_plan(manifest: dict, columns, zone_filter):
 def _map_files(spark, files: list, per_file, ddl: str):
     """One ``mapInArrow`` over the indices of ``files``: each task calls
     ``per_file(path)`` for each of its files and streams out the record
-    batches it yields.  Partition rule of :func:`_scan_markers`: one task
-    per file, up to 4 waves.  Building the DataFrame runs no Spark job."""
+    batches it yields: one task per file, up to 4 waves of
+    :func:`session.kernel_partitions`.  Building the DataFrame runs no
+    Spark job."""
 
     def run(batches):
         _pin_arrow_threads()
@@ -1006,7 +1010,7 @@ def _map_files(spark, files: list, per_file, ddl: str):
             for i in batch.column(0).to_pylist():
                 yield from per_file(files[i])
 
-    n_part = max(1, min(len(files), 4 * int(spark.sparkContext.defaultParallelism)))
+    n_part = max(1, min(len(files), 4 * kernel_partitions(spark)))
     return spark.range(len(files), numPartitions=n_part).mapInArrow(run, ddl)
 
 
@@ -1052,7 +1056,7 @@ def decode_table(spark, warehouse: str, *,
       number of ``bucket=N`` directories must equal the manifest's bucket
       count, or ``BlockError`` is raised.  No Spark job runs.
     * in one ``mapInArrow`` over a small range of file indices
-      (``min(n_files, 4 × defaultParallelism)`` tasks, no scan, no
+      (``min(n_files, 4 × kernel_partitions)`` tasks, no scan, no
       shuffle): each task opens its bucket files with pyarrow, reads the
       metadata columns, picks the live stripes, streams only their
       requested blocks and decodes them stripe by stripe (stripes never

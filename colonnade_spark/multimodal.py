@@ -148,12 +148,12 @@ def extract_features(df, id_col: str, bin_col: str, modality: str = "fake",
             f"{sorted(_DECODERS)}; use 'fake' for the deterministic "
             "stand-in decoder")
 
-    from .textops import _spread
+    from .session import spread
 
-    # _spread: a few-MB parquet scan is one split, which would serialize
+    # spread: a few-MB parquet scan is one split, which would serialize
     # the whole feature kernel on a single task (round-6 finding: python
     # stages starve because AQE/scan splitting only sees bytes)
-    src = _spread(df.select(F.col(id_col).cast("bigint").alias("id"),
+    src = spread(df.select(F.col(id_col).cast("bigint").alias("id"),
                             F.col(bin_col).alias("payload")))
 
     def run(batches):

@@ -12,6 +12,7 @@ confined to the ANN query where only integer ranks are returned.
 
 from __future__ import annotations
 
+from .session import kernel_partitions, spread
 from .shipping import ensure_shipped
 
 DOC_LANGS = ["de", "en", "es", "fr", "zh"]
@@ -552,11 +553,10 @@ _TOKEN_SQL = ("CASE WHEN length(trim(text)) = 0 THEN 0 "
 def q_token_count(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from .textops import _spread
 
-    # _spread: the documents scan is ONE row group at bench SFs, so the
+    # spread: the documents scan is ONE row group at bench SFs, so the
     # JVM token count otherwise runs on a single task (round-6 finding)
-    return (_spread(_read(spark, sf_dir, "documents"))
+    return (spread(_read(spark, sf_dir, "documents"))
             .select("doc_id",
                     F.expr(_TOKEN_EXPR).cast("bigint").alias("n_tokens")))
 
@@ -581,12 +581,11 @@ def q_doc_redact_pii(spark, sf_dir):
     regexp_extract_all, no Python in the path."""
     from pyspark.sql import functions as F
 
-    from .textops import _spread
 
     email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
     phone = "\\b[0-9]{3}[-.][0-9]{3}[-.][0-9]{4}\\b"
-    # _spread: single-row-group scan -> single-task regex otherwise
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    # spread: single-row-group scan -> single-task regex otherwise
+    docs = spread(_read(spark, sf_dir, "documents"))
     planted = F.when(
         F.col("doc_id") % 7 == 0,
         F.concat(F.col("text"), F.lit(" contact user"),
@@ -648,7 +647,7 @@ def q_doc_repetition(spark, sf_dir):
     the oracle still counts raw strings."""
     from pyspark.sql import functions as F
 
-    from .textops import _spread, word_count_stats
+    from .textops import word_count_stats
 
     docs = _read(spark, sf_dir, "documents")
 
@@ -665,10 +664,10 @@ def q_doc_repetition(spark, sf_dir):
                  pa.array(r["n_words"]), pa.array(r["n_distinct"]),
                  pa.array(r["top_count"])], schema=out_schema)
 
-    # _spread: the documents scan is one split at bench SFs — without it
+    # spread: the documents scan is one split at bench SFs — without it
     # the kernel serializes on a single task (AQE/scan-split starvation of
     # python stages, round-6 finding)
-    w = _spread(docs.select(F.col("doc_id").cast("bigint"), "text")).mapInArrow(
+    w = spread(docs.select(F.col("doc_id").cast("bigint"), "text")).mapInArrow(
         stats,
         "doc_id bigint, n_words bigint, n_distinct bigint, top_count bigint")
     return (w
@@ -703,10 +702,9 @@ def q_doc_quality(spark, sf_dir):
     numerator/denominator pairs for oracle parity)."""
     from pyspark.sql import functions as F
 
-    from .textops import _spread
 
-    # _spread: single-row-group scan -> single-task regex otherwise
-    df = _spread(_read(spark, sf_dir, "documents"))
+    # spread: single-row-group scan -> single-task regex otherwise
+    df = spread(_read(spark, sf_dir, "documents"))
     # non-overlapping "( |^)stop( |$)" matches undercount adjacent stopword
     # pairs identically in both engines (same leftmost-non-overlap rule)
     return df.select(
@@ -770,10 +768,9 @@ def q_token_count_bpe(spark, sf_dir):
     regex and DuckDB RE2."""
     from pyspark.sql import functions as F
 
-    from .textops import _spread
 
-    # _spread: single-row-group scan -> single-task regex otherwise
-    return (_spread(_read(spark, sf_dir, "documents"))
+    # spread: single-row-group scan -> single-task regex otherwise
+    return (spread(_read(spark, sf_dir, "documents"))
             .select("doc_id",
                     F.size(F.regexp_extract_all(
                         F.col("text"), F.lit(_BPE_RE_SPARK_LIT), F.lit(0)))
@@ -924,11 +921,10 @@ def q_ngram_jaccard(spark, sf_dir):
     # coalesce the exchange by shuffle BYTES (~25 MB compressed text →
     # ONE post-shuffle partition), serializing the whole python kernel on
     # a single task (measured 10.4 s vs 1.4 s at sf1.0) — AQE cannot see
-    # python-side CPU (guide §4).  Count policy + skew knob in
-    # textops._kernel_partitions; scales with the cluster, never a tuned
+    # python-side CPU (guide §4).  Count policy in
+    # session.kernel_partitions; scales with the cluster, never a tuned
     # constant.
-    from .textops import _kernel_partitions
-    n_part = _kernel_partitions(spark)
+    n_part = kernel_partitions(spark)
     shuffled = (u.repartition(n_part, "blk")
                 .sortWithinPartitions("blk", "doc_id"))
     return shuffled.mapInArrow(
@@ -955,10 +951,9 @@ def q_doc_fingerprint(spark, sf_dir):
     """Document fingerprint: whitespace-normalized content hash."""
     from pyspark.sql import functions as F
 
-    from .textops import _spread
 
-    # _spread: single-row-group scan -> single-task regex otherwise
-    return (_spread(_read(spark, sf_dir, "documents"))
+    # spread: single-row-group scan -> single-task regex otherwise
+    return (spread(_read(spark, sf_dir, "documents"))
             .select("doc_id",
                     F.md5(F.regexp_replace(F.lower(F.col("text")), "\\s+", " "))
                     .alias("fp")))
@@ -1752,11 +1747,10 @@ def q_events_json_props(spark, sf_dir):
     training pipeline) and aggregate it per event type."""
     from pyspark.sql import functions as F
 
-    from .textops import _spread
 
-    # _spread: events is ONE parquet row group at bench SFs, so the JSON
+    # spread: events is ONE parquet row group at bench SFs, so the JSON
     # parse otherwise runs on a single task before the tiny aggregation
-    ev = _spread(_read(spark, sf_dir, "events"))
+    ev = spread(_read(spark, sf_dir, "events"))
     k = F.get_json_object("props", "$.k").cast("bigint")
     return (ev.select("event_type", k.alias("k"))
             .groupBy("event_type")
@@ -2275,7 +2269,7 @@ def q_top_terms(spark, sf_dir):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    # NOT _spread (round-6 A/B): splitting the single-row-group scan 32
+    # NOT spread (round-6 A/B): splitting the single-row-group scan 32
     # ways inflated this query 0.7 -> 7.7 s — the vocabulary is large, so
     # 32 partial aggregates stop combining map-side and the (lang, term)
     # shuffle explodes; one scan task + map-side combine wins here

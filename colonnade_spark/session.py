@@ -1,4 +1,5 @@
-"""SparkSession factory with the configs this engine assumes."""
+"""SparkSession factory with the configs this engine assumes, and the
+partitioning policy: every task count a stage gets is decided here."""
 
 from __future__ import annotations
 
@@ -53,13 +54,11 @@ def env_byte_size(name: str, default: str) -> str:
 
 
 def get_spark(app: str = "colonnade_spark", cores: int | None = None,
-              shuffle_partitions: int | None = None, driver_mem: str = "48g",
-              ui: bool = False, io_codec: str = "lz4"):
+              driver_mem: str = "48g", ui: bool = False, io_codec: str = "lz4"):
     _apply_malloc_env()
     from pyspark.sql import SparkSession
 
     cores = cores or env_int("SPARK_GRAFT_CPUS", 0, minimum=0) or os.cpu_count() or 4
-    shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = SparkSession.builder
     for k, v in _MALLOC_ENV.items():
         builder = builder.config(f"spark.executorEnv.{k}", v)
@@ -67,7 +66,9 @@ def get_spark(app: str = "colonnade_spark", cores: int | None = None,
         builder
         .master(f"local[{cores}]")
         .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # JVM-side exchanges (joins, aggregations, connected components):
+        # AQE coalesces these by bytes, so this is only their ceiling
+        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # shuffle/broadcast block codec.  lz4 default: the round-4 zstd
@@ -103,3 +104,50 @@ def get_spark(app: str = "colonnade_spark", cores: int | None = None,
         .config("spark.log.level", "WARN")
         .getOrCreate()
     )
+
+
+def kernel_partitions(spark) -> int:
+    """Task count for stages that feed Python kernels: keyed exchanges in
+    front of ``mapInArrow`` pair kernels and the ngram block kernel,
+    :func:`spread`, generated inputs, and (capped at 4 waves) the file-index
+    reads of decode and the resume scan.  The count MUST be explicit on an
+    exchange: AQE coalesces exchanges by shuffle BYTES and cannot see
+    Python-side CPU, collapsing a ~25 MB exchange to 1-2 tasks (round-6
+    structural finding; measured 10.4 s vs 1.4 s on the ngram kernel).
+
+    1 × defaultParallelism: same-session interleaved A/B at sf0.1 AND on a
+    10× corpus read 1× faster than 2× on every kernel query (each extra
+    task wave costs ~5-15 ms of Arrow/task overhead while the per-bucket
+    work is already balanced by the hash partitioning; e.g. embedding
+    pairs 1.26 → 1.01 s), and ½× was worse again (the kernel CPU then
+    under-parallelizes).  Scale-adaptive: derived from the cluster's
+    parallelism, never a tuned constant."""
+    return int(spark.sparkContext.defaultParallelism)
+
+
+def shuffle_partitions(spark) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` (``max(cores, 8)``
+    from :func:`get_spark`): the one explicit count for JVM-only keyed
+    exchanges that AQE must not coalesce (connected components' cached
+    edge layout)."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def spread(df):
+    """``df`` with at least :func:`kernel_partitions` partitions, so a
+    Python UDF or a heavy projection over it uses the cluster: a small
+    parquet file is one split (one row group), which would serialize the
+    whole kernel on one task.  An input that already has enough splits
+    comes back unchanged (at scale the scan supplies them; no shuffle).
+
+    Runs no Spark job.  An input with an exchange plans adaptively, and
+    its partition count is only known once AQE has run its query stages,
+    so it is repartitioned to an explicit count (REPARTITION_BY_NUM, which
+    AQE does not coalesce).  Any other plan's count is read from its RDD,
+    which building runs nothing."""
+    n = kernel_partitions(df.sparkSession)
+    plan = df._jdf.queryExecution().executedPlan()
+    if (plan.nodeName() == "AdaptiveSparkPlan"
+            or plan.execute().getNumPartitions() < n):
+        return df.repartition(n)
+    return df

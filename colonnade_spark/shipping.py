@@ -7,6 +7,8 @@ import os
 import zipfile
 import zipimport
 
+from .session import kernel_partitions
+
 _shipped: set = set()
 
 # archive path -> (st_ino, st_mtime_ns, st_size) of the file at its last
@@ -133,7 +135,7 @@ def ensure_shipped(spark, warm: bool = True) -> None:
     # for those operators JIT here, not in the first measured query
     from pyspark.sql import functions as F
 
-    n = max(int(sc.defaultParallelism), 1)
+    n = kernel_partitions(spark)
     small = spark.range(4).selectExpr("cast(id as int) as g", "id as sk")
     (spark.range(n * 2, numPartitions=n)
      .selectExpr("cast(id as string) as s", "cast(id % 4 as int) as g")

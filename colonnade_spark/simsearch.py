@@ -342,12 +342,13 @@ def cosine_near_dup_pairs(spark, df, vec_col: str, id_col: str,
     pair instead of three; same float values, 3x less work."""
     from pyspark.sql import functions as F
 
-    from .textops import _spread, bucket_pairs
+    from .session import spread
+    from .textops import bucket_pairs
 
-    # _spread: a one-split scan otherwise serializes the signature UDF
+    # spread: a one-split scan otherwise serializes the signature UDF
     # AND the per-pair cosine HOF folds on a single task (round-6
     # parallelism finding; no-op when the scan already parallelizes)
-    v = _spread(df).select(F.col(id_col).alias("id"),
+    v = spread(df).select(F.col(id_col).alias("id"),
                            F.expr(_dbl(vec_col)).alias("e"))
     v = v.withColumn("n2", F.expr(_DOT.format(a="e", b="e")))
     va = v.select(F.col("id").alias("id_a"), F.col("e").alias("ea"),

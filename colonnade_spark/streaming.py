@@ -134,6 +134,27 @@ def _spark_field_type(spark, col):
     return None
 
 
+def _file_stream(spark, input_path: str, max_files_per_trigger: int):
+    """A parquet file-stream source over ``input_path``, its schema read by
+    :func:`footer_schema`, ``max_files_per_trigger`` files per
+    micro-batch."""
+    return (spark.readStream.schema(footer_schema(spark, input_path))
+            .option("maxFilesPerTrigger", str(max_files_per_trigger))
+            .parquet(input_path))
+
+
+def _parquet_sink(df, out_dir: str, checkpoint_dir: str):
+    """Append ``df``'s stream to parquet under ``out_dir``, draining the
+    available input (``availableNow``); returns the finished query."""
+    q = (df.writeStream.outputMode("append").format("parquet")
+         .option("path", out_dir)
+         .option("checkpointLocation", checkpoint_dir)
+         .trigger(availableNow=True)
+         .start())
+    q.awaitTermination()
+    return q
+
+
 def stream_encode(spark, input_path: str, warehouse: str, plan: EncodePlan,
                   *, checkpoint_dir: str | None = None, n_buckets: int = 4,
                   stripe_bytes: int = 4 << 20, max_files_per_trigger: int = 1,
@@ -148,7 +169,6 @@ def stream_encode(spark, input_path: str, warehouse: str, plan: EncodePlan,
     """
     checkpoint_dir = checkpoint_dir or os.path.join(warehouse, "_stream_ckpt")
     os.makedirs(warehouse, exist_ok=True)
-    schema = footer_schema(spark, input_path)
 
     def handle_batch(df, batch_id: int) -> None:
         sub = os.path.join(warehouse, f"batch={batch_id}")
@@ -156,9 +176,7 @@ def stream_encode(spark, input_path: str, warehouse: str, plan: EncodePlan,
                             stripe_bytes=stripe_bytes, mode="resume",
                             input_token=f"stream_batch_{batch_id}")
 
-    q = (spark.readStream.schema(schema)
-         .option("maxFilesPerTrigger", str(max_files_per_trigger))
-         .parquet(input_path)
+    q = (_file_stream(spark, input_path, max_files_per_trigger)
          .writeStream.foreachBatch(handle_batch)
          .option("checkpointLocation", checkpoint_dir)
          .trigger(availableNow=True)
@@ -184,22 +202,13 @@ def stream_windowed_counts(spark, input_path: str, out_dir: str, *,
     input (``availableNow``)."""
     from pyspark.sql import functions as F
 
-    schema = footer_schema(spark, input_path)
-    agg = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", str(max_files_per_trigger))
-           .parquet(input_path)
+    agg = (_file_stream(spark, input_path, max_files_per_trigger)
            .withWatermark(ts_col, watermark)
            .groupBy(F.window(ts_col, window), key_col)
            .agg(F.count("*").alias("n_events")))
-    q = (agg.select(F.col("window.start").alias("win_start"), key_col,
-                    "n_events")
-         .writeStream.outputMode("append").format("parquet")
-         .option("path", out_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return _parquet_sink(agg.select(F.col("window.start").alias("win_start"),
+                                    key_col, "n_events"),
+                         out_dir, checkpoint_dir)
 
 
 def stream_dedup_exact(spark, input_path: str, *, checkpoint_dir: str,
@@ -217,14 +226,9 @@ def stream_dedup_exact(spark, input_path: str, *, checkpoint_dir: str,
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    schema = footer_schema(spark, input_path)
-    src = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", str(max_files_per_trigger))
-           .parquet(input_path)
-           .withColumn("__h", F.sha2(F.col(text_col), 256)))
-
-    out_ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                        for f in schema.fields)
+    src = _file_stream(spark, input_path, max_files_per_trigger)
+    out_schema = src.schema
+    src = src.withColumn("__h", F.sha2(F.col(text_col), 256))
 
     def keep_first(key, pdfs, state: GroupState):
         seen = state.exists
@@ -237,18 +241,11 @@ def stream_dedup_exact(spark, input_path: str, *, checkpoint_dir: str,
                 yield pdf.iloc[[0]].drop(columns=["__h"])
             # later rows of this key (this batch or later ones): duplicates
 
-    q = (src.groupBy("__h")
-         .applyInPandasWithState(keep_first, outputStructType=out_ddl,
-                                 stateStructType="n int",
-                                 outputMode="append",
-                                 timeoutConf=GroupStateTimeout.NoTimeout)
-         .writeStream.outputMode("append").format("parquet")
-         .option("path", out_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return _parquet_sink(
+        src.groupBy("__h").applyInPandasWithState(
+            keep_first, outputStructType=out_schema, stateStructType="n int",
+            outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout),
+        out_dir, checkpoint_dir)
 
 
 def stream_dedup_near(spark, input_path: str, *, checkpoint_dir: str,
@@ -276,8 +273,6 @@ def stream_dedup_near(spark, input_path: str, *, checkpoint_dir: str,
 
     from .textops import minhash_signature_batch, simhash_batch
 
-    schema = footer_schema(spark, input_path)
-
     @F.pandas_udf(LongType())
     def sim_udf(s: pd.Series) -> pd.Series:
         return pd.Series(simhash_batch(s.tolist()))
@@ -286,14 +281,10 @@ def stream_dedup_near(spark, input_path: str, *, checkpoint_dir: str,
     def minsig_udf(s: pd.Series) -> pd.Series:
         return pd.Series(minhash_signature_batch(s.tolist(), n_hashes))
 
-    src = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", str(max_files_per_trigger))
-           .parquet(input_path)
-           .withColumn("__sim", sim_udf(F.col(text_col)))
+    src = _file_stream(spark, input_path, max_files_per_trigger)
+    out_schema = src.schema
+    src = (src.withColumn("__sim", sim_udf(F.col(text_col)))
            .withColumn("__msig", minsig_udf(F.col(text_col))))
-
-    out_ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                        for f in schema.fields)
 
     def keep_novel(key, pdfs, state: GroupState):
         kept = np.array(state.get[0], dtype=np.int64).reshape(-1, n_hashes) \
@@ -313,18 +304,12 @@ def stream_dedup_near(spark, input_path: str, *, checkpoint_dir: str,
                 yield pdf.iloc[emit_rows].drop(columns=["__sim", "__msig"])
         state.update((kept.ravel().tolist(),))
 
-    q = (src.groupBy("__sim")
-         .applyInPandasWithState(keep_novel, outputStructType=out_ddl,
-                                 stateStructType="sigs array<bigint>",
-                                 outputMode="append",
-                                 timeoutConf=GroupStateTimeout.NoTimeout)
-         .writeStream.outputMode("append").format("parquet")
-         .option("path", out_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return _parquet_sink(
+        src.groupBy("__sim").applyInPandasWithState(
+            keep_novel, outputStructType=out_schema,
+            stateStructType="sigs array<bigint>", outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout),
+        out_dir, checkpoint_dir)
 
 
 def batch_warehouses(warehouse: str) -> list:
@@ -370,22 +355,13 @@ def stream_sessionize(spark, input_path: str, *, checkpoint_dir: str,
     Append-mode parquet sink; returns after draining available input."""
     from pyspark.sql import functions as F
 
-    schema = footer_schema(spark, input_path)
-    agg = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", str(max_files_per_trigger))
-           .parquet(input_path)
+    agg = (_file_stream(spark, input_path, max_files_per_trigger)
            .withWatermark(ts_col, watermark)
            .groupBy(F.session_window(ts_col, gap), key_col)
            .agg(F.count("*").alias("n_events"),
                 F.min(ts_col).alias("first_ts")))
-    q = (agg.select(key_col,
-                    F.col("session_window.start").alias("sess_start"),
-                    F.col("session_window.end").alias("sess_end"),
-                    "n_events", "first_ts")
-         .writeStream.outputMode("append").format("parquet")
-         .option("path", out_dir)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return _parquet_sink(
+        agg.select(key_col, F.col("session_window.start").alias("sess_start"),
+                   F.col("session_window.end").alias("sess_end"),
+                   "n_events", "first_ts"),
+        out_dir, checkpoint_dir)

@@ -27,6 +27,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd  # module-level: pandas_udf type-hint resolution needs it
 
+from .session import kernel_partitions, shuffle_partitions, spread
+
 _M64 = (1 << 64) - 1
 
 
@@ -186,43 +188,6 @@ def minhash_signature_batch(texts, n_hashes: int = 64, shingle: int = 5) -> list
     return [row.tolist() for row in out]
 
 
-def _kernel_partitions(spark) -> int:
-    """Explicit partition count for keyed exchanges that feed python
-    kernels (mapInArrow pair kernels, the ngram block kernel).  The count
-    MUST be explicit — AQE coalesces these exchanges by shuffle BYTES and
-    cannot see python-side CPU, collapsing a ~25 MB exchange to 1-2 tasks
-    (round-6 structural finding; measured 10.4 s vs 1.4 s on the ngram
-    kernel).
-
-    Default multiplier 1 × defaultParallelism: same-session interleaved
-    A/B at sf0.1 AND on a 10× corpus read 1× faster than 2× on every
-    kernel query (each extra task wave costs ~5-15 ms of arrow/task
-    overhead while the per-bucket work is already balanced by the hash
-    partitioning; e.g. embedding pairs 1.26 → 1.01 s, and 16 (= ½×) was
-    worse again — the kernel CPU then under-parallelizes).  On clusters
-    where per-bucket pair volume is heavily skewed (task runtimes of
-    seconds+, stragglers visible), set SPARK_GRAFT_KERNEL_PART_MULT=2..4:
-    finer tasks let the scheduler balance the tail, and the per-task fixed
-    cost is amortized by then (a non-integer or a value below 1 raises
-    ``ValueError``).  Scale-adaptive either way — the count is
-    derived from the cluster's parallelism, never a tuned constant."""
-    from .session import env_int
-
-    mult = env_int("SPARK_GRAFT_KERNEL_PART_MULT", 1)
-    return spark.sparkContext.defaultParallelism * mult
-
-
-def _spread(df):
-    """Ensure the signature UDF gets enough tasks to use the cluster: a
-    single small parquet file otherwise serializes the whole kernel in one
-    task.  No-op when the input already has enough partitions (at scale the
-    scan supplies them — no extra shuffle)."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
 def with_minhash(df, text_col: str, sig_col: str = "sig",
                  n_hashes: int = 64, shingle: int = 5):
     from pyspark.sql import functions as F
@@ -232,7 +197,7 @@ def with_minhash(df, text_col: str, sig_col: str = "sig",
     def sig_udf(s: pd.Series) -> pd.Series:
         return pd.Series(minhash_signature_batch(s.tolist(), n_hashes, shingle))
 
-    return _spread(df).withColumn(sig_col, sig_udf(F.col(text_col)))
+    return spread(df).withColumn(sig_col, sig_udf(F.col(text_col)))
 
 
 def minhash_near_dup_pairs(spark, df, id_col: str, text_col: str,
@@ -318,7 +283,7 @@ def with_simhash(df, text_col: str, sig_col: str = "simhash", shingle: int = 4):
     def sim_udf(s: pd.Series) -> pd.Series:
         return pd.Series(simhash_batch(s.tolist(), shingle))
 
-    return _spread(df).withColumn(sig_col, sim_udf(F.col(text_col)))
+    return spread(df).withColumn(sig_col, sim_udf(F.col(text_col)))
 
 
 def simhash_pairs_from_sigs(df_sigged, id_col: str, sig_col: str = "simhash",
@@ -500,7 +465,7 @@ def connected_components(ids_df, pairs_df, id_col: str = "doc_id",
     from pyspark.sql import functions as F
 
     spark = ids_df.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_part = shuffle_partitions(spark)
     ids = ids_df.select(F.col(id_col).alias("id"))
     if max_iters <= 0:
         # degenerate parameter: no round ever runs, so the round-1 groupBy
@@ -732,7 +697,7 @@ def with_winnow_fingerprints(df, text_col: str, fp_col: str = "fps",
     def fp_udf(s: pd.Series) -> pd.Series:
         return pd.Series(winnow_batch(s.tolist(), shingle, window))
 
-    return _spread(df).withColumn(fp_col, fp_udf(F.col(text_col)))
+    return spread(df).withColumn(fp_col, fp_udf(F.col(text_col)))
 
 
 # --------------------------------------------------------------------------
@@ -761,9 +726,9 @@ def bucket_pairs(members, key_cols: list, payload_cols: list, metric,
     # explicit partition count: AQE would coalesce this exchange by BYTES
     # and serialize the python pair kernel on a handful of tasks (it cannot
     # see python-side CPU, guide §4 — a ~13 MB exploded simhash table
-    # collapses to ONE post-shuffle partition); count policy + skew knob in
-    # _kernel_partitions
-    n_part = _kernel_partitions(members.sparkSession)
+    # collapses to ONE post-shuffle partition); count policy in
+    # session.kernel_partitions
+    n_part = kernel_partitions(members.sparkSession)
     return (members.repartition(n_part, *key_cols)
             .sortWithinPartitions(*key_cols, "id")
             .mapInArrow(bucket_pair_kernel(key_cols, payload_cols, metric,
@@ -1338,7 +1303,7 @@ def _word_span_hashes(texts, k: int):
 def with_word_shingle_hashes(df, text_col: str, out_col: str = "sh",
                              k: int = 3):
     """array<bigint> column of distinct word-k-gram hashes (vectorized
-    pandas UDF over :func:`word_shingle_hash_sets`).  Input is _spread
+    pandas UDF over :func:`word_shingle_hash_sets`).  Input is spread
     first: a few-MB parquet scan yields one split, which would serialize
     the kernel on one task (no-op when the scan already parallelizes)."""
     from pyspark.sql import functions as F
@@ -1348,7 +1313,7 @@ def with_word_shingle_hashes(df, text_col: str, out_col: str = "sh",
     def sh_udf(s: pd.Series) -> pd.Series:
         return pd.Series(word_shingle_hash_sets(s.tolist(), k))
 
-    return _spread(df).withColumn(out_col, sh_udf(F.col(text_col)))
+    return spread(df).withColumn(out_col, sh_udf(F.col(text_col)))
 
 
 # --------------------------------------------------------------------------

@@ -732,6 +732,41 @@ def test_marker_shards_are_per_task_and_torn_tail_is_skipped(
     assert m2["rows"] == m["rows"]
 
 
+def test_resume_marker_scan_is_one_job(spark, corpus_df, tmp_path):
+    """The resume scan reads every shard file in one file-index job and
+    folds the same per-bucket stats as list_markers: a duplicate attempt's
+    shard counts each bucket once, and a stale fingerprint counts not at
+    all."""
+    import shutil
+
+    wh = str(tmp_path / "wh")
+    m = engine.encode_table(spark, corpus_df, corpus_plan(), wh, n_buckets=8,
+                            input_token="scan")
+    shards = sorted(glob.glob(os.path.join(wh, "markers", "shard_*.jsonl")))
+    assert len(shards) >= 2
+    shutil.copy(shards[0], shards[0].replace(".jsonl", "_dup.jsonl"))
+    stale = {**engine.list_markers(wh)[0], "bucket": 99, "fingerprint": "old"}
+    with open(os.path.join(wh, "markers", "shard_stale.jsonl"), "w") as f:
+        f.write(json.dumps(stale) + "\n")
+
+    sc = spark.sparkContext
+    group = "resume-marker-scan"
+    sc.setJobGroup(group, "resume marker scan")
+    try:
+        done, stats = engine._scan_markers(spark, wh, m["fingerprint"])
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 1, jobs
+    live = [x for x in engine.list_markers(wh)
+            if x["fingerprint"] == m["fingerprint"]]
+    assert done == {x["bucket"] for x in live}
+    want = [sum(c) for c in zip(*map(engine._marker_stats, live))]
+    assert stats[:4] == tuple(want[:4]) == (
+        m["buckets_encoded_this_run"], m["rows"], m["bytes_in"], m["bytes_out"])
+    assert stats[4] == pytest.approx(want[4])
+
+
 @pytest.fixture(scope="module")
 def corpus_wh(spark, corpus_df, tmp_path_factory):
     wh = str(tmp_path_factory.mktemp("decode") / "wh")

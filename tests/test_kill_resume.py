@@ -3,11 +3,13 @@ job mid-run, rerun with mode=resume, and require (a) completed buckets are
 not re-encoded (byte-identical files, untouched mtimes), (b) the final
 warehouse verifies sha256-clean."""
 
+import contextlib
 import glob
 import os
 import signal
 import subprocess
 import sys
+import threading
 import time
 
 import pytest
@@ -18,6 +20,21 @@ WH = "/tmp/colonnade_killtest_wh"
 N_FILES = 30_000
 N_BUCKETS = 12
 KILL_ATTEMPTS = 3
+DEADLINE_S = 540
+
+
+@contextlib.contextmanager
+def _spark_deadline(spark, seconds: float = DEADLINE_S):
+    """Cancel every running Spark job once ``seconds`` have passed inside
+    the block: a hung in-process action then raises, and only the test
+    running it fails, instead of the whole suite stalling."""
+    timer = threading.Timer(seconds, spark.sparkContext.cancelAllJobs)
+    timer.daemon = True
+    timer.start()
+    try:
+        yield
+    finally:
+        timer.cancel()
 
 
 def _kill_midway(engine, n_nonempty: int) -> list:
@@ -74,15 +91,16 @@ def killed(spark):
     from colonnade_spark.corpus import generate_corpus
     from colonnade_spark.plan import corpus_plan
 
-    if not os.path.exists(os.path.join(CORPUS, "_SUCCESS")):
-        generate_corpus(spark, N_FILES, seed=42).write.mode(
-            "overwrite").parquet(CORPUS)
-    df = spark.read.parquet(CORPUS)
     plan = corpus_plan()
-    # the CLI's encode_table defaults: target_salt_bytes 64 MiB, no sample
-    n_nonempty = (engine.assign_buckets(plan.project(df), plan, N_BUCKETS,
-                                        target_salt_bytes=64 << 20)
-                  .select("__bucket").distinct().count())
+    with _spark_deadline(spark):
+        if not os.path.exists(os.path.join(CORPUS, "_SUCCESS")):
+            generate_corpus(spark, N_FILES, seed=42).write.mode(
+                "overwrite").parquet(CORPUS)
+        df = spark.read.parquet(CORPUS)
+        # the CLI's encode_table defaults: target_salt_bytes 64 MiB, no sample
+        n_nonempty = (engine.assign_buckets(plan.project(df), plan, N_BUCKETS,
+                                            target_salt_bytes=64 << 20)
+                      .select("__bucket").distinct().count())
     assert n_nonempty > 3, n_nonempty
     for _ in range(KILL_ATTEMPTS):
         markers = _kill_midway(engine, n_nonempty)
@@ -110,7 +128,6 @@ def killed(spark):
             "published": published, "mtimes": mtimes}
 
 
-@pytest.mark.timeout(540)
 def test_sigkill_then_resume_fused(killed):
     """Markers are written per bucket from INSIDE the shuffle task, after
     that bucket's blocks and lineage are published, so the killed run
@@ -131,7 +148,6 @@ def test_sigkill_then_resume_fused(killed):
             assert sum(cols["bytes_out"]) == m["bytes_out"], m
 
 
-@pytest.mark.timeout(540)
 def test_sigkill_then_resume(spark, killed):
     """A resume of the killed run anti-joins the completed buckets out
     before the shuffle, never rewrites their files, and ends with a
@@ -143,9 +159,11 @@ def test_sigkill_then_resume(spark, killed):
     assert marked, "kill landed before any bucket completed"
 
     # resume in-process (same corpus, same plan → same fingerprint)
-    manifest = engine.encode_table(spark, df, plan, WH,
-                                   n_buckets=N_BUCKETS, mode="resume",
-                                   input_token=CORPUS)
+    with _spark_deadline(spark):
+        manifest = engine.encode_table(spark, df, plan, WH,
+                                       n_buckets=N_BUCKETS, mode="resume",
+                                       input_token=CORPUS)
+        summary = engine.verify_roundtrip(spark, df, plan, WH)
     assert manifest["buckets_resumed"] == len(marked)
     assert manifest["buckets_encoded_this_run"] >= 1
 
@@ -154,6 +172,18 @@ def test_sigkill_then_resume(spark, killed):
         b = int(p.split("bucket=")[1].split("/")[0])
         if b in marked:
             assert os.path.getmtime(p) == mt, f"bucket {b} was re-encoded"
-
-    summary = engine.verify_roundtrip(spark, df, plan, WH)
     assert summary["ok"] and summary["rows_decoded"] == N_FILES
+
+
+def test_spark_deadline_fails_a_hung_action(spark):
+    """The deadline is enforced: an action still running when it expires
+    raises, well before the action itself would end."""
+    def hang(batches):
+        time.sleep(120)
+        yield from batches
+
+    t0 = time.time()
+    with pytest.raises(Exception, match="cancel"):
+        with _spark_deadline(spark, seconds=2):
+            spark.range(1, numPartitions=1).mapInArrow(hang, "id bigint").collect()
+    assert time.time() - t0 < 60

@@ -819,15 +819,15 @@ def test_pair_kernel_exchange_is_explicit_and_single(spark, docs, emb):
     """AQE coalesces a hash exchange by shuffle bytes and cannot see the
     python pair kernel's CPU, so the kernel's exchange must stay an
     explicit ``hashpartitioning(band, bh, N)`` with N from
-    ``_kernel_partitions`` and REPARTITION_BY_NUM (which AQE leaves
-    alone), and each pipeline runs exactly one MapInArrow."""
+    ``session.kernel_partitions`` and REPARTITION_BY_NUM (which AQE
+    leaves alone), and each pipeline runs exactly one MapInArrow."""
     import re
 
+    from colonnade_spark.session import kernel_partitions
     from colonnade_spark.simsearch import cosine_near_dup_pairs
-    from colonnade_spark.textops import (_kernel_partitions,
-                                         minhash_near_dup_pairs)
+    from colonnade_spark.textops import minhash_near_dup_pairs
 
-    n = _kernel_partitions(spark)
+    n = kernel_partitions(spark)
     for df in (minhash_near_dup_pairs(spark, docs, "doc_id", "text"),
                cosine_near_dup_pairs(spark, emb, "embedding", "vec_id",
                                      dim=64)):
