@@ -1160,13 +1160,13 @@ def verify_roundtrip(spark, source_df, plan: EncodePlan, warehouse: str) -> dict
     decoded = decode_table(spark, warehouse)
     src = plan.project(source_df).select(*plan.column_names)
 
-    def hashed(df, tag):
+    def hashed(df):
         exprs = [F.sha2(F.coalesce(F.col(c).cast("string"), F.lit("\x00NULL")), 256)
                  .alias(f"{c}__h") for c in plan.column_names
                  if c not in plan.key_cols]
         return df.select(*plan.key_cols, *exprs)
 
-    s, d = hashed(src, "s"), hashed(decoded, "d")
+    s, d = hashed(src), hashed(decoded)
     joined = s.alias("s").join(d.alias("d"), on=list(plan.key_cols), how="full")
     cmp_cols = [c for c in plan.column_names if c not in plan.key_cols]
     # all-key plans (every column part of row identity) have nothing beyond
@@ -1176,7 +1176,7 @@ def verify_roundtrip(spark, source_df, plan: EncodePlan, warehouse: str) -> dict
     for c in cmp_cols:
         cond = (F.col(f"s.{c}__h").isNull() | F.col(f"d.{c}__h").isNull()
                 | (F.col(f"s.{c}__h") != F.col(f"d.{c}__h")))
-        mismatch = cond if mismatch is None else (mismatch | cond)
+        mismatch = mismatch | cond
     # single pass: counts + mismatches in one aggregation so the decode
     # pipeline executes exactly once
     probe_s = f"s.{cmp_cols[0]}__h" if cmp_cols else plan.key_cols[0]

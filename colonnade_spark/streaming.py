@@ -26,7 +26,6 @@ watermark aggregation shape lives in ``queries.q_events_window`` (the same
 from __future__ import annotations
 
 import glob
-import json
 import os
 import urllib.parse
 
@@ -39,22 +38,25 @@ from .plan import EncodePlan
 
 def footer_schema(spark, input_path: str):
     """The Spark schema of a parquet input directory (or file), as
-    ``spark.read.parquet(input_path).schema`` infers it, read from the
-    footer of its first visible file with pyarrow, so no Spark job runs.
-    Files whose names start with ``_`` or ``.`` are skipped, as Spark skips
-    them.  Fields come back nullable, as Spark infers them.
+    ``spark.read.parquet(input_path).schema`` infers it, with no Spark job:
+    the footer of the first visible file is read and typed in the JVM by
+    Spark's own converter (``ParquetFileFormat.readSchemaFromFooter``, under
+    the session's parquet settings), then made nullable, as ``DataSource``
+    makes an inferred schema.  Files whose names start with ``_`` or ``.``
+    are skipped, as Spark skips them.  A footer Spark cannot type (e.g.
+    nanosecond INT64 timestamps) raises the error Spark's inference raises.
 
-    Local paths and ``file:`` URIs are read this way.  Other URIs (cluster
-    storage, read through Spark's Hadoop configuration), glob patterns and
-    footers with a column :func:`_spark_field_type` does not map (nested,
-    nanosecond, interval, ...) are inferred by Spark itself, one job.
+    Local paths and ``file:`` URIs are listed with pyarrow, in one call: a
+    Hadoop listing walked entry by entry through py4j pays a socket round
+    trip per entry, and stream input directories grow with every trigger.
+    Other URIs (cluster storage, read through Spark's Hadoop configuration)
+    and glob patterns are inferred by Spark itself, one job.
 
     Raises ``FileNotFoundError`` when there is no visible file, and
     ``ValueError`` on a ``key=value/`` partitioned layout, whose partition
     columns no footer holds."""
     import pyarrow.fs as pafs
-    import pyarrow.parquet as pq
-    from pyspark.sql.types import StructField, StructType
+    from pyspark.sql.types import _parse_datatype_json_string
 
     scheme = urllib.parse.urlsplit(input_path).scheme
     if scheme not in ("", "file") or any(c in input_path for c in "*?[{"):
@@ -78,60 +80,17 @@ def footer_schema(spark, input_path: str):
         first = files[0]
     elif info.type != pafs.FileType.File:
         raise FileNotFoundError(f"no parquet file at {input_path}")
-    meta = pq.read_metadata(first, filesystem=fs)
-    spark_json = (meta.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
-    if spark_json is not None:      # written by Spark: Spark reads its own schema
-        fields = [StructField(f.name, f.dataType, True, f.metadata)
-                  for f in StructType.fromJson(json.loads(spark_json)).fields]
-        known = all(f.dataType.typeName() not in ("struct", "array", "map")
-                    for f in fields)
-    else:                           # a nested leaf's path is not its name
-        cols = [meta.schema.column(i) for i in range(meta.num_columns)]
-        fields = [StructField(c.name, t, True) for c in cols if c.path == c.name
-                  and (t := _spark_field_type(spark, c)) is not None]
-        known = len(fields) == len(cols)
-    if known and fields:
-        return StructType(fields)
-    return spark.read.parquet(input_path).schema
-
-
-def _spark_field_type(spark, col):
-    """The Spark type Spark's parquet reader infers for a flat parquet
-    column, under the session's parquet settings; None where this mapping
-    does not follow Spark."""
-    from pyspark.sql import types as T
-
-    conf = spark.conf.get
-    logical = json.loads(col.logical_type.to_json())
-    kind, phys = logical["Type"], col.physical_type
-    if kind == "None":
-        return {"BOOLEAN": T.BooleanType(), "INT32": T.IntegerType(),
-                "INT64": T.LongType(), "FLOAT": T.FloatType(),
-                "DOUBLE": T.DoubleType(), "FIXED_LEN_BYTE_ARRAY": T.BinaryType(),
-                "BYTE_ARRAY": (T.StringType()
-                               if conf("spark.sql.parquet.binaryAsString") == "true"
-                               else T.BinaryType()),
-                "INT96": (T.TimestampType()
-                          if conf("spark.sql.parquet.int96AsTimestamp") == "true"
-                          else None)}.get(phys)
-    if kind == "String" and phys == "BYTE_ARRAY":
-        return T.StringType()
-    if kind == "Date":
-        return T.DateType()
-    if kind == "Decimal" and logical["precision"] <= 38:
-        return T.DecimalType(logical["precision"], logical["scale"])
-    if kind == "Int":       # unsigned widens: uint64 to decimal(20, 0)
-        width, signed = logical["bitWidth"], logical["isSigned"]
-        if not signed and width == 64:
-            return T.DecimalType(20, 0)
-        width = width if signed else 2 * width
-        return {8: T.ByteType(), 16: T.ShortType(), 32: T.IntegerType(),
-                64: T.LongType()}[width]
-    if kind == "Timestamp" and logical["timeUnit"] in ("milliseconds", "microseconds"):
-        ntz = (not logical["isAdjustedToUTC"]
-               and conf("spark.sql.parquet.inferTimestampNTZ.enabled") == "true")
-        return T.TimestampNTZType() if ntz else T.TimestampType()
-    return None
+    jvm, state = spark._jvm, spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    path = jvm.org.apache.hadoop.fs.Path(jvm.java.io.File(first).toURI())
+    footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        conf, path.getFileSystem(conf).getFileStatus(path),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(path, footer),
+        parquet.ParquetToSparkSchemaConverter(state.conf()))
+    return _parse_datatype_json_string(schema.asNullable().json())
 
 
 def _file_stream(spark, input_path: str, max_files_per_trigger: int):
@@ -222,7 +181,6 @@ def stream_dedup_exact(spark, input_path: str, *, checkpoint_dir: str,
     pipeline "dedup the firehose" shape: state is partitioned by key (scales
     horizontally) and checkpointed (restart-safe).  Appends survivors to
     ``out_dir`` and returns after draining available input."""
-    import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 

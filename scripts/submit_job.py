@@ -89,26 +89,12 @@ def main() -> int:
     elif args.action == "decode":
         out = os.path.join(args.warehouse, "decoded_parquet")
         cols = args.columns.split(",") if args.columns else None
+        # bounds stay strings: decode_table converts them by the column's
+        # type (int() on integer columns) and rejects unmapped types
         zone = []
-        if args.zone:
-            # parse bounds by the COLUMN'S type (a numeric-looking bound on
-            # a string column must stay a string — int bounds there are a
-            # loud TypeError in the engine)
-            from pyspark.sql.types import _parse_datatype_string
-
-            manifest = engine.read_manifest(args.warehouse)
-            # _parse_datatype_string accepts the struct<...> form directly;
-            # string-munging it corrupts nested array<>/map<>/struct<> types
-            schema = _parse_datatype_string(manifest["schema_ddl"])
-            types = {f.name: f.dataType.simpleString()
-                     for f in schema.fields}
-            for z in args.zone:
-                zc, lo, hi = z.split(":")
-                if types.get(zc, "") in ("tinyint", "smallint",
-                                         "int", "bigint"):
-                    zone.append((zc, int(lo), int(hi)))
-                else:
-                    zone.append((zc, lo, hi))
+        for z in args.zone or []:
+            zc, lo, hi = z.split(":")
+            zone.append((zc, lo, hi))
         engine.decode_table(spark, args.warehouse, columns=cols,
                             zone_filter=zone or None) \
             .write.mode("overwrite").parquet(out)

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -14,3 +15,20 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+def job_ids(spark, group: str) -> list:
+    """The ids of the Spark jobs run so far under job group ``group``."""
+    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def run_jobs(spark, fn):
+    """Run ``fn()`` under a job group of its own; returns ``fn``'s result
+    and the ids of the Spark jobs it ran.  The group is cleared after."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        return fn(), job_ids(spark, group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

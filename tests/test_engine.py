@@ -7,6 +7,7 @@ import json
 import os
 
 import pytest
+from conftest import run_jobs
 from reference_decoder import reference_rows
 
 from colonnade_spark import engine
@@ -749,14 +750,8 @@ def test_resume_marker_scan_is_one_job(spark, corpus_df, tmp_path):
     with open(os.path.join(wh, "markers", "shard_stale.jsonl"), "w") as f:
         f.write(json.dumps(stale) + "\n")
 
-    sc = spark.sparkContext
-    group = "resume-marker-scan"
-    sc.setJobGroup(group, "resume marker scan")
-    try:
-        done, stats = engine._scan_markers(spark, wh, m["fingerprint"])
-        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    (done, stats), jobs = run_jobs(
+        spark, lambda: engine._scan_markers(spark, wh, m["fingerprint"]))
     assert len(jobs) == 1, jobs
     live = [x for x in engine.list_markers(wh)
             if x["fingerprint"] == m["fingerprint"]]
@@ -778,18 +773,12 @@ def corpus_wh(spark, corpus_df, tmp_path_factory):
 def test_decode_builds_without_spark_jobs(spark, corpus_wh):
     """Building a decode runs no Spark job at call time — no eager parquet
     schema inference, no zone-map pre-scan — with or without zone_filter."""
-    sc = spark.sparkContext
-    group = "decode-build-no-jobs"
-    sc.setJobGroup(group, "decode_table build only")
-    try:
-        engine.decode_table(spark, corpus_wh)
-        engine.decode_table(spark, corpus_wh, columns=["path", "lang"])
+    _, jobs = run_jobs(spark, lambda: (
+        engine.decode_table(spark, corpus_wh),
+        engine.decode_table(spark, corpus_wh, columns=["path", "lang"]),
         engine.decode_table(spark, corpus_wh,
                             zone_filter=[("lang", "go", "py"),
-                                         ("repo", "a", "z")])
-        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+                                         ("repo", "a", "z")])))
     assert jobs == []
 
 
@@ -799,17 +788,10 @@ def test_fresh_encode_job_count(spark, corpus_df, tmp_path, target_salt_bytes, n
     stage and the encode stage; the stats fold inside the tasks, so no
     aggregate job follows.  When some repo is fanned out (a 16 KiB
     target), a 4th job broadcasts the salt table."""
-    sc = spark.sparkContext
-    group = f"encode-jobs-{target_salt_bytes}"
-    sc.setJobGroup(group, "fresh encode_table")
-    try:
-        engine.encode_table(spark, corpus_df, corpus_plan(),
-                            str(tmp_path / "wh"), n_buckets=4,
-                            input_token="jobs", salt_sample_fraction=0.05,
-                            target_salt_bytes=target_salt_bytes)
-        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    _, jobs = run_jobs(spark, lambda: engine.encode_table(
+        spark, corpus_df, corpus_plan(), str(tmp_path / "wh"), n_buckets=4,
+        input_token="jobs", salt_sample_fraction=0.05,
+        target_salt_bytes=target_salt_bytes))
     assert len(jobs) == n_jobs, jobs
 
 
@@ -818,15 +800,9 @@ def test_giant_cells_and_validate_build_without_spark_jobs(spark, corpus_wh):
     decode_table: building either DataFrame runs no Spark job."""
     from colonnade_spark.errors import validate_blocks
 
-    sc = spark.sparkContext
-    group = "blocks-readers-build-no-jobs"
-    sc.setJobGroup(group, "decode_giant_cells / validate_blocks build only")
-    try:
-        engine.decode_giant_cells(spark, corpus_wh, "content")
-        validate_blocks(spark, corpus_wh)
-        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    _, jobs = run_jobs(spark, lambda: (
+        engine.decode_giant_cells(spark, corpus_wh, "content"),
+        validate_blocks(spark, corpus_wh)))
     assert jobs == []
 
 

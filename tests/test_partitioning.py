@@ -5,21 +5,13 @@ import glob
 import os
 import re
 
+from conftest import run_jobs
+
 from colonnade_spark.session import kernel_partitions, spread
 
 SF = "/root/testdata/sf0.001"
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "colonnade_spark")
-
-
-def _jobs_in(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-        return out, list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def _repartitions(df):
@@ -33,9 +25,8 @@ def test_spread_runs_no_job_on_an_exchange(spark):
     spread repartitions it to an explicit count instead."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     n = kernel_partitions(spark)
-    out, jobs = _jobs_in(spark, "spread-exchange",
-                         lambda: spread(docs.groupBy("lang").count()
-                                        .join(docs, "lang")))
+    out, jobs = run_jobs(spark, lambda: spread(docs.groupBy("lang").count()
+                                               .join(docs, "lang")))
     assert jobs == []
     assert _repartitions(out) == [(str(n), "REPARTITION_BY_NUM")]
 
@@ -46,8 +37,7 @@ def test_spread_one_split_scan_and_enough_splits(spark):
     n = kernel_partitions(spark)
     scan = spark.read.parquet(f"{SF}/documents.parquet")
     wide = spark.range(4 * n, numPartitions=n + 1)
-    (one, same), jobs = _jobs_in(spark, "spread-splits",
-                                 lambda: (spread(scan), spread(wide)))
+    (one, same), jobs = run_jobs(spark, lambda: (spread(scan), spread(wide)))
     assert jobs == []
     assert _repartitions(one) == [(str(n), "REPARTITION_BY_NUM")]
     assert same is wide

@@ -6,6 +6,7 @@ in the same ``__bucket``, including null partition values, the
 exact-integer ceil boundary, many fanned-out values and an empty input."""
 
 import pytest
+from conftest import run_jobs
 from reference_salt import assign_buckets_reference
 
 from colonnade_spark import engine
@@ -45,16 +46,6 @@ def _assert_same_layout(spark, rows, n_buckets, **kw):
     want = _layout(assign_buckets_reference(df, plan, n_buckets, **kw))
     assert got == want
     return got
-
-
-def _jobs(spark, group, fn) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 @pytest.mark.parametrize("fraction", [1.0, 0.5, 0.05])
@@ -125,6 +116,5 @@ def test_assign_buckets_job_count(spark, tmp_path, monkeypatch, merge_bytes, n_j
     plan = corpus_plan()
     df = plan.project(spark.read.parquet(path))
     kw = dict(target_salt_bytes=256 << 10, salt_sample_fraction=0.05)
-    n = _jobs(spark, f"assign-buckets-{merge_bytes}",
-              lambda: engine.assign_buckets(df, plan, 8, **kw))
-    assert n == n_jobs
+    _, jobs = run_jobs(spark, lambda: engine.assign_buckets(df, plan, 8, **kw))
+    assert len(jobs) == n_jobs

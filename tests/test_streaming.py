@@ -3,9 +3,11 @@ per-batch encode jobs; incremental pickup of new files; union decode with
 sha-equality (the streaming generalization of the reference's
 encodeCsvStream + continuation resume, SURVEY.md §2.7)."""
 
+import glob
 import os
 
 import pytest
+from conftest import job_ids, run_jobs
 
 from colonnade_spark import engine, streaming
 from colonnade_spark.corpus import generate_corpus
@@ -71,26 +73,20 @@ def test_stream_encode_two_files_runs_at_most_six_jobs(spark, tmp_path):
     for seed in (1, 2):
         generate_corpus(spark, 60, seed=seed).coalesce(1).write.mode(
             "append").parquet(src)
-    sc = spark.sparkContext
-    group = "stream-encode-jobs"
-    sc.setJobGroup(group, "stream_encode over two files")
-    try:
-        q = streaming.stream_encode(spark, src, str(tmp_path / "wh"),
-                                    corpus_plan(), n_buckets=2)
-        caller = list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    q, caller = run_jobs(spark, lambda: streaming.stream_encode(
+        spark, src, str(tmp_path / "wh"), corpus_plan(), n_buckets=2))
     # micro-batch jobs run under the query's own job group, its run id
-    batches = list(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    batches = job_ids(spark, str(q.runId))
     assert streaming.stream_manifest(str(tmp_path / "wh"))["batches"] == 2
     assert caller == []
     assert len(batches) <= 6, batches
 
 
 def _pyarrow_typed_table():
-    """One column per parquet type the footer mapping covers, written by
-    pyarrow: naive and zoned timestamps, signed and unsigned ints, dates,
-    decimals, binary, large and dictionary strings."""
+    """One column per flat and nested parquet type pyarrow writes: naive and
+    zoned timestamps at ms, us and ns (the ``_ns`` columns), signed and
+    unsigned ints, dates, decimals, binary, large and dictionary strings,
+    and a list."""
     import datetime as dt
 
     import pyarrow as pa
@@ -99,8 +95,10 @@ def _pyarrow_typed_table():
     cols = {
         "ts_naive_us": pa.array([t0], pa.timestamp("us")),
         "ts_naive_ms": pa.array([t0], pa.timestamp("ms")),
+        "ts_naive_ns": pa.array([t0], pa.timestamp("ns")),
         "ts_utc": pa.array([t0], pa.timestamp("us", tz="UTC")),
         "ts_zoned": pa.array([t0], pa.timestamp("ms", tz="Europe/Paris")),
+        "ts_utc_ns": pa.array([t0], pa.timestamp("ns", tz="UTC")),
         "u8": pa.array([1], pa.uint8()), "u16": pa.array([1], pa.uint16()),
         "u32": pa.array([1], pa.uint32()), "u64": pa.array([1], pa.uint64()),
         "i8": pa.array([1], pa.int8()), "i16": pa.array([1], pa.int16()),
@@ -111,6 +109,7 @@ def _pyarrow_typed_table():
         "cat": pa.array(["x"]).dictionary_encode(),
         "f32": pa.array([1.5], pa.float32()), "f64": pa.array([1.5]),
         "flag": pa.array([True]),
+        "ints": pa.array([[1, None, 3]], pa.list_(pa.int32())),
     }
     return pa.table(cols)
 
@@ -118,12 +117,17 @@ def _pyarrow_typed_table():
 def test_footer_schema_matches_spark_inference(spark, tmp_path):
     """The footer schema equals Spark's own inference, with no Spark job,
     on Spark-written and pyarrow-written corpus files, on a Spark-written
-    events file, on a pyarrow file of every mapped type (naive timestamps
-    infer as timestamp_ntz, unsigned ints widen) and through ``file:``
-    URIs; ``_``/``.`` files are skipped."""
+    events file, on Spark-written nested columns (nullable and not: the
+    footer's non-null fields come back nullable, as Spark infers them), on
+    a pyarrow file of every type :func:`_pyarrow_typed_table` writes (naive
+    timestamps infer as timestamp_ntz, unsigned ints widen), on the same
+    file with INT96 timestamps and through ``file:`` URIs; ``_``/``.``
+    files are skipped.  Nanosecond INT64 timestamps, which Spark does not
+    read, raise the error Spark's inference raises."""
     from datetime import datetime
 
     import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
 
     from colonnade_spark.corpus import generate_corpus_arrow
 
@@ -144,36 +148,47 @@ def test_footer_schema_matches_spark_inference(spark, tmp_path):
         "ts timestamp, local_ts timestamp_ntz, event_type string, user_id long,"
         " value double",
     ).coalesce(1).write.parquet(events)
-    typed = str(tmp_path / "typed")
-    os.makedirs(typed)
-    pq.write_table(_pyarrow_typed_table(), os.path.join(typed, "part-0.parquet"))
-    paths = [corpus_spark, corpus_arrow, events, typed,
-             "file://" + typed, "file:" + events,
-             os.path.join(typed, "part-0.parquet")]
-    sc = spark.sparkContext
-    group = "footer-schema-no-jobs"
-    sc.setJobGroup(group, "footer_schema")
-    try:
-        got = [streaming.footer_schema(spark, p) for p in paths]
-        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert jobs == []
-    for path, schema in zip(paths, got):
-        assert schema == spark.read.parquet(path).schema, path
-    assert dict((f.name, f.dataType.simpleString()) for f in got[3])["ts_naive_us"] \
-        == "timestamp_ntz"
-
-
-def test_footer_schema_defers_to_spark_where_no_footer_mapping(spark, tmp_path):
-    """A glob pattern and a nested column are inferred by Spark itself, so
-    the schema still equals Spark's."""
     nested = str(tmp_path / "nested")
     spark.createDataFrame([(1, [1, 2], (3, "a"))],
                           "k long, xs array<int>, s struct<n:int, t:string>") \
         .write.parquet(nested)
-    for path in (nested, str(tmp_path / "nest*")):
-        assert streaming.footer_schema(spark, path) == spark.read.parquet(path).schema
+    non_null = str(tmp_path / "non_null")
+    spark.range(2).selectExpr(
+        "id", "array(id, id + 1) AS xs", "named_struct('n', id, 't', 'a') AS s",
+        "map('k', id) AS m").coalesce(1).write.parquet(non_null)
+    table = _pyarrow_typed_table()
+    ns_cols = [c for c in table.column_names if c.endswith("_ns")]
+    typed, int96, nanos = (str(tmp_path / d) for d in ("typed", "int96", "nanos"))
+    for d, t, kw in ((typed, table.drop_columns(ns_cols), {}),
+                     (int96, table, {"use_deprecated_int96_timestamps": True}),
+                     (nanos, table.select(ns_cols), {})):
+        os.makedirs(d)
+        pq.write_table(t, os.path.join(d, "part-0.parquet"), **kw)
+    paths = [corpus_spark, corpus_arrow, events, nested, non_null, typed, int96,
+             "file://" + typed, "file:" + events,
+             os.path.join(typed, "part-0.parquet")]
+    got, jobs = run_jobs(spark, lambda: [streaming.footer_schema(spark, p)
+                                         for p in paths])
+    assert jobs == []
+    for path, schema in zip(paths, got):
+        assert schema == spark.read.parquet(path).schema, path
+    types = {f.name: f.dataType.simpleString() for f in got[paths.index(typed)]}
+    assert types["ts_naive_us"] == "timestamp_ntz"
+    assert types["ints"] == "array<int>"
+    footer = pq.read_schema(glob.glob(os.path.join(non_null, "part-*"))[0])
+    assert not footer.field("xs").type.value_field.nullable
+    assert not footer.field("s").type.field("n").nullable
+    for infer in (streaming.footer_schema, lambda s, p: s.read.parquet(p).schema):
+        with pytest.raises(AnalysisException, match=r"PARQUET_TYPE_ILLEGAL.*NANOS"):
+            infer(spark, nanos)
+
+
+def test_footer_schema_defers_to_spark_where_no_footer_mapping(spark, tmp_path):
+    """A glob pattern, which pyarrow cannot list, is inferred by Spark
+    itself, so the schema still equals Spark's."""
+    spark.range(2).write.parquet(str(tmp_path / "ids"))
+    path = str(tmp_path / "id*")
+    assert streaming.footer_schema(spark, path) == spark.read.parquet(path).schema
 
 
 def test_footer_schema_rejects_empty_and_partitioned_inputs(spark, tmp_path):

@@ -3,6 +3,7 @@
 
 import numpy as np
 import pytest
+from conftest import run_jobs
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -421,7 +422,6 @@ def test_connected_components_one_job_per_round(spark):
     latency-bound, so the job count per round is the cost model."""
     from colonnade_spark.textops import connected_components
 
-    sc = spark.sparkContext
     n = 14
     ids = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     # chain -> diameter n-1: max_iters exactly caps the round count, so
@@ -431,16 +431,11 @@ def test_connected_components_one_job_per_round(spark):
     pairs = spark.createDataFrame([(i, i + 1, 1.0) for i in range(n - 1)],
                                   "id_a long, id_b long, est_jaccard double")
 
-    def jobs_for(iters: int, tag: str) -> int:
-        sc.setJobGroup(tag, tag)
-        try:
-            connected_components(ids, pairs, max_iters=iters,
-                                 on_max_iters="ignore").count()
-        finally:
-            sc.setJobGroup(None, None)
-        return len(sc.statusTracker().getJobIdsForGroup(tag))
+    def jobs_for(iters: int) -> int:
+        return len(run_jobs(spark, lambda: connected_components(
+            ids, pairs, max_iters=iters, on_max_iters="ignore").count())[1])
 
-    slope = (jobs_for(6, "cc-jobs-6") - jobs_for(2, "cc-jobs-2")) / 4
+    slope = (jobs_for(6) - jobs_for(2)) / 4
     # measured: lazy checkpoint = 4.0 jobs/round, eager = 5.0 (the extra
     # count() materialization job) — pin the lazy cost model
     assert slope <= 4.5, slope
