@@ -17,6 +17,7 @@ import os as _os
 # starts (daemon-forked or not, RDD and Arrow alike) and never in the
 # driver; program UDFs import this package when they are unpickled
 if "PYTHON_WORKER_FACTORY_SECRET" in _os.environ:
-    from .shipping import cache_zip_directories as _cache_zip_directories
+    from . import shipping as _shipping
 
-    _cache_zip_directories()
+    _shipping.cache_zip_directories()
+    _shipping.freeze_import_heap()

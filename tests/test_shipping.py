@@ -1,9 +1,15 @@
-"""Zip-directory cache for Spark Python workers
+"""Worker set-up for Spark Python workers.  The zip-directory cache
 (shipping.cache_zip_directories): ``importlib.invalidate_caches()`` must
 not re-read unchanged zip archives, and must still pick up a rewritten
-one."""
+one.  The heap freeze (shipping.freeze_import_heap): a worker's heap is
+frozen once, at its first full collection, and later garbage is still
+collected; the driver's heap is never frozen."""
 
+import gc
 import importlib
+import json
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -119,3 +125,97 @@ def test_spark_workers_have_cache_installed(spark):
     assert [r["reads"] for r in rows] == [0] * n
     assert (zipimport.zipimporter.invalidate_caches
             is not shipping._invalidate_zip_directory)
+
+
+# ----------------------------------------------------------------------------
+# heap freeze (shipping.freeze_import_heap)
+# ----------------------------------------------------------------------------
+
+def _package_gc_hooks() -> list:
+    return [cb for cb in gc.callbacks
+            if getattr(cb, "__module__", "").startswith("colonnade_spark")]
+
+
+def test_worker_import_heap_frozen_once_and_later_garbage_collected(spark):
+    """After ensure_shipped every worker has frozen its import-time heap,
+    so the daemon's per-task collection walks a small heap; the freeze
+    happened once (its count is the same in two jobs), and a reference
+    cycle made inside a task is still collected.  The driver's heap is
+    never frozen."""
+    from colonnade_spark.shipping import ensure_shipped
+
+    ensure_shipped(spark)
+
+    def probe(batches):
+        import gc as _gc
+        import os as _os
+        import weakref
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        frozen = _gc.get_freeze_count()
+        tracked = len(_gc.get_objects())
+
+        class Node:
+            pass
+
+        a, b = Node(), Node()
+        a.other, b.other = b, a
+        ref = weakref.ref(a)
+        del a, b
+        _gc.collect()
+        yield pa.RecordBatch.from_pydict({
+            "pid": [_os.getpid()], "frozen": [frozen], "tracked": [tracked],
+            "cycle_freed": [ref() is None],
+            "frozen_after": [_gc.get_freeze_count()]})
+
+    n = max(int(spark.sparkContext.defaultParallelism), 1)
+    schema = ("pid long, frozen long, tracked long, cycle_freed boolean, "
+              "frozen_after long")
+    jobs = [spark.range(n, numPartitions=n).mapInArrow(probe, schema).collect()
+            for _ in range(2)]
+    counts = {}
+    for rows in jobs:
+        assert len(rows) == n
+        for r in rows:
+            assert r["frozen"] > 0, r
+            assert r["tracked"] < 0.1 * r["frozen"], r
+            assert r["cycle_freed"], r
+            assert r["frozen_after"] == r["frozen"], r
+            counts.setdefault(r["pid"], set()).add(r["frozen"])
+    assert all(len(c) == 1 for c in counts.values()), counts
+    assert gc.get_freeze_count() == 0
+    assert _package_gc_hooks() == []
+
+
+def test_package_import_freezes_worker_heap_at_first_full_collection():
+    """In a process Spark would start as a worker (the worker secret is in
+    its environment), importing the package installs the hook; the first
+    full collection freezes the heap, and the second freezes nothing, not
+    even objects still alive that were made after the first."""
+    code = (
+        "import gc, json\n"
+        "import colonnade_spark\n"
+        "from colonnade_spark import shipping\n"
+        "shipping.freeze_import_heap()\n"
+        "hooks = [cb for cb in gc.callbacks\n"
+        "         if cb.__module__ == 'colonnade_spark.shipping']\n"
+        "before = gc.get_freeze_count()\n"
+        "gc.collect()\n"
+        "first = gc.get_freeze_count()\n"
+        "alive = [[] for _ in range(1000)]\n"
+        "gc.collect()\n"
+        "print(json.dumps([len(hooks), before, first,"
+        " gc.get_freeze_count()]))\n")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHON_WORKER_FACTORY_SECRET="test",
+               PYTHONPATH=root)
+    out = subprocess.run([sys.executable, "-c", code], env=env, cwd=root,
+                         capture_output=True, text=True, check=True)
+    hooks, before, first, second = json.loads(out.stdout.splitlines()[-1])
+    assert hooks == 1  # installed once, a second install is a no-op
+    assert before == 0
+    assert first > 0
+    assert second == first
