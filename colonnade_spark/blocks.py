@@ -4,6 +4,9 @@ A block = one column × one row range, framed as::
 
     b"CSPB" | version u8 | codec_id u8 | header_len u32le | header JSON | payload
 
+The header's ``crc`` (crc32 of the payload as stored) is required: a
+frame without one is refused on decode.
+
 The JSON header is the ``Headed`` regime of the reference (named,
 self-describing columns — /root/reference/colonnade/src/Colonnade/Encode.hs:
 499-500); ``strip_header``/``reattach_header`` give the ``Headless``/
@@ -115,8 +118,7 @@ def encode_block(arr: pa.Array, codec: str = "auto", exclude=(),
     # which worker sees an empty tail batch)
     if codec != "auto" and codec not in BY_NAME:
         raise BlockError(f"unknown codec {codec!r}; have {sorted(BY_NAME)}")
-    if post is not None and post != "zlib":
-        raise BlockError(f"unknown post-encode transform {post!r}")
+    _check_post(post)
     if _is_supported_list(arr.type):
         return _encode_list_block(arr, codec=codec, ctx=ctx, post=post,
                                   exclude=exclude)
@@ -126,7 +128,7 @@ def encode_block(arr: pa.Array, codec: str = "auto", exclude=(),
         header["v"] = base64.b64encode(
             np.packbits(validity, bitorder="little").tobytes()).decode("ascii")
     if col.n == 0:
-        return _frame(BY_NAME["plain"].codec_id, header, b"")
+        return _seal(BY_NAME["plain"].codec_id, header, b"", None)
     arr_nonnull = arr.fill_null({"str": "", "int": 0, "float": 0.0, "bool": False}
                                 [col.kind]) if arr.null_count else arr
     stats = compute_stats(col, arr_nonnull)
@@ -137,8 +139,6 @@ def encode_block(arr: pa.Array, codec: str = "auto", exclude=(),
         name = select_codec(col, stats, ctx, exclude)
     else:
         name = codec
-        if name not in BY_NAME:
-            raise BlockError(f"unknown codec {name!r}; have {sorted(BY_NAME)}")
         if not BY_NAME[name].applicable(col, stats):
             raise BlockError(
                 f"codec {name!r} not applicable to kind={col.kind} column "
@@ -152,17 +152,11 @@ def encode_block(arr: pa.Array, codec: str = "auto", exclude=(),
             params, payload = plain.encode(col, stats, ctx)
     if params:
         header["p"] = params
-    if post is not None:
-        if post != "zlib":
-            raise BlockError(f"unknown post-encode transform {post!r}")
-        payload = zlib.compress(bytes(payload), 6)
-        header["z"] = 1
-    header["crc"] = zlib.crc32(payload)
-    return _frame(c.codec_id, header, payload)
+    return _seal(c.codec_id, header, payload, post)
 
 
 def decode_block(buf: bytes | memoryview) -> pa.Array:
-    codec_id, header, payload = _unframe(buf)
+    codec_id, header, payload = _open(buf)
     if "f" in header:
         raise BlockError(
             f"block is cell fragment {header['f']}: a fragmented cell needs "
@@ -175,10 +169,6 @@ def decode_block(buf: bytes | memoryview) -> pa.Array:
             # embedding column otherwise comes back as bare float)
             base = pa.large_list(base) if header.get("lg") else pa.list_(base)
         return pa.array([], type=base)
-    if header.get("crc") is not None and zlib.crc32(payload) != header["crc"]:
-        raise BlockError(f"crc mismatch in block (codec_id={codec_id})")
-    if header.get("z"):
-        payload = memoryview(zlib.decompress(payload))
     if header["k"] == "list":
         return _decode_list_block(header, payload)
     codec = BY_ID.get(codec_id)
@@ -233,13 +223,7 @@ def _encode_list_block(arr: pa.Array, codec: str = "auto",
         validity = np.asarray(arr.is_valid())
         header["v"] = base64.b64encode(
             np.packbits(validity, bitorder="little").tobytes()).decode("ascii")
-    if post is not None:
-        if post != "zlib":
-            raise BlockError(f"unknown post-encode transform {post!r}")
-        payload = zlib.compress(payload, 6)
-        header["z"] = 1
-    header["crc"] = zlib.crc32(payload)
-    return _frame(BY_NAME["plain"].codec_id, header, payload)
+    return _seal(BY_NAME["plain"].codec_id, header, payload, post)
 
 
 def _decode_list_block(header: dict, payload) -> pa.Array:
@@ -283,6 +267,7 @@ def encode_cell_fragments(arr: pa.Array, frag_bytes: int,
     isolates such rows).  Each fragment is independently integrity-checked
     (per-fragment crc) and optionally post-compressed (the fmap ``post``,
     applied per fragment so decode can stream them)."""
+    _check_post(post)
     if len(arr) != 1:
         raise BlockError(f"cell fragmentation takes a 1-row array, got {len(arr)}")
     if isinstance(arr, pa.ChunkedArray):
@@ -300,18 +285,10 @@ def encode_cell_fragments(arr: pa.Array, frag_bytes: int,
     raw = v.encode("utf-8") if isinstance(v, str) else bytes(v)
     frag_bytes = max(int(frag_bytes), 1)
     nfrag = max((len(raw) + frag_bytes - 1) // frag_bytes, 1)
-    frames = []
-    for i in range(nfrag):
-        payload = raw[i * frag_bytes:(i + 1) * frag_bytes]
-        header = {"n": 1, "k": kind, "t": str(t), "f": [i, nfrag]}
-        if post is not None:
-            if post != "zlib":
-                raise BlockError(f"unknown post-encode transform {post!r}")
-            payload = zlib.compress(payload, 6)
-            header["z"] = 1
-        header["crc"] = zlib.crc32(payload)
-        frames.append(_frame(BY_NAME["plain"].codec_id, header, payload))
-    return frames
+    return [_seal(BY_NAME["plain"].codec_id,
+                  {"n": 1, "k": kind, "t": str(t), "f": [i, nfrag]},
+                  raw[i * frag_bytes:(i + 1) * frag_bytes], post)
+            for i in range(nfrag)]
 
 
 def iter_cell_fragments(frames, meta_out: dict | None = None):
@@ -371,16 +348,11 @@ def fragment_chunk(buf) -> tuple[int, int, bytes, str, str]:
     bytes, kind, arrow_type).  Per-fragment crc validated; post-transform
     inverted.  The unit the distributed chunked decode maps over
     (engine.decode_giant_cells) — no cross-fragment state needed."""
-    codec_id, header, payload = _unframe(buf)
+    _codec_id, header, payload = _open(buf)
     f = header.get("f")
     if f is None:
         raise BlockError("not a cell fragment (no 'f' in header)")
-    i, n = int(f[0]), int(f[1])
-    if header.get("crc") is not None and zlib.crc32(payload) != header["crc"]:
-        raise BlockError(f"crc mismatch in cell fragment {i}/{n}")
-    if header.get("z"):
-        payload = zlib.decompress(payload)
-    return i, n, bytes(payload), header["k"], header["t"]
+    return int(f[0]), int(f[1]), bytes(payload), header["k"], header["t"]
 
 
 def decode_cell_fragments(frames) -> pa.Array:
@@ -418,6 +390,35 @@ def reattach_header(manifest: dict, payload: bytes) -> bytes:
     m = dict(manifest)
     codec_id = m.pop("codec_id")
     return _frame(codec_id, m, payload)
+
+
+def _check_post(post) -> None:
+    if post is not None and post != "zlib":
+        raise BlockError(f"unknown post-encode transform {post!r}")
+
+
+def _seal(codec_id: int, header: dict, payload, post) -> bytes:
+    """Frame one block: apply the ``post`` transform (already checked by
+    the caller), then record the crc of the payload as stored."""
+    if post is not None:
+        payload = zlib.compress(payload, 6)
+        header["z"] = 1
+    header["crc"] = zlib.crc32(payload)
+    return _frame(codec_id, header, payload)
+
+
+def _open(buf) -> tuple:
+    """Unframe one block, check its required crc and invert the ``post``
+    transform: ``(codec_id, header, payload)``."""
+    codec_id, header, payload = _unframe(buf)
+    if zlib.crc32(payload) != header.get("crc"):
+        what = "crc mismatch" if "crc" in header else "no crc"
+        where = (f"cell fragment {header['f']}" if "f" in header
+                 else f"block (codec_id={codec_id})")
+        raise BlockError(f"{what} in {where}")
+    if header.get("z"):
+        payload = memoryview(zlib.decompress(payload))
+    return codec_id, header, payload
 
 
 def _frame(codec_id: int, header: dict, payload: bytes) -> bytes:

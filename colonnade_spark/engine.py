@@ -99,16 +99,6 @@ def _zone_str_bounds(mn: bytes, mx: bytes):
         smax = bytes(p[: i] + bytes([p[i] + 1])) if i >= 0 else None
     return smin, smax
 
-LINEAGE_SCHEMA = pa.schema([
-    ("stripe", pa.int64()),
-    ("column", pa.string()),
-    ("codec", pa.string()),
-    ("n_rows", pa.int64()),
-    ("bytes_in", pa.int64()),
-    ("bytes_out", pa.int64()),
-    ("enc_ms", pa.float64()),
-])
-
 
 # --------------------------------------------------------------------------
 # bucket / salt assignment (the skew pre-pass, SURVEY.md §4.2 item 2)
@@ -400,8 +390,8 @@ def _shard_markers(path: str):
 
 def list_markers(warehouse: str) -> list:
     """Every marker currently published in the shard files, torn lines
-    skipped, one dict per bucket (ops/test hook — the engine uses the
-    distributed :func:`_scan_markers` instead)."""
+    skipped, one dict per bucket (ops/test hook — a resume reads the shards
+    in :func:`_resume_markers`, which also compacts them)."""
     out: dict = {}
     for p in sorted(glob.glob(os.path.join(warehouse, "markers", "shard_*.jsonl"))):
         for _, m in _shard_markers(p):
@@ -458,7 +448,7 @@ def _encode_bucket_core(bucket: int, stripes, warehouse: str,
     ldir = os.path.join(warehouse, "lineage")
     os.makedirs(bdir, exist_ok=True)
     os.makedirs(ldir, exist_ok=True)
-    rows_out, lineage = [], []
+    rows_out, enc_ms = [], []
     stripe = 0
     total_in = total_out = n_rows_total = 0
     # per-column encode context: FSST symbol table built on the first stripe
@@ -502,8 +492,7 @@ def _encode_bucket_core(bucket: int, stripes, warehouse: str,
                                      piece, len(blk), None, None,
                                      smin if fi == 0 else None,
                                      smax if fi == 0 else None, blk))
-                    lineage.append((stripe, name, "frag", 1,
-                                    piece, len(blk), ms / len(frames)))
+                    enc_ms.append(ms / len(frames))
                     total_out += len(blk)
                 total_in += cell_bytes
                 continue
@@ -528,8 +517,7 @@ def _encode_bucket_core(bucket: int, stripes, warehouse: str,
                                                   mm["max"].as_py())
             rows_out.append((stripe, name, info["codec"], -1, len(arr),
                              bytes_in, len(blk), vmin, vmax, smin, smax, blk))
-            lineage.append((stripe, name, info["codec"], len(arr),
-                            bytes_in, len(blk), ms))
+            enc_ms.append(ms)
             total_in += bytes_in
             total_out += len(blk)
         n_rows_total += table.num_rows
@@ -539,10 +527,10 @@ def _encode_bucket_core(bucket: int, stripes, warehouse: str,
                   type=BLOCKS_SCHEMA.field(i).type)
          for i in range(len(BLOCKS_SCHEMA))],
         schema=BLOCKS_SCHEMA)
-    lineage_tbl = pa.Table.from_arrays(
-        [pa.array([r[i] for r in lineage],
-                  type=LINEAGE_SCHEMA.field(i).type) for i in range(7)],
-        schema=LINEAGE_SCHEMA)
+    # lineage: each block's size columns, then its encode time
+    lineage_tbl = blocks_tbl.select(
+        ["stripe", "column", "codec", "n_rows", "bytes_in", "bytes_out"]
+    ).append_column("enc_ms", pa.array(enc_ms, type=pa.float64()))
     # atomic publish: UNIQUE tmp + rename, marker last (crash before marker
     # → redo).  The tmp name is unique per task ATTEMPT: Spark can run
     # duplicate attempts of the same bucket task (retry/speculation), and
@@ -588,32 +576,29 @@ def _stats_add(a: tuple, b: tuple) -> tuple:
     return tuple(x + y for x, y in zip(a, b))
 
 
-def _scan_markers(spark, warehouse: str, fingerprint: str) -> tuple:
-    """Distributed resume scan: read every marker shard in EXECUTORS (one
-    serial driver open per bucket was the round-3 bottleneck at ~4M
-    buckets) through one :func:`_map_files` job, keep only full-fingerprint
-    matches (plan AND input AND bucket count AND salt params — stale
-    markers must never validate against a re-derived layout), and fold
-    their stats.  Returns (done bucket-id set, folded stats tuple)."""
-    mpaths = glob.glob(os.path.join(warehouse, "markers", "shard_*.jsonl"))
+def _resume_markers(warehouse: str, fingerprint: str) -> tuple:
+    """The resume pass, on the driver and in one read of each marker
+    shard: compact every shard to its lines with the current
+    ``fingerprint`` (plan AND input AND bucket count AND salt params —
+    stale markers must never validate against a re-derived layout) and
+    fold those markers into the done set and stats.  Shards are O(task
+    attempts), so this runs no Spark job.  Returns (done bucket-id set,
+    folded stats tuple)."""
     done, stats = set(), _STATS_ZERO
-    if not mpaths:
-        return done, stats
 
-    def scan(path):
-        rows = [(m["bucket"], *_marker_stats(m)) for _, m in _shard_markers(path)
-                if m.get("fingerprint") == fingerprint]
-        if rows:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c) for c in zip(*rows)], names=["bucket", *_STATS_NAMES])
-
-    for b, *st in _map_files(spark, mpaths, scan,
-                             f"bucket bigint, {_STATS_DDL}").collect():
+    def keep(m: dict) -> bool:
+        nonlocal stats
+        if m.get("fingerprint") != fingerprint:
+            return False
         # duplicate attempts / overlapping shards: count each bucket once
         # (byte-identical blocks make any copy equally valid)
+        b = int(m["bucket"])
         if b not in done:
             done.add(b)
-            stats = _stats_add(stats, st)
+            stats = _stats_add(stats, _marker_stats(m))
+        return True
+
+    _compact_shards(warehouse, keep)
     return done, stats
 
 
@@ -649,8 +634,9 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
     could skip that, at the cost of writing the whole corpus through
     shared storage a second time on every run.
 
-    ``fused`` only accepts True (the single-pass path is the only one);
-    ``fused=False`` raises ``ValueError``.
+    Any other ``mode`` raises ``ValueError`` before the warehouse is
+    touched.  ``fused`` only accepts True (the single-pass path is the
+    only one); ``fused=False`` raises ``ValueError``.
     """
     import shutil
 
@@ -659,6 +645,9 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
     if not fused:
         raise ValueError("encode_table(fused=False): the staged encode path "
                          "was removed; the single-pass encode is the only one")
+    if mode not in ("error", "overwrite", "resume"):
+        raise ValueError(f"encode_table(mode={mode!r}): use 'error', "
+                         f"'overwrite' or 'resume'")
     manifest_path = os.path.join(warehouse, "manifest.json")
     if os.path.exists(warehouse) and os.listdir(warehouse):
         if mode == "error":
@@ -684,15 +673,10 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
     done: set = set()
     resumed_stats = _STATS_ZERO
     if mode == "resume":
-        done, resumed_stats = _scan_markers(spark, warehouse, fingerprint)
         # stale state from a different fingerprint (plan / input / bucket
         # count changed) must not leak into the final warehouse: drop any
-        # marker, block dir, or lineage file without a valid marker.
-        # Shard files are compacted to their valid lines (one pass per
-        # shard, executed where the file is — the marker object count
-        # stays O(n_partitions), so this loop does too).
-        _compact_shards(warehouse, lambda m: m.get("fingerprint") == fingerprint
-                        and int(m.get("bucket", -1)) in done)
+        # marker, block dir, or lineage file without a valid marker
+        done, resumed_stats = _resume_markers(warehouse, fingerprint)
         for p in glob.glob(os.path.join(warehouse, "blocks", "bucket=*")):
             if int(p.split("bucket=")[-1]) not in done:
                 shutil.rmtree(p, ignore_errors=True)
@@ -841,8 +825,8 @@ def _assemble_stripe(cols, arrow_schema, names, blobs, n_rows,
                      frags) -> pa.Table:
     """One stripe's blocks → a table of ``cols`` (in that order, typed by
     ``arrow_schema``), with every integrity check: block crc (in
-    decode_block), recorded row count, duplicate, missing, and whole-
-    versus-fragment blocks of one column."""
+    decode_block), recorded row count, sibling blocks of one row count,
+    duplicate, missing, and whole-versus-fragment blocks of one column."""
     arrays = {}
     frag_groups: dict[str, list] = {}
     for j, (name, blob) in enumerate(zip(names, blobs)):
@@ -870,6 +854,9 @@ def _assemble_stripe(cols, arrow_schema, names, blobs, n_rows,
     missing = [c for c in cols if c not in arrays]
     if missing:
         raise B.BlockError(f"stripe missing column blocks: {missing}")
+    n_by_col = {c: len(arrays[c]) for c in cols}
+    if len(set(n_by_col.values())) > 1:
+        raise B.BlockError(f"sibling blocks disagree on rows: {n_by_col}")
     return pa.table(
         {c: arrays[c].cast(arrow_schema.field(c).type) for c in cols})
 

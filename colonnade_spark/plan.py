@@ -53,7 +53,8 @@ class EncodePlan:
     partition_col: Optional[str] = None   # skew/salting key (e.g. "repo")
     cluster_cols: tuple = ()      # staging sort prefix: groups similar content
     #                               so per-stripe FSST/dict tables fit tightly
-    headless: bool = False        # blocks carry no JSON header (manifest-side)
+    headless: bool = False        # a plan of positional ``_cN`` columns;
+    #                               part of plan_hash, blocks unchanged
 
     # -- construction combinators ------------------------------------------
     def headed(self, name: str, expr: Optional[str] = None,
@@ -151,7 +152,8 @@ class EncodePlan:
             if s.name == name else s for s in self.specs))
 
     def to_headless(self) -> "EncodePlan":
-        """Positional block layout: headers live in the manifest only."""
+        """Mark this a plan of positional columns (``headless``): the flag
+        changes ``plan_hash``, not the block bytes."""
         return replace(self, headless=True)
 
     def to_headed(self, names: Sequence[str]) -> "EncodePlan":

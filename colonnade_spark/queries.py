@@ -26,26 +26,32 @@ def _read(spark, sf_dir: str, name: str):
 # round-trip queries (one per codec + auto) — the isomorphism oracle
 # --------------------------------------------------------------------------
 
+def _block_roundtrip(df, codecs: dict | None = None, posts: dict | None = None):
+    """``df`` with every column of every batch encoded to one block and
+    decoded back.  ``codecs`` and ``posts`` map a column name to its codec
+    (default ``auto``) and post-encode transform (default none)."""
+    codecs, posts = codecs or {}, posts or {}
+    ensure_shipped(df.sparkSession)
+
+    def rt(batches):
+        import pyarrow as pa
+
+        from colonnade_spark import blocks as B
+        for batch in batches:
+            names = batch.schema.names
+            arrs = [B.decode_block(B.encode_block(batch.column(i),
+                                                  codec=codecs.get(nm, "auto"),
+                                                  post=posts.get(nm)))
+                    for i, nm in enumerate(names)]
+            yield pa.RecordBatch.from_arrays(arrs, names=names)
+
+    return df.mapInArrow(rt, df.schema)
+
+
 def _roundtrip(table: str, out_cols: list, codecs: dict, posts: dict = None):
-    _posts = posts or {}
-
     def fn(spark, sf_dir):
-        ensure_shipped(spark)
-        df = _read(spark, sf_dir, table).select(*out_cols)
-
-        def rt(batches):
-            import pyarrow as pa
-
-            from colonnade_spark import blocks as B
-            for batch in batches:
-                names = batch.schema.names
-                arrs = [B.decode_block(B.encode_block(batch.column(i),
-                                                      codec=codecs.get(nm, "auto"),
-                                                      post=_posts.get(nm)))
-                        for i, nm in enumerate(names)]
-                yield pa.RecordBatch.from_arrays(arrs, names=names)
-
-        return df.mapInArrow(rt, df.schema)
+        return _block_roundtrip(_read(spark, sf_dir, table).select(*out_cols),
+                                codecs, posts)
 
     return fn
 
@@ -64,22 +70,9 @@ def q_rt_alpha_hex(spark, sf_dir):
     lengths ≈ 0.47 of plain at numpy-gather speed)."""
     from pyspark.sql import functions as F
 
-    ensure_shipped(spark)
     df = (_read(spark, sf_dir, "documents")
           .select("doc_id", F.md5("text").alias("h")))
-
-    def rt(batches):
-        import pyarrow as pa
-
-        from colonnade_spark import blocks as B
-        for batch in batches:
-            codecs = {"h": "alpha4", "doc_id": "auto"}
-            arrs = [B.decode_block(B.encode_block(batch.column(i),
-                                                  codec=codecs[nm]))
-                    for i, nm in enumerate(batch.schema.names)]
-            yield pa.RecordBatch.from_arrays(arrs, names=batch.schema.names)
-
-    return df.mapInArrow(rt, df.schema)
+    return _block_roundtrip(df, {"h": "alpha4"})
 
 
 def q_rt_fcode_sorted(spark, sf_dir):
@@ -90,7 +83,6 @@ def q_rt_fcode_sorted(spark, sf_dir):
     engine's staging produces for cluster/key columns."""
     from pyspark.sql import functions as F
 
-    ensure_shipped(spark)
     df = (_read(spark, sf_dir, "documents")
           .select(F.col("doc_id").cast("bigint").alias("doc_id"),
                   F.concat_ws("/", "source", "lang",
@@ -98,19 +90,7 @@ def q_rt_fcode_sorted(spark, sf_dir):
                   .alias("pathlike"))
           .repartition(1)
           .sortWithinPartitions("pathlike"))
-
-    def rt(batches):
-        import pyarrow as pa
-
-        from colonnade_spark import blocks as B
-        for batch in batches:
-            codecs = {"pathlike": "fcode", "doc_id": "auto"}
-            arrs = [B.decode_block(B.encode_block(batch.column(i),
-                                                  codec=codecs[nm]))
-                    for i, nm in enumerate(batch.schema.names)]
-            yield pa.RecordBatch.from_arrays(arrs, names=batch.schema.names)
-
-    return df.mapInArrow(rt, df.schema)
+    return _block_roundtrip(df, {"pathlike": "fcode"})
 
 
 SQL_RT_FCODE = """
@@ -131,7 +111,6 @@ def q_rt_fcode_fsst(spark, sf_dir):
     hybrid path executes end-to-end.  Identity oracle = isomorphism."""
     from pyspark.sql import functions as F
 
-    ensure_shipped(spark)
     df = (_read(spark, sf_dir, "documents")
           .select(F.col("doc_id").cast("bigint").alias("doc_id"),
                   F.concat_ws(
@@ -144,19 +123,7 @@ def q_rt_fcode_fsst(spark, sf_dir):
                   .alias("deep_path"))
           .repartition(1)
           .sortWithinPartitions("deep_path"))
-
-    def rt(batches):
-        import pyarrow as pa
-
-        from colonnade_spark import blocks as B
-        for batch in batches:
-            codecs = {"deep_path": "fcode", "doc_id": "auto"}
-            arrs = [B.decode_block(B.encode_block(batch.column(i),
-                                                  codec=codecs[nm]))
-                    for i, nm in enumerate(batch.schema.names)]
-            yield pa.RecordBatch.from_arrays(arrs, names=batch.schema.names)
-
-    return df.mapInArrow(rt, df.schema)
+    return _block_roundtrip(df, {"deep_path": "fcode"})
 
 
 SQL_RT_FCODE_FSST = """
@@ -217,21 +184,7 @@ def _rt_generated(gen, codecs: dict, post_select=None):
     through explicit codecs; ``post_select`` optionally maps the decoded
     frame (e.g. "1"/"0" flag → boolean, Geolite/Csv.hs:49-50)."""
     def fn(spark, sf_dir):
-        ensure_shipped(spark)
-        df = gen(spark)
-
-        def rt(batches):
-            import pyarrow as pa
-
-            from colonnade_spark import blocks as B
-            for batch in batches:
-                names = batch.schema.names
-                arrs = [B.decode_block(B.encode_block(
-                            batch.column(i), codec=codecs.get(nm, "auto")))
-                        for i, nm in enumerate(names)]
-                yield pa.RecordBatch.from_arrays(arrs, names=names)
-
-        out = df.mapInArrow(rt, df.schema)
+        out = _block_roundtrip(gen(spark), codecs)
         return post_select(out) if post_select else out
 
     return fn
@@ -298,20 +251,8 @@ def q_rt_embeddings(spark, sf_dir):
     half-away-from-zero) and xors them — order-sensitive-free, fp-safe."""
     from pyspark.sql import functions as F
 
-    ensure_shipped(spark)
-    df = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding",
-                                                   "label")
-
-    def rt(batches):
-        import pyarrow as pa
-
-        from colonnade_spark import blocks as B
-        for batch in batches:
-            arrs = [B.decode_block(B.encode_block(batch.column(i)))
-                    for i in range(batch.num_columns)]
-            yield pa.RecordBatch.from_arrays(arrs, names=batch.schema.names)
-
-    out = df.mapInArrow(rt, df.schema)
+    out = _block_roundtrip(_read(spark, sf_dir, "embeddings")
+                           .select("vec_id", "embedding", "label"))
     milli = ("transform(embedding, x ->"
              " cast(round(cast(x as double) * 1000000) as bigint))")
     return out.select(
@@ -341,7 +282,6 @@ def q_rt_events_ts(spark, sf_dir):
     demonstrated engine type surface beyond the documents corpus."""
     from pyspark.sql import functions as F
 
-    ensure_shipped(spark)
     # ts is TIMESTAMP_NTZ: derive epoch micros timezone-free (unix_micros
     # wants TIMESTAMP and the NTZ->TZ cast would shift by session zone)
     ev = (_read(spark, sf_dir, "events")
@@ -350,18 +290,7 @@ def q_rt_events_ts(spark, sf_dir):
                          "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
                   .cast("bigint").alias("ts_us"),
                   "event_type", "value"))
-
-    def rt(batches):
-        import pyarrow as pa
-
-        from colonnade_spark import blocks as B
-        for batch in batches:
-            names = batch.schema.names
-            arrs = [B.decode_block(B.encode_block(batch.column(i)))
-                    for i in range(batch.num_columns)]
-            yield pa.RecordBatch.from_arrays(arrs, names=names)
-
-    return ev.mapInArrow(rt, ev.schema)
+    return _block_roundtrip(ev)
 
 
 SQL_RT_EVENTS = ("SELECT event_id, CAST(epoch_us(ts) AS BIGINT) AS ts_us, "

@@ -110,7 +110,7 @@ def kernel_partitions(spark) -> int:
     """Task count for stages that feed Python kernels: keyed exchanges in
     front of ``mapInArrow`` pair kernels and the ngram block kernel,
     :func:`spread`, generated inputs, and (capped at 4 waves) the file-index
-    reads of decode and the resume scan.  The count MUST be explicit on an
+    reads of decode.  The count MUST be explicit on an
     exchange: AQE coalesces exchanges by shuffle BYTES and cannot see
     Python-side CPU, collapsing a ~25 MB exchange to 1-2 tasks (round-6
     structural finding; measured 10.4 s vs 1.4 s on the ngram kernel).

@@ -131,7 +131,7 @@ def package_zip(dest_dir: str = "/tmp") -> str:
     return out
 
 
-def ensure_shipped(spark, warm: bool = True) -> None:
+def ensure_shipped(spark) -> None:
     """Idempotently addPyFile the package zip to the session, then verify
     the ship by importing the package in every executor python worker.
 
@@ -151,8 +151,6 @@ def ensure_shipped(spark, warm: bool = True) -> None:
         return
     sc.addPyFile(package_zip())
     _shipped.add(sc.applicationId)
-    if not warm:
-        return
 
     def probe(batches):
         # import-check the shipped package where it matters: in the worker.

@@ -116,15 +116,14 @@ def _parquet_sink(df, out_dir: str, checkpoint_dir: str):
 
 def stream_encode(spark, input_path: str, warehouse: str, plan: EncodePlan,
                   *, checkpoint_dir: str | None = None, n_buckets: int = 4,
-                  stripe_bytes: int = 4 << 20, max_files_per_trigger: int = 1,
-                  await_termination: bool = True):
+                  stripe_bytes: int = 4 << 20, max_files_per_trigger: int = 1):
     """Ingest a growing directory of parquet files into the warehouse.
 
     Runs with ``availableNow`` semantics: processes everything currently
     available (in ``max_files_per_trigger``-file micro-batches) and stops.
     Re-invoking later picks up only NEW files (the streaming checkpoint
     remembers processed ones) — incremental ingestion with engine-level
-    resume inside each batch.
+    resume inside each batch.  Returns the finished query.
     """
     checkpoint_dir = checkpoint_dir or os.path.join(warehouse, "_stream_ckpt")
     os.makedirs(warehouse, exist_ok=True)
@@ -140,8 +139,7 @@ def stream_encode(spark, input_path: str, warehouse: str, plan: EncodePlan,
          .option("checkpointLocation", checkpoint_dir)
          .trigger(availableNow=True)
          .start())
-    if await_termination:
-        q.awaitTermination()
+    q.awaitTermination()
     return q
 
 

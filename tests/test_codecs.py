@@ -182,6 +182,29 @@ def test_headless_strip_reattach():
     assert decode_block(blocks.reattach_header(manifest, bare)).equals(arr)
 
 
+@pytest.mark.parametrize("arr", [pa.array(["a", "bb", "a"] * 50),
+                                 pa.array([], type=pa.string())])
+def test_block_without_crc_is_refused(arr):
+    """The crc is required: a block whose header lost it never decodes,
+    the empty block (crc 0) included."""
+    manifest, bare = blocks.strip_header(encode_block(arr))
+    crc = manifest.pop("crc")
+    assert crc == 0 or len(arr)
+    with pytest.raises(blocks.BlockError, match="no crc"):
+        decode_block(blocks.reattach_header(manifest, bare))
+
+
+def test_fragment_without_crc_is_refused():
+    frames = blocks.encode_cell_fragments(pa.array(["x" * 5000]), 1024)
+    manifest, payload = blocks.strip_header(frames[1])
+    del manifest["crc"]
+    forged = blocks.reattach_header(manifest, payload)
+    with pytest.raises(blocks.BlockError, match="no crc in cell fragment"):
+        blocks.fragment_chunk(forged)
+    with pytest.raises(blocks.BlockError, match="no crc"):
+        blocks.decode_cell_fragments([frames[0], forged, *frames[2:]])
+
+
 def test_deterministic_blocks():
     """Byte-identical re-encode — required for checkpoint/resume."""
     rng = np.random.default_rng(5)

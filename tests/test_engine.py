@@ -733,11 +733,11 @@ def test_marker_shards_are_per_task_and_torn_tail_is_skipped(
     assert m2["rows"] == m["rows"]
 
 
-def test_resume_marker_scan_is_one_job(spark, corpus_df, tmp_path):
-    """The resume scan reads every shard file in one file-index job and
-    folds the same per-bucket stats as list_markers: a duplicate attempt's
-    shard counts each bucket once, and a stale fingerprint counts not at
-    all."""
+def test_resume_marker_scan_runs_no_job(spark, corpus_df, tmp_path):
+    """The resume pass reads every shard file once, on the driver, with no
+    Spark job, and folds the same per-bucket stats as list_markers: a
+    duplicate attempt's shard counts each bucket once, and a stale
+    fingerprint counts not at all and is compacted away."""
     import shutil
 
     wh = str(tmp_path / "wh")
@@ -750,11 +750,13 @@ def test_resume_marker_scan_is_one_job(spark, corpus_df, tmp_path):
     with open(os.path.join(wh, "markers", "shard_stale.jsonl"), "w") as f:
         f.write(json.dumps(stale) + "\n")
 
-    (done, stats), jobs = run_jobs(
-        spark, lambda: engine._scan_markers(spark, wh, m["fingerprint"]))
-    assert len(jobs) == 1, jobs
     live = [x for x in engine.list_markers(wh)
             if x["fingerprint"] == m["fingerprint"]]
+    (done, stats), jobs = run_jobs(
+        spark, lambda: engine._resume_markers(wh, m["fingerprint"]))
+    assert jobs == []
+    assert engine.list_markers(wh) == live
+    assert not os.path.exists(os.path.join(wh, "markers", "shard_stale.jsonl"))
     assert done == {x["bucket"] for x in live}
     want = [sum(c) for c in zip(*map(engine._marker_stats, live))]
     assert stats[:4] == tuple(want[:4]) == (
@@ -768,6 +770,56 @@ def corpus_wh(spark, corpus_df, tmp_path_factory):
     engine.encode_table(spark, corpus_df, corpus_plan(), wh, n_buckets=4,
                         stripe_bytes=64 << 10, input_token="dec-io")
     return wh
+
+
+def _tree(root: str) -> dict:
+    """Every file under ``root``: relative path -> (mtime_ns, sha256)."""
+    out = {}
+    for d, _dirs, files in os.walk(root):
+        for fn in files:
+            p = os.path.join(d, fn)
+            with open(p, "rb") as f:
+                out[os.path.relpath(p, root)] = (
+                    os.stat(p).st_mtime_ns, hashlib.sha256(f.read()).hexdigest())
+    return out
+
+
+@pytest.mark.parametrize("mode", ["Resume", "append", ""])
+def test_encode_unknown_mode_raises_and_leaves_warehouse(
+        spark, corpus_df, corpus_wh, tmp_path, mode):
+    """A mode other than error/overwrite/resume raises before the
+    warehouse is touched: no file changes, none appears or goes."""
+    wh = _copy_wh(corpus_wh, tmp_path)
+    before = _tree(wh)
+    with pytest.raises(ValueError, match="mode"):
+        engine.encode_table(spark, corpus_df, corpus_plan(), wh, n_buckets=4,
+                            stripe_bytes=64 << 10, mode=mode,
+                            input_token="dec-io")
+    assert _tree(wh) == before
+    fresh = str(tmp_path / "fresh")
+    with pytest.raises(ValueError, match="mode"):
+        engine.encode_table(spark, corpus_df, corpus_plan(), fresh, mode=mode)
+    assert not os.path.exists(fresh)
+
+
+def test_assemble_stripe_sibling_row_mismatch_raises_block_error():
+    """Sibling blocks of one stripe that each match their recorded row
+    count but disagree with each other raise BlockError, not an arrow
+    length error."""
+    import pyarrow as pa
+
+    from colonnade_spark.blocks import BlockError, encode_block
+
+    schema = pa.schema([("s", pa.string()), ("i", pa.int64())])
+    blobs = [encode_block(pa.array(["a", "b", "c"])),
+             encode_block(pa.array([1, 2], type=pa.int64()))]
+    with pytest.raises(BlockError, match="disagree on rows"):
+        engine._assemble_stripe(["s", "i"], schema, ["s", "i"], blobs,
+                                [3, 2], [-1, -1])
+    # a column subset that leaves the odd block out still assembles
+    t = engine._assemble_stripe(["s"], schema, ["s", "i"], blobs,
+                                [3, 2], [-1, -1])
+    assert t.column("s").to_pylist() == ["a", "b", "c"]
 
 
 def test_decode_builds_without_spark_jobs(spark, corpus_wh):
