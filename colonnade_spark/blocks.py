@@ -307,6 +307,9 @@ def iter_cell_fragments(frames, meta_out: dict | None = None):
     ``meta_out`` (optional dict) receives ``{"k": kind, "t": arrow_type,
     "n": n_fragments}`` as soon as the first fragment arrives.
 
+    This is the only place the fragment-set rule lives: decode, validation
+    and ``engine.decode_giant_cells`` all read fragments through it.
+
     The reference analog is the resumable parser continuation for cells
     spanning chunk boundaries (/root/reference/siphon/src/Siphon.hs:612-616)
     — there the chunking is the CSV transport's, here it is the fragment
@@ -334,20 +337,18 @@ def iter_cell_fragments(frames, meta_out: dict | None = None):
         while nxt in pending:
             yield pending.pop(nxt)
             nxt += 1
-    if pending:
-        raise BlockError(f"stray cell fragments never yielded: "
-                         f"{sorted(pending)}")
+    # every index is checked < nfrag on arrival, so a fragment still
+    # pending here sits above a gap
     if nfrag is None or nxt != nfrag:
-        missing = sorted(set(range(nfrag or 0)) - set(range(nxt))
-                         - set(pending))
+        missing = sorted(set(range(nxt, nfrag or 0)) - set(pending))
         raise BlockError(f"incomplete cell fragment set: missing {missing}")
 
 
 def fragment_chunk(buf) -> tuple[int, int, bytes, str, str]:
     """Decode ONE fragment block standalone → (frag_idx, n_frags, payload
     bytes, kind, arrow_type).  Per-fragment crc validated; post-transform
-    inverted.  The unit the distributed chunked decode maps over
-    (engine.decode_giant_cells) — no cross-fragment state needed."""
+    inverted; no cross-fragment state (that is
+    :func:`iter_cell_fragments`'s)."""
     _codec_id, header, payload = _open(buf)
     f = header.get("f")
     if f is None:

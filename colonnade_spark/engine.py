@@ -25,7 +25,10 @@ decode:  list blocks/ on the driver → one mapInArrow over file indices;
          zone map, and reassembles the wanted stripes into rows with the
          planned schema (no parquet scan in the JVM, no shuffle).  The
          giant-cell decode and errors.validate_blocks read blocks/ the
-         same way.
+         same way.  One function, errors.decode_stripe, decides whether a
+         stripe is sound: decode raises its first problem, validation
+         reports every one; fragment sets are checked by
+         blocks.iter_cell_fragments alone.
 
 verify:  decoded ⋈ source on key_cols (sort-merge; both sides large),
          sha256 equality per content column (input_hint invariant)
@@ -41,6 +44,7 @@ from __future__ import annotations
 
 import contextlib
 import glob
+import itertools
 import json
 import math
 import os
@@ -53,6 +57,7 @@ import pyarrow.compute as pc  # explicit: `import pyarrow` alone does not load i
 import pyarrow.parquet as pq
 
 from . import blocks as B
+from .errors import decode_stripe
 from .plan import EncodePlan
 from .session import kernel_partitions
 
@@ -477,12 +482,7 @@ def _encode_bucket_core(bucket: int, stripes, warehouse: str,
                 # second time (encode_cell_fragments already paid that once)
                 head = pc.binary_slice(
                     _as_binary(arr), 0, _ZONE_PREFIX + 1)[0].as_py()
-                total_len = arr.nbytes  # single cell: data bytes = cell len
-                # emulate full-string semantics: if the cell is longer than
-                # the prefix we sliced, pad logically by passing a >16-byte
-                # stand-in (the bump path only inspects the first 16 bytes)
-                mx = head if total_len <= _ZONE_PREFIX else head + b"\x00"
-                smin, smax = _zone_str_bounds(head, mx)
+                smin, smax = _zone_str_bounds(head, head)
                 cell_bytes = arr.nbytes
                 left = cell_bytes
                 for fi, blk in enumerate(frames):
@@ -754,7 +754,8 @@ def read_manifest(warehouse: str) -> dict:
 
 
 def _bucket_files(warehouse: str, manifest: dict) -> list:
-    """Every bucket's blocks file, from ONE driver listing of ``blocks/``.
+    """``(bucket, path)`` of every bucket's blocks file, in bucket order,
+    from ONE driver listing of ``blocks/``.
 
     The encoder publishes one ``bucket=N`` directory per non-empty bucket
     (empty buckets write nothing), so the listing must count exactly the
@@ -769,8 +770,8 @@ def _bucket_files(warehouse: str, manifest: dict) -> list:
     if len(names) != want:
         raise B.BlockError(f"{bdir}: {len(names)} bucket directories, the "
                            f"manifest records {want}")
-    names.sort(key=lambda n: int(n[len("bucket="):]))
-    return [os.path.join(bdir, n, "part-0.parquet") for n in names]
+    return sorted((int(n[len("bucket="):]), os.path.join(bdir, n, "part-0.parquet"))
+                  for n in names)
 
 
 def _zone_specs(zone_filter, full_schema, all_cols) -> list:
@@ -824,39 +825,13 @@ def _overlaps(mn, mx, lo, hi, open_max: bool) -> bool:
 def _assemble_stripe(cols, arrow_schema, names, blobs, n_rows,
                      frags) -> pa.Table:
     """One stripe's blocks → a table of ``cols`` (in that order, typed by
-    ``arrow_schema``), with every integrity check: block crc (in
-    decode_block), recorded row count, sibling blocks of one row count,
-    duplicate, missing, and whole-versus-fragment blocks of one column."""
-    arrays = {}
-    frag_groups: dict[str, list] = {}
-    for j, (name, blob) in enumerate(zip(names, blobs)):
-        if frags[j] is not None and frags[j] >= 0:
-            # multi-block cell: collect the fragment set, reassemble below
-            frag_groups.setdefault(name, []).append(blob)
-            continue
-        if name in arrays:
-            raise B.BlockError(f"duplicate column blocks in stripe: {name!r}")
-        arr = B.decode_block(blob)
-        # integrity: decoded length must match the block's recorded row
-        # count — a torn/garbled blocks file fails LOUDLY, never as silent
-        # column misalignment (the RowErrorSize analog,
-        # siphon/src/Siphon.hs:671-676)
-        if len(arr) != n_rows[j]:
-            raise B.BlockError(
-                f"block row-count mismatch for {name!r}: decoded "
-                f"{len(arr)}, recorded {n_rows[j]}")
-        arrays[name] = arr
-    for name, frames in frag_groups.items():
-        if name in arrays:
-            raise B.BlockError(
-                f"column {name!r} has both whole and fragment blocks")
-        arrays[name] = B.decode_cell_fragments(frames)
-    missing = [c for c in cols if c not in arrays]
-    if missing:
-        raise B.BlockError(f"stripe missing column blocks: {missing}")
-    n_by_col = {c: len(arrays[c]) for c in cols}
-    if len(set(n_by_col.values())) > 1:
-        raise B.BlockError(f"sibling blocks disagree on rows: {n_by_col}")
+    ``arrow_schema``).  :func:`errors.decode_stripe` decodes the blocks and
+    decides whether the stripe is sound; its first problem raises
+    ``BlockError``."""
+    arrays, problems = decode_stripe(cols, names, blobs, n_rows, frags)
+    if problems:
+        col, kind, detail = problems[0]
+        raise B.BlockError(f"{detail} (column {col!r}, {kind})")
     return pa.table(
         {c: arrays[c].cast(arrow_schema.field(c).type) for c in cols})
 
@@ -985,9 +960,10 @@ def _decode_plan(manifest: dict, columns, zone_filter):
 
 
 def _map_files(spark, files: list, per_file, ddl: str):
-    """One ``mapInArrow`` over the indices of ``files``: each task calls
-    ``per_file(path)`` for each of its files and streams out the record
-    batches it yields: one task per file, up to 4 waves of
+    """One ``mapInArrow`` over the indices of ``files`` (the
+    :func:`_bucket_files` pairs): each task calls ``per_file(bucket,
+    path)`` for each of its files and streams out the record batches it
+    yields: one task per file, up to 4 waves of
     :func:`session.kernel_partitions`.  Building the DataFrame runs no
     Spark job."""
 
@@ -995,7 +971,7 @@ def _map_files(spark, files: list, per_file, ddl: str):
         _pin_arrow_threads()
         for batch in batches:
             for i in batch.column(0).to_pylist():
-                yield from per_file(files[i])
+                yield from per_file(*files[i])
 
     n_part = max(1, min(len(files), 4 * kernel_partitions(spark)))
     return spark.range(len(files), numPartitions=n_part).mapInArrow(run, ddl)
@@ -1022,7 +998,7 @@ def decode_warehouses(spark, warehouses: list, *,
     # about one stripe's whole-column blocks per read batch
     batch_rows = len(manifests[0]["plan"]["specs"])
 
-    def decode_file(path):
+    def decode_file(_bucket, path):
         for _, *group in _read_stripes(path, cols, zones, batch_rows):
             yield from _assemble_stripe(cols, arrow_schema, *group).to_batches()
 
@@ -1084,14 +1060,16 @@ def decode_giant_cells(spark, warehouse: str, column: str):
     ``codecs.getincrementaldecoder("utf-8")``.
 
     Reads like :func:`decode_table`: one driver listing of ``blocks/`` and
-    one ``mapInArrow`` over file indices, no Spark job at call time.  Each
-    task streams the column's fragment blocks ONE at a time (one fragment
-    in memory), checks each fragment's crc, and checks each stripe's
-    fragment set against ``n_frags`` from the fragment header: a missing
-    (tail included), duplicate or out-of-range fragment raises
-    ``BlockError``.
+    one ``mapInArrow`` over file indices, no Spark job at call time; a
+    ``column`` not in the plan raises ``KeyError`` there.  Each task
+    streams the column's fragment blocks ONE at a time (one fragment in
+    memory), each stripe's through :func:`blocks.iter_cell_fragments`: a
+    corrupt, missing (tail included), duplicate or out-of-range fragment
+    raises ``BlockError``.
     """
-    files = _bucket_files(warehouse, read_manifest(warehouse))
+    manifest = read_manifest(warehouse)
+    _decode_plan(manifest, [column], None)
+    files = _bucket_files(warehouse, manifest)
     out_schema = pa.schema([
         ("bucket", pa.int64()), ("stripe", pa.int64()),
         ("frag_idx", pa.int64()), ("n_frags", pa.int64()),
@@ -1100,37 +1078,31 @@ def decode_giant_cells(spark, warehouse: str, column: str):
     out_ddl = ("bucket bigint, stripe bigint, frag_idx bigint, "
                "n_frags bigint, kind string, chunk binary")
 
-    def check(path, stripe, frags):
-        idx, ns = sorted(i for i, _ in frags), {n for _, n in frags}
-        if len(ns) != 1 or idx != list(range(max(ns))):
-            raise B.BlockError(
-                f"{path}: stripe {stripe} column {column!r} has fragments "
-                f"{idx}, n_frags {sorted(ns)}: missing, duplicate or "
-                f"out-of-range fragments")
-
-    def to_chunks(path):
+    def to_chunks(bucket, path):
         # ONE output batch per fragment: batching a stripe's fragments
         # together would rebuild the whole multi-GiB cell in one arrow
         # batch and overflow 32-bit binary offsets — the ceiling this
         # surface removes
-        bucket = int(os.path.basename(os.path.dirname(path))[len("bucket="):])
         with _blocks_file(path) as pf:
             meta = _read_meta(pf, path)
             rows = [i for i, (c, f) in enumerate(zip(meta["column"], meta["frag"]))
-                    if c == column and f >= 0]
-            last = {meta["stripe"][i]: i for i in rows}  # stripe → last fragment row
-            seen: dict = {}
-            for i, blob in _iter_blocks(pf, rows, 1):
-                s = meta["stripe"][i]
-                idx, n, payload, kind, _typ = B.fragment_chunk(blob)
-                seen.setdefault(s, []).append((idx, n))
-                vals = {"bucket": bucket, "stripe": s, "frag_idx": idx,
-                        "n_frags": n, "kind": kind, "chunk": payload}
-                yield pa.record_batch(
-                    [pa.array([vals[f.name]], type=f.type)
-                     for f in out_schema], schema=out_schema)
-                if i == last[s]:
-                    check(path, s, seen.pop(s))
+                    if c == column and f is not None and f >= 0]
+            runs = itertools.groupby(_iter_blocks(pf, rows, 1),
+                                     key=lambda ib: meta["stripe"][ib[0]])
+            for s, run in runs:
+                cell: dict = {}
+                try:
+                    chunks = B.iter_cell_fragments((b for _, b in run), cell)
+                    for idx, chunk in enumerate(chunks):
+                        vals = {"bucket": bucket, "stripe": s, "frag_idx": idx,
+                                "n_frags": cell["n"], "kind": cell["k"],
+                                "chunk": chunk}
+                        yield pa.record_batch(
+                            [pa.array([vals[f.name]], type=f.type)
+                             for f in out_schema], schema=out_schema)
+                except B.BlockError as e:
+                    raise B.BlockError(f"{path}: stripe {s} column "
+                                       f"{column!r}: {e}") from e
 
     return _map_files(spark, files, to_chunks, out_ddl)
 

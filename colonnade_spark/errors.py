@@ -10,12 +10,12 @@ Here the unit of decode is a block, so errors carry (bucket, stripe, column)
 coordinates; a validation pass over a warehouse reports ALL of: missing
 column blocks, duplicate column blocks, unknown codec ids, CRC mismatches,
 row-count disagreements between sibling blocks (the RowErrorSize analog),
-and decode failures — as a DataFrame, never an exception.
+and decode failures — as a DataFrame, never an exception.  One function,
+:func:`decode_stripe`, decides whether a stripe is sound: decode raises its
+first problem, validation reports them all.
 """
 
 from __future__ import annotations
-
-import os
 
 import pyarrow as pa
 
@@ -58,45 +58,62 @@ def _failure(e: Exception) -> tuple:
             else KIND_CODEC if "codec id" in msg else KIND_DECODE), msg
 
 
-def _check_stripe(names, blobs, n_rows, frags, expected_cols) -> list:
-    """Every error of one stripe's blocks, as ``(column, kind, detail)``;
-    a decode failure is reported with its position, never thrown."""
-    errs = []
-    # fragment rows (frag >= 0) are one LOGICAL block per column: a
-    # multi-block cell (blocks.encode_cell_fragments) is not a duplicate
-    fragged: dict = {}
-    for name, blob, f in zip(names, blobs, frags):
-        if f >= 0:
-            fragged.setdefault(name, []).append(blob)
-    present = [c for c, f in zip(names, frags) if f < 0] + sorted(fragged)
-    for kind, col, detail in resolve_stripe(present, expected_cols):
-        errs.append((col, kind, detail))
-    n_by_col = {}
+def decode_stripe(cols, names, blobs, n_rows, frags, *,
+                  cells: bool = True) -> tuple:
+    """The one check of whether a stripe is sound, for decode
+    (``engine._assemble_stripe``) and validation (:func:`validate_blocks`)
+    alike.  Decodes each block of one stripe once and returns ``(arrays,
+    problems)``: ``arrays`` maps each column to its decoded array, and
+    ``problems`` lists every ``(column, kind, detail)``:
+
+    * a row with a null ``frag``;
+    * a block that fails to decode (crc, codec id, anything else), or
+      decodes to other than its recorded row count;
+    * a fragment set :func:`blocks.iter_cell_fragments` refuses (missing,
+      duplicate, out-of-range or corrupt fragments);
+    * a missing or duplicate column (:func:`resolve_stripe`; the fragment
+      blocks of a column count as one block, so whole and fragment blocks
+      of one column are a duplicate);
+    * sibling columns that disagree on rows (a fragmented cell is one row).
+
+    With ``cells`` each fragmented cell is joined into a one-row array;
+    without, its chunks only stream through, so a cell past arrow's 2 GiB
+    scalar limit is checked without ever being built."""
+    problems, arrays, present, sets = [], {}, [], {}
     for name, blob, n, f in zip(names, blobs, n_rows, frags):
-        if f >= 0:
+        if name not in cols:             # extra columns are ignored
+            continue
+        if f is not None and f >= 0:
+            sets.setdefault(name, []).append(blob)
+            continue
+        present.append(name)
+        if f is None:
+            problems.append((name, KIND_DECODE, "block row has a null frag"))
             continue
         try:
-            arr = B.decode_block(blob)
-            n_by_col[name] = len(arr)
-            if len(arr) != n:
-                errs.append((name, KIND_SIZE, f"block decodes to {len(arr)} "
+            arrays[name] = arr = B.decode_block(blob)
+        except Exception as e:
+            problems.append((name, *_failure(e)))
+            continue
+        if len(arr) != n:
+            problems.append((name, KIND_SIZE, f"block decodes to {len(arr)} "
                                               f"rows, catalog says {n}"))
-        except Exception as e:
-            errs.append((name, *_failure(e)))
-    for col, frames in fragged.items():
+    rows = {c: len(a) for c, a in arrays.items()}
+    for name, frames in sets.items():
+        present.append(name)
+        rows[name] = 1
         try:
-            # STREAMING drain, not decode_cell_fragments: validation needs
-            # per-fragment crc + completeness, not the value — materializing
-            # would cost ~4x the cell size on the very multi-GiB cells the
-            # fragment path exists for
-            for _chunk in B.iter_cell_fragments(frames):
-                pass
-            n_by_col[col] = 1          # a fragmented cell is one row
+            if cells:
+                arrays[name] = B.decode_cell_fragments(frames)
+            else:
+                for _chunk in B.iter_cell_fragments(frames):
+                    pass
         except Exception as e:
-            errs.append((col, *_failure(e)))
-    if len(set(n_by_col.values())) > 1:
-        errs.append(("*", KIND_SIZE, f"sibling blocks disagree on rows: {n_by_col}"))
-    return errs
+            problems.append((name, *_failure(e)))
+    problems += [(c, kind, d) for kind, c, d in resolve_stripe(present, cols)]
+    if len(set(rows.values())) > 1:
+        problems.append(("*", KIND_SIZE, f"sibling blocks disagree on rows: {rows}"))
+    return arrays, problems
 
 
 def validate_blocks(spark, warehouse: str, expected_cols: list | None = None):
@@ -106,10 +123,13 @@ def validate_blocks(spark, warehouse: str, expected_cols: list | None = None):
     Reads ``blocks/`` like ``engine.decode_table``: one driver listing (a
     missing manifest or bucket directory raises at call time, no Spark job
     runs) and one ``mapInArrow`` over file indices.  Everything found
-    inside a file is a row, never an exception: :func:`_check_stripe` for
-    each stripe the reader yields, and a file the reader cannot get
-    through (unreadable, no ``frag`` column, a stripe split in two) as one
-    ``decode_failure`` row at stripe -1."""
+    inside a file is a row, never an exception: every problem
+    :func:`decode_stripe` finds in each stripe the reader yields, and a
+    file the reader cannot get through (unreadable, no ``frag`` column,
+    stripe ids not ``0..n-1``, a stripe with no block left) as one
+    ``decode_failure`` row at stripe -1.
+    A stripe whose blocks sit in two runs of the file is read whole, like
+    any other."""
     from .engine import _bucket_files, _map_files, _read_stripes, read_manifest
 
     manifest = read_manifest(warehouse)
@@ -120,15 +140,14 @@ def validate_blocks(spark, warehouse: str, expected_cols: list | None = None):
                             ("column", pa.string()), ("kind", pa.string()),
                             ("detail", pa.string())])
 
-    def check_file(path):
-        bucket = int(os.path.basename(os.path.dirname(path))[len("bucket="):])
+    def check_file(bucket, path):
         rows = []
         try:
             for stripe, *group in _read_stripes(path, expected_cols, [],
                                                 len(expected_cols)):
+                _, problems = decode_stripe(expected_cols, *group, cells=False)
                 rows += [(bucket, stripe, col, kind, str(detail)[:200])
-                         for col, kind, detail
-                         in _check_stripe(*group, expected_cols)]
+                         for col, kind, detail in problems]
         except B.BlockError as e:
             rows.append((bucket, -1, None, KIND_DECODE, str(e)[:200]))
         if rows:

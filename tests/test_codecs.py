@@ -819,3 +819,84 @@ def test_fsst_table_build_identical_across_count_paths():
     from colonnade_spark import blocks
     arr = pa.array(vals)
     assert blocks.decode_block(blocks.encode_block(arr, codec="fsst")).equals(arr)
+
+
+def _fuzz_columns():
+    """``(id, array, codec, post)``: one column per codec, a list block and
+    a zlib post-encode, each a frame of a few hundred rows."""
+    rng = np.random.default_rng(3)
+    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
+    text = pa.array([" ".join(rng.choice(words, 6)) + f" {i}"
+                     for i in range(400)])
+    return [
+        ("plain", text, "plain", None),
+        ("dict", pa.array(rng.choice(words, 400).tolist()), "dict", None),
+        ("rle", pa.array(np.repeat(np.arange(20), 20)), "rle", None),
+        ("forbp", pa.array(rng.integers(1000, 1300, 400)), "forbp", None),
+        ("delta", pa.array(np.cumsum(rng.integers(0, 9, 400))), "delta", None),
+        ("fsst", text, "fsst", None),
+        ("fcode", pa.array(sorted(f"src/pkg/mod_{i:04d}.py" for i in range(400))),
+         "fcode", None),
+        ("alpha4", pa.array([f"{x:016x}" for x in rng.integers(0, 1 << 62, 400)]),
+         "alpha4", None),
+        ("fbss", pa.array(np.arange(400) * 0.125), "fbss", None),
+        ("list", pa.array([[float(j) for j in range(i % 5)] for i in range(300)],
+                          type=pa.list_(pa.float32())), "auto", None),
+        ("post_zlib", text, "auto", "zlib"),
+    ]
+
+
+def _fuzzed(frame: bytes, rng) -> list:
+    """Corrupt copies of one frame: single payload bytes flipped, and the
+    frame cut at lengths inside the fixed 10-byte prefix, inside the header
+    JSON and inside the payload.  The codec-id byte and the header JSON are
+    not flipped: the crc covers the payload only."""
+    start = 10 + int.from_bytes(frame[6:10], "little")
+    out = []
+    for pos in rng.choice(np.arange(start, len(frame)),
+                          min(24, len(frame) - start), replace=False):
+        bad = bytearray(frame)
+        bad[pos] ^= int(rng.integers(1, 256))
+        out.append(bytes(bad))
+    cuts = {*range(10), 10, start - 1, start, len(frame) - 1,
+            *rng.integers(10, start, 4).tolist(),
+            *rng.integers(start, len(frame), 8).tolist()}
+    out += [frame[:n] for n in sorted(cuts)]
+    return out
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+@pytest.mark.parametrize("case", _fuzz_columns(), ids=lambda c: c[0])
+def test_fuzzed_block_decodes_identically_or_raises_block_error(case, seed):
+    """Block fuzzing, payload half: a flipped payload byte or a truncated
+    frame decodes to the identical column or raises BlockError, never
+    another exception."""
+    _id, arr, codec, post = case
+    frame = encode_block(arr, codec=codec, post=post)
+    if codec != "auto":
+        assert block_info(frame)["codec"] == codec
+    assert decode_block(frame).equals(arr)
+    for bad in _fuzzed(frame, np.random.default_rng(seed)):
+        try:
+            assert decode_block(bad).equals(arr)
+        except blocks.BlockError:
+            pass
+
+
+@pytest.mark.parametrize("post", [None, "zlib"])
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_fuzzed_fragment_set_decodes_identically_or_raises_block_error(seed, post):
+    """The same for a fragment set: corrupting any one fragment leaves the
+    reassembled cell identical or raises BlockError."""
+    cell = pa.array(["fragment füñky 日本語 " * 200])
+    frames = blocks.encode_cell_fragments(cell, 512, post=post)
+    assert len(frames) >= 4
+    rng = np.random.default_rng(seed)
+    for j in range(len(frames)):
+        for bad in _fuzzed(frames[j], rng):
+            try:
+                got = blocks.decode_cell_fragments(
+                    frames[:j] + [bad] + frames[j + 1:])
+                assert got.equals(cell)
+            except blocks.BlockError:
+                pass

@@ -3,6 +3,7 @@ aggregated-error validation model (SURVEY.md §2.2, §2.6, §1 error model)."""
 
 import glob
 import os
+import re
 
 import numpy as np
 import pyarrow as pa
@@ -253,3 +254,140 @@ def test_html_capped_hides_groups_and_shrinks_spans(spark):
     assert '<th colspan="1">top</th>' in out          # 3 cols, 2 hidden
     assert '<th colspan="1">left</th>' in out         # b hidden
     assert '<th style="display:none;">right</th>' in out  # all hidden
+
+
+# ---------- decode and validation share one stripe check ----------
+
+@pytest.fixture(scope="module")
+def frag_wh(spark, tmp_path_factory):
+    """One bucket file with small-row stripes and two fragmented cells
+    (a 1 KiB stripe cap; each big cell spans 5+ fragment blocks)."""
+    from colonnade_spark import engine
+    from colonnade_spark.plan import corpus_plan
+
+    rows = [("r", f"p{i}", f"c{i}", "py", f"body {i}") for i in range(20)]
+    rows += [("r", f"big{i}.txt", f"g{i}", "txt", f"zeile {i} ünï 日本 " * 400)
+             for i in range(2)]
+    df = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string")
+    wh = str(tmp_path_factory.mktemp("fragwh") / "wh")
+    engine.encode_table(spark, df, corpus_plan(), wh, n_buckets=1,
+                        stripe_bytes=1 << 10, input_token="frag-err")
+    return wh
+
+
+def _row(t, column, frag=-1, stripe=None):
+    """Index of the first blocks row of ``column`` with ``frag`` (in
+    ``stripe``, when given)."""
+    return next(i for i, (s, c, f) in enumerate(
+        zip(t["stripe"], t["column"], t["frag"]))
+        if c == column and f == frag and stripe in (None, s))
+
+
+def _frag_stripe(t):
+    return t["stripe"][_row(t, "content", frag=0)]
+
+
+def _flip_payload(t):
+    i = _row(t, "lang")
+    blk = bytearray(t["block"][i])
+    blk[-1] ^= 0xFF
+    t["block"][i] = bytes(blk)
+    return t["stripe"][i], "lang", "crc_mismatch"
+
+
+def _drop_block(t):
+    i = _row(t, "path")
+    for k in t:
+        del t[k][i]
+    return t["stripe"][i], "path", "missing_column"
+
+
+def _dup_block(t):
+    i = _row(t, "path")
+    for k in t:
+        t[k].append(t[k][i])
+    return t["stripe"][i], "path", "duplicate_column"
+
+
+def _wrong_n_rows(t):
+    i = _row(t, "path")
+    t["n_rows"][i] += 1
+    return t["stripe"][i], "path", "row_count_mismatch"
+
+
+def _drop_fragment(which):
+    def corrupt(t):
+        s = _frag_stripe(t)
+        n = sum(1 for x, c, f in zip(t["stripe"], t["column"], t["frag"])
+                if x == s and c == "content" and f >= 0)
+        i = _row(t, "content", frag={"middle": 1, "tail": n - 1}[which],
+                 stripe=s)
+        for k in t:
+            del t[k][i]
+        return s, "content", "decode_failure"
+    return corrupt
+
+
+def _null_frag(t):
+    i = _row(t, "path")
+    t["frag"][i] = None
+    return t["stripe"][i], "path", "decode_failure"
+
+
+def _whole_and_fragments(t):
+    s = _frag_stripe(t)
+    i = _row(t, "content", frag=0)
+    for k in t:
+        t[k].append(t[k][i])
+    t["frag"][-1], t["n_rows"][-1] = -1, 1
+    t["block"][-1] = encode_block(pa.array(["whole"]))
+    return s, "content", "duplicate_column"
+
+
+def _siblings_disagree(t):
+    i = _row(t, "path")
+    n = t["n_rows"][i]
+    t["block"][i] = encode_block(pa.array([f"x{j}" for j in range(n + 1)]))
+    t["n_rows"][i] = n + 1
+    return t["stripe"][i], "*", "row_count_mismatch"
+
+
+@pytest.mark.parametrize("corrupt", [
+    None, _flip_payload, _drop_block, _dup_block, _wrong_n_rows,
+    _drop_fragment("middle"), _drop_fragment("tail"), _null_frag,
+    _whole_and_fragments, _siblings_disagree,
+], ids=["sound", "flipped_payload_byte", "dropped_block", "duplicated_block",
+        "wrong_n_rows", "dropped_middle_fragment", "dropped_tail_fragment",
+        "null_frag", "whole_and_fragment_blocks", "siblings_disagree"])
+def test_decode_raises_iff_validate_reports(spark, frag_wh, tmp_path, corrupt):
+    """Decode and validation decide a stripe's soundness by the same rule:
+    decode_table raises BlockError exactly when validate_blocks reports a
+    row, and the decode error and the rows name the same column and kind
+    (the rows in the corrupted bucket and stripe)."""
+    import shutil
+
+    from colonnade_spark import engine
+    from colonnade_spark.errors import validate_blocks
+
+    wh = str(tmp_path / "wh")
+    shutil.copytree(frag_wh, wh)
+    [f] = glob.glob(os.path.join(wh, "blocks", "bucket=*", "*.parquet"))
+    schema = pq.read_schema(f)
+    t = pq.read_table(f).to_pydict()
+    assert max(t["frag"]) >= 4                  # a cell of 5+ fragments
+    want = corrupt(t) if corrupt else None
+    pq.write_table(pa.Table.from_pydict(t, schema=schema), f,
+                   compression="NONE")
+
+    rows = {(r["bucket"], r["stripe"], r["column"], r["kind"])
+            for r in validate_blocks(spark, wh).collect()}
+    if want is None:
+        assert rows == set()
+        assert engine.decode_table(spark, wh).count() == 22
+        return
+    stripe, column, kind = want
+    assert (0, stripe, column, kind) in rows, rows
+    with pytest.raises(Exception, match="BlockError: .*"
+                       + re.escape(f"(column '{column}', {kind})")):
+        engine.decode_table(spark, wh).collect()

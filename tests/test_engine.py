@@ -432,7 +432,9 @@ def test_decode_giant_cells_chunked(spark, tmp_path):
 
     # inject a GAP: drop one middle fragment row from the blocks files
     assert _drop_content_fragments(wh, lambda fr, n: fr == 1) == 1
-    with pytest.raises(Exception, match="BlockError: .*missing, duplicate"):
+    with pytest.raises(Exception, match=r"BlockError: .*column 'content': "
+                                        r"incomplete cell fragment set: "
+                                        r"missing \[1\]"):
         engine.decode_giant_cells(spark, wh, "content").collect()
 
 
@@ -449,7 +451,9 @@ def test_decode_giant_cells_missing_tail_fragment_raises(spark, tmp_path):
     engine.encode_table(spark, df, corpus_plan(), wh, n_buckets=1,
                         stripe_bytes=1 << 20, input_token="giant-tail")
     assert _drop_content_fragments(wh, lambda fr, n: fr == n - 1) == 1
-    with pytest.raises(Exception, match="BlockError: .*missing, duplicate"):
+    with pytest.raises(Exception, match=r"BlockError: .*column 'content': "
+                                        r"incomplete cell fragment set: "
+                                        r"missing \[\d+\]"):
         engine.decode_giant_cells(spark, wh, "content").collect()
 
 
@@ -855,6 +859,18 @@ def test_giant_cells_and_validate_build_without_spark_jobs(spark, corpus_wh):
     _, jobs = run_jobs(spark, lambda: (
         engine.decode_giant_cells(spark, corpus_wh, "content"),
         validate_blocks(spark, corpus_wh)))
+    assert jobs == []
+
+
+def test_giant_cells_unknown_column_raises_without_spark_jobs(spark, corpus_wh):
+    """A column that is not in the plan raises KeyError when the giant-cell
+    decode is built, on the driver, before any Spark job, instead of
+    decoding to zero rows."""
+    def build():
+        with pytest.raises(KeyError, match="not in plan: \\['contnet'\\]"):
+            engine.decode_giant_cells(spark, corpus_wh, "contnet")
+
+    _, jobs = run_jobs(spark, build)
     assert jobs == []
 
 
