@@ -29,6 +29,7 @@ import numpy as np
 import pyarrow as pa
 
 from .codecs import BY_ID, BY_NAME, EncodeContext, compute_stats, from_arrow, to_arrow
+from .codecs.base import split_nulls
 
 MAGIC = b"CSPB"
 VERSION = 1
@@ -46,32 +47,20 @@ class BlockError(ValueError):
     (/root/reference/siphon/src/Siphon/Types.hs:35-59)."""
 
 
-#: probe gating: once the same codec wins _GATE_STREAK consecutive chunks of
-#: a column stream, skip the losers' estimates and keep that codec, with a
-#: full re-probe every _GATE_REPROBE-th chunk (content drift, e.g. a stripe
-#: crossing into another language's files).  The gate state lives in the
-#: EncodeContext — already per-(bucket, column) stream state — so selection
-#: stays a pure function of the chunk sequence (resume/determinism intact).
-#: The auto-path plain fallback in encode_block still bounds every block at
-#: <= plain even when the gated pick goes stale.
-_GATE_STREAK = 3
-_GATE_REPROBE = 16
-
-
 def select_codec(col, stats, ctx, exclude=()) -> str:
     """Argmin of estimated encoded size over applicable candidates.
 
     ``plain`` is always applicable, so the result is never worse than the
-    plain baseline (BASELINE.md compressed-size bound, structural)."""
-    gate = ctx.extras.get("sel_gate")
-    if gate is None:
-        gate = ctx.extras["sel_gate"] = {"idx": 0, "last": None, "streak": 0}
-    idx = gate["idx"]
-    gate["idx"] = idx + 1
-    if (not exclude and gate["streak"] >= _GATE_STREAK
-            and idx % _GATE_REPROBE != 0
-            and BY_NAME[gate["last"]].applicable(col, stats)):
-        return gate["last"]
+    plain baseline (BASELINE.md compressed-size bound, structural).
+
+    Probe-gated by ``ctx.select_gate`` (codecs.base.ProbeGate): once one
+    codec keeps winning, the losers' estimates are skipped until the next
+    re-probe.  The auto-path plain fallback in encode_block still bounds
+    every block at <= plain even when the gated pick goes stale."""
+    gate = ctx.select_gate
+    if (gate.step() and not exclude
+            and BY_NAME[gate.last].applicable(col, stats)):
+        return gate.last
     best_name, best_est = "plain", None
     for name in _CANDIDATE_ORDER:
         if name in exclude:
@@ -83,10 +72,7 @@ def select_codec(col, stats, ctx, exclude=()) -> str:
         if best_est is None or est < best_est:
             best_name, best_est = name, est
     if not exclude:        # retry probes (exclude != ()) don't teach the gate
-        if best_name == gate["last"]:
-            gate["streak"] += 1
-        else:
-            gate["last"], gate["streak"] = best_name, 1
+        gate.learn(best_name)
     return best_name
 
 
@@ -122,16 +108,13 @@ def encode_block(arr: pa.Array, codec: str = "auto", exclude=(),
     if _is_supported_list(arr.type):
         return _encode_list_block(arr, codec=codec, ctx=ctx, post=post,
                                   exclude=exclude)
-    col, validity = from_arrow(arr)
+    arr, validity = split_nulls(arr)
+    col, _ = from_arrow(arr)
     header: dict = {"n": col.n, "k": col.kind, "t": col.arrow_type}
-    if validity is not None:
-        header["v"] = base64.b64encode(
-            np.packbits(validity, bitorder="little").tobytes()).decode("ascii")
+    _put_validity(header, validity)
     if col.n == 0:
         return _seal(BY_NAME["plain"].codec_id, header, b"", None)
-    arr_nonnull = arr.fill_null({"str": "", "int": 0, "float": 0.0, "bool": False}
-                                [col.kind]) if arr.null_count else arr
-    stats = compute_stats(col, arr_nonnull)
+    stats = compute_stats(col, arr)
     if ctx is None:
         ctx = EncodeContext()
     auto = codec == "auto"
@@ -175,11 +158,36 @@ def decode_block(buf: bytes | memoryview) -> pa.Array:
     if codec is None:
         raise BlockError(f"unknown codec id {codec_id}")
     col = codec.decode(payload, header.get("p", {}), header["n"], header["k"], header["t"])
-    validity = None
-    if "v" in header:
-        bits = np.frombuffer(base64.b64decode(header["v"]), dtype=np.uint8)
-        validity = np.unpackbits(bits, bitorder="little")[: header["n"]].astype(bool)
-    return to_arrow(col, validity)
+    return to_arrow(col, _get_validity(header))
+
+
+def _put_validity(header: dict, validity) -> None:
+    """Record a validity mask (None: no null) in a block header."""
+    if validity is not None:
+        header["v"] = base64.b64encode(
+            np.packbits(validity, bitorder="little").tobytes()).decode("ascii")
+
+
+def _get_validity(header: dict):
+    """The validity mask a header records, or None when it has no null."""
+    if "v" not in header:
+        return None
+    bits = np.frombuffer(base64.b64decode(header["v"]), dtype=np.uint8)
+    return np.unpackbits(bits, bitorder="little")[: header["n"]].astype(bool)
+
+
+def pack_nested(sub_block: bytes, rest: bytes) -> bytes:
+    """A payload that carries a whole block before its own bytes: the
+    sub-block's u32le length, the sub-block, then ``rest``.  Dict values,
+    RLE run values and a list's child values all ride this framing."""
+    return b"".join([len(sub_block).to_bytes(4, "little"), sub_block, rest])
+
+
+def open_nested(payload) -> tuple[pa.Array, memoryview]:
+    """Inverse of :func:`pack_nested`: (decoded sub-block, rest bytes)."""
+    payload = memoryview(payload)
+    n = int.from_bytes(payload[:4], "little")
+    return decode_block(payload[4: 4 + n]), payload[4 + n:]
 
 
 # --------------------------------------------------------------------------
@@ -213,31 +221,22 @@ def _encode_list_block(arr: pa.Array, codec: str = "auto",
     sub_ctx = ctx if ctx is not None else EncodeContext()
     child_blk = encode_block(child, codec=codec, ctx=sub_ctx,
                              exclude=exclude)
-    lens_blk = encode_block(lens64, exclude=exclude)
-    payload = b"".join([len(child_blk).to_bytes(4, "little"),
-                        child_blk, lens_blk])
+    payload = pack_nested(child_blk, encode_block(lens64, exclude=exclude))
     header: dict = {"n": len(arr), "k": "list",
                     "t": str(arr.type.value_type),
                     "lg": 1 if pa.types.is_large_list(arr.type) else 0}
-    if arr.null_count:
-        validity = np.asarray(arr.is_valid())
-        header["v"] = base64.b64encode(
-            np.packbits(validity, bitorder="little").tobytes()).decode("ascii")
+    _put_validity(header, np.asarray(arr.is_valid()) if arr.null_count
+                  else None)
     return _seal(BY_NAME["plain"].codec_id, header, payload, post)
 
 
 def _decode_list_block(header: dict, payload) -> pa.Array:
-    payload = memoryview(payload)
-    clen = int.from_bytes(payload[:4], "little")
-    child = decode_block(payload[4: 4 + clen])
-    lens = np.asarray(decode_block(payload[4 + clen:]), dtype=np.int64)
+    child, rest = open_nested(payload)
+    lens = np.asarray(decode_block(rest), dtype=np.int64)
     off_dtype = np.int64 if header.get("lg") else np.int32
     offsets = np.concatenate(([0], np.cumsum(lens))).astype(off_dtype)
-    mask = None
-    if "v" in header:
-        bits = np.frombuffer(base64.b64decode(header["v"]), dtype=np.uint8)
-        valid = np.unpackbits(bits, bitorder="little")[: header["n"]].astype(bool)
-        mask = pa.array(~valid)
+    valid = _get_validity(header)
+    mask = None if valid is None else pa.array(~valid)
     cls = pa.LargeListArray if header.get("lg") else pa.ListArray
     return cls.from_arrays(pa.array(offsets), child, mask=mask)
 

@@ -1,19 +1,26 @@
-"""Optional C fast path for the FSST greedy scan, compiled at first use
+"""Optional C kernels for FSST and front coding, compiled at first use
 with the toolchain already in the image (plain ``cc -O2 -shared``) and
 loaded via ctypes — no third-party packages, no install step.
 
-The kernel is a direct transliteration of the numpy wave loop's matching
-rules (fsst._greedy_encode): per position, try the 3..8-byte hashed
-symbol, then the 2-byte direct table, then the 1-byte table, never
-crossing a segment end.  Greedy encode is sequential PER SEGMENT and
-independent ACROSS segments, so scan order doesn't affect the result —
-the C path and the numpy wave path produce byte-identical ``code_at``
-arrays (CRC-asserted in tests), which keeps resume/determinism intact
-even in a mixed fleet where some workers failed to compile and fell back.
+One call path, one match rule:
 
-Failure of any step (no compiler, sandboxed /tmp, load error) degrades to
-``lib = None`` and the numpy path — the C kernel is an optimization, not
-a dependency.
+* ``call(kernel, *args)`` is the only way into C.  It checks every array
+  against the kernel's row in ``_SIGNATURES`` (exact dtype, C-contiguous),
+  passes ints as int64, and returns None when the library is unavailable.
+* ``match_at`` in ``_SRC`` is the only copy of the FSST match rule that
+  both scans (``greedy_scan``, ``encode_scan``) use: per position, the
+  3..8-byte hashed symbol, then the 2-byte direct table, then the 1-byte
+  table, never crossing a segment end.  It transliterates the numpy wave
+  loop (fsst._greedy_encode).  Greedy encode is sequential PER SEGMENT and
+  independent ACROSS segments, so scan order doesn't affect the result —
+  the C and numpy paths emit byte-identical units, streams and tables
+  (tests/test_codecs.py, end to end in tests/test_engine.py), which keeps
+  resume/determinism intact even in a mixed fleet where some workers
+  failed to compile and fell back.
+
+Failure of any build step (no compiler, sandboxed /tmp, load error)
+degrades to ``lib = None`` and the numpy paths — the C kernels are an
+optimization, not a dependency.
 """
 
 from __future__ import annotations
@@ -24,89 +31,86 @@ import os
 import subprocess
 import tempfile
 
+import numpy as np
+
 _SRC = r"""
 #include <stdint.h>
 #include <string.h>
 
-int64_t greedy_scan(const uint8_t *pad,
-                 const int64_t *seg_s, const int64_t *seg_e, int64_t n_segs,
-                 const uint8_t *t1, const uint8_t *t2,
-                 const uint64_t *hkey, const uint64_t *hmask,
-                 const int32_t *hlen, const uint8_t *hcode,
-                 int64_t *units_out, uint8_t *codes_out)
+typedef struct {
+    const uint8_t *t1, *t2;             /* 1- and 2-byte direct tables */
+    const uint64_t *hkey, *hmask;       /* 3..8-byte symbols, hashed on */
+    const int32_t *hlen;                /* their 3-byte prefix */
+    const uint8_t *hcode;
+} table_t;
+
+/* The match rule, once: at position p of a segment ending at end, try the
+   hashed 3..8-byte symbol, then the 2-byte table, then the 1-byte table
+   (255 = escape), never matching past end.  Stores the code, returns the
+   match length.  The hash shift 20 is 32 - fsst._HASH_BITS.  The table
+   is passed by value: its pointers stay in registers across the byte
+   stores of the callers, which may alias anything. */
+static inline int64_t match_at(const uint8_t *pad, int64_t p, int64_t end,
+                               const table_t t, uint8_t *code)
 {
-    int64_t k = 0;   /* segments are start-ordered, so units emit ascending */
+    uint64_t key8;
+    memcpy(&key8, pad + p, 8);              /* little-endian hosts */
+    const int64_t rem = end - p;
+    const uint32_t h = ((uint32_t)(key8 & 0xFFFFFFu) * 2654435761u) >> 20;
+    const int32_t hl = t.hlen[h];
+    if (hl > 0 && (key8 & t.hmask[h]) == t.hkey[h] && hl <= rem) {
+        *code = t.hcode[h];
+        return hl;
+    }
+    const uint8_t c2 = t.t2[key8 & 0xFFFFu];
+    if (c2 != 255 && rem >= 2) {
+        *code = c2;
+        return 2;
+    }
+    *code = t.t1[key8 & 0xFFu];
+    return 1;
+}
+
+/* greedy scan: every unit's position and code, ascending (segments are
+   start-ordered). */
+int64_t greedy_scan(const uint8_t *pad,
+                    const int64_t *seg_s, const int64_t *seg_e, int64_t n_segs,
+                    const uint8_t *t1, const uint8_t *t2,
+                    const uint64_t *hkey, const uint64_t *hmask,
+                    const int32_t *hlen, const uint8_t *hcode,
+                    int64_t *units_out, uint8_t *codes_out)
+{
+    const table_t t = {t1, t2, hkey, hmask, hlen, hcode};
+    int64_t k = 0;
     for (int64_t s = 0; s < n_segs; s++) {
-        int64_t p = seg_s[s];
         const int64_t end = seg_e[s];
-        while (p < end) {
-            uint64_t key8;
-            memcpy(&key8, pad + p, 8);          /* little-endian hosts */
-            const int64_t rem = end - p;
-            uint32_t h = ((uint32_t)(key8 & 0xFFFFFFu) * 2654435761u) >> 20;
-            const int32_t hl = hlen[h];
-            int64_t len;
-            uint8_t c;
-            if (hl > 0 && (key8 & hmask[h]) == hkey[h] && hl <= rem) {
-                len = hl;
-                c = hcode[h];
-            } else {
-                const uint8_t c2 = t2[key8 & 0xFFFFu];
-                if (c2 != 255 && rem >= 2) {
-                    len = 2;
-                    c = c2;
-                } else {
-                    len = 1;
-                    c = t1[key8 & 0xFFu];
-                }
-            }
+        for (int64_t p = seg_s[s]; p < end; k++) {
             units_out[k] = p;
-            codes_out[k] = c;
-            k++;
-            p += len;
+            p += match_at(pad, p, end, t, &codes_out[k]);
         }
     }
     return k;
 }
 
-/* greedy_scan fused with stream emission: write the final code stream
+/* greedy scan fused with stream emission: write the final code stream
    (code byte, plus the literal byte after each escape) during the scan and
    record the stream offset at every segment start, so python skips the
-   units/codes materialization and the two scatter passes entirely.
-   Matching rules identical to greedy_scan (byte-identical stream). */
+   units/codes materialization and the two scatter passes entirely. */
 int64_t encode_scan(const uint8_t *pad,
-                 const int64_t *seg_s, const int64_t *seg_e, int64_t n_segs,
-                 const uint8_t *t1, const uint8_t *t2,
-                 const uint64_t *hkey, const uint64_t *hmask,
-                 const int32_t *hlen, const uint8_t *hcode,
-                 uint8_t *stream_out, int64_t *seg_out)
+                    const int64_t *seg_s, const int64_t *seg_e, int64_t n_segs,
+                    const uint8_t *t1, const uint8_t *t2,
+                    const uint64_t *hkey, const uint64_t *hmask,
+                    const int32_t *hlen, const uint8_t *hcode,
+                    uint8_t *stream_out, int64_t *seg_out)
 {
+    const table_t t = {t1, t2, hkey, hmask, hlen, hcode};
     int64_t o = 0;
     for (int64_t s = 0; s < n_segs; s++) {
         seg_out[s] = o;
-        int64_t p = seg_s[s];
         const int64_t end = seg_e[s];
-        while (p < end) {
-            uint64_t key8;
-            memcpy(&key8, pad + p, 8);          /* little-endian hosts */
-            const int64_t rem = end - p;
-            uint32_t h = ((uint32_t)(key8 & 0xFFFFFFu) * 2654435761u) >> 20;
-            const int32_t hl = hlen[h];
-            int64_t len;
+        for (int64_t p = seg_s[s]; p < end;) {
             uint8_t c;
-            if (hl > 0 && (key8 & hmask[h]) == hkey[h] && hl <= rem) {
-                len = hl;
-                c = hcode[h];
-            } else {
-                const uint8_t c2 = t2[key8 & 0xFFFFu];
-                if (c2 != 255 && rem >= 2) {
-                    len = 2;
-                    c = c2;
-                } else {
-                    len = 1;
-                    c = t1[key8 & 0xFFu];
-                }
-            }
+            const int64_t len = match_at(pad, p, end, t, &c);
             stream_out[o++] = c;
             if (c == 255 && len == 1)           /* escape: literal follows */
                 stream_out[o++] = pad[p];
@@ -221,7 +225,18 @@ int64_t count_grams(const uint64_t *keys, const int64_t *lens, int64_t n,
 }
 """
 
-_HASH_SHIFT_CHECK = 32 - 12  # must match fsst._HASH_BITS (shift 20 in C)
+#: every kernel's arguments in order: an array's exact numpy dtype (it
+#: must also be C-contiguous), or ``int`` for a scalar passed as int64
+_U1, _I4, _I8, _U8 = map(np.dtype, ("u1", "i4", "i8", "u8"))
+_SIGNATURES = {
+    "greedy_scan": (_U1, _I8, _I8, int, _U1, _U1, _U8, _U8, _I4, _U1,
+                    _I8, _U1),
+    "encode_scan": (_U1, _I8, _I8, int, _U1, _U1, _U8, _U8, _I4, _U1,
+                    _U1, _I8),
+    "fcode_decode": (_U1, _I8, _I8, int, _U1),
+    "decode_stream": (_U1, int, _I8, int, _U1, _I8, _I8, _U1, _I8),
+    "count_grams": (_U8, _I8, int, _U8, _I8, _I8, int, _U8, _I8, _I8),
+}
 
 lib = None
 _tried = False
@@ -241,35 +256,11 @@ def _build() -> "ctypes.CDLL | None":
             check=True, capture_output=True, timeout=60)
         os.replace(tmp_so, so_path)     # atomic: concurrent workers race safely
     dll = ctypes.CDLL(so_path)
-    i64 = ctypes.c_int64
-    p = ctypes.POINTER
-    dll.greedy_scan.argtypes = [
-        p(ctypes.c_uint8), p(i64), p(i64), i64,
-        p(ctypes.c_uint8), p(ctypes.c_uint8),
-        p(ctypes.c_uint64), p(ctypes.c_uint64),
-        p(ctypes.c_int32), p(ctypes.c_uint8),
-        p(i64), p(ctypes.c_uint8)]
-    dll.greedy_scan.restype = i64
-    dll.encode_scan.argtypes = [
-        p(ctypes.c_uint8), p(i64), p(i64), i64,
-        p(ctypes.c_uint8), p(ctypes.c_uint8),
-        p(ctypes.c_uint64), p(ctypes.c_uint64),
-        p(ctypes.c_int32), p(ctypes.c_uint8),
-        p(ctypes.c_uint8), p(i64)]
-    dll.encode_scan.restype = i64
-    dll.fcode_decode.argtypes = [
-        p(ctypes.c_uint8), p(i64), p(i64), i64, p(ctypes.c_uint8)]
-    dll.fcode_decode.restype = i64
-    dll.decode_stream.argtypes = [
-        p(ctypes.c_uint8), i64, p(i64), i64,
-        p(ctypes.c_uint8), p(i64), p(i64),
-        p(ctypes.c_uint8), p(i64)]
-    dll.decode_stream.restype = i64
-    dll.count_grams.argtypes = [
-        p(ctypes.c_uint64), p(i64), i64,
-        p(ctypes.c_uint64), p(i64), p(i64), i64,
-        p(ctypes.c_uint64), p(i64), p(i64)]
-    dll.count_grams.restype = i64
+    for name, sig in _SIGNATURES.items():
+        fn = getattr(dll, name)
+        fn.argtypes = [ctypes.c_int64 if a is int else ctypes.c_void_p
+                       for a in sig]
+        fn.restype = ctypes.c_int64
     return dll
 
 
@@ -284,119 +275,29 @@ def get_lib():
     return lib
 
 
-def greedy_scan(pad, seg_s, seg_e, t1, t2, hkey, hmask, hlen, hcode,
-                units_out, codes_out):
-    """Run the C scan into preallocated output arrays; returns the unit
-    count, or None when the kernel is unavailable (numpy path)."""
+def call(kernel: str, *args):
+    """Run one C kernel; returns its int64 result, or None when the library
+    is unavailable (the caller then takes its numpy path).
+
+    Every array must have the kernel's exact dtype and be C-contiguous:
+    a mismatch raises ``TypeError`` before any C runs, on every node, so
+    a wrong-dtype array can never be silently misread."""
+    sig = _SIGNATURES[kernel]
+    if len(args) != len(sig):
+        raise TypeError(f"{kernel}: {len(sig)} arguments, got {len(args)}")
+    cargs = []
+    for i, (a, want) in enumerate(zip(args, sig)):
+        if want is int:
+            cargs.append(int(a))
+        elif (not isinstance(a, np.ndarray) or a.dtype != want
+              or not a.flags.c_contiguous):
+            got = (f"{a.dtype}{'' if a.flags.c_contiguous else ' strided'}"
+                   if isinstance(a, np.ndarray) else type(a).__name__)
+            raise TypeError(f"{kernel} argument {i}: want a C-contiguous "
+                            f"{want} array, got {got}")
+        else:
+            cargs.append(a.ctypes.data)
     dll = get_lib()
     if dll is None:
         return None
-    cp = ctypes.POINTER
-
-    def ptr(a, ct):
-        return a.ctypes.data_as(cp(ct))
-
-    return int(dll.greedy_scan(
-        ptr(pad, ctypes.c_uint8),
-        ptr(seg_s, ctypes.c_int64), ptr(seg_e, ctypes.c_int64),
-        ctypes.c_int64(len(seg_s)),
-        ptr(t1, ctypes.c_uint8), ptr(t2, ctypes.c_uint8),
-        ptr(hkey, ctypes.c_uint64), ptr(hmask, ctypes.c_uint64),
-        ptr(hlen, ctypes.c_int32), ptr(hcode, ctypes.c_uint8),
-        ptr(units_out, ctypes.c_int64), ptr(codes_out, ctypes.c_uint8)))
-
-
-def encode_scan(pad, seg_s, seg_e, t1, t2, hkey, hmask, hlen, hcode,
-                stream_out, seg_out):
-    """Run the fused C scan+emit into preallocated buffers; returns the
-    stream length, or None when the kernel is unavailable (numpy path)."""
-    dll = get_lib()
-    if dll is None:
-        return None
-    cp = ctypes.POINTER
-
-    def ptr(a, ct):
-        return a.ctypes.data_as(cp(ct))
-
-    return int(dll.encode_scan(
-        ptr(pad, ctypes.c_uint8),
-        ptr(seg_s, ctypes.c_int64), ptr(seg_e, ctypes.c_int64),
-        ctypes.c_int64(len(seg_s)),
-        ptr(t1, ctypes.c_uint8), ptr(t2, ctypes.c_uint8),
-        ptr(hkey, ctypes.c_uint64), ptr(hmask, ctypes.c_uint64),
-        ptr(hlen, ctypes.c_int32), ptr(hcode, ctypes.c_uint8),
-        ptr(stream_out, ctypes.c_uint8), ptr(seg_out, ctypes.c_int64)))
-
-
-def fcode_decode(suffix, plens, slens, out_buf):
-    """Run the C front-coding decode; returns output bytes written, or
-    None when the kernel is unavailable (python fallback)."""
-    dll = get_lib()
-    if dll is None:
-        return None
-    cp = ctypes.POINTER
-
-    def ptr(a, ct):
-        return a.ctypes.data_as(cp(ct))
-
-    return int(dll.fcode_decode(
-        ptr(suffix, ctypes.c_uint8),
-        ptr(plens, ctypes.c_int64), ptr(slens, ctypes.c_int64),
-        ctypes.c_int64(len(plens)), ptr(out_buf, ctypes.c_uint8)))
-
-
-def decode_stream(stream, counts, sym_flat, sym_off, sym_len,
-                  out_buf, out_offsets):
-    """Run the C decode; returns total output bytes, or None when the
-    kernel is unavailable (numpy path)."""
-    dll = get_lib()
-    if dll is None:
-        return None
-    cp = ctypes.POINTER
-
-    def ptr(a, ct):
-        return a.ctypes.data_as(cp(ct))
-
-    i64 = ctypes.c_int64
-    return int(dll.decode_stream(
-        ptr(stream, ctypes.c_uint8), i64(len(stream)),
-        ptr(counts, i64), i64(len(counts)),
-        ptr(sym_flat, ctypes.c_uint8), ptr(sym_off, i64), ptr(sym_len, i64),
-        ptr(out_buf, ctypes.c_uint8), ptr(out_offsets, i64)))
-
-
-def count_grams(keys, lens):
-    """Exact (key, len) -> count via the C open-addressing counter.
-
-    Returns ``(uniq_key, uniq_len, count)`` in HASH-SLOT order (callers
-    must not depend on it — fsst.build_symbol_table re-sorts with a total
-    order), or None when the kernel is unavailable (numpy grouping path).
-    """
-    import numpy as np
-
-    dll = get_lib()
-    if dll is None or keys.size == 0:
-        return None
-    n = keys.size
-    tab_size = 1 << max(int(2 * n - 1).bit_length(), 4)
-    # only cnt marks occupancy (cnt==0 = empty): key/len slots are written
-    # before they are ever compared, so they can stay uninitialized
-    tab_key = np.empty(tab_size, dtype=np.uint64)
-    tab_len = np.empty(tab_size, dtype=np.int64)
-    tab_cnt = np.zeros(tab_size, dtype=np.int64)
-    out_key = np.empty(n, dtype=np.uint64)
-    out_len = np.empty(n, dtype=np.int64)
-    out_cnt = np.empty(n, dtype=np.int64)
-    cp = ctypes.POINTER
-
-    def ptr(a, ct):
-        return a.ctypes.data_as(cp(ct))
-
-    i64 = ctypes.c_int64
-    m = int(dll.count_grams(
-        ptr(np.ascontiguousarray(keys), ctypes.c_uint64),
-        ptr(np.ascontiguousarray(lens), i64), i64(n),
-        ptr(tab_key, ctypes.c_uint64), ptr(tab_len, i64), ptr(tab_cnt, i64),
-        i64(tab_size),
-        ptr(out_key, ctypes.c_uint64), ptr(out_len, i64), ptr(out_cnt, i64)))
-    return out_key[:m], out_len[:m], out_cnt[:m]
+    return int(getattr(dll, kernel)(*cargs))

@@ -70,17 +70,22 @@ def kind_of(typ: pa.DataType) -> str:
     raise TypeError(f"unsupported column type for codec engine: {typ}")
 
 
+def split_nulls(arr: pa.Array) -> tuple[pa.Array, Optional[np.ndarray]]:
+    """(``arr`` with each null filled by its kind's zero, validity or None
+    when there is no null) — the one null fill of an encoded block."""
+    if not arr.null_count:
+        return arr, None
+    fill = {"str": "", "int": 0, "float": 0.0, "bool": False}[kind_of(arr.type)]
+    return arr.fill_null(fill), np.asarray(arr.is_valid())
+
+
 def from_arrow(arr: pa.Array) -> tuple[ColumnData, Optional[np.ndarray]]:
     """Normalize an arrow array: returns (null-free ColumnData, validity or None)."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     arrow_type = str(arr.type)
     kind = kind_of(arr.type)
-    validity = None
-    if arr.null_count:
-        validity = np.asarray(arr.is_valid())
-        fill = {"str": "", "int": 0, "float": 0.0, "bool": False}[kind]
-        arr = arr.fill_null(fill)
+    arr, validity = split_nulls(arr)
     n = len(arr)
     if kind == KIND_STR:
         big = arr.cast(pa.large_binary()) if "binary" in arrow_type else arr.cast(pa.large_string())
@@ -199,11 +204,46 @@ def compute_stats(col: ColumnData, arr_nonnull: pa.Array) -> ColumnStats:
     return st
 
 
+#: probe gating: once the same decision wins GATE_STREAK consecutive chunks
+#: of a column stream, reuse it without probing, with a full re-probe every
+#: GATE_REPROBE-th chunk (content drift, e.g. a stripe crossing into
+#: another language's files).
+GATE_STREAK = 3
+GATE_REPROBE = 16
+
+
+@dataclass
+class ProbeGate:
+    """One probe gate over a column's chunk stream: codec selection
+    (blocks.select_codec) and fcode's suffix sub-encoding each keep one in
+    the stream's EncodeContext, so a decision stays a pure function of the
+    chunk sequence (resume/determinism intact)."""
+
+    idx: int = 0
+    last: object = None
+    streak: int = 0
+
+    def step(self) -> bool:
+        """Count one chunk; True when it may reuse ``last`` unprobed."""
+        idx = self.idx
+        self.idx += 1
+        return self.streak >= GATE_STREAK and idx % GATE_REPROBE != 0
+
+    def learn(self, decision) -> None:
+        if decision == self.last:
+            self.streak += 1
+        else:
+            self.last, self.streak = decision, 1
+
+
 @dataclass
 class EncodeContext:
-    """Per-chunk scratch shared across codec estimate/encode calls."""
+    """Per-column-stream scratch shared across codec estimate/encode calls
+    and across the stream's successive chunks."""
 
     fsst_table: Optional[object] = None
+    select_gate: ProbeGate = field(default_factory=ProbeGate, init=False)
+    sub_gate: ProbeGate = field(default_factory=ProbeGate, init=False)
     extras: dict = field(default_factory=dict)
 
 

@@ -51,16 +51,15 @@ class DictCodec(Codec):
         w = width_for(max(stats.n_unique - 1, 0))
         sub = blocks.encode_block(stats.dict_values, codec="auto",
                                   exclude=("dict", "rle"))
-        payload = len(sub).to_bytes(4, "little") + sub + pack_uints(codes.astype(np.uint64), w)
-        return {"w": w}, payload
+        return {"w": w}, blocks.pack_nested(
+            sub, pack_uints(codes.astype(np.uint64), w))
 
     def decode(self, payload: memoryview, params: dict, n: int, kind: str,
                arrow_type: str) -> ColumnData:
         from .. import blocks
 
-        sub_len = int.from_bytes(payload[:4], "little")
-        values = blocks.decode_block(payload[4:4 + sub_len])
-        codes = unpack_uints(payload[4 + sub_len:], n, params["w"]).astype(np.int64)
+        values, rest = blocks.open_nested(payload)
+        codes = unpack_uints(rest, n, params["w"]).astype(np.int64)
         out = pa.compute.take(values, pa.array(codes))
         col, _ = from_arrow(out)
         col.arrow_type = arrow_type

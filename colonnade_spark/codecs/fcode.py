@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from . import _native, fsst
 from .base import KIND_STR, Codec, ColumnData, ColumnStats, EncodeContext
 from .bitpack_util import pack_uints, unpack_uints, width_for
 
@@ -60,21 +61,12 @@ _SUB_FRESH_MIN = 262144
 #: bytes must reach this ratio before the full build is even attempted
 _SUB_PROBE_MAX = 0.70
 _SUB_PROBE_BYTES = 49152
-#: probe gating across the chunk stream (same mechanics as
-#: blocks.select_codec's sel_gate): after this many consecutive chunks
-#: agreeing on try/skip, reuse the decision; full re-probe every 16th.
-#: Gate state lives in EncodeContext (per bucket x column stream), so the
-#: decision stays a pure function of the chunk sequence (resume-safe).
-_SUB_GATE_STREAK = 3
-_SUB_GATE_REPROBE = 16
 
 
 def _sub_probe_ratio(suffix: np.ndarray, s_off: np.ndarray) -> float:
     """FSST compressibility of the suffix stream from a cheap 2-iter table
     over a byte-capped prefix of the stream (cut at a suffix boundary so
     the table's segment offsets stay representative)."""
-    from . import fsst
-
     # last boundary AT OR BELOW the cap (the insertion point itself is the
     # first boundary above it — taking that would pull in one arbitrarily
     # large suffix); always keep at least one suffix
@@ -85,9 +77,8 @@ def _sub_probe_ratio(suffix: np.ndarray, s_off: np.ndarray) -> float:
         return 1.0
     tab = fsst.build_symbol_table(sample, s_off[: hi + 1].astype(np.int64),
                                   iters=2)
-    stream, _ = fsst._encode_stream(
-        sample, np.array([0, sample.size], dtype=np.int64), tab)
-    return max(stream.size / sample.size, 0.05)
+    return max(fsst.encoded_ratio(
+        sample, np.array([0, sample.size], dtype=np.int64), tab), 0.05)
 
 
 def _prefix_lens(data: np.ndarray, offsets: np.ndarray,
@@ -180,16 +171,12 @@ class FrontCodeCodec(Codec):
                 if base >= _SUB_PROBE_BYTES:
                     break
             sample = np.concatenate(subs) if subs else np.zeros(0, np.uint8)
-            cached = ctx.extras.get("fcode_sub_tab") if ctx is not None \
-                else None
+            cached = ctx.extras.get("fcode_sub_tab")
             if cached is not None and sample.size >= 2048:
                 # the stream's live table prices the sample for ~free
-                from . import fsst
-
-                stream, _ = fsst._encode_stream(
+                ratio = max(fsst.encoded_ratio(
                     sample, np.array([0, sample.size], dtype=np.int64),
-                    cached)
-                ratio = max(stream.size / sample.size, 0.05)
+                    cached), 0.05)
             else:
                 ratio = _sub_probe_ratio(sample,
                                          np.asarray(soffs, dtype=np.int64))
@@ -219,30 +206,25 @@ class FrontCodeCodec(Codec):
             # by the _SUB_MARGIN — a pure function of chunk content
             # (determinism/resume safe) — and the full build is only
             # attempted when a cheap 2-iter sample probe clears
-            # _SUB_PROBE_MAX (probe itself gated across the ctx stream,
-            # sel_gate mechanics, so steady-state chunks pay nothing).
-            from . import fsst
-
+            # _SUB_PROBE_MAX (the try/skip decision itself gated across the
+            # stream by ctx.sub_gate, so steady-state chunks pay nothing).
             s_off = np.zeros(col.n + 1, dtype=np.int64)
             np.cumsum(slens, out=s_off[1:])
             flat = np.array([0, suffix.size], dtype=np.int64)
             big = suffix.size >= _SUB_FRESH_MIN
 
             def hybrid_size(tab, stream) -> int:
-                return (stream.size + 1 + len(tab.symbols)
-                        + sum(map(len, tab.symbols)))
+                return stream.size + len(fsst.pack_table(tab))
 
             def emit(tab, stream) -> bool:
                 if hybrid_size(tab, stream) >= suffix.size * _SUB_MARGIN:
                     return False
                 params["f"] = 1
-                parts.extend([bytes([len(tab.symbols)]),
-                              bytes(len(s) for s in tab.symbols),
-                              b"".join(tab.symbols), stream.tobytes()])
+                parts.extend([fsst.pack_table(tab), stream.tobytes()])
                 return True
 
             drifted = False
-            if not big and ctx is not None:
+            if not big:
                 # small stream: a cached table that still clears the margin
                 # skips the build entirely (the table is embedded per block,
                 # so decode never depends on the cache)
@@ -252,15 +234,8 @@ class FrontCodeCodec(Codec):
                     if emit(cached, stream):
                         return params, b"".join(parts)
                     drifted = True
-            gate = None
-            if ctx is not None:
-                gate = ctx.extras.setdefault(
-                    "fcode_sub_gate", {"idx": 0, "last": None, "streak": 0})
-                idx = gate["idx"]
-                gate["idx"] = idx + 1
-            if (gate is not None and gate["streak"] >= _SUB_GATE_STREAK
-                    and idx % _SUB_GATE_REPROBE != 0):
-                attempt = gate["last"]
+            if ctx.sub_gate.step():
+                attempt = ctx.sub_gate.last
             else:
                 # big streams pre-gate with a byte-capped 2-iter probe; for
                 # small streams the 2-iter build IS the attempt (same cost)
@@ -290,16 +265,12 @@ class FrontCodeCodec(Codec):
                     if hybrid_size(tab2, stream2) <= hybrid_size(tab, stream):
                         tab, stream = tab2, stream2
                 won = emit(tab, stream)
-                if ctx is not None and not big:
+                if not big:
                     # big chunks never touch the small-stream cache: chunk
                     # sizes oscillating around _SUB_FRESH_MIN (batch splits
                     # are partitioning-dependent) must not wipe a winner
                     ctx.extras["fcode_sub_tab"] = tab if won else None
-            if gate is not None:
-                if won == gate["last"]:
-                    gate["streak"] += 1
-                else:
-                    gate["last"], gate["streak"] = won, 1
+            ctx.sub_gate.learn(won)
             if won:
                 return params, b"".join(parts)
         parts.append(suffix.tobytes())
@@ -307,8 +278,6 @@ class FrontCodeCodec(Codec):
 
     def decode(self, payload: memoryview, params: dict, n: int, kind: str,
                arrow_type: str) -> ColumnData:
-        from . import _native
-
         buf = np.frombuffer(payload, dtype=np.uint8)
         pw, sw = int(buf[0]), int(buf[1])
         p = 2
@@ -318,34 +287,18 @@ class FrontCodeCodec(Codec):
         sb = (n * sw + 7) // 8
         slens = unpack_uints(buf[p: p + sb], n, sw).astype(np.int64)
         p += sb
+        suffix = buf[p:]
         if params.get("f"):
-            # FSST-compressed suffix stream: [n_sym][sym_lens][sym_bytes]
-            # [stream]; decode flat (one segment), slens splits the strings
-            from . import fsst
-
-            n_sym = int(buf[p]); p += 1
-            sym_lens = buf[p: p + n_sym].astype(np.int64)
-            p += n_sym
-            sym_total = int(sym_lens.sum())
-            sym_bytes = buf[p: p + sym_total]
-            p += sym_total
-            so = np.concatenate(([0], np.cumsum(sym_lens)))
-            symbols = [sym_bytes[int(so[i]): int(so[i + 1])].tobytes()
-                       for i in range(n_sym)]
-            stream = np.ascontiguousarray(buf[p:])
-            table = fsst.SymbolTable(symbols).finalize()
+            # FSST-compressed suffix stream: a packed table, then the
+            # stream; decode flat (one segment), slens splits the strings
+            table, p = fsst.unpack_table(buf, p)
             suffix, _ = fsst._decode_stream(
-                stream, np.array([stream.size], dtype=np.int64), table)
-            suffix = np.ascontiguousarray(suffix)
-        else:
-            suffix = np.ascontiguousarray(buf[p:])
+                buf[p:], np.array([buf.size - p], dtype=np.int64), table)
         total = int(plens.sum() + slens.sum())
         offsets = np.zeros(n + 1, dtype=np.int64)
         np.cumsum(plens + slens, out=offsets[1:])
         out = np.empty(total, dtype=np.uint8)
-        done = _native.fcode_decode(suffix, np.ascontiguousarray(plens),
-                                    np.ascontiguousarray(slens), out)
-        if done is None:
+        if _native.call("fcode_decode", suffix, plens, slens, n, out) is None:
             # python fallback: sequential by definition; bytes slicing
             # keeps the per-row work in C even here
             s_off = np.concatenate(([0], np.cumsum(slens)))

@@ -28,11 +28,11 @@ when clean, escape otherwise): FSST's escape byte generalizes CSV quoting.
 from __future__ import annotations
 
 import zlib
-from dataclasses import dataclass, field
-from typing import Optional
+from dataclasses import dataclass
 
 import numpy as np
 
+from . import _native
 from .base import KIND_STR, Codec, ColumnData, ColumnStats, EncodeContext
 from .bitpack_util import pack_uints, unpack_uints, width_for
 
@@ -54,8 +54,7 @@ _WAVE_TARGET = 4096
 _FULL_BUILD_MIN_BYTES = 1 << 18
 
 
-_M64 = (1 << 64) - 1
-_HASH_BITS = 12
+_HASH_BITS = 12      # _native.match_at hardcodes the shift 32 - 12
 _HASH_SIZE = 1 << _HASH_BITS
 _HASH_MULT32 = 2654435761  # Knuth 32-bit multiplicative hash
 
@@ -65,35 +64,38 @@ class SymbolTable:
     """Symbol table with the FSST paper's lossy-perfect-hash lookup:
     direct tables for 1- and 2-byte symbols, a single-candidate hash on the
     3-byte prefix for 3..8-byte symbols (collisions drop the lower-gain
-    symbol — lossy for compression, never for correctness)."""
+    symbol — lossy for compression, never for correctness).
+
+    ``finalize`` derives everything else once: the per-code lengths
+    (``sym_len``, 0 past the last code; ``unit_len``, 1 for an escape) and
+    offsets into the flat symbol bytes, the lookup tables of the scan
+    (``scan_tables``, in C argument order) and their one-record-per-slot
+    form for the numpy wave loop."""
 
     symbols: list  # list[bytes], each 1..MAX_LEN bytes, index = code
-    _t1: Optional[np.ndarray] = None
-    _t2: Optional[np.ndarray] = None
-    _slot: Optional[np.ndarray] = None
-    _hkey: Optional[np.ndarray] = None
-    _hmask: Optional[np.ndarray] = None
-    _hlen: Optional[np.ndarray] = None
-    _hcode: Optional[np.ndarray] = None
 
     def finalize(self) -> "SymbolTable":
+        n = len(self.symbols)
+        lens = np.array([len(s) for s in self.symbols], dtype=np.int64)
+        self.sym_flat = np.frombuffer(b"".join(self.symbols), dtype=np.uint8)
+        self.sym_len = np.zeros(256, dtype=np.int64)
+        self.sym_len[:n] = lens
+        self.sym_off = np.zeros(256, dtype=np.int64)
+        self.sym_off[:n] = np.cumsum(lens) - lens
+        self.unit_len = np.maximum(self.sym_len, 1)
         t1 = np.full(256, ESCAPE, dtype=np.uint8)
         t2 = np.full(1 << 16, ESCAPE, dtype=np.uint8)
-        # one structured record per hash slot → a single gather per wave
-        slot = np.zeros(_HASH_SIZE,
-                        dtype=[("key", "<u8"), ("mask", "<u8"),
-                               ("len", "<i4"), ("code", "u1")])
-        hkey, hmask = slot["key"], slot["mask"]
-        hlen, hcode = slot["len"], slot["code"]
+        hkey = np.zeros(_HASH_SIZE, dtype=np.uint64)
+        hmask = np.zeros(_HASH_SIZE, dtype=np.uint64)
+        hlen = np.zeros(_HASH_SIZE, dtype=np.int32)
+        hcode = np.zeros(_HASH_SIZE, dtype=np.uint8)
         # vectorized first-wins inserts (symbols are gain-desc; finalize
-        # runs once per BUILD ITERATION, so the old 255-step python loop
-        # was a measurable slice of every table build): numpy fancy
+        # runs once per BUILD ITERATION, so a 255-step python loop would
+        # be a measurable slice of every table build): numpy fancy
         # assignment keeps the LAST write per index, so feeding the
-        # symbols REVERSED makes the first (highest-gain) one win —
-        # identical to the loop's if-empty-insert rule.
-        if self.symbols:
-            lens = np.array([len(s) for s in self.symbols], dtype=np.int64)
-            codes = np.arange(len(self.symbols), dtype=np.uint8)
+        # symbols REVERSED makes the first (highest-gain) one win.
+        if n:
+            codes = np.arange(n, dtype=np.uint8)
             keys = np.frombuffer(
                 b"".join(s.ljust(MAX_LEN, b"\0") for s in self.symbols),
                 dtype="<u8")
@@ -124,23 +126,51 @@ class SymbolTable:
                 hmask[hr] = masks[::-1]
                 hlen[hr] = l3[::-1].astype(np.int32)
                 hcode[hr] = c3[::-1]
-        self._t1, self._t2 = t1, t2
-        self._slot = slot
-        self._hkey, self._hmask, self._hlen, self._hcode = hkey, hmask, hlen, hcode
-        # contiguous copies for the optional C kernel (the structured-array
-        # fields above are strided views; ctypes needs packed buffers)
-        self._c_hkey = np.ascontiguousarray(hkey)
-        self._c_hmask = np.ascontiguousarray(hmask)
-        self._c_hlen = np.ascontiguousarray(hlen)
-        self._c_hcode = np.ascontiguousarray(hcode)
+        self.scan_tables = (t1, t2, hkey, hmask, hlen, hcode)
+        # one structured record per hash slot → a single gather per wave
+        self.slot = np.empty(_HASH_SIZE,
+                             dtype=[("key", "<u8"), ("mask", "<u8"),
+                                    ("len", "<i4"), ("code", "u1")])
+        self.slot["key"], self.slot["mask"] = hkey, hmask
+        self.slot["len"], self.slot["code"] = hlen, hcode
         return self
 
-    def lens_array(self) -> np.ndarray:
-        """len-by-code lookup, 256 wide; escape slot maps to 1."""
-        out = np.ones(256, dtype=np.int64)
-        for code, s in enumerate(self.symbols):
-            out[code] = len(s)
-        return out
+
+def pack_table(table: SymbolTable) -> bytes:
+    """``[n_sym u8][n_sym length bytes][symbol bytes]``: the one table
+    layout, in fsst payloads and in fcode's FSST suffix sub-encoding."""
+    n = len(table.symbols)
+    return b"".join([bytes([n]), table.sym_len[:n].astype(np.uint8).tobytes(),
+                     table.sym_flat.tobytes()])
+
+
+def unpack_table(buf: np.ndarray, p: int) -> tuple[SymbolTable, int]:
+    """Read a :func:`pack_table` layout at ``buf[p:]``: (finalized table,
+    position after it)."""
+    n = int(buf[p])
+    lens = buf[p + 1: p + 1 + n].astype(np.int64)
+    ends = p + 1 + n + np.cumsum(lens)
+    symbols = [buf[e - l: e].tobytes()
+               for e, l in zip(ends.tolist(), lens.tolist())]
+    return SymbolTable(symbols).finalize(), p + 1 + n + int(lens.sum())
+
+
+def _padded(data: np.ndarray) -> np.ndarray:
+    """``data`` zero-padded to a multiple of 8 bytes with >= 8 spare, so an
+    unaligned 8-byte load at any byte position stays in bounds."""
+    pad = np.zeros(((data.size + MAX_LEN + 15) // 8) * 8, dtype=np.uint8)
+    pad[:data.size] = data
+    return pad
+
+
+def _u64_at(pad: np.ndarray) -> np.ndarray:
+    """The little-endian u64 at every byte offset of a :func:`_padded`
+    buffer, as ONE byte-strided view (as_strided strides are in bytes, so
+    strides=(1,) overlays a u64 at each offset — unaligned loads the
+    hardware does natively): a gather through it reads 8 bytes per cursor
+    in one fancy-index."""
+    return np.lib.stride_tricks.as_strided(
+        pad.view("<u8"), shape=(pad.size - 8,), strides=(1,))
 
 
 def _seg_for(nbytes: int) -> int:
@@ -192,40 +222,21 @@ def _greedy_encode(data: np.ndarray, offsets: np.ndarray, table: SymbolTable
     if n == 0:
         return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.uint8)
     seg_s, seg_e = _segment_bounds(offsets, _seg_for(n))
-    # zero-padded buffer, length a multiple of 8; the little-endian 8-byte
-    # key at byte p is read by ONE gather through a byte-strided u64 view
-    # (as_strided strides are in bytes, so strides=(1,) overlays a u64 at
-    # every byte offset — unaligned loads the hardware does natively).
-    # This replaces the old shift-and-or reconstruction (~10 numpy kernels
-    # per wave) with a single fancy-index, the dominant per-wave dispatch
-    # cost at the cache-friendly 4096-cursor wave size.
-    n_pad = ((n + MAX_LEN + 15) // 8) * 8
-    pad = np.zeros(n_pad, dtype=np.uint8)
-    pad[:n] = data
-    # optional C fast path (codecs/_native.py): identical matching rules,
-    # byte-identical output (CRC-asserted in tests); falls back to the
-    # numpy wave loop below when no compiler/library is available.  The C
-    # source hardcodes the hash shift for _HASH_BITS == 12.  Units emit
-    # directly (ascending: segments are start-ordered), skipping the
-    # code_at scatter + flatnonzero passes entirely.
-    assert _HASH_BITS == 12
-    from . import _native
-    units_out = np.empty(n, dtype=np.int64)
-    codes_out = np.empty(n, dtype=np.uint8)
-    k = _native.greedy_scan(pad, np.ascontiguousarray(seg_s),
-                            np.ascontiguousarray(seg_e),
-                            table._t1, table._t2,
-                            table._c_hkey, table._c_hmask,
-                            table._c_hlen, table._c_hcode,
-                            units_out, codes_out)
-    if k is not None:
-        return units_out[:k], codes_out[:k]
+    pad = _padded(data)
+    if _native.get_lib() is not None:
+        # C fast path (codecs/_native.py): the same match rule, units
+        # emitted directly (ascending: segments are start-ordered)
+        units = np.empty(n, dtype=np.int64)
+        codes = np.empty(n, dtype=np.uint8)
+        k = _native.call("greedy_scan", pad, seg_s, seg_e, seg_s.size,
+                         *table.scan_tables, units, codes)
+        return units[:k], codes[:k]
     # numpy wave fallback: one int16 scatter per wave fuses the
     # taken-bitmap and code stores (-1 = no unit starts here); codes are
     # re-narrowed to u8 at the end.
     code_at = np.full(n, -1, dtype=np.int16)
-    u64v = np.lib.stride_tricks.as_strided(
-        pad.view("<u8"), shape=(n_pad - 8,), strides=(1,))
+    u64v = _u64_at(pad)
+    t1, t2 = table.scan_tables[:2]
     n_segs = seg_s.size
     target = _WAVE_TARGET
     seg_ptr = 0
@@ -245,14 +256,14 @@ def _greedy_encode(data: np.ndarray, offsets: np.ndarray, table: SymbolTable
         rem = end - cur
         # 1-byte (default len 1; ESCAPE when no symbol).  Unsigned astype
         # truncates mod 2^k — the low byte / low 2 bytes without an AND.
-        c1 = table._t1[key8.astype(np.uint8)]
+        c1 = t1[key8.astype(np.uint8)]
         # 2-byte (u16 direct-table index)
-        c2 = table._t2[key8.astype(np.uint16)]
+        c2 = t2[key8.astype(np.uint16)]
         ok2 = (c2 != ESCAPE) & (rem >= 2)
         # 3..8-byte via prefix hash: one structured gather per wave
         h = ((key8.astype(np.uint32) & np.uint32(0xFFFFFF))
              * np.uint32(_HASH_MULT32)) >> np.uint32(32 - _HASH_BITS)
-        s = table._slot[h]
+        s = table.slot[h]
         ll = s["len"]
         ok3 = (ll > 0) & ((key8 & s["mask"]) == s["key"]) & (rem >= ll)
         length = np.where(ok3, ll.astype(np.int64), 1 + ok2)
@@ -276,27 +287,15 @@ def _encode_stream(data: np.ndarray, offsets: np.ndarray, table: SymbolTable
     one searchsorted of the string offsets into the segment starts (every
     non-empty string start is a segment start).  Byte-identical to the
     numpy path (same matching rules; CRC-asserted in tests)."""
-    from . import _native
-
     n = int(data.size)
     if n and _native.get_lib() is not None:
-        assert _HASH_BITS == 12
         seg_s, seg_e = _segment_bounds(offsets, _seg_for(n))
-        n_pad = ((n + MAX_LEN + 15) // 8) * 8
-        pad = np.zeros(n_pad, dtype=np.uint8)
-        pad[:n] = data
-        stream_buf = np.empty(2 * n, dtype=np.uint8)   # all-escape worst case
-        seg_out = np.empty(len(seg_s) + 1, dtype=np.int64)
-        total = _native.encode_scan(pad, np.ascontiguousarray(seg_s),
-                                    np.ascontiguousarray(seg_e),
-                                    table._t1, table._t2,
-                                    table._c_hkey, table._c_hmask,
-                                    table._c_hlen, table._c_hcode,
-                                    stream_buf, seg_out)
-        if total is not None:
-            ks = np.searchsorted(seg_s, offsets)
-            counts = seg_out[ks[1:]] - seg_out[ks[:-1]]
-            return stream_buf[:total], counts
+        stream = np.empty(2 * n, dtype=np.uint8)   # all-escape worst case
+        seg_out = np.empty(seg_s.size + 1, dtype=np.int64)
+        total = _native.call("encode_scan", _padded(data), seg_s, seg_e,
+                             seg_s.size, *table.scan_tables, stream, seg_out)
+        ks = np.searchsorted(seg_s, offsets)
+        return stream[:total], seg_out[ks[1:]] - seg_out[ks[:-1]]
     units, codes = _greedy_encode(data, offsets, table)
     esc = codes == ESCAPE
     out_len = np.where(esc, 2, 1).astype(np.int64)
@@ -310,6 +309,14 @@ def _encode_stream(data: np.ndarray, offsets: np.ndarray, table: SymbolTable
     b = np.searchsorted(units, offsets)
     counts = out_off[b[1:]] - out_off[b[:-1]]
     return stream, counts
+
+
+def encoded_ratio(data: np.ndarray, offsets: np.ndarray,
+                  table: SymbolTable) -> float:
+    """Encoded / raw bytes of the strings under ``table`` (1.0 if empty)."""
+    if offsets[-1] == 0:
+        return 1.0
+    return _encode_stream(data, offsets, table)[0].size / int(offsets[-1])
 
 
 def _classify_stream(stream: np.ndarray) -> np.ndarray:
@@ -336,38 +343,23 @@ def _classify_stream(stream: np.ndarray) -> np.ndarray:
 def _decode_stream(stream: np.ndarray, counts: np.ndarray, table: SymbolTable
                    ) -> tuple[np.ndarray, np.ndarray]:
     """Inverse of _encode_stream → (data bytes, offsets)."""
-    from . import _native
-
     n_strings = counts.size
     if _native.get_lib() is not None:
         # C fast path: one sequential pass (escape consumes the next byte,
         # codes copy their symbol) — byte-identical to the numpy
         # run-analysis path below, equality-tested in test_codecs.
-        sym_off256 = np.zeros(256, dtype=np.int64)
-        sym_len256 = np.zeros(256, dtype=np.int64)
-        lens = np.array([len(s) for s in table.symbols], dtype=np.int64)
-        if lens.size:
-            sym_off256[:lens.size] = np.concatenate(([0], np.cumsum(lens[:-1])))
-            sym_len256[:lens.size] = lens
-        sym_flat = np.frombuffer(b"".join(table.symbols), dtype=np.uint8) \
-            if table.symbols else np.zeros(0, dtype=np.uint8)
         out_buf = np.empty(int(stream.size) * MAX_LEN + 16, dtype=np.uint8)
         out_off = np.empty(n_strings + 1, dtype=np.int64)
-        total = _native.decode_stream(
-            np.ascontiguousarray(stream), np.ascontiguousarray(
-                counts, dtype=np.int64),
-            np.ascontiguousarray(sym_flat), sym_off256, sym_len256,
-            out_buf, out_off)
-        if total is not None:
-            return out_buf[:total], out_off
-    lens_by_code = table.lens_array()
-    sym_flat = np.frombuffer(b"".join(table.symbols), dtype=np.uint8)
-    sym_off = np.concatenate(([0], np.cumsum([len(s) for s in table.symbols]))).astype(np.int64)
+        total = _native.call("decode_stream", stream, stream.size, counts,
+                             n_strings, table.sym_flat, table.sym_off,
+                             table.sym_len, out_buf, out_off)
+        return out_buf[:total], out_off
+    sym_flat, sym_off = table.sym_flat, table.sym_off
     lit_mask = _classify_stream(stream)
     units = np.flatnonzero(~lit_mask)
     is_esc = stream[units] == ESCAPE
     codes = stream[units].astype(np.int64)
-    out_lens = np.where(is_esc, 1, lens_by_code[codes])
+    out_lens = table.unit_len[codes]
     # variable-length gather: source = sym_flat ++ stream (escapes read stream[pos+1])
     src = np.concatenate((sym_flat, stream))
     src_start = np.where(is_esc, sym_flat.size + units + 1,
@@ -401,13 +393,7 @@ def _gram_keys(data: np.ndarray, pos: np.ndarray, lens: np.ndarray
     bit-identical to the old 8-pass masked shift/or loop (byteswap of the
     little-endian load is b0<<56|..|b7; >> 8*(8-L) keeps b0..b_{L-1}, the
     big-endian L-gram), ~7x fewer kernel dispatches."""
-    n = data.size
-    n_pad = ((n + MAX_LEN + 15) // 8) * 8
-    pad = np.zeros(n_pad, dtype=np.uint8)
-    pad[:n] = data
-    u64v = np.lib.stride_tricks.as_strided(
-        pad.view("<u8"), shape=(n_pad - 8,), strides=(1,))
-    k = u64v[pos].byteswap()
+    k = _u64_at(_padded(data))[pos].byteswap()
     return k >> ((np.uint64(MAX_LEN) - lens.astype(np.uint64))
                  << np.uint64(3))
 
@@ -419,31 +405,50 @@ def stratified_sample(data: np.ndarray, offsets: np.ndarray,
     A prefix sample is biased when the chunk is key-sorted (the normal case:
     staging sorts by key, so a prefix is one repo/language) — symbols tuned
     to the prefix made the rest of the chunk escape-expand.  Spacing the
-    sample across the whole chunk keeps the table representative."""
+    sample across the whole chunk keeps the table representative.
+
+    Each sampled string contributes at most its first ``budget`` bytes, so
+    a chunk of a few MiB-sized strings samples ~budget bytes too, not
+    whole strings."""
     n = len(offsets) - 1
     total = int(offsets[-1])
-    if total <= budget or n <= 1:
+    if total <= budget:
         return data, offsets
     avg = max(total / n, 1.0)
     want = max(int(budget / avg), 2)
     idx = np.unique(np.linspace(0, n - 1, num=min(want, n)).astype(np.int64))
-    lens = np.diff(offsets)[idx]
-    keep = int(np.searchsorted(np.cumsum(lens), budget, side="right")) + 1
-    idx = idx[:max(keep, 2)]
-    lens = np.diff(offsets)[idx]
+    lens = np.minimum(np.diff(offsets)[idx], budget)
+    keep = max(int(np.searchsorted(np.cumsum(lens), budget,
+                                   side="right")) + 1, 2)
+    idx, lens = idx[:keep], lens[:keep]
     new_off = np.concatenate(([0], np.cumsum(lens))).astype(np.int64)
     out = np.empty(int(new_off[-1]), dtype=np.uint8)
     for k, s in enumerate(idx):  # few hundred slices, cheap
-        out[int(new_off[k]): int(new_off[k + 1])] = \
-            data[int(offsets[s]): int(offsets[s + 1])]
+        lo = int(offsets[s])
+        out[int(new_off[k]): int(new_off[k + 1])] = data[lo: lo + int(lens[k])]
     return out, new_off
+
+
+def _count_grams(keys: np.ndarray, lens: np.ndarray
+                 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(unique key, len, count) through the C open-addressing counter, in
+    HASH-SLOT order (build_symbol_table re-sorts with a total order)."""
+    n = keys.size
+    tab_size = 1 << max(int(2 * n - 1).bit_length(), 4)
+    # only cnt marks occupancy (cnt==0 = empty): key/len slots are written
+    # before they are ever compared, so they can stay uninitialized
+    tab = (np.empty(tab_size, dtype=np.uint64),
+           np.empty(tab_size, dtype=np.int64),
+           np.zeros(tab_size, dtype=np.int64))
+    out = (np.empty(n, dtype=np.uint64), np.empty(n, dtype=np.int64),
+           np.empty(n, dtype=np.int64))
+    m = _native.call("count_grams", keys, lens, n, *tab, tab_size, *out)
+    return out[0][:m], out[1][:m], out[2][:m]
 
 
 def build_symbol_table(data: np.ndarray, offsets: np.ndarray,
                        iters: int = BUILD_ITERS) -> SymbolTable:
     """Bottom-up table construction on a stratified sample of the chunk."""
-    from . import _native
-
     data, offsets = stratified_sample(data, offsets)
     table = SymbolTable([]).finalize()
     # must match the seg _greedy_encode picks for this (sampled) data size,
@@ -453,7 +458,7 @@ def build_symbol_table(data: np.ndarray, offsets: np.ndarray,
         units, codes = _greedy_encode(data, offsets, table)
         if units.size == 0:
             break
-        ulen = table.lens_array()[codes]
+        ulen = table.unit_len[codes]
         # candidate grams: every unit, plus adjacent-unit concatenations <= 8B
         # (units tile each segment, so a pair's bytes are contiguous at pos_i)
         sid = np.searchsorted(seg_s, units, side="right") - 1
@@ -469,8 +474,9 @@ def build_symbol_table(data: np.ndarray, offsets: np.ndarray,
         # dedup needed (a right-aligned big-endian u64 + its length IS the
         # gram).  C counter when available (open addressing, hash-slot
         # output order), numpy sort-group fallback (sorted output order).
-        res = _native.count_grams(keys, lens64)
-        if res is None:
+        if _native.get_lib() is not None:
+            uk, ul, cnt = _count_grams(keys, lens64)
+        else:
             grp = np.lexsort((lens64, keys))
             ks, ls = keys[grp], lens64[grp]
             starts = np.concatenate(
@@ -478,8 +484,6 @@ def build_symbol_table(data: np.ndarray, offsets: np.ndarray,
                                      | (ls[1:] != ls[:-1])) + 1))
             uk, ul = ks[starts], ls[starts]
             cnt = np.diff(np.concatenate((starts, [ks.size])))
-        else:
-            uk, ul, cnt = res
         gain = cnt * ul
         # the two counting paths emit different ORDERS; symbol selection
         # must be order-independent so a mixed fleet (some workers without
@@ -529,14 +533,7 @@ class FsstCodec(Codec):
         memo = ctx.extras.get("fsst_chunk")
         if memo is not None and memo[0] == chunk_key:
             return memo[1]
-        probe, poff = stratified_sample(col.data, col.offsets, budget=8192)
-
-        def ratio_of(table):
-            if poff[-1] == 0:
-                return 1.0
-            stream, _ = _encode_stream(probe, poff, table)
-            return stream.size / int(poff[-1])
-
+        probe = stratified_sample(col.data, col.offsets, budget=8192)
         # table reuse economics, re-measured after the C encode_scan made
         # the encode itself cheap (fsst.py history: probe-gated reuse was
         # right when numpy encode dominated):
@@ -553,7 +550,7 @@ class FsstCodec(Codec):
         # Pure function of chunk size + content → deterministic.
         if total < _FULL_BUILD_MIN_BYTES:
             if ctx.fsst_table is not None:
-                r = ratio_of(ctx.fsst_table)
+                r = encoded_ratio(*probe, ctx.fsst_table)
                 if r <= ctx.extras.get("fsst_probe_ratio", 1.0) * 1.25 + 0.02:
                     ctx.extras["fsst_chunk"] = (chunk_key, ctx.fsst_table)
                     return ctx.fsst_table
@@ -562,13 +559,9 @@ class FsstCodec(Codec):
             iters = BUILD_ITERS
         ctx.fsst_table = build_symbol_table(col.data, col.offsets,
                                             iters=iters)
-        ctx.extras["fsst_probe_ratio"] = ratio_of(ctx.fsst_table)
-        sample, soff = stratified_sample(col.data, col.offsets)
-        if soff[-1] == 0:
-            ctx.extras["fsst_ratio"] = 1.0
-        else:
-            stream, _ = _encode_stream(sample, soff, ctx.fsst_table)
-            ctx.extras["fsst_ratio"] = stream.size / int(soff[-1])
+        ctx.extras["fsst_probe_ratio"] = encoded_ratio(*probe, ctx.fsst_table)
+        ctx.extras["fsst_ratio"] = encoded_ratio(
+            *stratified_sample(col.data, col.offsets), ctx.fsst_table)
         ctx.extras["fsst_chunk"] = (chunk_key, ctx.fsst_table)
         return ctx.fsst_table
 
@@ -581,7 +574,7 @@ class FsstCodec(Codec):
         if stats.dict_codes is not None and stats.n_unique * 20 < col.n:
             return stats.total_bytes + 4096
         table = self._table(col, ctx)
-        table_bytes = 2 + len(table.symbols) + sum(len(s) for s in table.symbols)
+        table_bytes = len(pack_table(table)) + 1      # + the count width
         cw_bytes = (col.n * 24 + 7) // 8  # pessimistic count width
         return int(ctx.extras.get("fsst_ratio", 1.0) * stats.total_bytes) \
             + table_bytes + cw_bytes
@@ -590,29 +583,18 @@ class FsstCodec(Codec):
         table = self._table(col, ctx)
         stream, counts = _encode_stream(col.data, col.offsets, table)
         cw = width_for(int(counts.max())) if counts.size else 0
-        sym_lens = bytes(len(s) for s in table.symbols)
-        parts = [bytes([len(table.symbols)]), sym_lens,
-                 b"".join(table.symbols),
-                 bytes([cw]), pack_uints(counts.astype(np.uint64), cw),
-                 stream.tobytes()]
+        parts = [pack_table(table), bytes([cw]),
+                 pack_uints(counts.astype(np.uint64), cw), stream.tobytes()]
         return {}, b"".join(parts)
 
     def decode(self, payload: memoryview, params: dict, n: int, kind: str,
                arrow_type: str) -> ColumnData:
         buf = np.frombuffer(payload, dtype=np.uint8)
-        n_sym = int(buf[0])
-        sym_lens = buf[1:1 + n_sym].astype(np.int64)
-        p = 1 + n_sym
-        sym_total = int(sym_lens.sum())
-        sym_bytes = buf[p: p + sym_total]
-        p += sym_total
-        soff = np.concatenate(([0], np.cumsum(sym_lens)))
-        symbols = [sym_bytes[int(soff[i]): int(soff[i + 1])].tobytes() for i in range(n_sym)]
+        table, p = unpack_table(buf, 0)
         cw = int(buf[p]); p += 1
         cnt_bytes = (n * cw + 7) // 8
         counts = unpack_uints(buf[p: p + cnt_bytes], n, cw).astype(np.int64)
         p += cnt_bytes
         stream = buf[p:]
-        table = SymbolTable(symbols).finalize()
         data, offsets = _decode_stream(stream, counts, table)
         return ColumnData(kind, n, arrow_type, data=data, offsets=offsets)

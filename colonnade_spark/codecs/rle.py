@@ -43,18 +43,16 @@ class RleCodec(Codec):
         run_vals = pa.compute.take(stats.dict_values, pa.array(codes[starts]))
         sub = blocks.encode_block(run_vals, codec="auto", exclude=("rle",))
         lw = width_for(int(run_lens.max()))
-        payload = (len(sub).to_bytes(4, "little") + sub
-                   + pack_uints(run_lens.astype(np.uint64), lw))
-        return {"r": len(starts), "lw": lw}, payload
+        return {"r": len(starts), "lw": lw}, blocks.pack_nested(
+            sub, pack_uints(run_lens.astype(np.uint64), lw))
 
     def decode(self, payload: memoryview, params: dict, n: int, kind: str,
                arrow_type: str) -> ColumnData:
         from .. import blocks
 
-        sub_len = int.from_bytes(payload[:4], "little")
-        values = blocks.decode_block(payload[4:4 + sub_len])
+        values, rest = blocks.open_nested(payload)
         r = params["r"]
-        run_lens = unpack_uints(payload[4 + sub_len:], r, params["lw"]).astype(np.int64)
+        run_lens = unpack_uints(rest, r, params["lw"]).astype(np.int64)
         idx = np.repeat(np.arange(r, dtype=np.int64), run_lens)
         out = pa.compute.take(values, pa.array(idx))
         col, _ = from_arrow(out)

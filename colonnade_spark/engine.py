@@ -739,8 +739,17 @@ def encode_table(spark, df, plan: EncodePlan, warehouse: str, *,
         "task_wall_sec": round(encoded_stats[4], 3),
         "fingerprint": fingerprint,
     }
-    with open(manifest_path, "w") as f:
-        json.dump(manifest, f, indent=1)
+    # atomic publish, as for blocks and lineage: a kill mid-write leaves
+    # the previous manifest, never a torn one
+    tmp = os.path.join(warehouse,
+                       f"_tmp_manifest_{os.getpid()}_{uuid.uuid4().hex[:8]}.json")
+    try:
+        with open(tmp, "w") as f:
+            json.dump(manifest, f, indent=1)
+        os.replace(tmp, manifest_path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
     return manifest
 
 

@@ -490,12 +490,12 @@ def test_fsst_native_and_numpy_paths_identical():
     table = fsst.build_symbol_table(col.data, col.offsets)
     u1, c1 = fsst._greedy_encode(col.data, col.offsets, table)
 
-    real = _native.greedy_scan
+    real = _native.get_lib
     try:
-        _native.greedy_scan = lambda *a, **k: None       # force numpy path
+        _native.get_lib = lambda: None                   # force numpy path
         u2, c2 = fsst._greedy_encode(col.data, col.offsets, table)
     finally:
-        _native.greedy_scan = real
+        _native.get_lib = real
     assert np.array_equal(u1, u2) and np.array_equal(c1, c2)
     if _native.get_lib() is None:
         return
@@ -503,6 +503,88 @@ def test_fsst_native_and_numpy_paths_identical():
     stream, counts = fsst._encode_stream(col.data, col.offsets, table)
     d, o = fsst._decode_stream(stream, counts, table)
     assert np.array_equal(d, col.data) and np.array_equal(o, col.offsets)
+
+
+def test_fsst_build_sample_is_bounded_for_giant_strings(monkeypatch):
+    """The table build samples at most ``budget`` bytes of each string: a
+    chunk of ONE 4 MiB string hands _greedy_encode at most SAMPLE_BYTES per
+    build iteration (not the whole string, 7 times), and still
+    round-trips exactly."""
+    import pyarrow as pa
+
+    from colonnade_spark import blocks
+    from colonnade_spark.codecs import fsst
+    from colonnade_spark.codecs.base import from_arrow
+
+    big = "".join(f"line {i}: value = {i * 7919 % 1000}\n"
+                  for i in range(180000))
+    assert len(big) >= 4 << 20
+    arr = pa.array([big])
+    col, _ = from_arrow(arr)
+    sizes = []
+    scan = fsst._greedy_encode
+
+    def spy(data, offsets, table):
+        sizes.append(data.size)
+        return scan(data, offsets, table)
+
+    monkeypatch.setattr(fsst, "_greedy_encode", spy)
+    fsst.build_symbol_table(col.data, col.offsets)
+    assert len(sizes) == fsst.BUILD_ITERS
+    assert max(sizes) <= fsst.SAMPLE_BYTES
+    monkeypatch.undo()
+    blk = blocks.encode_block(arr, codec="fsst")
+    assert blocks.decode_block(blk).equals(arr)
+
+
+def test_native_call_rejects_wrong_dtype_and_strided_arrays(monkeypatch):
+    """``_native.call`` is the one way into C: an array of the wrong dtype
+    or a non-contiguous one raises TypeError before the library is even
+    looked up, so no kernel can silently misread it on any node."""
+    import numpy as np
+    import pytest
+
+    from colonnade_spark.codecs import _native
+
+    monkeypatch.setattr(_native, "get_lib",
+                        lambda: pytest.fail("reached the C library"))
+    suffix = np.frombuffer(b"abcdef", dtype=np.uint8)
+    plens = np.zeros(2, dtype=np.int64)
+    slens = np.array([3, 3], dtype=np.int64)
+    out = np.zeros(6, dtype=np.uint8)
+    with pytest.raises(TypeError, match="argument 1: want a C-contiguous "
+                                        "int64 array, got int32"):
+        _native.call("fcode_decode", suffix, plens.astype(np.int32), slens,
+                     2, out)
+    strided = np.zeros(12, dtype=np.uint8)[::2]
+    with pytest.raises(TypeError, match="argument 4: .* got uint8 strided"):
+        _native.call("fcode_decode", suffix, plens, slens, 2, strided)
+    with pytest.raises(TypeError, match="argument 0: .* got bytes"):
+        _native.call("fcode_decode", b"abcdef", plens, slens, 2, out)
+    with pytest.raises(TypeError, match="5 arguments, got 4"):
+        _native.call("fcode_decode", suffix, plens, slens, 2)
+    assert not out.any()
+
+
+def test_native_source_compiles_without_warnings(tmp_path):
+    """The C source builds clean under -Wall -Wextra -Werror, so a
+    refactor of the kernels cannot bring in a warning unseen."""
+    import shutil
+    import subprocess
+
+    import pytest
+
+    from colonnade_spark.codecs import _native
+
+    if shutil.which("cc") is None:
+        pytest.skip("no C compiler")
+    src = tmp_path / "kernels.c"
+    src.write_text(_native._SRC)
+    res = subprocess.run(
+        ["cc", "-O2", "-shared", "-fPIC", "-Wall", "-Wextra", "-Werror",
+         "-o", str(tmp_path / "kernels.so"), str(src)],
+        capture_output=True, text=True, timeout=60)
+    assert res.returncode == 0, res.stderr
 
 
 def test_fsst_native_decode_matches_numpy():
@@ -740,9 +822,10 @@ def test_fcode_sub_hybrid_margin_and_table_economics():
 
 
 def test_probe_gate_skips_loser_estimates_then_reprobes():
-    """Selection-probe gating: after _GATE_STREAK agreeing chunks of one
+    """Selection-probe gating: after GATE_STREAK agreeing chunks of one
     column stream the losers' estimates stop running; a full re-probe every
-    _GATE_REPROBE-th chunk still catches content drift and switches codecs.
+    GATE_REPROBE-th chunk still catches content drift and switches codecs
+    (codecs.base.ProbeGate, shared with fcode's suffix sub-encoding).
     Gate state lives in EncodeContext (per-stream), so a fresh ctx probes
     from scratch — selection stays a pure function of the chunk sequence."""
     import pyarrow as pa

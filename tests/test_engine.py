@@ -153,6 +153,29 @@ def test_resume_manifest_reports_full_totals(spark, corpus_df, tmp_path):
     assert m2["bytes_out"] == m1["bytes_out"]
 
 
+def test_manifest_publish_is_atomic(spark, corpus_df, tmp_path, monkeypatch):
+    """manifest.json is published by tmp file + os.replace: when the
+    replace fails on a re-encode, the previous manifest still parses and
+    no tmp file is left behind."""
+    plan = corpus_plan()
+    wh = str(tmp_path / "wh")
+    m1 = engine.encode_table(spark, corpus_df, plan, wh, n_buckets=5,
+                             input_token="tma")
+    real_replace = os.replace
+
+    def failing_replace(src, dst):
+        if os.path.basename(dst) == "manifest.json":
+            raise OSError("replace failed")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", failing_replace)
+    with pytest.raises(OSError, match="replace failed"):
+        engine.encode_table(spark, corpus_df, plan, wh, n_buckets=5,
+                            mode="resume", input_token="tma")
+    assert engine.read_manifest(wh) == m1
+    assert not glob.glob(os.path.join(wh, "_tmp_*"))
+
+
 def test_decode_preserves_large_int64_with_nulls(spark, tmp_path):
     """ADVICE regression: nullable int64 above 2^53 must round-trip exactly
     (the pandas float64 path silently corrupted them; arrow path must not)."""
@@ -325,6 +348,65 @@ def test_stripe_iter_honors_cap_exactly(tmp_path):
         assert st.num_rows == 1 or nbytes <= cap, (st.num_rows, nbytes)
         total += st.num_rows
     assert total == 500
+
+
+def test_bucket_encode_identical_without_c_kernels(tmp_path, monkeypatch):
+    """Mixed-fleet parity, end to end: one sorted, roundtrip-shaped corpus
+    bucket (corpus_plan, seed 7) encoded in-process with the C kernels and
+    again with ``_native.get_lib`` forced to None gives the identical
+    blocks table.  The stripe cap is small enough that FSST table reuse,
+    the selection probe gate and the fcode FSST-suffix hybrid all fire.
+    In-process, because a monkeypatch on the driver cannot reach Spark's
+    Python workers deterministically."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from colonnade_spark import blocks
+    from colonnade_spark.codecs import _native, base, fsst
+    from colonnade_spark.corpus import generate_corpus_arrow
+
+    if _native.get_lib() is None:
+        pytest.skip("no C toolchain: only the numpy path exists")
+    plan = corpus_plan()
+    table = generate_corpus_arrow(3000, seed=7).select(plan.column_names)
+    table = table.sort_by([(c, "ascending") for c in plan.stage_order])
+    cap = 1 << 20
+    gate_hits = []
+    step = base.ProbeGate.step
+
+    def counting_step(self):
+        gate_hits.append(step(self))
+        return gate_hits[-1]
+
+    monkeypatch.setattr(base.ProbeGate, "step", counting_step)
+
+    def encode(name):
+        wh = str(tmp_path / name)
+        stripes = engine._stripe_iter_batches(
+            table.to_batches(max_chunksize=1000), cap)
+        engine._encode_bucket_core(0, stripes, wh, plan, cap, "parity",
+                                   marker_sink=lambda m: None)
+        return pq.read_table(os.path.join(wh, "blocks", "bucket=0",
+                                          "part-0.parquet"))
+
+    with_c = encode("c")
+    monkeypatch.setattr(_native, "get_lib", lambda: None)
+    without_c = encode("numpy")
+    assert with_c.equals(without_c)
+
+    rows = with_c.select(["column", "codec", "block"]).to_pylist()
+    assert any(gate_hits)                              # probe gate reused
+    assert any(r["codec"] == "fcode"
+               and blocks.block_info(r["block"]).get("p", {}).get("f")
+               for r in rows)                          # fcode hybrid
+    tables = {}
+    for r in rows:
+        if r["codec"] == "fsst":
+            payload = np.frombuffer(blocks._open(r["block"])[2], np.uint8)
+            tables.setdefault(r["column"], []).append(
+                fsst.pack_table(fsst.unpack_table(payload, 0)[0]))
+    # a column whose fsst blocks share a table: the table was reused
+    assert any(len(set(t)) < len(t) for t in tables.values())
 
 
 def test_giant_cell_multiblock_roundtrip(spark, tmp_path):
